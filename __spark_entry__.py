@@ -1638,14 +1638,16 @@ _CDC_STREAM_ENGINE = None
 
 def cdc_stream_final_state(spark, sf_dir):
     """The STREAMING replay path through the driver oracle: run_stream
-    (Structured Streaming file tail, maxFilesPerTrigger=1 → 4 triggers,
-    watermarked dedup, checkpointed foreachBatch epoch-fenced merges) over
-    the shared fixture; the oracle is the same SQL LWW replay that checks
-    the batch path — equality proves the micro-batched, stateful,
-    checkpointed pipeline converges to the identical final table. The
-    watermark delay is sized past the fixture's max lateness so the
-    equality is exact (the lateness-SLA drop behavior is covered separately
-    by test_streaming_dedup_state_bounded)."""
+    (stateless Structured Streaming file tail, maxFilesPerTrigger=1 → 4
+    triggers, checkpointed foreachBatch epoch-fenced merges) over the
+    shared fixture; the oracle is the same SQL LWW replay that checks the
+    batch path — equality proves the micro-batched, checkpointed pipeline
+    converges to the identical final table. The stream's watermark is the
+    `cdc.max-ts-us` fence: events older than (prior max event time −
+    delay) are dropped and counted per bucket in lineage, and
+    re-deliveries are no-ops by seq. The 1000-hour delay is sized past the
+    fixture's max lateness, so nothing is dropped and the equality is exact
+    (the drop accounting is gated by cdc_stream_lineage_drops)."""
     global _CDC_STREAM_ENGINE
     from datavec_spark.streaming.replay import CdcEngine
 
@@ -1755,10 +1757,9 @@ _CDC_DROPS_ENGINE = None
 def cdc_stream_lineage_drops(spark, sf_dir):
     """Stateless-stream drop accounting (north rule: late data beyond the
     SLA must be surfaced, not silently lost): replay the shared fixture
-    through run_stream(dedup=False) at a 600 s lateness SLA — no stateful
-    operator; the apply stage drops events older than (max prior-epoch
-    event time − 600 s) and records exact counts in lineage's dropped_late
-    column. The oracle re-derives per-epoch dropped counts in SQL from the
+    through the stateless run_stream at a 600 s lateness SLA; the apply
+    stage drops events older than (max prior-epoch event time − 600 s) and
+    records exact counts in lineage's dropped_late column. The oracle re-derives per-epoch dropped counts in SQL from the
     same parquet chunks (epoch = chunk file in mtime order, cut = running
     prev-chunk max ts − 600 s). Non-vacuous: the fixture's far-late
     stragglers (ts 50 min in the past) must be counted."""
@@ -1773,7 +1774,7 @@ def cdc_stream_lineage_drops(spark, sf_dir):
         q = eng.run_stream(
             spark, os.path.join(fix, "events"), os.path.join(tmp, "ckpt"),
             watermark_delay="600 seconds", max_files_per_trigger=1,
-            available_now=True, dedup=False,
+            available_now=True,
         )
         q.awaitTermination()
         _CDC_DROPS_ENGINE = eng

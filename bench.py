@@ -213,26 +213,18 @@ def run_cdc_replay(spark, fixture_dir: str, num_buckets: int = 64, epochs: int =
 
 
 def run_cdc_stream_replay(spark, fixture_dir: str, num_buckets: int = 64,
-                          n_triggers: int = 8,
-                          state_store: str | None = None,
-                          shuffle_partitions: int | None = None,
-                          dedup: bool = False) -> dict:
+                          n_triggers: int = 8) -> dict:
     """The same replay through the Structured Streaming path (run_stream:
-    watermarked dedup state + checkpointed foreachBatch epoch-fenced merges),
-    chunked into ~n_triggers triggers via maxFilesPerTrigger. Measures the
-    end-to-end streaming wall including per-trigger serial overhead (trigger
-    planning, state-store commit, checkpoint fsync, snapshot commit) — the
-    overhead a real cluster pays once per micro-batch regardless of width,
-    which is why streaming scaling efficiency is expected to trail the
-    single-epoch batch number.
-
-    dedup=False (the engine's engineered streaming shape for this source):
-    NO stateful operator — the merge's seq fence makes re-deliveries no-ops
-    and the apply stage enforces the lateness SLA against cdc.max-ts-us,
-    recording exact per-(epoch, bucket) dropped_late in lineage (where the
-    drop accounting is read from). dedup=True measures the stateful
-    dropDuplicatesWithinWatermark path (state-store provider chosen by
-    state_store)."""
+    stateless checkpointed foreachBatch epoch-fenced merges), chunked into
+    ~n_triggers triggers via maxFilesPerTrigger. Measures the end-to-end
+    streaming wall including per-trigger serial overhead (trigger
+    planning, checkpoint fsync, snapshot commit) — the overhead a real
+    cluster pays once per micro-batch regardless of width, which is why
+    streaming scaling efficiency is expected to trail the single-epoch
+    batch number. The merge's seq fence makes re-deliveries no-ops and the
+    apply stage enforces the lateness SLA against cdc.max-ts-us, recording
+    exact per-(epoch, bucket) dropped_late in lineage (where the drop
+    accounting is read from)."""
     import math as _math
 
     from pyspark.sql import functions as F
@@ -248,40 +240,17 @@ def run_cdc_stream_replay(spark, fixture_dir: str, num_buckets: int = 64,
     files = [f for f in os.listdir(events_dir) if f.endswith(".parquet")]
     mfpt = max(1, _math.ceil(len(files) / n_triggers))
     n_events = spark.read.parquet(events_dir).count()
-    # state-store commit parallelism: the dedup state is partitioned by
-    # spark.sql.shuffle.partitions AT FIRST TRIGGER (fixed by checkpoint
-    # thereafter) — a knob independent of the session default so the
-    # high-core level can commit more state shards in parallel
-    prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    if shuffle_partitions:
-        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    try:
-        t0 = time.time()
-        q = eng.run_stream(spark, events_dir, os.path.join(work, "ckpt"),
-                           max_files_per_trigger=mfpt, available_now=True,
-                           state_store=state_store, dedup=dedup)
-        q.awaitTermination()
-        if merge_mode == "mor":
-            # mor defers merging to read time: charge the final-state
-            # materialization to the stream's clock (see run_cdc_replay)
-            eng.final_state_hashes(spark).agg(
-                F.count(F.lit(1))).collect()
-        wall = time.time() - t0
-    finally:
-        if shuffle_partitions:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
-    if dedup:
-        drops = CdcEngine.stream_drop_metrics(q)
-    else:
-        # stateless path: drop accounting lives in lineage (exact,
-        # per-epoch/bucket), not in state-operator progress (there is none)
-        drops = eng.lineage_drop_totals(spark)
-        drops["triggers"] = len(q.recentProgress)
-        drops["state_rows_evicted"] = 0
-    state_peak = 0
-    for p in q.recentProgress:
-        for op in p["stateOperators"] or []:
-            state_peak = max(state_peak, op.get("numRowsTotal") or 0)
+    t0 = time.time()
+    q = eng.run_stream(spark, events_dir, os.path.join(work, "ckpt"),
+                       max_files_per_trigger=mfpt, available_now=True)
+    q.awaitTermination()
+    if merge_mode == "mor":
+        # mor defers merging to read time: charge the final-state
+        # materialization to the stream's clock (see run_cdc_replay)
+        eng.final_state_hashes(spark).agg(
+            F.count(F.lit(1))).collect()
+    wall = time.time() - t0
+    drops = eng.lineage_drop_totals(spark)
     final = eng.final_state_hashes(spark)
     agg = final.agg(
         F.count(F.lit(1)).alias("n"),
@@ -313,12 +282,10 @@ def run_cdc_stream_replay(spark, fixture_dir: str, num_buckets: int = 64,
     shutil.rmtree(work, ignore_errors=True)
     return {"events": n_events, "wall_sec": round(wall, 3),
             "events_per_sec": round(n_events / wall, 1),
-            "triggers": drops["triggers"], "state_rows_peak": state_peak,
+            "triggers": len(q.recentProgress),
             "rows_dropped_late": drops["rows_dropped_late"],
             "dup_redelivery_budget": dup_budget,
             "drops_within_dup_budget": drops_ok,
-            "dedup_stage": "stateful-watermark" if dedup else "stateless-lineage",
-            "state_rows_evicted": drops["state_rows_evicted"],
             "final_rows": agg["n"], "final_checksum": int(agg["chk"])}
 
 
@@ -448,34 +415,23 @@ def scaling_worker(cores: int, n_ev: int):
     r["core_checksum"] = core["checksum"]
     if os.environ.get("SPARK_GRAFT_SCALE_STREAMING", "1") == "1":
         # same events through the Structured Streaming path (multi-trigger,
-        # checkpointed, watermarked dedup state) — the north rule's replay
+        # checkpointed, lateness-fenced) — the north rule's replay
         # is stream-shaped, so scaling evidence must cover this path too
-        sp_env = os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE")
-        st_store = os.environ.get("SPARK_GRAFT_STREAM_STATE_STORE") or None
-        st_shuf = int(sp_env) if sp_env else None
-        # default 0 = the stateless path (no dedup state shuffle, SLA
-        # enforced in the apply stage) — the engineered streaming shape;
-        # set to 1 to measure the stateful dropDuplicatesWithinWatermark
-        st_dedup = os.environ.get("SPARK_GRAFT_STREAM_DEDUP", "0") == "1"
         if os.environ.get("SPARK_GRAFT_STREAM_WARM", "1") == "1":
             # warm the STREAMING-specific codepaths before the timed run,
-            # symmetric with the batch warm replay above: the stateful dedup
-            # plan's codegen, state-store provider load/commit, checkpoint WAL
-            # and progress machinery are all cold on a fresh JVM, and that
+            # symmetric with the batch warm replay above: the streaming
+            # plan's codegen, checkpoint WAL and progress machinery are all
+            # cold on a fresh JVM, and that
             # fixed cold cost eats a larger fraction of the short
             # high-parallelism wall — measured steady state is what a
             # long-running 10^10-event tail actually pays. Small side fixture
             # (disk-cached across workers), own temp table + checkpoint.
             warm_fx = cdc_fixture(spark, 400_000, n_base=20000,
                                   n_repos=1000, paths_per_repo=50)
-            run_cdc_stream_replay(spark, warm_fx, num_buckets=64,
-                                  n_triggers=2, state_store=st_store,
-                                  shuffle_partitions=st_shuf, dedup=st_dedup)
+            run_cdc_stream_replay(spark, warm_fx, num_buckets=64, n_triggers=2)
         st = run_cdc_stream_replay(
             spark, fx, num_buckets=64,
-            n_triggers=int(os.environ.get("SPARK_GRAFT_STREAM_TRIGGERS", "4")),
-            state_store=st_store,
-            shuffle_partitions=st_shuf, dedup=st_dedup)
+            n_triggers=int(os.environ.get("SPARK_GRAFT_STREAM_TRIGGERS", "4")))
         # DROP-SAFETY ground truth: the batch replay above is watermark-free
         # (zero drops, same fixture) — stream/batch final-state checksum
         # equality proves every watermark-dropped row was either a duplicate
@@ -494,14 +450,11 @@ def scaling_worker(cores: int, n_ev: int):
         r["stream_rate"] = st["events_per_sec"]
         r["stream_wall"] = st["wall_sec"]
         r["stream_triggers"] = st["triggers"]
-        r["stream_state_peak"] = st["state_rows_peak"]
         r["stream_dropped_late"] = st["rows_dropped_late"]
         r["stream_dup_budget"] = st["dup_redelivery_budget"]
         r["stream_checksum"] = st["final_checksum"]
         r["stream_final_rows"] = st["final_rows"]
         r["stream_matches_batch"] = matches
-        r["stream_dedup_stage"] = st["dedup_stage"]
-        r["stream_shuffle_partitions"] = int(sp_env) if sp_env else None
     print("SCALING_RESULT " + json.dumps(r))
     spark.stop()
 
@@ -555,7 +508,7 @@ def run_scaling():
         # heap aging across trials/levels
         # 2400s: a worker now also runs the multi-trigger streaming replay,
         # which at the low parallelism level costs several batch-replays'
-        # worth of wall (per-trigger table-merge + state-store + checkpoint
+        # worth of wall (per-trigger table-merge + checkpoint
         # overhead — the serial cost the streaming section exists to measure)
         proc = subprocess.run(
             [sys.executable, os.path.abspath(__file__), "--scaling-worker", str(cores), str(n_ev)],
@@ -630,7 +583,6 @@ def run_scaling():
             f"wall_local{hi}": stream_best[hi]["stream_wall"],
             "scaling_efficiency": round((s_hi / s_lo) / factor, 3),
             "triggers": stream_best[hi]["stream_triggers"],
-            "state_rows_peak": stream_best[hi]["stream_state_peak"],
             "rows_dropped_late": stream_best[hi]["stream_dropped_late"],
             # both checked per-trial inside the worker (RuntimeError on
             # violation); recorded here as COMPUTED comparisons so the
@@ -644,15 +596,12 @@ def run_scaling():
             "stream_matches_batch_both_levels": all(
                 t.get("stream_matches_batch") for ts in trials.values() for t in ts
             ),
-            "shuffle_partitions": stream_best[hi].get("stream_shuffle_partitions"),
             "final_checksum_equal": (
                 stream_best[lo]["stream_checksum"] == stream_best[hi]["stream_checksum"]
             ),
             "final_rows": stream_best[hi]["stream_final_rows"],
             f"trial_walls_local{lo}": [t["stream_wall"] for t in trials[lo]],
             f"trial_walls_local{hi}": [t["stream_wall"] for t in trials[hi]],
-            "state_store": os.environ.get("SPARK_GRAFT_STREAM_STATE_STORE") or "memory",
-            "dedup_stage": stream_best[hi].get("stream_dedup_stage"),
         }
     print(json.dumps(out))
     os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)

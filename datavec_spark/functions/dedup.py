@@ -88,12 +88,7 @@ def ngram_jaccard_pairs(
     # oracles/pipelines outside Spark, and an HLL estimate would silently
     # shift which boundary shingles survive once the corpus grows past the
     # min-100 floor (round-4 advice item #1). The population is "docs with
-    # ≥1 shingle" on BOTH sides. Round-7: the count is a 1-row aggregate
-    # broadcast into the cap predicate (the unigram_logprob pattern), NOT a
-    # driver .first() action — the whole query is ONE job again, with no
-    # driver sync point. greatest(floor(n*0.01), 100) is arithmetic-
-    # identical to the old Python max(int(n*0.01), 100): same IEEE double
-    # product, trunc == floor for non-negative values.
+    # ≥1 shingle" on BOTH sides.
     if n_docs is None:
         # count the BASE table under the same eligibility predicate the
         # shingle op applies — every eligible doc yields ≥1 shingle, so
@@ -149,10 +144,8 @@ def minhash_signatures(
     it only won when the scan planned as a single task. With the scan-
     parallelism floor in char_shingles the codegen'd explode + partial-agg
     form is ~2.6× faster at a 100k-doc corpus (interpreted HOF evaluation
-    loses to whole-stage codegen), so the explode form stays; the narrow
-    form survives as char_shingle_array for callers that need a set
-    column. Values are identical either way (pinned in
-    tests/test_r07_optimizations.py)."""
+    loses to whole-stage codegen), so the explode form stays. Values are
+    identical either way (pinned in tests/test_functions.py)."""
     sh = char_shingles(df, text_col, id_col, k)
     mins = [F.min(F.xxhash64(F.col("shingle"), F.lit(i))).alias(f"h{i}") for i in range(num_hashes)]
     return sh.groupBy(id_col).agg(*mins)

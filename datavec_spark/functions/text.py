@@ -151,35 +151,6 @@ def fingerprint(col: Column) -> Column:
     return F.xxhash64(F.trim(norm))
 
 
-def char_shingle_array(text_col: str, k: int = 5) -> Column:
-    """Per-row DISTINCT character-k-gram set as an array column. NOTE:
-    this interpreted-HOF form measured ~2.6× SLOWER than the codegen'd
-    explode+distinct in char_shingles once scans have real parallelism
-    (r7 20×-corpus A/B) — use it only where a per-row SET column is
-    genuinely needed, not as a shuffle-avoidance trick. Rows with
-    length < k yield an empty array (guarded: Spark's sequence(1, n)
-    counts DOWN when n < 1)."""
-    n = F.length(F.col(text_col)) - (k - 1)
-    arr = F.array_distinct(
-        F.transform(F.sequence(F.lit(1), n),
-                    lambda p: F.col(text_col).substr(p, F.lit(k)))
-    )
-    return F.when(n >= 1, arr).otherwise(F.array().cast("array<string>"))
-
-
-def word_shingle_array(text_col: str, k: int = 3) -> Column:
-    """Per-row DISTINCT word-k-gram set (lowercased, whitespace tokens) as
-    an array column — same caveat as char_shingle_array: prefer the
-    explode+distinct ops for bulk pipelines."""
-    toks = tokens(F.lower(F.col(text_col)))
-    n = F.size(toks) - (k - 1)
-    arr = F.array_distinct(
-        F.transform(F.sequence(F.lit(1), n),
-                    lambda p: F.array_join(F.slice(toks, p, k), " "))
-    )
-    return F.when(n >= 1, arr).otherwise(F.array().cast("array<string>"))
-
-
 def char_shingles(df: DataFrame, text_col: str, id_col: str, k: int = 5,
                   hashed: bool = False) -> DataFrame:
     """Distinct (id, shingle) rows of character k-grams via explode +

@@ -95,6 +95,29 @@ BUCKET_COL = "__bucket"
 SLOT_COL = "__slot"
 
 
+def bucket_slot_exprs(keys: list[F.Column], num_buckets: int,
+                      sub_splits: int) -> tuple[F.Column, F.Column]:
+    """(bucket, slot) of a row from its key column expressions — the one
+    place the hash formulas live. Writers (_bucket_expr/_slot_expr over the
+    bound columns) and the CDC stats pass (over raw event fields) must agree
+    value for value, because the stats pass hands its (bucket, slot) pairs
+    to merge_cdc as the pruning set.
+
+    The bucket is xxhash64 over ALL key columns (not a string-concatenated
+    key — the reference's string keys, MapToPairForReducerFunction.java:30-53,
+    are a collision + skew hazard this avoids); pmod keeps it non-negative.
+    The slot is a second hash, independent of the bucket hash (leading
+    literal salt), so slots subdivide each bucket's key population
+    uniformly. An unsplit table (sub_splits=1) has the single slot lit(0):
+    no second hash per row."""
+    if not keys:
+        return F.lit(0), F.lit(0)
+    bucket = F.pmod(F.xxhash64(*keys), F.lit(num_buckets)).cast("int")
+    if sub_splits <= 1:
+        return bucket, F.lit(0)
+    return bucket, F.pmod(F.xxhash64(F.lit(1), *keys), F.lit(sub_splits)).cast("int")
+
+
 class CommitConflict(Exception):
     """Another writer committed the same version first."""
 
@@ -231,14 +254,15 @@ class IceliteTable:
     @staticmethod
     def _select_files(files: list[dict], bucket_slots) -> tuple[list[dict], list[dict]]:
         """Partition manifest entries into (selected, rest) by a set of
-        touched (bucket, slot) pairs. An entry with no slot (written by an
-        unsplit table or before splitting) covers its bucket's whole hash
-        space, so it matches whenever its bucket is touched at all."""
+        touched (bucket, slot) pairs. An entry with no slot (a legacy file
+        written before every table carried slots, or an append_rows_local
+        file) covers its bucket's whole hash space, so it matches whenever
+        its bucket is touched at all."""
         pairs = set(bucket_slots)
-        touched_buckets = {b for b, _ in pairs}
+        buckets = {b for b, _ in pairs}
         sel, rest = [], []
         for f in files:
-            hit = (f["bucket"] in touched_buckets
+            hit = (f["bucket"] in buckets
                    if f.get("slot") is None
                    else (f["bucket"], f["slot"]) in pairs)
             (sel if hit else rest).append(f)
@@ -448,69 +472,54 @@ class IceliteTable:
 
     # -- write ---------------------------------------------------------------
 
-    def _bucket_expr(self, meta: dict) -> F.Column:
-        keys = self.key_cols(meta)
-        n = meta["partition_spec"]["num_buckets"]
-        if not keys:
-            return F.lit(0)
-        # xxhash64 over ALL key columns (not a string-concatenated key — the
-        # reference's string keys, MapToPairForReducerFunction.java:30-53, are
-        # a collision + skew hazard this avoids); pmod keeps it non-negative
-        return F.pmod(F.xxhash64(*[F.col(k) for k in keys]), F.lit(n)).cast("int")
-
     @staticmethod
     def sub_splits(meta: dict) -> int:
         # .get: metadata written before sub_splits existed means 1
         return int(meta["partition_spec"].get("sub_splits", 1))
 
+    def _bucket_slot_exprs(self, meta: dict) -> tuple[F.Column, F.Column]:
+        return bucket_slot_exprs([F.col(k) for k in self.key_cols(meta)],
+                                 meta["partition_spec"]["num_buckets"],
+                                 self.sub_splits(meta))
+
+    def _bucket_expr(self, meta: dict) -> F.Column:
+        return self._bucket_slot_exprs(meta)[0]
+
     def _slot_expr(self, meta: dict) -> F.Column:
-        """File slot WITHIN a bucket: a second key hash, independent of the
-        bucket hash (leading literal salt), so slots subdivide each
-        bucket's key population uniformly. Deterministic and computable on
-        raw key values — the CDC fused stats pass derives touched
-        (bucket, slot) pairs in the same aggregation that derives buckets,
-        with no extra job (mirror of the _bucket_expr parity contract)."""
-        keys = self.key_cols(meta)
-        s = self.sub_splits(meta)
-        if not keys or s <= 1:
-            return F.lit(0)
-        return F.pmod(F.xxhash64(F.lit(1), *[F.col(k) for k in keys]), F.lit(s)).cast("int")
+        """File slot WITHIN a bucket (see bucket_slot_exprs)."""
+        return self._bucket_slot_exprs(meta)[1]
 
     def _write_data_files(self, df: DataFrame, meta: dict) -> list[dict]:
-        """Write df (current schema) as bucket-partitioned parquet (one
-        hive dir per bucket, split into sub_splits slot files); return
-        manifest entries. One Spark write job."""
+        """Write df (current schema) as (bucket, slot)-partitioned parquet
+        (one hive dir per bucket, one sub-dir per slot); return manifest
+        entries. One Spark write job."""
         write_id = uuid.uuid4().hex
         out_dir = os.path.join(self._data_dir, write_id)
         n = meta["partition_spec"]["num_buckets"]
         s = self.sub_splits(meta)
-        keys = self.key_cols(meta)
-        staged = df.withColumn(BUCKET_COL, self._bucket_expr(meta))
-        if s > 1:
-            staged = staged.withColumn(SLOT_COL, self._slot_expr(meta))
-        if keys:
-            # co-locate each (bucket, slot) into one task → one file each
-            part_cols = [F.col(BUCKET_COL)] + ([F.col(SLOT_COL)] if s > 1 else [])
-            staged = staged.repartition(n * s, *part_cols)
-        part_by = [BUCKET_COL] + ([SLOT_COL] if s > 1 else [])
-        staged.write.partitionBy(*part_by).parquet(out_dir)
+        bucket, slot = self._bucket_slot_exprs(meta)
+        staged = df.withColumn(BUCKET_COL, bucket).withColumn(SLOT_COL, slot)
+        if self.key_cols(meta):
+            # co-locate each (bucket, slot) into one task → one file each.
+            # One int id, not two columns: at sub_splits=1 it equals the
+            # bucket, so an unsplit table hash-partitions exactly by bucket
+            staged = staged.repartition(n * s, F.col(BUCKET_COL) * s + F.col(SLOT_COL))
+        staged.write.partitionBy(BUCKET_COL, SLOT_COL).parquet(out_dir)
         entries: list[dict] = []
         for bucket_dir in sorted(os.listdir(out_dir)):
             if not bucket_dir.startswith(f"{BUCKET_COL}="):
                 continue
-            bucket = int(bucket_dir.split("=", 1)[1])
             bpath = os.path.join(out_dir, bucket_dir)
-            slot_dirs = sorted(d for d in os.listdir(bpath) if d.startswith(f"{SLOT_COL}="))
-            for slot_dir, slot in ([(None, None)] if not slot_dirs
-                                   else [(d, int(d.split("=", 1)[1])) for d in slot_dirs]):
-                spath = bpath if slot_dir is None else os.path.join(bpath, slot_dir)
+            for slot_dir in sorted(d for d in os.listdir(bpath) if d.startswith(f"{SLOT_COL}=")):
+                spath = os.path.join(bpath, slot_dir)
                 for fn in sorted(os.listdir(spath)):
                     if fn.endswith(".parquet"):
-                        rel = os.path.relpath(os.path.join(spath, fn), self.location)
-                        e = {"path": rel, "bucket": bucket, "schema_id": meta["current_schema_id"]}
-                        if slot is not None:
-                            e["slot"] = slot
-                        entries.append(e)
+                        entries.append({
+                            "path": os.path.relpath(os.path.join(spath, fn), self.location),
+                            "bucket": int(bucket_dir.split("=", 1)[1]),
+                            "slot": int(slot_dir.split("=", 1)[1]),
+                            "schema_id": meta["current_schema_id"],
+                        })
         return entries
 
     def _commit_snapshot(
@@ -624,36 +633,30 @@ class IceliteTable:
         epoch: int | None = None,
         extra_summary: dict[str, Any] | None = None,
         extra_properties: dict[str, str] | None = None,
-        touched_buckets: list[int] | None = None,
         touched_bucket_slots=None,
         mode: str = "cow",
     ) -> dict:
         """Apply per-key winners (one row per key: op ∈ {upsert, delete},
         payload in current schema + seq_col) with last-writer-wins by
-        seq_col against the stored `_seq`. Copy-on-write at bucket
-        granularity: only buckets containing changed keys are rewritten.
+        seq_col against the stored `_seq`. Copy-on-write at file
+        granularity: only the (bucket, slot) files holding changed keys are
+        rewritten; every other file carries forward untouched.
 
         Exactly-once: with `epoch`, the merge is fenced — if
         epoch <= properties['cdc.last-epoch'] the call is a no-op (the
         retried foreachBatch case), and the property advances atomically
         with the snapshot commit.
 
-        touched_buckets: callers that already know which buckets the change
-        keys hash to (the CDC apply stage computes them in its fused stats
-        pass) pass them here — the merge then runs as ONE Spark job (the
-        write), with no pruning collect and no persist of the change set.
-        Must be a superset of `_bucket_expr` over the change keys; a bucket
-        with no actual changes is rewritten identically (correct, wasteful).
-        Without it, the merge derives the set itself (persist + distinct —
-        a second job).
-
-        touched_bucket_slots: FILE-level pruning for sub_splits tables — a
-        collection of (bucket, slot) pairs (from _bucket_expr/_slot_expr
-        over the change keys; the CDC stats pass computes both in its one
-        aggregation). Only the matching slot files are read and rewritten;
-        every other file — including other slots of a touched bucket —
-        carries forward untouched. Rewrite amplification per changed key
-        drops from (bucket size) to (bucket size / sub_splits).
+        touched_bucket_slots: the pruning set, a collection of (bucket,
+        slot) pairs (bucket_slot_exprs over the change keys; an unsplit
+        table has slot 0 only). Callers that already know it — the CDC
+        apply stage computes it in its fused stats pass — pass it here, and
+        the merge runs as ONE Spark job (the write), with no pruning collect
+        and no persist of the change set. A pair with no actual changes is
+        rewritten identically (correct, wasteful). Without it, the merge
+        derives the set itself (persist + distinct — a second job). A
+        manifest entry with no slot (written before every table carried
+        slots, or by append_rows_local) covers its whole bucket.
 
         mode: 'cow' (default) rewrites the touched files with changes
         folded in — reads stay plain scans. 'mor' (merge-on-read) APPENDS
@@ -680,40 +683,21 @@ class IceliteTable:
                 meta, version, changes, seq_col, op_col, epoch,
                 extra_summary, extra_properties,
             )
-        subs = self.sub_splits(meta)
         cur = None
         if meta["current_snapshot_id"] is not None:
             cur = next(s for s in meta["snapshots"]
                        if s["snapshot_id"] == meta["current_snapshot_id"])
         cur_files = cur["files"] if cur else []
 
-        changes = changes.withColumn(BUCKET_COL, self._bucket_expr(meta))
-        persisted = False
-        if touched_bucket_slots is not None:
-            pairs = sorted({(int(b), int(sl)) for b, sl in touched_bucket_slots})
-            touched = sorted({b for b, _ in pairs})
-            selected, untouched = self._select_files(cur_files, pairs)
-        elif touched_buckets is not None:
-            touched = sorted(set(touched_buckets))
-            tset = set(touched)
-            selected = [f for f in cur_files if f["bucket"] in tset]
-            untouched = [f for f in cur_files if f["bucket"] not in tset]
-        else:
+        persisted = touched_bucket_slots is None
+        if persisted:
             # persist: the change set is consumed twice (pruning + merge
             # write) and is typically the output of an aggregation
-            persisted = True
             changes = changes.persist()
-            if subs > 1:
-                changes = changes.withColumn(SLOT_COL, self._slot_expr(meta))
-                pairs = sorted({(r[0], r[1]) for r in
-                                changes.select(BUCKET_COL, SLOT_COL).distinct().collect()})
-                touched = sorted({b for b, _ in pairs})
-                selected, untouched = self._select_files(cur_files, pairs)
-            else:
-                touched = sorted(r[0] for r in changes.select(BUCKET_COL).distinct().collect())
-                tset = set(touched)
-                selected = [f for f in cur_files if f["bucket"] in tset]
-                untouched = [f for f in cur_files if f["bucket"] not in tset]
+            touched_bucket_slots = (
+                changes.select(*self._bucket_slot_exprs(meta)).distinct().collect())
+        pairs = sorted({(int(b), int(sl)) for b, sl in touched_bucket_slots})
+        selected, untouched = self._select_files(cur_files, pairs)
         # resolve deltas on the target if a prior mor-mode merge appended
         # any (a cow merge on such a table doubles as compaction of the
         # touched files)
@@ -758,38 +742,25 @@ class IceliteTable:
         finally:
             if persisted:
                 changes.unpersist()
-        # PRUNING-SET GUARD (r6 advice #2): when the caller supplied the
-        # touched set (derived from a separate stats pass over a
-        # non-persisted batch), a non-deterministic change plan can
-        # recompute rows into buckets/slots OUTSIDE that set — the merge
-        # would then commit the stray rows into a new file while the stale
-        # file holding their old versions is carried forward untouched:
-        # silent duplicate key versions. The written manifest entries carry
-        # each output file's true (bucket, slot), so the violation is
-        # detectable here for free (driver-side set check, no extra job) —
-        # fail the commit loudly instead.
-        if touched_bucket_slots is not None:
-            allowed = set(pairs)
-            stray = sorted({(e["bucket"], e.get("slot")) for e in new_files}
-                           - {(b, s) for b, s in allowed})
-            if stray:
-                raise RuntimeError(
-                    f"merge_cdc: changes materialized into (bucket, slot) "
-                    f"pairs {stray[:10]} outside the supplied "
-                    f"touched_bucket_slots — the change plan recomputed "
-                    f"differently than the stats pass that derived the "
-                    f"pruning set (non-deterministic upstream?); pass "
-                    f"persist_batch=True or drop the pruning hint")
-        elif touched_buckets is not None:
-            stray = sorted({e["bucket"] for e in new_files} - set(touched))
-            if stray:
-                raise RuntimeError(
-                    f"merge_cdc: changes materialized into buckets "
-                    f"{stray[:10]} outside the supplied touched_buckets — "
-                    f"the change plan recomputed differently than the stats "
-                    f"pass that derived the pruning set (non-deterministic "
-                    f"upstream?); pass persist_batch=True or drop the "
-                    f"pruning hint")
+        # PRUNING-SET GUARD: a pruning set derived by a separate pass over
+        # a non-deterministic change plan can miss pairs the write then
+        # lands rows in — committing would carry the stale file holding
+        # their old versions forward untouched: silent duplicate key
+        # versions. The written manifest entries carry each output file's
+        # true (bucket, slot), so the violation is detectable here for free
+        # (driver-side set check, no extra job) — fail the commit loudly.
+        # A consumed slot-less file covers its whole bucket, so its rows may
+        # legitimately land in any slot of that bucket.
+        whole = {f["bucket"] for f in selected if f.get("slot") is None}
+        stray = sorted(p for p in {(e["bucket"], e["slot"]) for e in new_files} - set(pairs)
+                       if p[0] not in whole)
+        if stray:
+            raise RuntimeError(
+                f"merge_cdc epoch {epoch}: changes landed in (bucket, slot) "
+                f"pairs {stray[:10]} outside the pruning set; refusing to "
+                f"commit over snapshot {meta['current_snapshot_id']} (the "
+                f"change plan recomputed differently than the pass that "
+                f"derived the set — non-deterministic upstream?)")
         # `untouched` was partitioned off the snapshot of the metadata
         # ALREADY loaded for the commit CAS — no fresh read (serial-path
         # trim); every selected file was consumed into `merged` above and
@@ -802,7 +773,7 @@ class IceliteTable:
             meta,
             version,
             untouched + new_files,
-            {"operation": "merge", "touched-buckets": len(touched),
+            {"operation": "merge", "touched-buckets": len({b for b, _ in pairs}),
              "rewritten-files": len(selected), "carried-files": len(untouched),
              **(extra_summary or {})},
             properties_update=props,

@@ -17,6 +17,9 @@ Semantics (BASELINE.json north_star):
   — duplicate deliveries (identical seq) and retried batches are no-ops;
 - exactly-once: foreachBatch epochs are fenced via the table property
   `cdc.last-epoch`, advanced atomically with the snapshot commit;
+- the stream is stateless; its watermark is the `cdc.max-ts-us` fence
+  (max event time of prior epochs): events older than it minus the delay
+  are dropped and counted per bucket in lineage;
 - schema-evolution events (add/rename/widen) are applied serially on the
   driver in `seq` order before the batch's data merge, fenced by
   `cdc.schema-seq`; event payload columns are bound to table columns by
@@ -37,7 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from datavec_spark.sources.icelite import IceliteTable, type_to_spark
+from datavec_spark.sources.icelite import IceliteTable, bucket_slot_exprs, type_to_spark
 
 EVENT_SPARK_SCHEMA = T.StructType(
     [
@@ -214,21 +217,30 @@ class CdcEngine:
         late_delay_seconds: int = 600,
         transform_chain=None,
         drop_late: bool = False,
-        persist_batch: bool | None = None,
     ) -> dict:
         """Apply one epoch of the change stream. Idempotent per epoch.
 
         Serial-path shape (round-4 verdict item #1 — this is the per-trigger
         driver cost a 10^10-event stream pays once per micro-batch, so it is
         engineered down to TWO Spark jobs and ONE metadata load):
-          job 1  fused stats pass — per-bucket lineage metrics for data
-                 events AND the (tiny, ~1%) schema-op set gathered via
+          job 1  fused stats pass — per-(bucket, slot) lineage metrics for
+                 data events AND the (tiny, ~1%) schema-op set gathered via
                  collect_list into a sentinel partition, in one aggregation;
           job 2  the merge write itself (merge_cdc receives the touched
-                 bucket set from job 1, so its own pruning job disappears).
+                 (bucket, slot) set from job 1, so its own pruning job
+                 disappears).
         All table properties (epoch fence, schema fence, field map,
         watermark) come from one metadata read; it is re-read only if this
         batch actually applied schema ops (which commit new metadata).
+
+        batch_df is consumed twice (stats pass, merge write) and never
+        cached: caching would materialize every column — content included —
+        before the stats job, which otherwise reads only (seq, ts, op, keys)
+        thanks to parquet column pruning (round-6, 12M fixture at local[16]:
+        stats job 4.4 s -> 0.7 s). A stateless micro-batch re-derives
+        deterministically (the file source re-lists the same files, Kafka
+        re-fetches the same offsets); merge_cdc's pruning guard fails the
+        commit loudly if it does not.
 
         Lineage accounts ARRIVING change events (pre-transform-chain): it is
         ingest/resume bookkeeping, not post-filter output accounting — and a
@@ -239,14 +251,10 @@ class CdcEngine:
         drop_late=True enforces the lateness SLA in the apply stage itself:
         events older than (max event time of all prior epochs −
         late_delay_seconds) are dropped before the merge, counted per
-        bucket, and recorded in lineage's `dropped_late` column. This is
-        the stateless-stream path's watermark: the fence `cdc.max-ts-us`
-        advances exactly like Spark's global watermark (max event time of
-        prior triggers), so the drop set matches what a watermarked
-        stateful stage at the same delay would discard — but with no state
-        store, no full-row dedup shuffle, and exact per-bucket drop
-        accounting (a stateful stage drops upstream of foreachBatch, where
-        per-epoch attribution is unavailable). Batch backfills keep
+        bucket, and recorded in lineage's `dropped_late` column. The fence
+        `cdc.max-ts-us` advances like Spark's global watermark (max event
+        time of prior triggers), so this is the stream's watermark, with
+        exact per-bucket drop accounting. Batch backfills keep
         drop_late=False: unbounded lateness tolerance."""
         # SPARK_GRAFT_PHASE_TIMING=1: print per-phase wall times (stats job /
         # schema ops / merge job / lineage) — the serial-path profiler
@@ -270,271 +278,217 @@ class CdcEngine:
             lin_epoch = int(self.lineage_table().properties().get("lineage.last-epoch", "-1"))
             if lin_epoch >= epoch:
                 return {"applied": False, "snapshot_id": None, "reason": "epoch-fenced"}
-        # NO persist by default (round-6 profiling): caching the batch
-        # materializes ALL columns — including content — before the stats
-        # job, which otherwise reads only (seq, ts, op, keys) thanks to
-        # parquet column pruning. Measured on the 12M fixture at local[16]:
-        # stats job 4.4 s -> 0.7 s, epoch wall -31%. A stateless batch
-        # re-derives its micro-batch deterministically on each of the two
-        # consumptions (file source re-lists the same files, Kafka
-        # re-fetches the same offsets), so no cache is needed. The caller
-        # MUST pass persist_batch=True when batch_df has a STATEFUL
-        # operator upstream (run_stream dedup=True does): re-executing a
-        # stateful plan inside foreachBatch re-hits the state store —
-        # Spark's documented foreachBatch multi-use hazard.
-        if persist_batch is None:
-            persist_batch = os.environ.get("SPARK_GRAFT_BATCH_PERSIST", "0") == "1"
-        _persist = persist_batch
-        if _persist:
-            batch_df = batch_df.persist()
-        try:
-            fmap = json.loads(props0["cdc.field-map"])
-            by_id0 = {f["id"]: f for f in table._fields(meta0)}
-            # bucket count comes from the STORED table's partition spec, not
-            # the engine-constructor default — a reload with a different
-            # num_buckets must not mislabel lineage partitions vs data buckets
-            table_buckets = meta0["partition_spec"]["num_buckets"]
-            # the bucket hash over the RAW event key fields (resolved through
-            # the immutable field map) — value- and type-identical to
-            # icelite._bucket_expr over the bound/current-schema columns, so
-            # the stats pass below can run BEFORE binding/schema ops and its
-            # bucket ids double as merge_cdc's pruning set. (Key columns are
-            # strings per the CDC contract; schema widens are numeric-only,
-            # renames don't change values — a schema op in this very batch
-            # cannot change the hash.)
-            orig_by_id = {fid: orig for orig, fid in fmap.items()}
-            key_ids = meta0["partition_spec"]["key_field_ids"]
-            key_hash_cols = [
-                F.col(orig_by_id[i]).cast(type_to_spark(by_id0[i]["type"]))
-                for i in key_ids
-            ]
+        fmap = json.loads(props0["cdc.field-map"])
+        by_id0 = {f["id"]: f for f in table._fields(meta0)}
+        # the (bucket, slot) hash over the RAW event key fields (resolved
+        # through the immutable field map) — the same bucket_slot_exprs the
+        # table's writers apply to the bound/current-schema columns, so the
+        # stats pass below can run BEFORE binding/schema ops and its pairs
+        # double as merge_cdc's pruning set. (Key columns are strings per
+        # the CDC contract; schema widens are numeric-only, renames don't
+        # change values — a schema op in this very batch cannot change the
+        # hash.) The bucket count comes from the STORED partition spec, not
+        # the engine-constructor default — a reload with a different
+        # num_buckets must not mislabel lineage partitions vs data buckets.
+        orig_by_id = {fid: orig for orig, fid in fmap.items()}
+        key_hash_cols = [
+            F.col(orig_by_id[i]).cast(type_to_spark(by_id0[i]["type"]))
+            for i in meta0["partition_spec"]["key_field_ids"]
+        ]
+        bucket, slot = bucket_slot_exprs(
+            key_hash_cols, meta0["partition_spec"]["num_buckets"],
+            IceliteTable.sub_splits(meta0))
 
-            # 1. FUSED stats job: late-event cut relative to the stream
-            #    watermark carried in cdc.max-ts-us (max event time of all
-            #    prior batches, advanced atomically with each merge commit)
-            #    minus the allowed delay — an event is late relative to
-            #    stream progress *before* its batch, the watermark semantics.
-            prev_max_us = props0.get("cdc.max-ts-us")
-            if prev_max_us is not None:
-                late_cut = F.timestamp_micros(
-                    F.lit(int(prev_max_us) - late_delay_seconds * 1_000_000)
-                )
-                late_expr = F.sum((F.col("ts") < late_cut).cast("long"))
+        # 1. FUSED stats job: late-event cut relative to the stream
+        #    watermark carried in cdc.max-ts-us (max event time of all
+        #    prior batches, advanced atomically with each merge commit)
+        #    minus the allowed delay — an event is late relative to
+        #    stream progress *before* its batch, the watermark semantics.
+        prev_max_us = props0.get("cdc.max-ts-us")
+        if prev_max_us is not None:
+            late_cut = F.timestamp_micros(
+                F.lit(int(prev_max_us) - late_delay_seconds * 1_000_000)
+            )
+            late_expr = F.sum((F.col("ts") < late_cut).cast("long"))
+        else:
+            late_expr = F.lit(0).cast("long")
+        is_schema = F.col("op").isin(*SCHEMA_OPS)
+        stats_rows = (
+            batch_df.groupBy(
+                F.when(is_schema, F.lit(-1)).otherwise(bucket).alias("partition"),
+                slot.alias("_slot"),
+            )
+            .agg(
+                F.count(F.lit(1)).alias("event_count"),
+                F.min("seq").alias("min_seq"),
+                F.max("seq").alias("max_seq"),
+                late_expr.alias("late_count"),
+                F.max(F.unix_micros(F.col("ts").cast("timestamp"))).alias("_max_ts_us"),
+                F.collect_list(
+                    F.when(is_schema, F.struct("seq", "op", "schema_change"))
+                ).alias("_schema_ops"),
+            )
+            .collect()
+        )
+        _mark("stats_job")
+
+        # 2. schema-evolution ops: driver-serialized in seq order, fenced
+        #    by cdc.schema-seq so retries are no-ops
+        schema_ops = [
+            op for r in stats_rows if r["partition"] == -1 for op in r["_schema_ops"]
+        ]
+        schema_fence = int(props0.get("cdc.schema-seq", "-1"))
+        applied_schema = False
+        for r in sorted(schema_ops, key=lambda r: r["seq"]):
+            if r["seq"] <= schema_fence:
+                continue
+            sc = r["schema_change"]
+            fence = {"cdc.schema-seq": str(r["seq"])}
+            if r["op"] == "add_column":
+                table.add_column(sc["col_name"], sc["new_type"], properties_update=fence)
+            elif r["op"] == "rename_column":
+                table.rename_column(sc["col_name"], sc["new_name"], properties_update=fence)
             else:
-                late_expr = F.lit(0).cast("long")
-            is_schema = F.col("op").isin(*SCHEMA_OPS)
-            # sub-split tables: derive the file SLOT (second independent key
-            # hash, icelite._slot_expr parity) in the SAME aggregation, so
-            # merge_cdc can prune to slot files with zero extra jobs
-            subs = IceliteTable.sub_splits(meta0)
-            slot_grp = (
-                F.when(is_schema, F.lit(-1))
-                .otherwise(F.pmod(F.xxhash64(F.lit(1), *key_hash_cols), F.lit(subs)).cast("int"))
-                if subs > 1 else F.lit(0)
-            )
-            stats_rows = (
-                batch_df.groupBy(
-                    F.when(is_schema, F.lit(-1))
-                    .otherwise(
-                        F.pmod(F.xxhash64(*key_hash_cols), F.lit(table_buckets)).cast("int")
-                    )
-                    .alias("partition"),
-                    slot_grp.alias("_slot"),
-                )
-                .agg(
-                    F.count(F.lit(1)).alias("event_count"),
-                    F.min("seq").alias("min_seq"),
-                    F.max("seq").alias("max_seq"),
-                    late_expr.alias("late_count"),
-                    F.max(F.unix_micros(F.col("ts").cast("timestamp"))).alias("_max_ts_us"),
-                    F.collect_list(
-                        F.when(is_schema, F.struct("seq", "op", "schema_change"))
-                    ).alias("_schema_ops"),
-                )
-                .collect()
-            )
-            _mark("stats_job")
+                table.widen_column(sc["col_name"], sc["new_type"], properties_update=fence)
+            schema_fence = r["seq"]
+            applied_schema = True
 
-            # 2. schema-evolution ops: driver-serialized in seq order, fenced
-            #    by cdc.schema-seq so retries are no-ops
-            schema_ops = [
-                op for r in stats_rows if r["partition"] == -1 for op in r["_schema_ops"]
-            ]
-            schema_fence = int(props0.get("cdc.schema-seq", "-1"))
-            applied_schema = False
-            for r in sorted(schema_ops, key=lambda r: r["seq"]):
-                if r["seq"] <= schema_fence:
-                    continue
-                sc = r["schema_change"]
-                fence = {"cdc.schema-seq": str(r["seq"])}
-                if r["op"] == "add_column":
-                    table.add_column(sc["col_name"], sc["new_type"], properties_update=fence)
-                elif r["op"] == "rename_column":
-                    table.rename_column(sc["col_name"], sc["new_name"], properties_update=fence)
-                else:
-                    table.widen_column(sc["col_name"], sc["new_type"], properties_update=fence)
-                schema_fence = r["seq"]
-                applied_schema = True
-
-            slot_rows = [r for r in stats_rows if r["partition"] >= 0]
-            if not slot_rows:  # empty trigger (no data events this epoch)
-                return {"applied": False, "snapshot_id": None, "reason": "empty-batch"}
-            # lineage stays at BUCKET grain (its public key is (epoch,
-            # partition)); collapse the slot-grain stats rows per bucket
-            by_bucket: dict[int, dict] = {}
-            for r in slot_rows:
-                a = by_bucket.get(r["partition"])
-                if a is None:
-                    by_bucket[r["partition"]] = {
-                        "partition": r["partition"],
-                        "event_count": r["event_count"], "min_seq": r["min_seq"],
-                        "max_seq": r["max_seq"], "late_count": r["late_count"] or 0,
-                        "_max_ts_us": r["_max_ts_us"],
-                    }
-                else:
-                    a["event_count"] += r["event_count"]
-                    a["min_seq"] = min(a["min_seq"], r["min_seq"])
-                    a["max_seq"] = max(a["max_seq"], r["max_seq"])
-                    a["late_count"] += r["late_count"] or 0
-                    a["_max_ts_us"] = max(a["_max_ts_us"], r["_max_ts_us"])
-            lineage_rows = sorted(by_bucket.values(), key=lambda r: r["partition"])
-            batch_max_us = max(r["_max_ts_us"] for r in lineage_rows)
-            new_max_us = max(batch_max_us, int(prev_max_us)) if prev_max_us else batch_max_us
-
-            # 3. bind event payload columns to current table columns by field
-            #    id (re-read metadata only if a schema op just committed)
-            meta = table.metadata() if applied_schema else meta0
-            by_id = {f["id"]: f for f in table._fields(meta)}
-            cur_name = {orig: by_id[fid]["name"] for orig, fid in fmap.items()}
-            key_cols = table.key_cols(meta)
-
-            _mark("schema_ops")
-            data = batch_df.where(~is_schema)
-            dropping = drop_late and prev_max_us is not None
-            if dropping:
-                # the stateless-path watermark: enforce the lateness SLA
-                # here (late rows were already counted per bucket by the
-                # fused stats pass — late_count IS the dropped count)
-                data = data.where(F.col("ts") >= late_cut)
-            if transform_chain is not None:
-                # DataVec TransformProcess parity: vectorized transform chain
-                # applied inside the merge-apply stage (SURVEY.md §0 graft)
-                data = transform_chain(data)
-
-            payload = [
-                F.col(orig).cast(type_to_spark(by_id[fmap[orig]]["type"])).alias(cur_name[orig])
-                for orig in EVENT_FIELDS
-            ]
-            bound = data.select(*payload, F.col("seq"), F.col("op"), F.col("ts"))
-
-            # 4. in-batch LWW collapse: one winner per key by max seq.
-            #    groupBy().agg(max_by) does map-side partial aggregation —
-            #    hot (repo) keys collapse before the shuffle, so skew cannot
-            #    concentrate rows the way the reference's groupByKey did
-            #    (SparkTransformExecutor.java:231).
-            nonkey = [cur_name[o] for o in EVENT_FIELDS if cur_name[o] not in key_cols]
-            winners = (
-                bound.groupBy(*[F.col(k) for k in key_cols])
-                .agg(
-                    F.max_by(F.struct(*[F.col(c) for c in nonkey], F.col("op")), F.col("seq")).alias("w"),
-                    F.max("seq").alias("_seq"),
-                )
-                .select(*key_cols, "w.*", "_seq")
-            )
-            changes = (
-                winners.withColumn("_deleted", F.col("op") == F.lit("delete"))
-                .withColumn("_op", F.lit("upsert"))
-                .drop("op")
-            )
-
-            # 5. epoch-fenced bucket-COW merge (watermark advances with it);
-            #    the touched-bucket set comes from the fused stats pass, so
-            #    merge_cdc runs no pruning job of its own. Under drop_late a
-            #    bucket whose arriving events were ALL late has no surviving
-            #    changes — leave it out of the touched set so the merge does
-            #    not rewrite it for nothing.
-            if self.merge_mode == "mor":
-                # write-optimized arm: no pruning set needed — nothing is
-                # rewritten, the winners append as delta files
-                merge_kw = {"mode": "mor"}
-                have_changes = any(
-                    not dropping or r["event_count"] > (r["late_count"] or 0)
-                    for r in lineage_rows
-                )
-            elif subs > 1:
-                # slot-grain pruning set: merge rewrites only the slot FILES
-                # the changed keys hash into (under drop_late, a slot whose
-                # arrivals were all late has no surviving changes — skip it)
-                pairs = [
-                    (r["partition"], r["_slot"]) for r in slot_rows
-                    if not dropping or r["event_count"] > (r["late_count"] or 0)
-                ]
-                merge_kw = {"touched_bucket_slots": pairs}
-                have_changes = bool(pairs)
+        slot_rows = [r for r in stats_rows if r["partition"] >= 0]
+        if not slot_rows:  # empty trigger (no data events this epoch)
+            return {"applied": False, "snapshot_id": None, "reason": "empty-batch"}
+        # lineage stays at BUCKET grain (its public key is (epoch,
+        # partition)); collapse the slot-grain stats rows per bucket
+        by_bucket: dict[int, dict] = {}
+        for r in slot_rows:
+            a = by_bucket.get(r["partition"])
+            if a is None:
+                by_bucket[r["partition"]] = {
+                    "partition": r["partition"],
+                    "event_count": r["event_count"], "min_seq": r["min_seq"],
+                    "max_seq": r["max_seq"], "late_count": r["late_count"] or 0,
+                    "_max_ts_us": r["_max_ts_us"],
+                }
             else:
-                touched = [
-                    r["partition"] for r in lineage_rows
-                    if not dropping or r["event_count"] > r["late_count"]
-                ]
-                merge_kw = {"touched_buckets": touched}
-                have_changes = bool(touched)
-            if have_changes:
-                result = table.merge_cdc(
-                    spark,
-                    changes,
-                    seq_col="_seq",
-                    op_col="_op",
-                    epoch=epoch,
-                    extra_summary={"epoch": epoch},
-                    extra_properties={"cdc.max-ts-us": str(new_max_us)},
-                    **merge_kw,
-                )
-                _mark("merge_job")
-                if (result["applied"] and self.merge_mode == "mor"
-                        and self.compact_every
-                        and (epoch + 1) % self.compact_every == 0):
-                    table.compact(spark)
-                    _mark("compact")
-            else:
-                # every arriving event was dropped as late: nothing to merge
-                # or fence (idempotent on redelivery — the drop recomputes),
-                # but the drops still land in lineage below
-                result = {"applied": False, "snapshot_id": None,
-                          "reason": "all-late-dropped"}
+                a["event_count"] += r["event_count"]
+                a["min_seq"] = min(a["min_seq"], r["min_seq"])
+                a["max_seq"] = max(a["max_seq"], r["max_seq"])
+                a["late_count"] += r["late_count"] or 0
+                a["_max_ts_us"] = max(a["_max_ts_us"], r["_max_ts_us"])
+        lineage_rows = sorted(by_bucket.values(), key=lambda r: r["partition"])
+        batch_max_us = max(r["_max_ts_us"] for r in lineage_rows)
+        new_max_us = max(batch_max_us, int(prev_max_us)) if prev_max_us else batch_max_us
 
-            # 6. lineage upsert — idempotent by (epoch, partition) key
-            snap_id = result["snapshot_id"] if result["applied"] else (
-                self.table().current_snapshot() or {}
-            ).get("snapshot_id")
-            lin = IceliteTable(self.lineage_location)  # defer metadata read
-            if lineage_rows and int(lin.properties().get("lineage.last-epoch", "-1")) < epoch:
-                rows = [
-                    {"epoch": epoch, "partition": r["partition"],
-                     "event_count": r["event_count"], "min_seq": r["min_seq"],
-                     "max_seq": r["max_seq"], "late_count": r["late_count"] or 0,
-                     "dropped_late": (r["late_count"] or 0) if dropping else 0,
-                     "snapshot_id": snap_id}
-                    for r in lineage_rows
-                ]
-                # ≤num_buckets rows: driver-side pyarrow append — saves a full
-                # Spark job + commit per epoch (the lineage is tiny by design)
-                lin.append_rows_local(
-                    rows,
-                    summary={"epoch": epoch},
-                    properties_update={"lineage.last-epoch": str(epoch)},
-                )
-                _mark("lineage")
-            if _timing:
-                prev = _t0
-                parts = []
-                for name, t in _marks:
-                    parts.append(f"{name}={t - prev:.3f}s")
-                    prev = t
-                print(f"PHASE_TIMING epoch={epoch} " + " ".join(parts))
-            return result
-        finally:
-            if _persist:
-                batch_df.unpersist()
+        # 3. bind event payload columns to current table columns by field
+        #    id (re-read metadata only if a schema op just committed)
+        meta = table.metadata() if applied_schema else meta0
+        by_id = {f["id"]: f for f in table._fields(meta)}
+        cur_name = {orig: by_id[fid]["name"] for orig, fid in fmap.items()}
+        key_cols = table.key_cols(meta)
+
+        _mark("schema_ops")
+        data = batch_df.where(~is_schema)
+        dropping = drop_late and prev_max_us is not None
+        if dropping:
+            # the watermark: enforce the lateness SLA here (late rows were
+            # already counted per bucket by the fused stats pass —
+            # late_count IS the dropped count)
+            data = data.where(F.col("ts") >= late_cut)
+        if transform_chain is not None:
+            # DataVec TransformProcess parity: vectorized transform chain
+            # applied inside the merge-apply stage (SURVEY.md §0 graft)
+            data = transform_chain(data)
+
+        payload = [
+            F.col(orig).cast(type_to_spark(by_id[fmap[orig]]["type"])).alias(cur_name[orig])
+            for orig in EVENT_FIELDS
+        ]
+        bound = data.select(*payload, F.col("seq"), F.col("op"), F.col("ts"))
+
+        # 4. in-batch LWW collapse: one winner per key by max seq.
+        #    groupBy().agg(max_by) does map-side partial aggregation —
+        #    hot (repo) keys collapse before the shuffle, so skew cannot
+        #    concentrate rows the way the reference's groupByKey did
+        #    (SparkTransformExecutor.java:231).
+        nonkey = [cur_name[o] for o in EVENT_FIELDS if cur_name[o] not in key_cols]
+        winners = (
+            bound.groupBy(*[F.col(k) for k in key_cols])
+            .agg(
+                F.max_by(F.struct(*[F.col(c) for c in nonkey], F.col("op")), F.col("seq")).alias("w"),
+                F.max("seq").alias("_seq"),
+            )
+            .select(*key_cols, "w.*", "_seq")
+        )
+        changes = (
+            winners.withColumn("_deleted", F.col("op") == F.lit("delete"))
+            .withColumn("_op", F.lit("upsert"))
+            .drop("op")
+        )
+
+        # 5. epoch-fenced merge (watermark advances with it). The pruning
+        #    set is the (bucket, slot) pairs from the fused stats pass, so
+        #    merge_cdc runs no pruning job of its own. Under drop_late a
+        #    pair whose arriving events were ALL late has no surviving
+        #    changes — leave it out so the merge does not rewrite its file
+        #    for nothing. The mor arm rewrites nothing and needs no set.
+        pairs = [
+            (r["partition"], r["_slot"]) for r in slot_rows
+            if not dropping or r["event_count"] > (r["late_count"] or 0)
+        ]
+        if pairs:
+            result = table.merge_cdc(
+                spark,
+                changes,
+                seq_col="_seq",
+                op_col="_op",
+                epoch=epoch,
+                extra_summary={"epoch": epoch},
+                extra_properties={"cdc.max-ts-us": str(new_max_us)},
+                **({"mode": "mor"} if self.merge_mode == "mor"
+                   else {"touched_bucket_slots": pairs}),
+            )
+            _mark("merge_job")
+            if (result["applied"] and self.merge_mode == "mor"
+                    and self.compact_every
+                    and (epoch + 1) % self.compact_every == 0):
+                table.compact(spark)
+                _mark("compact")
+        else:
+            # every arriving event was dropped as late: nothing to merge
+            # or fence (idempotent on redelivery — the drop recomputes),
+            # but the drops still land in lineage below
+            result = {"applied": False, "snapshot_id": None,
+                      "reason": "all-late-dropped"}
+
+        # 6. lineage upsert — idempotent by (epoch, partition) key
+        snap_id = result["snapshot_id"] if result["applied"] else (
+            self.table().current_snapshot() or {}
+        ).get("snapshot_id")
+        lin = IceliteTable(self.lineage_location)  # defer metadata read
+        if lineage_rows and int(lin.properties().get("lineage.last-epoch", "-1")) < epoch:
+            rows = [
+                {"epoch": epoch, "partition": r["partition"],
+                 "event_count": r["event_count"], "min_seq": r["min_seq"],
+                 "max_seq": r["max_seq"], "late_count": r["late_count"] or 0,
+                 "dropped_late": (r["late_count"] or 0) if dropping else 0,
+                 "snapshot_id": snap_id}
+                for r in lineage_rows
+            ]
+            # ≤num_buckets rows: driver-side pyarrow append — saves a full
+            # Spark job + commit per epoch (the lineage is tiny by design)
+            lin.append_rows_local(
+                rows,
+                summary={"epoch": epoch},
+                properties_update={"lineage.last-epoch": str(epoch)},
+            )
+            _mark("lineage")
+        if _timing:
+            prev = _t0
+            parts = []
+            for name, t in _marks:
+                parts.append(f"{name}={t - prev:.3f}s")
+                prev = t
+            print(f"PHASE_TIMING epoch={epoch} " + " ".join(parts))
+        return result
 
     # -- batch replay ------------------------------------------------------------
 
@@ -553,39 +507,39 @@ class CdcEngine:
         max_files_per_trigger: int | None = None,
         available_now: bool = True,
         transform_chain=None,
-        state_store: str | None = None,
-        dedup: bool = True,
+        dedup: bool = False,
     ):
         """Structured Streaming tail of the event-file directory.
 
-        Dedup uses dropDuplicatesWithinWatermark(["seq"]): Spark evicts a
-        seq from the state store once the watermark passes the event time it
-        was first seen with, so state is bounded by (watermark delay ×
-        arrival rate) — NOT by the total number of distinct seqs ever seen
-        (plain dropDuplicates(["seq"]) would keep every seq forever and OOM
-        at 10^10 events). A duplicate arriving after its twin was evicted
-        slips through dedup but is still harmless: the merge is idempotent
-        by seq (LWW max_by).
+        The stream is stateless: no dedup stage, no state store. Each
+        micro-batch goes to apply_batch(drop_late=True) in foreachBatch.
 
-        CONTRACT — `watermark_delay` is the stream's lateness SLA: an event
-        whose event time is older than (max event time seen − delay) is
-        DROPPED by the stateful dedup stage (standard Spark semantics for
-        watermarked state). Size the delay to the source's out-of-order
-        bound (tested: delay ≥ bound ⇒ final state equals the oracle while
-        state stays evicted/bounded; delay < bound ⇒ real events are lost).
-        For backfills that must tolerate unbounded lateness use
-        replay_batch(), which has no watermark.
-        Exactly-once = checkpoint (epoch replay) + cdc.last-epoch fence
-        inside the commit.
+        CONTRACT — `watermark_delay` is the stream's lateness SLA, and the
+        `cdc.max-ts-us` fence is the watermark: an event older than (max
+        event time of all prior epochs − delay) is DROPPED and counted per
+        bucket in lineage's `dropped_late` (lineage_drop_totals). Size the
+        delay to the source's out-of-order bound (tested: delay ≥ bound ⇒
+        final state equals the oracle with zero drops). Re-deliveries need
+        no dedup state: the merge is idempotent by `seq` (a change applies
+        only if change.seq > stored.seq), so a duplicate is a no-op. For
+        backfills that must tolerate unbounded lateness use replay_batch(),
+        which has no watermark. Exactly-once = checkpoint (epoch replay) +
+        cdc.last-epoch fence inside the commit.
         """
+        # dedup only still exists for callers passing dedup=False; the
+        # next benchmark change deletes the parameter
+        if dedup:
+            raise ValueError(
+                "run_stream(dedup=True): the stateful dedup "
+                "stage was removed; the stream is stateless (the cdc.max-ts-us "
+                "fence is its watermark, re-deliveries are no-ops by seq)")
         reader = spark.readStream.schema(EVENT_SPARK_SCHEMA)
         if max_files_per_trigger:
             reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
         return self.run_stream_df(
             spark, reader.parquet(events_dir), checkpoint_dir,
             watermark_delay=watermark_delay, available_now=available_now,
-            transform_chain=transform_chain, state_store=state_store,
-            dedup=dedup,
+            transform_chain=transform_chain,
         )
 
     def run_stream_df(
@@ -596,107 +550,32 @@ class CdcEngine:
         watermark_delay: str = "120 minutes",
         available_now: bool = True,
         transform_chain=None,
-        state_store: str | None = None,
-        dedup: bool = True,
     ):
         """Source-agnostic streaming entry: any streaming DataFrame with the
         EVENT_SPARK_SCHEMA columns (file tail, Kafka value-parsed stream,
-        rate-source adapter, socket...) gets the same watermarked dedup +
-        epoch-fenced merge pipeline. The file form (run_stream) is sugar
-        over this.
-
-        state_store: None keeps the session default (in-memory HDFS-backed
-        store); 'rocksdb' selects RocksDBStateStoreProvider. Measured
-        tradeoff on the 12M-event fixture at local[16] (BENCH/BASELINE.md):
-        the in-memory store wins when per-trigger dedup state is small
-        (6M rows: 31 s vs 57 s), RocksDB wins 2.4x when state is large
-        (12M rows: 42 s vs 99 s) — and at 10^10-event scale, where a
-        trigger's dedup state cannot fit a JVM heap at all, RocksDB is the
-        only viable provider."""
-        if state_store == "rocksdb":
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass",
-                "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-            )
-            # Changelog checkpointing: commit uploads only the delta since
-            # the last snapshot instead of the full RocksDB snapshot — the
-            # per-trigger commit cost stops growing with TOTAL state size,
-            # which is the difference between O(state) and O(delta) per
-            # commit at 10^10-event dedup state. Snapshots still happen in
-            # the background for recovery.
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-                "true",
-            )
-        # dedup=False is the STATELESS path: the merge is already idempotent
-        # by seq (LWW fence: a change applies only if change.seq >
-        # stored.seq), so re-deliveries are no-ops without any dedup state —
-        # the stream runs with NO stateful operator at all. What the
-        # watermarked stage otherwise provides is reproduced in the apply
-        # stage: the lateness SLA is enforced against the cdc.max-ts-us
-        # fence (numerically the same global watermark), drops are counted
-        # per bucket into lineage's dropped_late. This removes the dedup
-        # stage's full-row state shuffle and the state store's GC/commit
-        # cost per trigger — the measured high-parallelism bottleneck
-        # (BENCH/BASELINE.md round-5 diagnosis). Keep dedup=True for
-        # sources with duplicate rates high enough that re-running the
-        # merge's no-op path dominates (rare: a no-op by seq costs one
-        # map-side collapse, not a state lookup).
+        rate-source adapter, socket...) gets the same stateless,
+        watermark-fenced, epoch-fenced merge pipeline (see run_stream). The
+        file form (run_stream) is sugar over this."""
         late_delay = _delay_to_seconds(watermark_delay)
-        if dedup:
-            stream = (
-                events_stream
-                .withWatermark("ts", watermark_delay)
-                .dropDuplicatesWithinWatermark(["seq"])
-            )
-        else:
-            stream = events_stream
 
         def process(df: DataFrame, batch_id: int):
             self.apply_batch(spark, df, epoch=batch_id,
                              transform_chain=transform_chain,
                              late_delay_seconds=late_delay,
-                             drop_late=not dedup,
-                             persist_batch=dedup)
+                             drop_late=True)
 
         writer = (
-            stream.writeStream.foreachBatch(process)
+            events_stream.writeStream.foreachBatch(process)
             .option("checkpointLocation", checkpoint_dir)
         )
         if available_now:
             writer = writer.trigger(availableNow=True)
         return writer.start()
 
-    @staticmethod
-    def stream_drop_metrics(query) -> dict:
-        """Surface the dedup stage's watermark behavior from streaming
-        progress (SURVEY §7 watch list: late events beyond the delay must
-        be measured, not silently lost). Returns totals across the query's
-        recent triggers: rows dropped for being later than the watermark
-        (data loss — alert on this) and state rows evicted (healthy
-        bounded-state behavior)."""
-        dropped = 0
-        evicted = 0
-        state_rows_last = 0
-        for p in query.recentProgress:
-            for op in p["stateOperators"] or []:
-                dropped += op.get("numRowsDroppedByWatermark") or 0
-                evicted += op.get("numRowsRemoved") or 0
-                state_rows_last = op.get("numRowsTotal") or state_rows_last
-        return {
-            "rows_dropped_late": dropped,
-            "state_rows_evicted": evicted,
-            "state_rows_final": state_rows_last,
-            "triggers": len(query.recentProgress),
-        }
-
     def lineage_drop_totals(self, spark: SparkSession) -> dict:
-        """Drop accounting for the stateless (dedup=False) path, where the
-        apply stage — not a watermarked operator — enforces the lateness
-        SLA: totals over the lineage table's exact per-(epoch, bucket)
-        columns. The stateful path's equivalent is stream_drop_metrics
-        (approximate, query-progress-scoped); this one is durable and
-        survives restarts with the table."""
+        """Drop accounting for the stream's lateness SLA, which the apply
+        stage enforces: totals over the lineage table's exact per-(epoch,
+        bucket) columns. Durable — survives restarts with the table."""
         row = (
             self.read_lineage(spark)
             .agg(

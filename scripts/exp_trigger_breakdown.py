@@ -8,7 +8,7 @@ the scaling gate: the parallel work shrinks 4x from local[4] to
 local[16]; whatever does NOT shrink is the term that caps streaming
 scaling efficiency.
 
-Usage: python scripts/exp_trigger_breakdown.py [cores] [n_events] [dedup01]
+Usage: python scripts/exp_trigger_breakdown.py [cores] [n_events]
 """
 
 import json
@@ -20,7 +20,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 cores = int(sys.argv[1]) if len(sys.argv) > 1 else 16
 n_ev = int(sys.argv[2]) if len(sys.argv) > 2 else 3_000_000
-dedup = (len(sys.argv) > 3 and sys.argv[3] == "1")
 
 os.environ["SPARK_GRAFT_DRIVER_MEM"] = f"{max(cores, 8)}g"
 
@@ -43,7 +42,7 @@ files = [f for f in os.listdir(events_dir) if f.endswith(".parquet")]
 mfpt = max(1, math.ceil(len(files) / 4))
 t0 = time.time()
 q = eng.run_stream(spark, events_dir, os.path.join(work, "ckpt"),
-                   max_files_per_trigger=mfpt, available_now=True, dedup=dedup)
+                   max_files_per_trigger=mfpt, available_now=True)
 q.awaitTermination()
 wall = time.time() - t0
 
@@ -54,7 +53,7 @@ for p in q.recentProgress:
     d["_rows"] = p["numInputRows"]
     rows.append(d)
     keys |= set(d)
-print(f"cores={cores} events={n_ev} dedup={dedup} wall={wall:.2f}s "
+print(f"cores={cores} events={n_ev} wall={wall:.2f}s "
       f"triggers={len(rows)}")
 for i, d in enumerate(rows):
     print(f"  trigger {i}: " + json.dumps(d, sort_keys=True))

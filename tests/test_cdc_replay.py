@@ -19,7 +19,13 @@ from datavec_spark.streaming.datagen import (
     write_event_chunks,
 )
 from datavec_spark.streaming.oracle import replay as oracle_replay, expected_key_hashes
-from datavec_spark.streaming.replay import EVENT_SPARK_SCHEMA, CdcEngine, content_expr
+from datavec_spark.streaming.replay import (
+    EVENT_SPARK_SCHEMA,
+    LINEAGE_SCHEMA,
+    CdcEngine,
+    _delay_to_seconds,
+    content_expr,
+)
 
 N_EVENTS = 2500
 
@@ -80,6 +86,10 @@ def test_chunked_epochs_and_fence(spark, tmp_path, fixture):
     # retried epoch (foreachBatch redelivery) must be a no-op
     res = eng.apply_batch(spark, events_df(spark, events[3 * n // 5 : 4 * n // 5]), epoch=3)
     assert not res["applied"] and res["reason"] == "epoch-fenced"
+    # an unsplit table is sub_splits=1: every merged file sits in slot 0
+    merges = [s for s in eng.table().snapshots() if s["summary"]["operation"] == "merge"]
+    assert len(merges) == n_chunks
+    assert all(f["slot"] == 0 for s in merges for f in s["files"])
     assert_final_state(spark, eng, state, schema)
     # lineage: one row set per epoch, counts sum to total events applied
     lin = eng.lineage_table().read(spark)
@@ -125,47 +135,6 @@ def test_content_expr_matches_python(spark):
     got = df.select(content_expr(F.col("repo"), F.col("path"), F.col("seq")).alias("c")).collect()
     want = [content_for("org1/p1", "src/a.py", 7), content_for("org2/p9", "src/b.rs", 123456)]
     assert [r["c"] for r in got] == want
-
-
-def test_streaming_dedup_state_bounded(spark, tmp_path):
-    """dropDuplicatesWithinWatermark evicts dedup state as the watermark
-    advances: over 3+ triggers the state-store row count must stay far
-    below the total number of distinct seqs processed (plain
-    dropDuplicates would retain every seq ever seen — the round-1
-    100x-scale killer). The watermark delay must cover the stream's
-    lateness bound (here ±1 s jitter, no stragglers) while being far
-    smaller than the stream's event-time span (~2 min), so eviction is
-    observable WITHOUT dropping any real data."""
-    base = generate_base_rows(150, n_repos=30, paths_per_repo=25)
-    events = generate_events(N_EVENTS, n_repos=30, paths_per_repo=25,
-                             delay_us=2_000_000, straggler_frac=0.0)
-    state, schema = oracle_replay(base, events)
-    events_dir = str(tmp_path / "events")
-    ckpt = str(tmp_path / "ckpt")
-    write_event_chunks(events, events_dir, n_chunks=8)
-
-    eng = CdcEngine(str(tmp_path / "repos"), num_buckets=4)
-    eng.bootstrap(spark, base_df(spark, base))
-    q = eng.run_stream(spark, events_dir, ckpt, watermark_delay="10 seconds",
-                       max_files_per_trigger=1)
-    q.awaitTermination()
-    # late-drop accounting is surfaced, and with delay >= the stream's
-    # lateness bound nothing real was dropped while state WAS evicted
-    metrics = CdcEngine.stream_drop_metrics(q)
-    assert metrics["rows_dropped_late"] == 0, metrics
-    assert metrics["state_rows_evicted"] > 0, metrics
-    progress = q.recentProgress
-    state_rows = [
-        op["numRowsTotal"]
-        for p in progress for op in p["stateOperators"] if op.get("numRowsTotal") is not None
-    ]
-    assert len(progress) >= 3
-    # the final trigger's state must hold far fewer rows than the distinct
-    # seqs seen (eviction happened); a leak would approach N_EVENTS
-    assert state_rows, "no stateOperators metrics reported"
-    assert state_rows[-1] < N_EVENTS / 2, state_rows
-    # and the replay is still correct end-to-end despite evictions
-    assert_final_state(spark, eng, state, schema)
 
 
 def test_run_stream_df_rate_shaped_source(spark, tmp_path):
@@ -277,7 +246,7 @@ def test_streaming_schema_evolution_across_restart(spark, tmp_path, fixture):
 
 def test_fused_stats_bucket_hash_matches_merge_bucket_expr(spark, tmp_path, fixture):
     """apply_batch's fused stats pass hashes RAW event key fields and hands
-    the resulting bucket set to merge_cdc as the pruning set — that is only
+    the resulting (bucket, slot) set to merge_cdc as the pruning set — that is only
     sound if the hash is value- and type-identical to icelite._bucket_expr
     over the bound (current-schema) columns. Pin the parity, including
     after a key-column RENAME (values unchanged -> hash unchanged)."""
@@ -304,13 +273,15 @@ def test_fused_stats_bucket_hash_matches_merge_bucket_expr(spark, tmp_path, fixt
 
 
 def test_stateless_stream_exactly_once_with_resume(spark, tmp_path, fixture):
-    """dedup=False: NO stateful operator in the stream — exactly-once must
+    """NO stateful operator in the stream — exactly-once must
     hold from the epoch fence + seq-idempotent merge alone (the verdict's
     'measure whether the fence alone holds' experiment). The fixture has
     ~2% duplicate re-deliveries, stragglers 50 min late, and delete/
     reinsert chains; at a 120-minute SLA nothing is droppable, so the
     final state must equal the full LWW oracle exactly — across a crash/
-    resume (checkpoint redelivery) and a third no-op run."""
+    resume (checkpoint redelivery) and a third no-op run. The fixture's
+    jitter and stragglers stay inside the delay, so this also pins zero
+    drops at delay ≥ the source's lateness bound."""
     base, events, state, schema = fixture
     events_dir = str(tmp_path / "events")
     write_event_chunks(events, events_dir, n_chunks=6)
@@ -318,14 +289,12 @@ def test_stateless_stream_exactly_once_with_resume(spark, tmp_path, fixture):
     eng.bootstrap(spark, base_df(spark, base))
     ckpt = str(tmp_path / "ckpt")
 
-    q = eng.run_stream(spark, events_dir, ckpt, max_files_per_trigger=2,
-                       dedup=False)
+    q = eng.run_stream(spark, events_dir, ckpt, max_files_per_trigger=2)
     q.awaitTermination()
-    q2 = eng.run_stream(spark, events_dir, ckpt, max_files_per_trigger=2,
-                        dedup=False)
+    q2 = eng.run_stream(spark, events_dir, ckpt, max_files_per_trigger=2)
     q2.awaitTermination()
     snap_before = eng.table().current_snapshot()["snapshot_id"]
-    q3 = eng.run_stream(spark, events_dir, ckpt, dedup=False)
+    q3 = eng.run_stream(spark, events_dir, ckpt)
     q3.awaitTermination()
     assert eng.table().current_snapshot()["snapshot_id"] == snap_before
     assert_final_state(spark, eng, state, schema)
@@ -334,10 +303,9 @@ def test_stateless_stream_exactly_once_with_resume(spark, tmp_path, fixture):
 
 
 def test_stateless_stream_drops_far_late_dups_into_lineage(spark, tmp_path):
-    """dedup=False with a tight SLA: far-late duplicate re-deliveries are
-    dropped by the APPLY stage and the exact count lands in lineage's
-    dropped_late column (per epoch/bucket — the stateful path can only
-    report query-scoped totals). The drops are lossless: every dropped row
+    """A tight SLA: far-late duplicate re-deliveries are dropped by the
+    APPLY stage and the exact count lands in lineage's dropped_late column
+    (per epoch/bucket). The drops are lossless: every dropped row
     is a re-delivery whose original already committed, so the final state
     still equals the full LWW oracle."""
     base = generate_base_rows(150, n_repos=30, paths_per_repo=25)
@@ -358,8 +326,7 @@ def test_stateless_stream_drops_far_late_dups_into_lineage(spark, tmp_path):
     eng = CdcEngine(str(tmp_path / "repos"), num_buckets=4)
     eng.bootstrap(spark, base_df(spark, base))
     q = eng.run_stream(spark, events_dir, str(tmp_path / "ckpt"),
-                       watermark_delay="10 seconds", max_files_per_trigger=1,
-                       dedup=False)
+                       watermark_delay="10 seconds", max_files_per_trigger=1)
     q.awaitTermination()
 
     drops = eng.lineage_drop_totals(spark)
@@ -459,3 +426,56 @@ def test_mor_auto_compaction_cadence(spark, tmp_path, fixture):
     assert snap["summary"]["operation"] == "compact"
     assert not any(f.get("delta") for f in snap["files"])
     assert_final_state(spark, eng, state, schema)
+
+
+def test_run_stream_rejects_stateful_dedup(spark, tmp_path):
+    """The stateful dedup stage is gone: dedup=True fails loudly before
+    any stream starts; dedup=False is the default and the only shape."""
+    eng = CdcEngine(str(tmp_path / "repos"))
+    with pytest.raises(ValueError, match="stateful dedup"):
+        eng.run_stream(spark, str(tmp_path / "events"), str(tmp_path / "ckpt"),
+                       dedup=True)
+
+
+def test_delay_to_seconds_interval_forms():
+    assert _delay_to_seconds("600 seconds") == 600
+    assert _delay_to_seconds("120 minutes") == 7200
+    assert _delay_to_seconds("2 hours") == 7200
+    assert _delay_to_seconds("1 day") == 86400
+    # previously-crashing Spark-valid forms (r6 advice #1)
+    assert _delay_to_seconds("500 milliseconds") == 0
+    assert _delay_to_seconds("1500 milliseconds") == 1
+    assert _delay_to_seconds("1 week") == 604800
+    assert _delay_to_seconds("1 hour 30 minutes") == 5400
+    with pytest.raises(ValueError, match="unsupported interval unit"):
+        _delay_to_seconds("3 fortnights")
+    with pytest.raises(ValueError, match="unsupported interval"):
+        _delay_to_seconds("90")
+
+
+def test_read_lineage_null_fills_pre_upgrade_schema(spark, tmp_path):
+    """A lineage table written before LINEAGE_SCHEMA gained dropped_late
+    must stay readable: missing columns come back null-filled and the drop
+    totals resolve (r6 advice #4)."""
+    from pyspark.sql import types as T
+
+    from datavec_spark.sources.icelite import IceliteTable
+
+    old_fields = [f for f in LINEAGE_SCHEMA.fields if f.name != "dropped_late"]
+    lin = IceliteTable.create(
+        str(tmp_path / "repos_lineage"), T.StructType(old_fields),
+        key_cols=["epoch", "partition"], num_buckets=1,
+        properties={"lineage.last-epoch": "-1"},
+    )
+    lin.append_rows_local(
+        [{"epoch": 0, "partition": 3, "event_count": 10, "min_seq": 1,
+          "max_seq": 10, "late_count": 2, "snapshot_id": 1}],
+        properties_update={"lineage.last-epoch": "0"},
+    )
+    eng = CdcEngine(str(tmp_path / "repos"))
+    df = eng.read_lineage(spark)
+    assert "dropped_late" in df.columns
+    row = df.collect()[0]
+    assert row["event_count"] == 10 and row["dropped_late"] is None
+    totals = eng.lineage_drop_totals(spark)
+    assert totals == {"rows_dropped_late": 0, "rows_late": 2, "rows_arrived": 10}

@@ -9,12 +9,13 @@ from datavec_spark.functions.dedup import (
     embedding_near_dup_pairs,
     exact_duplicates,
     minhash_lsh_pairs,
+    minhash_signatures,
     near_dup_fingerprint,
     ngram_jaccard_pairs,
     simhash_near_dup_pairs,
 )
 from datavec_spark.functions.similarity import IvfIndex, cosine_topk, train_ivf_centroids
-from datavec_spark.functions.text import add_text_features
+from datavec_spark.functions.text import add_text_features, char_shingles, word_shingles
 from datavec_spark.plans.schema import EngineSchema
 
 
@@ -571,3 +572,74 @@ def test_gate_registry_consistency():
     qs, osql = E.queries(), E.oracle_sql()
     assert set(osql) == set(qs)
     assert len(qs) == 77  # round-6 count; update with COVERAGE.md rotation
+
+
+SHINGLE_DOCS = [
+    (0, "the quick brown fox jumps over the lazy dog"),
+    (1, "the quick brown fox jumps over the lazy dog again and again"),
+    (2, "ab"),          # shorter than any k: must vanish from char k=5
+    (3, "one two"),     # < 3 words: must vanish from word k=3
+    (4, "aaaaaaa"),     # degenerate: one distinct char-5 shingle
+    (5, ""),            # empty
+]
+
+
+def _py_word_shingles(text, k=3):
+    toks = [t for t in text.lower().split() if t]
+    return {" ".join(toks[i:i + k]) for i in range(len(toks) - k + 1)}
+
+
+def _py_char_shingles(text, k=5):
+    return {text[i:i + k] for i in range(len(text) - k + 1)}
+
+
+def test_word_shingles_match_python_reference(spark):
+    df = spark.createDataFrame(SHINGLE_DOCS, "doc_id long, text string")
+    got = {}
+    for r in word_shingles(df, "text", "doc_id", 3).collect():
+        got.setdefault(r["doc_id"], set()).add(r["shingle"])
+    expect = {i: _py_word_shingles(t) for i, t in SHINGLE_DOCS if len(t.split()) >= 3}
+    assert got == {k: v for k, v in expect.items() if v}
+
+
+def test_char_shingles_match_python_reference(spark):
+    df = spark.createDataFrame(SHINGLE_DOCS, "doc_id long, text string")
+    got = {}
+    for r in char_shingles(df, "text", "doc_id", 5).collect():
+        got.setdefault(r["doc_id"], set()).add(r["shingle"])
+    expect = {i: _py_char_shingles(t) for i, t in SHINGLE_DOCS if len(t) >= 5}
+    assert got == {k: v for k, v in expect.items() if v}
+
+
+def test_minhash_explode_form_matches_narrow_array_form(spark):
+    """The explode + groupBy(min) signatures must be value-identical to a
+    per-row array_min over the in-row shingle set (min over a set is
+    materialization-independent) — the two formulations are
+    interchangeable on values, so the faster one can be chosen freely."""
+    def char_shingle_array(text_col, k):
+        # per-row DISTINCT character-k-gram set; rows with length < k get
+        # an empty array (sequence(1, n) counts DOWN when n < 1)
+        n = F.length(F.col(text_col)) - (k - 1)
+        arr = F.array_distinct(
+            F.transform(F.sequence(F.lit(1), n),
+                        lambda p: F.col(text_col).substr(p, F.lit(k))))
+        return F.when(n >= 1, arr).otherwise(F.array().cast("array<string>"))
+
+    df = spark.createDataFrame(SHINGLE_DOCS, "doc_id long, text string")
+    k, num_hashes = 5, 8
+    got = {r["doc_id"]: [r[f"h{i}"] for i in range(num_hashes)]
+           for r in minhash_signatures(df, k=k, num_hashes=num_hashes).collect()}
+    with_arr = df.where(F.length("text") >= k).select(
+        F.col("doc_id"), char_shingle_array("text", k).alias("_sh"))
+
+    def slot(i):
+        # NB: a two-parameter lambda in F.transform would receive
+        # (element, index) — bind the seed via closure instead
+        return F.array_min(
+            F.transform(F.col("_sh"), lambda s: F.xxhash64(s, F.lit(i))))
+
+    narrow_df = with_arr.select(
+        "doc_id", *[slot(i).alias(f"h{i}") for i in range(num_hashes)])
+    narrow = {r["doc_id"]: [r[f"h{i}"] for i in range(num_hashes)]
+              for r in narrow_df.collect()}
+    assert got == narrow

@@ -317,20 +317,23 @@ def test_sub_splits_file_level_merge_pruning(spark, tmp_path):
     assert ("k7", 777, 5, False) in got
 
 
-def test_sub_splits_self_derived_pruning_and_legacy_files(spark, tmp_path):
+@pytest.mark.parametrize("sub_splits", [1, 3])
+def test_sub_splits_self_derived_pruning_and_legacy_files(spark, tmp_path, sub_splits):
     """Without caller-supplied pairs the merge derives (bucket, slot)
-    itself; slot-less manifest entries (written before splitting / by
-    append_rows-style paths) cover their whole bucket and are consumed
-    whenever the bucket is touched."""
-    t = IceliteTable.create(str(tmp_path / "t2"), SCHEMA,
-                            key_cols=["k"], num_buckets=2, sub_splits=3)
+    itself; slot-less manifest entries (written before every table carried
+    slots / by append_rows-style paths) cover their whole bucket and are
+    consumed whenever the bucket is touched — on an unsplit table
+    (sub_splits=1, slot 0 only) as on a split one."""
+    t = IceliteTable.create(str(tmp_path / "t2"), SCHEMA, key_cols=["k"], num_buckets=2,
+                            sub_splits=sub_splits)
     t.overwrite(spark.createDataFrame([(f"k{i}", i, 0, False) for i in range(60)], SCHEMA))
     n_files = len(t.current_snapshot()["files"])
-    assert n_files == 6
+    assert n_files == 2 * sub_splits
     ch_schema = "k string, v int, _seq long, _deleted boolean, _op string"
     t.merge_cdc(spark, spark.createDataFrame([("k3", 33, 4, False, "upsert")], ch_schema), epoch=0)
     snap = t.current_snapshot()
-    assert snap["summary"]["rewritten-files"] == 1 and snap["summary"]["carried-files"] == 5
+    assert snap["summary"]["rewritten-files"] == 1
+    assert snap["summary"]["carried-files"] == n_files - 1
     got = {r["k"]: r["v"] for r in t.read(spark).collect()}
     assert got["k3"] == 33 and len(got) == 60
 
@@ -356,6 +359,30 @@ def test_sub_splits_self_derived_pruning_and_legacy_files(spark, tmp_path):
     assert victim["path"] not in {f["path"] for f in snap2["files"]}
     got2 = {r["k"]: r["v"] for r in t.read(spark).collect()}
     assert got2[keys_in_bucket[0]] == 999 and len(got2) == 60
+
+
+def test_merge_cdc_pruning_guard_catches_stray_buckets(spark, tmp_path):
+    """A (bucket, slot) pruning set that does not cover every change
+    bucket must fail the commit loudly (silent duplicate key versions
+    otherwise), naming the epoch, the stray pairs and the snapshot."""
+    t = IceliteTable.create(str(tmp_path / "t"), SCHEMA, key_cols=["k"], num_buckets=8)
+    t.overwrite(spark.createDataFrame([(f"k{i}", 0, 0, False) for i in range(20)], SCHEMA))
+    changes = spark.createDataFrame(
+        [(f"k{i}", 1, 1, False) for i in range(20)], SCHEMA) \
+        .withColumn("_op", F.lit("upsert"))
+    # the full set works (an unsplit table has slot 0 only)
+    t.merge_cdc(spark, changes, epoch=0,
+                touched_bucket_slots=[(b, 0) for b in range(8)])
+    snap = t.current_snapshot()["snapshot_id"]
+    # a deliberately short set must raise, not silently commit
+    with pytest.raises(RuntimeError, match="outside the pruning set") as err:
+        t.merge_cdc(spark, changes.withColumn("_seq", F.lit(2).cast("long")),
+                    epoch=7, touched_bucket_slots=[(0, 0)])
+    stray = sorted({(r[0], 0) for r in changes.select(t._bucket_expr(t.metadata()))
+                    .distinct().collect()} - {(0, 0)})
+    msg = str(err.value)
+    assert "epoch 7" in msg and f"snapshot {snap}" in msg and str(stray) in msg
+    assert t.current_snapshot()["snapshot_id"] == snap
 
 
 def test_merge_on_read_mode(spark, tmp_path):
