@@ -1,9 +1,10 @@
 """Benchmark harness.
 
-Default mode (what the driver runs): headline queries at
-$SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
-local[$SPARK_GRAFT_CPUS], plus a CDC batch-replay throughput measurement.
-Prints ONE JSON line:
+Default mode: headline queries at $SPARK_GRAFT_SF_DIR (default
+/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS], plus a CDC batch-replay
+throughput measurement. Cores default to the CPUs this process may run
+on and the heap ($SPARK_GRAFT_DRIVER_MEM) to a quarter of RAM, between 2
+and 8 GB; set either variable to override. Prints ONE JSON line:
   {"metric": "...", "value": <total sec>, "unit": "sec",
    "queries": {...per-query sec...}, "sf": ..., "cdc_events_per_sec": ...}
 
@@ -11,9 +12,11 @@ Prints ONE JSON line:
 (default local[4] and local[16]; SPARK_GRAFT_SCALE_LEVELS="lo,hi")
 (stand-ins for N and 4N executors; no real cluster in the sandbox) and
 reports throughput at both plus efficiency = (rate_hi/rate_lo)/(hi/lo),
-appending
-the evidence to BENCH/BASELINE.md. Launch via scripts/submit_bench.sh for
-the spark-submit --py-files path.
+writing the evidence to BENCH/scaling_latest.json. Launch via
+scripts/submit_bench.sh for the spark-submit --py-files path.
+
+--plans OUT_DIR [query ...]: write each query's formatted physical plan
+(default: the headline queries) to OUT_DIR/<query>.txt.
 """
 
 from __future__ import annotations
@@ -28,13 +31,10 @@ import time
 REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
-# local mode shares ONE JVM heap across all executor threads (and the heap
-# size is fixed by the first session of the process) — size it for 32
-# concurrent tasks' shuffle/join/cache buffers before any session starts
-os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "48g")
+from perfbench.common import heap_gb, host_cores  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+CPUS = host_cores()
 
 HEADLINE = [
     "q1_pricing_summary",
@@ -162,22 +162,14 @@ def run_cdc_replay(spark, fixture_dir: str, num_buckets: int = 64, epochs: int =
     """Batch-replay the event log in `epochs` epochs; returns wall + rate +
     an order-insensitive checksum of the final state (replay-equality
     evidence across parallelism levels). The replay includes in-batch LWW
-    collapse, tombstone merge, lineage accounting and epoch-fenced commits.
-
-    SPARK_GRAFT_MERGE_MODE=mor measures the merge-on-read arm; because mor
-    defers the merge to read time, the timed window then INCLUDES the
-    final-state materialization (checksum aggregation over the resolved
-    table) — otherwise the mode would bank its merge cost outside the
-    clock. For cow the final read is a plain scan and stays outside, as in
-    every prior round (comparability)."""
+    collapse, tombstone merge, lineage accounting and epoch-fenced commits;
+    the final-state read stays outside the clock."""
     from pyspark.sql import functions as F
 
     from datavec_spark.streaming.replay import CdcEngine
 
-    merge_mode = os.environ.get("SPARK_GRAFT_MERGE_MODE", "cow")
     work = tempfile.mkdtemp(prefix="cdc_bench_")
-    eng = CdcEngine(os.path.join(work, "repos"), num_buckets=num_buckets,
-                    merge_mode=merge_mode)
+    eng = CdcEngine(os.path.join(work, "repos"), num_buckets=num_buckets)
     base_df = spark.read.parquet(os.path.join(fixture_dir, "base"))
     eng.bootstrap(spark, base_df)
     # NO .persist(): caching the event log as deserialized JVM rows (content
@@ -193,22 +185,14 @@ def run_cdc_replay(spark, fixture_dir: str, num_buckets: int = 64, epochs: int =
         hi = (e + 1) * seq_max // epochs
         chunk = events.where((F.col("seq") > lo) & (F.col("seq") <= hi))
         eng.apply_batch(spark, chunk, epoch=e)
-    if merge_mode == "mor":
-        agg = eng.final_state_hashes(spark).agg(
-            F.count(F.lit(1)).alias("n"),
-            F.bit_xor(F.xxhash64("repo", "path", "content_sha")).alias("chk"),
-        ).collect()[0]
-        wall = time.time() - t0
-    else:
-        wall = time.time() - t0
-        agg = eng.final_state_hashes(spark).agg(
-            F.count(F.lit(1)).alias("n"),
-            F.bit_xor(F.xxhash64("repo", "path", "content_sha")).alias("chk"),
-        ).collect()[0]
+    wall = time.time() - t0
+    agg = eng.final_state_hashes(spark).agg(
+        F.count(F.lit(1)).alias("n"),
+        F.bit_xor(F.xxhash64("repo", "path", "content_sha")).alias("chk"),
+    ).collect()[0]
     shutil.rmtree(work, ignore_errors=True)
     return {"events": n_events, "wall_sec": round(wall, 3),
             "events_per_sec": round(n_events / wall, 1),
-            "merge_mode": merge_mode,
             "final_rows": agg["n"], "final_checksum": int(agg["chk"])}
 
 
@@ -231,10 +215,8 @@ def run_cdc_stream_replay(spark, fixture_dir: str, num_buckets: int = 64,
 
     from datavec_spark.streaming.replay import CdcEngine
 
-    merge_mode = os.environ.get("SPARK_GRAFT_MERGE_MODE", "cow")
     work = tempfile.mkdtemp(prefix="cdc_stream_bench_")
-    eng = CdcEngine(os.path.join(work, "repos"), num_buckets=num_buckets,
-                    merge_mode=merge_mode)
+    eng = CdcEngine(os.path.join(work, "repos"), num_buckets=num_buckets)
     eng.bootstrap(spark, spark.read.parquet(os.path.join(fixture_dir, "base")))
     events_dir = os.path.join(fixture_dir, "events")
     files = [f for f in os.listdir(events_dir) if f.endswith(".parquet")]
@@ -244,11 +226,6 @@ def run_cdc_stream_replay(spark, fixture_dir: str, num_buckets: int = 64,
     q = eng.run_stream(spark, events_dir, os.path.join(work, "ckpt"),
                        max_files_per_trigger=mfpt, available_now=True)
     q.awaitTermination()
-    if merge_mode == "mor":
-        # mor defers merging to read time: charge the final-state
-        # materialization to the stream's clock (see run_cdc_replay)
-        eng.final_state_hashes(spark).agg(
-            F.count(F.lit(1))).collect()
     wall = time.time() - t0
     drops = eng.lineage_drop_totals(spark)
     final = eng.final_state_hashes(spark)
@@ -355,6 +332,9 @@ def host_mem_bandwidth_probe(seconds: float = 4.0) -> dict:
 def make_session(cores: int):
     from datavec_spark.session import get_spark
 
+    # local mode shares ONE JVM heap across all executor threads, and the
+    # first session of the process fixes its size
+    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", f"{heap_gb()}g")
     # AQE partition coalescing stays ON for real clusters, but in a local
     # single-JVM microbench it merges the already-small shuffle stages below
     # the core count and caps parallelism — disable it for measurement
@@ -459,7 +439,31 @@ def scaling_worker(cores: int, n_ev: int):
     spark.stop()
 
 
+def capture_plans(out_dir: str, names: list[str]) -> None:
+    """Write each query's formatted physical plan to out_dir/<name>.txt
+    (default: the headline queries). Persists a query tracks while it is
+    built are released before the next one."""
+    import __spark_entry__ as entry_mod
+    from datavec_spark.cache import release_tracked
+
+    spark = make_session(CPUS)
+    os.makedirs(out_dir, exist_ok=True)
+    qs = entry_mod.queries()
+    formatted = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+    for name in names or HEADLINE:
+        plan = qs[name](spark, SF_DIR)._jdf.queryExecution().explainString(formatted)
+        with open(os.path.join(out_dir, f"{name}.txt"), "w") as fh:
+            fh.write(plan)
+        release_tracked()
+        print(f"wrote {name} ({plan.count('Exchange')} Exchange mentions)")
+    spark.stop()
+
+
 def main():
+    if "--plans" in sys.argv:
+        i = sys.argv.index("--plans")
+        capture_plans(sys.argv[i + 1], sys.argv[i + 2:])
+        return
     if "--scaling-worker" in sys.argv:
         i = sys.argv.index("--scaling-worker")
         scaling_worker(int(sys.argv[i + 1]), int(sys.argv[i + 2]))
@@ -467,7 +471,7 @@ def main():
     if "--scaling" in sys.argv:
         run_scaling()
         return
-    spark = make_session(int(CPUS))
+    spark = make_session(CPUS)
     times = run_query_suite(spark, SF_DIR)
     n_ev = int(os.environ.get("SPARK_GRAFT_BENCH_EVENTS", "500000"))
     fx = cdc_fixture(spark, n_ev, n_base=100000, n_repos=2000, paths_per_repo=100)
@@ -482,24 +486,25 @@ def main():
         "sf": _sf(SF_DIR),
         "cdc_events": cdc["events"],
         "cdc_events_per_sec": cdc["events_per_sec"],
-        "cores": int(CPUS),
+        "cores": CPUS,
     }))
     spark.stop()
 
 
 def run_scaling():
-    """Same CDC replay at local[8] and local[32]; efficiency evidence for
+    """Same CDC replay at two parallelism levels (default local[4] and
+    local[16], SPARK_GRAFT_SCALE_LEVELS="lo,hi"); efficiency evidence for
     the north rule's two-cluster-size criterion."""
     import subprocess
 
     n_ev = int(os.environ.get("SPARK_GRAFT_SCALE_EVENTS", "12000000"))
-    # the two "cluster sizes" (N and 4N cores). Default 4→16: on this 32-core
-    # shared host, 32 threads saturate memory bandwidth and absorb external
-    # noise; 4→16 measures the engine's scaling, not the box's ceiling.
+    # the two "cluster sizes" (N and 4N cores). Default 4→16: on the 32-core
+    # shared host this protocol was built on, 32 threads saturated memory
+    # bandwidth; 4→16 measures the engine's scaling, not the box's ceiling.
     levels = [int(x) for x in os.environ.get("SPARK_GRAFT_SCALE_LEVELS", "4,16").split(",")]
     n_trials = int(os.environ.get("SPARK_GRAFT_SCALE_TRIALS", "4"))
     bw = host_mem_bandwidth_probe()
-    gen = make_session(32)
+    gen = make_session(CPUS)
     cdc_fixture(gen, n_ev, n_base=200000, n_repos=5000, paths_per_repo=200)
     gen.stop()
 

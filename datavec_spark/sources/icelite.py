@@ -145,10 +145,9 @@ class IceliteTable:
         merge then rewrites only the slot files whose hash space the
         changed keys actually occupy — copy-on-write amplification drops
         from (bucket size) to (bucket size / sub_splits) per changed key.
-        This is the file-level pruning step between bucket-COW and full
-        merge-on-read: at 100 TB, num_buckets fixes shuffle/task
-        parallelism while num_buckets x sub_splits fixes the rewrite unit
-        and target file size. Static by design — slot assignment must be
+        At 100 TB, num_buckets fixes shuffle/task parallelism while
+        num_buckets x sub_splits fixes the rewrite unit and target file
+        size. Static by design — slot assignment must be
         stable across batches or pruning would miss files (the same
         reason bucket counts are fixed at creation)."""
         t = cls(location)
@@ -300,7 +299,7 @@ class IceliteTable:
             files = [f for f in files if f["bucket"] in bset]
         if not files:
             return spark.createDataFrame([], cur_struct)
-        return self._read_resolved(spark, meta, files)
+        return self._read_entries(spark, meta, files)
 
     def read_changes(
         self,
@@ -321,9 +320,8 @@ class IceliteTable:
 
         Scale path: a key's versions never leave its bucket, so the diff
         is pruned to CANDIDATE BUCKETS — buckets of manifest entries added
-        or removed between the snapshots (COW merges rewrite only touched
-        files; MOR epochs append delta files only for changed keys;
-        rollback removes files). Both snapshot reads scan only those
+        or removed between the snapshots (merges rewrite only touched
+        files; rollback removes files). Both snapshot reads scan only those
         buckets and the diff is ONE full-outer shuffle over them —
         O(touched-bucket bytes), not O(table), per poll. Compaction
         rewrites are content-neutral: their buckets enter the candidate
@@ -406,44 +404,22 @@ class IceliteTable:
             .select(*[f.name for f in out_struct.fields])
         )
 
-    def _read_resolved(self, spark: SparkSession, meta: dict, files: list[dict]) -> DataFrame:
-        """Read manifest entries with merge-on-read resolution: when the
-        file set contains DELTA files (appended by merge_cdc(mode='mor')),
-        a key may have several versions across base + delta files — keep
-        only the newest by the table's seq column (LWW, the read-time half
-        of merge-on-read). The resolution window runs ONLY over buckets
-        that actually hold a delta file: a key's versions all live in its
-        bucket, so delta-free buckets are final and stream through as
-        plain scans — at scale the read amplification is bounded by the
-        HOT bucket set × compaction cadence, not the table size. Tombstone
-        rows survive resolution like any other newest version
-        (read_current-style callers filter them). Zero overhead when no
-        delta file is present. Ties on (key, seq) are identical
-        re-delivered rows — either copy is the same row."""
-        delta_buckets = {f["bucket"] for f in files if f.get("delta")}
-        if not delta_buckets:
-            return self._read_entries(spark, meta, files)
-        keys = self.key_cols(meta)
-        seq_col = meta["properties"].get("mor.seq-col", "_seq")
-        from pyspark.sql import Window
-
-        hot = [f for f in files if f["bucket"] in delta_buckets]
-        clean = [f for f in files if f["bucket"] not in delta_buckets]
-        w = Window.partitionBy(*[F.col(k) for k in keys]).orderBy(F.col(seq_col).desc())
-        resolved = (
-            self._read_entries(spark, meta, hot)
-            .withColumn("_mor_rn", F.row_number().over(w))
-            .where(F.col("_mor_rn") == 1).drop("_mor_rn")
-        )
-        if not clean:
-            return resolved
-        return self._read_entries(spark, meta, clean).unionByName(resolved)
-
     def _read_entries(self, spark: SparkSession, meta: dict, files: list[dict]) -> DataFrame:
         """Read specific manifest entries projected to the current schema
         (empty entry list -> empty DataFrame). Files are grouped by the
         schema they were written with; each group is projected by field id
-        (rename aliased, widen cast, added null-filled), then unioned."""
+        (rename aliased, widen cast, added null-filled), then unioned.
+
+        Every read goes through here, so this is where a table still
+        holding merge-on-read delta files (an older release appended them
+        and resolved each key's newest version at read time) is refused:
+        a plain scan would return several versions of a key."""
+        delta = next((f for f in files if f.get("delta")), None)
+        if delta is not None:
+            raise ValueError(
+                f"icelite table {self.location} holds merge-on-read delta file "
+                f"{delta['path']}; this release reads copy-on-write files only. "
+                f"compact() the table with the previous release first")
         cur_fields = self._fields(meta)
         if not files:
             return spark.createDataFrame([], schema_to_struct(cur_fields))
@@ -634,7 +610,6 @@ class IceliteTable:
         extra_summary: dict[str, Any] | None = None,
         extra_properties: dict[str, str] | None = None,
         touched_bucket_slots=None,
-        mode: str = "cow",
     ) -> dict:
         """Apply per-key winners (one row per key: op ∈ {upsert, delete},
         payload in current schema + seq_col) with last-writer-wins by
@@ -658,19 +633,6 @@ class IceliteTable:
         manifest entry with no slot (written before every table carried
         slots, or by append_rows_local) covers its whole bucket.
 
-        mode: 'cow' (default) rewrites the touched files with changes
-        folded in — reads stay plain scans. 'mor' (merge-on-read) APPENDS
-        the change winners as bucket-partitioned DELTA files: per-epoch
-        write cost is proportional to the CHANGES alone (no target read,
-        no join, no rewrite — the full-table COW amplification disappears
-        from the ingest path), and reads pay a per-key max-seq window
-        until compact() folds the deltas back into plain files. At 10^10
-        events with hot tables this is the standard Iceberg/Hudi
-        write-optimized mode; a later COW-mode merge (or compact) on the
-        same table acts as compaction because the target read resolves
-        deltas first. Requires a `_deleted` tombstone column so deletes
-        are representable as rows.
-
         Returns {"applied": bool, "snapshot_id": int|None}.
         """
         meta, version = self._load()
@@ -678,11 +640,6 @@ class IceliteTable:
             return {"applied": False, "snapshot_id": None, "reason": "epoch-fenced"}
         keys = self.key_cols(meta)
         assert keys, "merge_cdc requires key columns"
-        if mode == "mor":
-            return self._merge_mor(
-                meta, version, changes, seq_col, op_col, epoch,
-                extra_summary, extra_properties,
-            )
         cur = None
         if meta["current_snapshot_id"] is not None:
             cur = next(s for s in meta["snapshots"]
@@ -698,10 +655,7 @@ class IceliteTable:
                 changes.select(*self._bucket_slot_exprs(meta)).distinct().collect())
         pairs = sorted({(int(b), int(sl)) for b, sl in touched_bucket_slots})
         selected, untouched = self._select_files(cur_files, pairs)
-        # resolve deltas on the target if a prior mor-mode merge appended
-        # any (a cow merge on such a table doubles as compaction of the
-        # touched files)
-        target = self._read_resolved(spark, meta, selected)
+        target = self._read_entries(spark, meta, selected)
 
         data_cols = [f["name"] for f in self._fields(meta)]
         # resolve: keep target rows whose key is absent from changes or whose
@@ -775,59 +729,6 @@ class IceliteTable:
             untouched + new_files,
             {"operation": "merge", "touched-buckets": len({b for b, _ in pairs}),
              "rewritten-files": len(selected), "carried-files": len(untouched),
-             **(extra_summary or {})},
-            properties_update=props,
-        )
-        return {"applied": True, "snapshot_id": snap_id}
-
-    def _merge_mor(
-        self,
-        meta: dict,
-        version: int,
-        changes: DataFrame,
-        seq_col: str,
-        op_col: str,
-        epoch: int | None,
-        extra_summary: dict[str, Any] | None,
-        extra_properties: dict[str, str] | None,
-    ) -> dict:
-        """merge_cdc's merge-on-read arm: append change winners as delta
-        files (see merge_cdc docstring). ONE Spark job — the bucket-
-        partitioned delta write of the changes themselves."""
-        data_cols = [f["name"] for f in self._fields(meta)]
-        fields_by_name = {f["name"]: f for f in self._fields(meta)}
-        keys = self.key_cols(meta)
-        if "_deleted" not in data_cols:
-            raise ValueError("mor merge requires a `_deleted` tombstone column")
-        is_del = F.col(op_col) == F.lit("delete")
-        sel = []
-        for c in data_cols:
-            src = (F.col(c) if c in changes.columns
-                   else F.lit(None).cast(type_to_spark(fields_by_name[c]["type"])))
-            if c == "_deleted":
-                # delete ops become tombstone rows; upserts default to live
-                src = F.when(is_del, F.lit(True)).otherwise(F.coalesce(src, F.lit(False)))
-            elif c not in keys and c != seq_col:
-                src = F.when(is_del, F.lit(None).cast(
-                    type_to_spark(fields_by_name[c]["type"]))).otherwise(src)
-            sel.append(src.alias(c))
-        rows = changes.select(*sel)
-        new_files = self._write_data_files(rows, meta)
-        for e in new_files:
-            e["delta"] = True
-        cur = None
-        if meta["current_snapshot_id"] is not None:
-            cur = next(s for s in meta["snapshots"]
-                       if s["snapshot_id"] == meta["current_snapshot_id"])
-        props = dict(extra_properties or {})
-        props["mor.seq-col"] = seq_col
-        if epoch is not None:
-            props["cdc.last-epoch"] = str(epoch)
-        snap_id = self._commit_snapshot(
-            meta,
-            version,
-            (cur["files"] if cur else []) + new_files,
-            {"operation": "merge-mor", "delta-files": len(new_files),
              **(extra_summary or {})},
             properties_update=props,
         )

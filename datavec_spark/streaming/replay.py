@@ -122,8 +122,7 @@ def content_expr(repo: F.Column, path: F.Column, seq: F.Column) -> F.Column:
 
 class CdcEngine:
     def __init__(self, table_location: str, lineage_location: str | None = None,
-                 num_buckets: int = 16, sub_splits: int = 1,
-                 merge_mode: str = "cow", compact_every: int | None = None):
+                 num_buckets: int = 16, sub_splits: int = 1):
         self.table_location = table_location
         self.lineage_location = lineage_location or table_location.rstrip("/") + "_lineage"
         self.num_buckets = num_buckets
@@ -132,17 +131,6 @@ class CdcEngine:
         # hash into. num_buckets fixes task parallelism; num_buckets x
         # sub_splits fixes the rewrite unit / target file size at scale.
         self.sub_splits = sub_splits
-        # 'cow' rewrites touched files per epoch (read-optimized); 'mor'
-        # appends winner-delta files per epoch (write-optimized: per-epoch
-        # cost proportional to the changes, reads pay a max-seq window
-        # until table().compact() folds the deltas — icelite.merge_cdc).
-        self.merge_mode = merge_mode
-        # mor compaction cadence: fold deltas back into plain files every N
-        # applied epochs, bounding read-side resolution cost by (N x trigger
-        # changes) instead of the full delta history. Re-running compaction
-        # after a crash-redelivered epoch is harmless (content-idempotent
-        # snapshot commit). None = manual compact() only.
-        self.compact_every = compact_every
 
     # -- bootstrap -------------------------------------------------------------
 
@@ -429,7 +417,7 @@ class CdcEngine:
         #    merge_cdc runs no pruning job of its own. Under drop_late a
         #    pair whose arriving events were ALL late has no surviving
         #    changes — leave it out so the merge does not rewrite its file
-        #    for nothing. The mor arm rewrites nothing and needs no set.
+        #    for nothing.
         pairs = [
             (r["partition"], r["_slot"]) for r in slot_rows
             if not dropping or r["event_count"] > (r["late_count"] or 0)
@@ -443,15 +431,9 @@ class CdcEngine:
                 epoch=epoch,
                 extra_summary={"epoch": epoch},
                 extra_properties={"cdc.max-ts-us": str(new_max_us)},
-                **({"mode": "mor"} if self.merge_mode == "mor"
-                   else {"touched_bucket_slots": pairs}),
+                touched_bucket_slots=pairs,
             )
             _mark("merge_job")
-            if (result["applied"] and self.merge_mode == "mor"
-                    and self.compact_every
-                    and (epoch + 1) % self.compact_every == 0):
-                table.compact(spark)
-                _mark("compact")
         else:
             # every arriving event was dropped as late: nothing to merge
             # or fence (idempotent on redelivery — the drop recomputes),

@@ -18,9 +18,12 @@ with zipfile.ZipFile("/tmp/datavec_spark_pkg.zip", "w") as z:
     z.write("__spark_entry__.py", "__spark_entry__.py")
 EOF
 
-MASTER="${SPARK_GRAFT_MASTER:-local[${SPARK_GRAFT_CPUS:-32}]}"
+# defaults sized from the host, as bench.py does; set variables win
+CPUS="${SPARK_GRAFT_CPUS:-$(python -c 'from perfbench.common import host_cores; print(host_cores())')}"
+MEM="${SPARK_GRAFT_DRIVER_MEM:-$(python -c 'from perfbench.common import heap_gb; print(heap_gb())')g}"
+MASTER="${SPARK_GRAFT_MASTER:-local[$CPUS]}"
 exec spark-submit \
   --master "$MASTER" \
-  --driver-memory "${SPARK_GRAFT_DRIVER_MEM:-48g}" \
+  --driver-memory "$MEM" \
   --py-files "$ZIP" \
   bench.py "$@"

@@ -384,50 +384,6 @@ def test_sub_splits_replay_matches_oracle_and_prunes_files(spark, tmp_path, fixt
     assert got[(delta["repo"], delta["path"])]["content"] == "new content after the replay"
 
 
-def test_mor_engine_replay_matches_oracle(spark, tmp_path, fixture):
-    """CdcEngine(merge_mode='mor'): the full chunked replay — schema
-    evolution, tombstones, duplicates, late events — must converge to the
-    same final state as the COW engine and the pure-Python oracle, while
-    every epoch only APPENDS delta files (write cost ∝ changes: the
-    10^10-event hot-table shape). compact() then folds the deltas with the
-    state unchanged."""
-    base, events, state, schema = fixture
-    eng = CdcEngine(str(tmp_path / "mor_repos"), num_buckets=8, merge_mode="mor")
-    eng.bootstrap(spark, base_df(spark, base))
-    base_files = {f["path"] for f in eng.table().current_snapshot()["files"]}
-    n = len(events)
-    for c in range(4):
-        eng.apply_batch(spark, events_df(spark, events[c * n // 4:(c + 1) * n // 4]), epoch=c)
-    snap = eng.table().current_snapshot()
-    # every original base file still present: nothing was ever rewritten
-    assert base_files <= {f["path"] for f in snap["files"]}
-    n_delta = sum(1 for f in snap["files"] if f.get("delta"))
-    assert n_delta >= 4 * 8  # >= one delta file per touched bucket per epoch
-    assert_final_state(spark, eng, state, schema)
-
-    eng.table().compact(spark)
-    assert not any(f.get("delta") for f in eng.table().current_snapshot()["files"])
-    assert_final_state(spark, eng, state, schema)
-
-
-def test_mor_auto_compaction_cadence(spark, tmp_path, fixture):
-    """compact_every=2 on a mor engine: deltas fold every second epoch, so
-    the snapshot never accumulates more than ~2 epochs of delta files and
-    the final state still matches the oracle."""
-    base, events, state, schema = fixture
-    eng = CdcEngine(str(tmp_path / "morc"), num_buckets=8,
-                    merge_mode="mor", compact_every=2)
-    eng.bootstrap(spark, base_df(spark, base))
-    n = len(events)
-    for c in range(4):
-        eng.apply_batch(spark, events_df(spark, events[c * n // 4:(c + 1) * n // 4]), epoch=c)
-    snap = eng.table().current_snapshot()
-    # epoch 3 compacted (epochs 0-1 folded at epoch 1, 2-3 at epoch 3)
-    assert snap["summary"]["operation"] == "compact"
-    assert not any(f.get("delta") for f in snap["files"])
-    assert_final_state(spark, eng, state, schema)
-
-
 def test_run_stream_rejects_stateful_dedup(spark, tmp_path):
     """The stateful dedup stage is gone: dedup=True fails loudly before
     any stream starts; dedup=False is the default and the only shape."""

@@ -571,7 +571,7 @@ def test_gate_registry_consistency():
 
     qs, osql = E.queries(), E.oracle_sql()
     assert set(osql) == set(qs)
-    assert len(qs) == 77  # round-6 count; update with COVERAGE.md rotation
+    assert len(qs) == 76  # update with the COVERAGE.md rotation
 
 
 SHINGLE_DOCS = [

@@ -1,3 +1,4 @@
+import json
 import os
 
 import pytest
@@ -271,8 +272,7 @@ def test_sub_splits_file_level_merge_pruning(spark, tmp_path):
     """sub_splits tables: a small delta rewrites a STRICT SUBSET of a
     bucket's files (only the slot files its keys hash into) and carries
     every other file forward byte-identically, with the final state equal
-    to an unsplit table's merge of the same delta (round-5 verdict #4 —
-    the first step from bucket-COW toward MOR+compact)."""
+    to an unsplit table's merge of the same delta (round-5 verdict #4)."""
     rows = [(f"k{i}", i, 0, False) for i in range(200)]
     split = IceliteTable.create(str(tmp_path / "split"), SCHEMA,
                                 key_cols=["k"], num_buckets=2, sub_splits=4)
@@ -385,86 +385,6 @@ def test_merge_cdc_pruning_guard_catches_stray_buckets(spark, tmp_path):
     assert t.current_snapshot()["snapshot_id"] == snap
 
 
-def test_merge_on_read_mode(spark, tmp_path):
-    """merge_cdc(mode='mor'): epochs append winner-delta files (base files
-    untouched — per-epoch write cost proportional to the CHANGES, the
-    write-optimized Iceberg/Hudi shape); reads resolve LWW by max-seq at
-    read time, tombstones included; compact() folds deltas into plain
-    files with identical content; a COW merge on a delta-bearing table
-    resolves first (doubles as compaction of touched files)."""
-    t = make(spark, tmp_path, [("a", 1, 5, False), ("b", 2, 5, False)])
-    base_paths = {f["path"] for f in t.current_snapshot()["files"]}
-    ch_schema = T.StructType(SCHEMA.fields + [T.StructField("_op", T.StringType())])
-    ch1 = spark.createDataFrame(
-        [("a", 10, 9, False, "upsert"),   # newer -> wins at read
-         ("b", 99, 3, False, "upsert"),   # older -> loses at read
-         ("c", 7, 8, False, "upsert")],
-        ch_schema)
-    res = t.merge_cdc(spark, ch1, epoch=0, mode="mor")
-    assert res["applied"]
-    snap1 = t.current_snapshot()
-    assert snap1["summary"]["operation"] == "merge-mor"
-    # base files carried untouched; only delta files added
-    assert base_paths <= {f["path"] for f in snap1["files"]}
-    assert all(f.get("delta") for f in snap1["files"] if f["path"] not in base_paths)
-
-    rows = {r["k"]: (r["v"], r["_seq"], r["_deleted"]) for r in t.read(spark).collect()}
-    assert rows == {"a": (10, 9, False), "b": (2, 5, False), "c": (7, 8, False)}
-
-    # second mor epoch: a delete arrives as an op (tombstone row appended)
-    ch2 = spark.createDataFrame([("c", None, 11, None, "delete")], ch_schema)
-    t.merge_cdc(spark, ch2, epoch=1, mode="mor")
-    rows = {r["k"]: (r["_seq"], r["_deleted"]) for r in t.read(spark).collect()}
-    assert rows["c"] == (11, True)  # tombstone is the newest version
-    # epoch fence holds across modes
-    assert not t.merge_cdc(spark, ch2, epoch=1, mode="mor")["applied"]
-
-    # compact folds deltas: same resolved content, no delta entries left
-    before = sorted((r["k"], r["v"], r["_seq"], r["_deleted"])
-                    for r in t.read(spark).collect())
-    t.compact(spark)
-    snap2 = t.current_snapshot()
-    assert not any(f.get("delta") for f in snap2["files"])
-    after = sorted((r["k"], r["v"], r["_seq"], r["_deleted"])
-                   for r in t.read(spark).collect())
-    assert before == after
-
-    # cow merge on a fresh mor table resolves deltas in its target read
-    t2 = make(spark, tmp_path / "two", [("x", 1, 0, False)])
-    t2.merge_cdc(spark, spark.createDataFrame(
-        [("x", 5, 2, False, "upsert")], ch_schema), epoch=0, mode="mor")
-    t2.merge_cdc(spark, spark.createDataFrame(
-        [("x", 9, 4, False, "upsert")], ch_schema), epoch=1)  # cow
-    got = {r["k"]: (r["v"], r["_seq"]) for r in t2.read(spark).collect()}
-    assert got == {"x": (9, 4)}
-    assert not any(f.get("delta") for f in t2.current_snapshot()["files"])
-
-
-def test_mor_resolution_prunes_to_delta_buckets(spark, tmp_path):
-    """The mor read-side window runs only over buckets holding a delta
-    file; delta-free buckets stream through as plain scans. Pin via the
-    executed plan: with ONE hot bucket, exactly one Window operator and
-    a union with the plain side appear, and the result equals a full
-    resolution."""
-    t = make(spark, tmp_path, [(f"k{i}", i, 0, False) for i in range(80)])
-    meta = t.metadata()
-    ch_schema = T.StructType(SCHEMA.fields + [T.StructField("_op", T.StringType())])
-    # pick a key, find its bucket; delta lands only there
-    b7 = spark.createDataFrame([("k7",)], "k string") \
-        .select(t._bucket_expr(meta).alias("b")).collect()[0]["b"]
-    t.merge_cdc(spark, spark.createDataFrame(
-        [("k7", 700, 3, False, "upsert")], ch_schema), epoch=0, mode="mor")
-    df = t.read(spark)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "Window" in plan and "Union" in plan
-    got = {r["k"]: r["v"] for r in df.collect()}
-    assert got["k7"] == 700 and len(got) == 80
-    # the hot side reads only the delta bucket's files
-    hot_files = [f for f in t.current_snapshot()["files"]
-                 if f["bucket"] == b7]
-    assert any(f.get("delta") for f in hot_files)
-
-
 def test_read_changes_cow_diff(spark, tmp_path):
     """Incremental changelog over COW merges: upsert/update/delete between
     two snapshots, unchanged keys silent, initial-load mode, and the
@@ -498,22 +418,26 @@ def test_read_changes_cow_diff(spark, tmp_path):
         t.read_changes(spark, from_snapshot_id=10**9)
 
 
-def test_read_changes_mor_and_pruning(spark, tmp_path):
-    """Changelog across MOR epochs + compaction: delta-append snapshots
-    diff exactly like COW ones; a compaction rewrite between the snapshots
-    is content-neutral and contributes no change rows. Also pins the scale
-    contract: the diff's candidate set is the buckets of added/removed
-    files, asserted via the pruned read being a strict file subset."""
+def test_read_changes_across_compaction_and_pruning(spark, tmp_path):
+    """Changelog across merges + compaction: a compaction rewrite between
+    the snapshots is content-neutral and contributes no change rows. Also
+    pins the scale contract: the diff's candidate set is the buckets of
+    added/removed files, a strict subset of the table's buckets for a
+    1-key change."""
     t = make(spark, tmp_path, [("a", 1, 5, False), ("b", 2, 5, False),
                                ("q", 3, 5, False)])
     s0 = t.current_snapshot()["snapshot_id"]
     ch_schema = T.StructType(SCHEMA.fields + [T.StructField("_op", T.StringType())])
     t.merge_cdc(spark, spark.createDataFrame(
         [("a", 11, 9, False, "upsert"), ("n", 5, 9, False, "upsert")],
-        ch_schema), epoch=0, mode="mor")
+        ch_schema), epoch=0)
+    pre = t.current_snapshot()["snapshot_id"]
     t.compact(spark)
+    post = t.current_snapshot()["snapshot_id"]
+    # compaction rewrote every file, yet the diff across it is empty
+    assert t.read_changes(spark, from_snapshot_id=pre, to_snapshot_id=post).count() == 0
     t.merge_cdc(spark, spark.createDataFrame(
-        [("b", 0, 10, False, "delete")], ch_schema), epoch=1, mode="mor")
+        [("b", 0, 10, False, "delete")], ch_schema), epoch=1)
     s2 = t.current_snapshot()["snapshot_id"]
 
     got = {r["k"]: (r["_change_type"], r["v"])
@@ -524,14 +448,32 @@ def test_read_changes_mor_and_pruning(spark, tmp_path):
     # candidate-bucket pruning: a 1-key change between two adjacent
     # snapshots must not read every bucket's files
     snaps = t.snapshots()
-    prev = snaps[-2]["snapshot_id"]
-    old_paths = {f["path"] for f in snaps[-2]["files"]}
-    new_paths = {f["path"] for f in snaps[-1]["files"]}
-    cand_buckets = {f["bucket"] for f in snaps[-1]["files"]
-                    if f["path"] not in old_paths}
-    all_buckets = {f["bucket"] for f in snaps[-1]["files"]}
-    assert cand_buckets < all_buckets  # strict subset → pruning is real
+    old_files, new_files = snaps[-2]["files"], snaps[-1]["files"]
+    old_paths = {f["path"] for f in old_files}
+    new_paths = {f["path"] for f in new_files}
+    cand_buckets = ({f["bucket"] for f in new_files if f["path"] not in old_paths}
+                    | {f["bucket"] for f in old_files if f["path"] not in new_paths})
+    all_buckets = {f["bucket"] for f in old_files + new_files}
+    assert cand_buckets and cand_buckets < all_buckets  # pruning is real
     one = {r["k"]: r["_change_type"]
-           for r in t.read_changes(spark, from_snapshot_id=prev,
+           for r in t.read_changes(spark, from_snapshot_id=snaps[-2]["snapshot_id"],
                                    to_snapshot_id=snaps[-1]["snapshot_id"]).collect()}
     assert one == {"b": "delete"}
+
+
+def test_read_refuses_merge_on_read_delta_files(spark, tmp_path):
+    """A table whose manifest still lists merge-on-read delta files (an
+    older release appended them and resolved keys at read time) fails
+    loudly instead of returning several versions of a key."""
+    t = make(spark, tmp_path, [("a", 1, 5, False), ("b", 2, 5, False)])
+    meta, v = t._load()
+    snap = next(s for s in meta["snapshots"]
+                if s["snapshot_id"] == meta["current_snapshot_id"])
+    snap["files"][0]["delta"] = True
+    with open(os.path.join(t.location, "metadata", f"v{v}.json"), "w") as fh:
+        json.dump(meta, fh)
+    with pytest.raises(ValueError) as err:
+        t.read(spark)
+    msg = str(err.value)
+    assert t.location in msg and snap["files"][0]["path"] in msg
+    assert "compact()" in msg
