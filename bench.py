@@ -161,9 +161,10 @@ def _normalize_event_mtimes(events_dir: str) -> None:
 def run_cdc_replay(spark, fixture_dir: str, num_buckets: int = 64, epochs: int = 1) -> dict:
     """Batch-replay the event log in `epochs` epochs; returns wall + rate +
     an order-insensitive checksum of the final state (replay-equality
-    evidence across parallelism levels). The replay includes in-batch LWW
-    collapse, tombstone merge, lineage accounting and epoch-fenced commits;
-    the final-state read stays outside the clock."""
+    evidence across parallelism levels). The replay includes the stats
+    pass, the per-(bucket, slot) LWW merge with tombstones, lineage
+    accounting and epoch-fenced commits; the final-state read stays
+    outside the clock."""
     from pyspark.sql import functions as F
 
     from datavec_spark.streaming.replay import CdcEngine

@@ -17,11 +17,14 @@ catalog could replace 1:1:
   casts old files on read, add fills nulls. Old data files remain valid
   (Iceberg: schema-id per data file + name mapping).
 - **Bucket-partitioned copy-on-write MERGE**: the table is hash-bucketed
-  on its key columns; a merge rewrites only the buckets containing
-  changed keys and carries every other data file forward untouched.
-  At 100 TB this is the difference between rewriting the world per batch
-  and rewriting ~(touched buckets / total buckets) of it (Iceberg COW with
-  `bucket(N, key)` partitioning behaves the same way).
+  on its key columns, each bucket split into `sub_splits` slot files; a
+  merge rewrites only the (bucket, slot) files containing changed keys and
+  carries every other data file forward untouched. The merge is one Spark
+  query: only the changes are shuffled, by (bucket, slot), and one Arrow
+  task per pair reads that pair's target file(s) with pyarrow, resolves
+  last-writer-wins by seq and writes one key-sorted file, so the target is
+  never shuffled (Iceberg COW with `bucket(N, key)` partitioning rewrites
+  the same files).
 - **Time travel**: `read(snapshot_id=...)` reads any retained snapshot.
 
 Semantics modeled on the Iceberg spec (public) and the needs in
@@ -36,13 +39,24 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import sys
 import time
 import uuid
 from typing import Any
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
+from pyspark import cloudpickle
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import from_arrow_schema
+
+# merge_group runs in Python workers, which cannot import this package when
+# the driver put it on sys.path itself: ship this module's functions by value
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 # ---------------------------------------------------------------------------
 # type registry (icelite type string <-> Spark type)
@@ -81,6 +95,21 @@ def spark_to_type(dt: T.DataType) -> str:
     raise ValueError(f"unsupported spark type for icelite: {dt}")
 
 
+def type_to_arrow(s: str) -> pa.DataType:
+    """Arrow type of an icelite type in the files pyarrow writes. Timestamps
+    are UTC-adjusted microseconds, which Spark reads back as TimestampType,
+    the same as its own INT96 files."""
+    prim = {"boolean": pa.bool_(), "int": pa.int32(), "long": pa.int64(),
+            "float": pa.float32(), "double": pa.float64(), "string": pa.string(),
+            "binary": pa.binary(), "timestamp": pa.timestamp("us", tz="UTC"),
+            "date": pa.date32()}
+    if s in prim:
+        return prim[s]
+    if s.startswith("array<") and s.endswith(">"):
+        return pa.list_(type_to_arrow(s[6:-1]))
+    raise ValueError(f"unsupported icelite type: {s}")
+
+
 def schema_to_struct(fields: list[dict]) -> T.StructType:
     return T.StructType(
         [T.StructField(f["name"], type_to_spark(f["type"]), f.get("nullable", True)) for f in fields]
@@ -100,8 +129,7 @@ def bucket_slot_exprs(keys: list[F.Column], num_buckets: int,
     """(bucket, slot) of a row from its key column expressions — the one
     place the hash formulas live. Writers (_bucket_expr/_slot_expr over the
     bound columns) and the CDC stats pass (over raw event fields) must agree
-    value for value, because the stats pass hands its (bucket, slot) pairs
-    to merge_cdc as the pruning set.
+    value for value, because lineage partitions are data buckets.
 
     The bucket is xxhash64 over ALL key columns (not a string-concatenated
     key — the reference's string keys, MapToPairForReducerFunction.java:30-53,
@@ -116,6 +144,96 @@ def bucket_slot_exprs(keys: list[F.Column], num_buckets: int,
     if sub_splits <= 1:
         return bucket, F.lit(0)
     return bucket, F.pmod(F.xxhash64(F.lit(1), *keys), F.lit(sub_splits)).cast("int")
+
+
+# one row per merged (bucket, slot) pair: its manifest entry and counts
+MERGE_ENTRY = pa.schema([("path", pa.string()), ("bucket", pa.int32()), ("slot", pa.int32()),
+                         ("schema_id", pa.int32()), ("record_count", pa.int64()),
+                         ("file_size_in_bytes", pa.int64())])
+
+
+def _group_byte_cap() -> int:
+    """Bytes one merge group may hold: its changes plus its target files,
+    uncompressed. A group is resolved in memory whole, one group per core
+    at a time, and holds about 4x its bytes at the peak (input,
+    concatenation, sorted copy, output); RAM / (8 x cores) keeps every
+    core's peak within half the host's memory."""
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return ram // (8 * len(os.sched_getaffinity(0)))
+
+
+def merge_group(changes: pa.Table, bucket: int, slot: int, spec: dict) -> dict:
+    """Merge one (bucket, slot) pair of a copy-on-write table.
+
+    `changes` holds the pair's change rows: the current schema's columns
+    plus spec's op column, any number of rows per key. The pair's target
+    files are read here with pyarrow and bound to the current schema by
+    field id, with the same rules as IceliteTable._read_entries (rename ->
+    alias, widen -> cast, add -> null). Per key the highest seq wins and
+    the stored row wins a tie; a winning op == 'delete' removes the row,
+    while a tombstone (`_deleted` true) is an ordinary row and is kept.
+
+    Writes one key-sorted file at a path fixed by (write id, bucket, slot)
+    via a temp name and os.replace, so a retried task overwrites its own
+    file, and returns its manifest entry with record_count and
+    file_size_in_bytes (path None when no row survives). A group over
+    spec["cap"] bytes raises MemoryError before anything is read.
+
+    `spec` is the plan IceliteTable.merge_cdc builds: location, write_id,
+    epoch, cap, sub_splits, keys, seq_col, op_col, fields (current schema),
+    schema_id, schemas (id -> fields), files ((bucket, slot) -> [(path,
+    schema id)])."""
+    fields, seq, op = spec["fields"], spec["seq_col"], spec["op_col"]
+    targets = spec["files"].get((bucket, slot), [])
+    held = changes.nbytes
+    for p, _ in targets:
+        md = pq.read_metadata(p)
+        held += sum(md.row_group(i).total_byte_size for i in range(md.num_row_groups))
+    if held > spec["cap"]:
+        need = -(-spec["sub_splits"] * held // spec["cap"])
+        raise MemoryError(
+            f"merge_cdc epoch {spec['epoch']}: (bucket, slot) ({bucket}, {slot}) "
+            f"holds {held} bytes, over the per-group cap of {spec['cap']} bytes; "
+            f"a table with sub_splits >= {need} would fit")
+    schema = pa.schema([(f["name"], type_to_arrow(f["type"])) for f in fields]
+                       + [(op, pa.string()), ("__src", pa.int8())])
+
+    def bind(tbl: pa.Table, names: dict, src: int) -> pa.Table:
+        # names: field id -> column name in tbl; src 1 marks stored rows
+        n = tbl.num_rows
+        cols = [pa.nulls(n, t) if f["id"] not in names else tbl.column(names[f["id"]]).cast(t)
+                for f, t in zip(fields, schema.types)]
+        ops = pa.nulls(n, pa.string()) if src else tbl.column(op).cast(pa.string())
+        return pa.Table.from_arrays(cols + [ops, pa.array(np.full(n, src, np.int8))],
+                                    schema=schema)
+
+    parts = [bind(changes, {f["id"]: f["name"] for f in fields}, 0)]
+    for p, sid in targets:
+        names = {f["id"]: f["name"] for f in spec["schemas"][sid]}
+        with pq.ParquetFile(p, coerce_int96_timestamp_unit="us") as pf:
+            tbl = pf.read(columns=[names[f["id"]] for f in fields if f["id"] in names])
+        parts.append(bind(tbl, names, 1))
+    keys = spec["keys"]
+    rows = pa.concat_tables(parts).sort_by(
+        [(k, "ascending") for k in keys] + [(seq, "descending"), ("__src", "descending")])
+    rows = rows.append_column("__row", pa.array(np.arange(rows.num_rows)))
+    first = rows.group_by(keys, use_threads=False).aggregate([("__row", "min")])["__row_min"]
+    won = rows.take(first.sort())
+    out = won.filter(pc.invert(pc.fill_null(pc.equal(won[op], "delete"), False))) \
+        .select([f["name"] for f in fields])
+
+    entry = {"path": None, "bucket": bucket, "slot": slot, "schema_id": spec["schema_id"],
+             "record_count": out.num_rows, "file_size_in_bytes": 0}
+    if out.num_rows:
+        entry["path"] = os.path.join("data", spec["write_id"], f"{BUCKET_COL}={bucket}",
+                                     f"{SLOT_COL}={slot}", "merge.parquet")
+        path = os.path.join(spec["location"], entry["path"])
+        os.makedirs(os.path.dirname(path), exist_ok=True)
+        tmp = os.path.join(os.path.dirname(path), f".merge.{uuid.uuid4().hex}.tmp")
+        pq.write_table(out, tmp)
+        os.replace(tmp, path)
+        entry["file_size_in_bytes"] = os.path.getsize(path)
+    return entry
 
 
 class CommitConflict(Exception):
@@ -230,10 +348,12 @@ class IceliteTable:
         return self.metadata()["properties"]
 
     def current_snapshot(self) -> dict | None:
-        meta = self.metadata()
-        if meta["current_snapshot_id"] is None:
-            return None
-        return next(s for s in meta["snapshots"] if s["snapshot_id"] == meta["current_snapshot_id"])
+        return self._current(self.metadata())
+
+    @staticmethod
+    def _current(meta: dict) -> dict | None:
+        return next((s for s in meta["snapshots"]
+                     if s["snapshot_id"] == meta["current_snapshot_id"]), None)
 
     def snapshots(self) -> list[dict]:
         return self.metadata()["snapshots"]
@@ -250,37 +370,16 @@ class IceliteTable:
 
     # -- read ----------------------------------------------------------------
 
-    @staticmethod
-    def _select_files(files: list[dict], bucket_slots) -> tuple[list[dict], list[dict]]:
-        """Partition manifest entries into (selected, rest) by a set of
-        touched (bucket, slot) pairs. An entry with no slot (a legacy file
-        written before every table carried slots, or an append_rows_local
-        file) covers its bucket's whole hash space, so it matches whenever
-        its bucket is touched at all."""
-        pairs = set(bucket_slots)
-        buckets = {b for b, _ in pairs}
-        sel, rest = [], []
-        for f in files:
-            hit = (f["bucket"] in buckets
-                   if f.get("slot") is None
-                   else (f["bucket"], f["slot"]) in pairs)
-            (sel if hit else rest).append(f)
-        return sel, rest
-
     def read(
         self,
         spark: SparkSession,
         snapshot_id: int | None = None,
         buckets: list[int] | None = None,
-        bucket_slots=None,
     ) -> DataFrame:
         """Current (or time-travel) snapshot as a DataFrame in the current
         schema. Old-schema files are projected by field id: renamed columns
         aliased, widened columns cast, added columns null-filled. With
-        `buckets`, only data files of those buckets are read; with
-        `bucket_slots` (a collection of (bucket, slot) pairs), only the
-        matching slot FILES within those buckets (file-level pruning at
-        the manifest — the scale path for merges)."""
+        `buckets`, only data files of those buckets are read."""
         meta = self.metadata()
         if snapshot_id is None:
             snap = self.current_snapshot()
@@ -292,9 +391,7 @@ class IceliteTable:
             return spark.createDataFrame([], cur_struct)
 
         files = snap["files"]
-        if bucket_slots is not None:
-            files, _ = self._select_files(files, bucket_slots)
-        elif buckets is not None:
+        if buckets is not None:
             bset = set(buckets)
             files = [f for f in files if f["bucket"] in bset]
         if not files:
@@ -404,22 +501,23 @@ class IceliteTable:
             .select(*[f.name for f in out_struct.fields])
         )
 
-    def _read_entries(self, spark: SparkSession, meta: dict, files: list[dict]) -> DataFrame:
-        """Read specific manifest entries projected to the current schema
-        (empty entry list -> empty DataFrame). Files are grouped by the
-        schema they were written with; each group is projected by field id
-        (rename aliased, widen cast, added null-filled), then unioned.
-
-        Every read goes through here, so this is where a table still
-        holding merge-on-read delta files (an older release appended them
-        and resolved each key's newest version at read time) is refused:
-        a plain scan would return several versions of a key."""
+    def _refuse_delta(self, files: list[dict]) -> None:
+        """Reads and merges refuse merge-on-read delta files (an older
+        release resolved each key's newest version at read time): a plain
+        scan would return several versions of a key."""
         delta = next((f for f in files if f.get("delta")), None)
         if delta is not None:
             raise ValueError(
                 f"icelite table {self.location} holds merge-on-read delta file "
                 f"{delta['path']}; this release reads copy-on-write files only. "
                 f"compact() the table with the previous release first")
+
+    def _read_entries(self, spark: SparkSession, meta: dict, files: list[dict]) -> DataFrame:
+        """Read specific manifest entries projected to the current schema
+        (empty entry list -> empty DataFrame). Files are grouped by the
+        schema they were written with; each group is projected by field id
+        (rename aliased, widen cast, added null-filled), then unioned."""
+        self._refuse_delta(files)
         cur_fields = self._fields(meta)
         if not files:
             return spark.createDataFrame([], schema_to_struct(cur_fields))
@@ -547,31 +645,19 @@ class IceliteTable:
         """Driver-side append of a tiny row set (e.g. per-epoch lineage,
         ≤num_buckets rows) via pyarrow — no Spark job, same atomic commit.
         Only valid for unbucketed tables (num_buckets == 1)."""
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
         meta, version = self._load()
         assert meta["partition_spec"]["num_buckets"] == 1, "local append needs num_buckets=1"
         fields = self._fields(meta)
-        arrow_types = {
-            "boolean": pa.bool_(), "int": pa.int32(), "long": pa.int64(),
-            "float": pa.float32(), "double": pa.float64(), "string": pa.string(),
-            "binary": pa.binary(), "timestamp": pa.timestamp("us"), "date": pa.date32(),
-        }
-        arrays, names = [], []
-        for f in fields:
-            names.append(f["name"])
-            arrays.append(pa.array([r.get(f["name"]) for r in rows], type=arrow_types[f["type"]]))
+        arrays = [pa.array([r.get(f["name"]) for r in rows], type=type_to_arrow(f["type"]))
+                  for f in fields]
+        names = [f["name"] for f in fields]
         rel_dir = os.path.join("data", uuid.uuid4().hex)
         os.makedirs(os.path.join(self.location, rel_dir), exist_ok=True)
         rel = os.path.join(rel_dir, f"{BUCKET_COL}=0", "local.parquet")
         os.makedirs(os.path.dirname(os.path.join(self.location, rel)), exist_ok=True)
         pq.write_table(pa.Table.from_arrays(arrays, names=names), os.path.join(self.location, rel))
         entry = {"path": rel, "bucket": 0, "schema_id": meta["current_schema_id"]}
-        cur = None
-        if meta["current_snapshot_id"] is not None:
-            cur = next(s for s in meta["snapshots"]
-                       if s["snapshot_id"] == meta["current_snapshot_id"])
+        cur = self._current(meta)
         files = (cur["files"] if cur else []) + [entry]
         return self._commit_snapshot(
             meta, version, files, {"operation": "append", **(summary or {})},
@@ -609,128 +695,99 @@ class IceliteTable:
         epoch: int | None = None,
         extra_summary: dict[str, Any] | None = None,
         extra_properties: dict[str, str] | None = None,
-        touched_bucket_slots=None,
     ) -> dict:
-        """Apply per-key winners (one row per key: op ∈ {upsert, delete},
-        payload in current schema + seq_col) with last-writer-wins by
-        seq_col against the stored `_seq`. Copy-on-write at file
-        granularity: only the (bucket, slot) files holding changed keys are
-        rewritten; every other file carries forward untouched.
+        """Apply change rows (payload in the current schema + seq_col, and
+        op_col in {upsert, delete}; any number of rows per key) with
+        last-writer-wins by seq_col against the stored `_seq`; the stored
+        row wins a tie. Copy-on-write at file granularity: only the
+        (bucket, slot) files holding changed keys are rewritten; every other
+        file carries forward untouched.
+
+        One Spark query: only the changes are shuffled, by (bucket, slot),
+        into min(default parallelism, pairs) tasks; merge_group replaces
+        each pair's files with one. The tasks' output is the touched set.
 
         Exactly-once: with `epoch`, the merge is fenced — if
         epoch <= properties['cdc.last-epoch'] the call is a no-op (the
         retried foreachBatch case), and the property advances atomically
-        with the snapshot commit.
-
-        touched_bucket_slots: the pruning set, a collection of (bucket,
-        slot) pairs (bucket_slot_exprs over the change keys; an unsplit
-        table has slot 0 only). Callers that already know it — the CDC
-        apply stage computes it in its fused stats pass — pass it here, and
-        the merge runs as ONE Spark job (the write), with no pruning collect
-        and no persist of the change set. A pair with no actual changes is
-        rewritten identically (correct, wasteful). Without it, the merge
-        derives the set itself (persist + distinct — a second job). A
-        manifest entry with no slot (written before every table carried
-        slots, or by append_rows_local) covers its whole bucket.
+        with the snapshot commit. The snapshot summary records the rows and
+        bytes written (`added-records`, `added-files-size`) and `merge-ms`.
 
         Returns {"applied": bool, "snapshot_id": int|None}.
         """
+        t0 = time.perf_counter()
         meta, version = self._load()
         if epoch is not None and epoch <= int(meta["properties"].get("cdc.last-epoch", "-1")):
             return {"applied": False, "snapshot_id": None, "reason": "epoch-fenced"}
         keys = self.key_cols(meta)
         assert keys, "merge_cdc requires key columns"
-        cur = None
-        if meta["current_snapshot_id"] is not None:
-            cur = next(s for s in meta["snapshots"]
-                       if s["snapshot_id"] == meta["current_snapshot_id"])
+        cur = self._current(meta)
         cur_files = cur["files"] if cur else []
+        self._refuse_delta(cur_files)
+        n, splits = meta["partition_spec"]["num_buckets"], self.sub_splits(meta)
+        legacy = next((f for f in cur_files if f.get("slot") is None), None)
+        if legacy is not None and splits > 1:
+            raise ValueError(
+                f"icelite table {self.location} (sub_splits={splits}) holds slot-less "
+                f"file {legacy['path']}; merge_cdc cannot hash its rows into slots. "
+                f"compact() the table first")
+        # a slot-less file of an unsplit table is slot 0
+        by_pair: dict[tuple[int, int], list[tuple[str, int]]] = {}
+        for f in cur_files:
+            by_pair.setdefault((f["bucket"], f.get("slot") or 0), []).append(
+                (os.path.join(self.location, f["path"]), f["schema_id"]))
 
-        persisted = touched_bucket_slots is None
-        if persisted:
-            # persist: the change set is consumed twice (pruning + merge
-            # write) and is typically the output of an aggregation
-            changes = changes.persist()
-            touched_bucket_slots = (
-                changes.select(*self._bucket_slot_exprs(meta)).distinct().collect())
-        pairs = sorted({(int(b), int(sl)) for b, sl in touched_bucket_slots})
-        selected, untouched = self._select_files(cur_files, pairs)
-        target = self._read_entries(spark, meta, selected)
+        fields = self._fields(meta)
+        write_id = uuid.uuid4().hex
+        spec = {
+            "location": self.location, "write_id": write_id, "epoch": epoch,
+            "cap": _group_byte_cap(), "sub_splits": splits, "keys": keys,
+            "seq_col": seq_col, "op_col": op_col, "fields": fields,
+            "schema_id": meta["current_schema_id"],
+            "schemas": {s["schema_id"]: s["fields"] for s in meta["schemas"]},
+            "files": by_pair,
+        }
 
-        data_cols = [f["name"] for f in self._fields(meta)]
-        # resolve: keep target rows whose key is absent from changes or whose
-        # stored seq wins; take change rows that are upserts and win.
-        # Changes are full-row images: current-schema columns absent from the
-        # change stream (e.g. just-added columns) are null on upsert.
-        fields_by_name = {f["name"]: f for f in self._fields(meta)}
+        def kernel(key, tbl):
+            entry = merge_group(tbl, key[0].as_py(), key[1].as_py(), spec)
+            return pa.Table.from_pylist([entry], schema=MERGE_ENTRY)
+
+        # changes are full-row images: current-schema columns absent from
+        # the change stream (e.g. just-added columns) are null on upsert
         ch = changes.select(
-            *[
-                (F.col(c) if c in changes.columns
-                 else F.lit(None).cast(type_to_spark(fields_by_name[c]["type"]))).alias(c)
-                for c in data_cols
-                if c != seq_col
-            ],
-            F.col(seq_col),
-            F.col(op_col),
-        )
-        joined = target.alias("t").join(ch.alias("c"), on=keys, how="full_outer")
-        has_change = F.col(f"c.{op_col}").isNotNull()
-        change_wins = has_change & (
-            F.col(f"t.{seq_col}").isNull() | (F.col(f"c.{seq_col}") > F.col(f"t.{seq_col}"))
-        )
-        keep_target = (~has_change) | (~change_wins)
-        is_upsert = F.col(f"c.{op_col}") != F.lit("delete")
-
-        def pick(col: str) -> F.Column:
-            if col in keys:
-                return F.col(col)
-            return F.when(change_wins, F.col(f"c.{col}")).otherwise(F.col(f"t.{col}"))
-
-        merged = (
-            joined.where((keep_target & F.col(f"t.{seq_col}").isNotNull()) | (change_wins & is_upsert))
-            .select(*[pick(c).alias(c) for c in data_cols])
-        )
-
+            *[(F.col(f["name"]) if f["name"] in changes.columns else F.lit(None))
+              .cast(type_to_spark(f["type"])).alias(f["name"]) for f in fields],
+            F.col(op_col))
+        bucket, slot = self._bucket_slot_exprs(meta)
+        k = max(1, min(spark.sparkContext.defaultParallelism, n * splits))
         try:
-            new_files = self._write_data_files(merged, meta)
-        finally:
-            if persisted:
-                changes.unpersist()
-        # PRUNING-SET GUARD: a pruning set derived by a separate pass over
-        # a non-deterministic change plan can miss pairs the write then
-        # lands rows in — committing would carry the stale file holding
-        # their old versions forward untouched: silent duplicate key
-        # versions. The written manifest entries carry each output file's
-        # true (bucket, slot), so the violation is detectable here for free
-        # (driver-side set check, no extra job) — fail the commit loudly.
-        # A consumed slot-less file covers its whole bucket, so its rows may
-        # legitimately land in any slot of that bucket.
-        whole = {f["bucket"] for f in selected if f.get("slot") is None}
-        stray = sorted(p for p in {(e["bucket"], e["slot"]) for e in new_files} - set(pairs)
-                       if p[0] not in whole)
-        if stray:
-            raise RuntimeError(
-                f"merge_cdc epoch {epoch}: changes landed in (bucket, slot) "
-                f"pairs {stray[:10]} outside the pruning set; refusing to "
-                f"commit over snapshot {meta['current_snapshot_id']} (the "
-                f"change plan recomputed differently than the pass that "
-                f"derived the set — non-deterministic upstream?)")
-        # `untouched` was partitioned off the snapshot of the metadata
-        # ALREADY loaded for the commit CAS — no fresh read (serial-path
-        # trim); every selected file was consumed into `merged` above and
-        # is replaced by new_files
+            out = (ch.withColumn(BUCKET_COL, bucket).withColumn(SLOT_COL, slot)
+                   .repartition(k, BUCKET_COL, SLOT_COL)
+                   .groupBy(BUCKET_COL, SLOT_COL)
+                   .applyInArrow(kernel, from_arrow_schema(MERGE_ENTRY))
+                   .collect())
+        except Exception:
+            shutil.rmtree(os.path.join(self._data_dir, write_id), ignore_errors=True)
+            raise
+        touched = {(r["bucket"], r["slot"]) for r in out}
+        new_files = [r.asDict() for r in sorted(out, key=lambda r: (r["bucket"], r["slot"]))
+                     if r["path"] is not None]
+        untouched = [f for f in cur_files if (f["bucket"], f.get("slot") or 0) not in touched]
         props = dict(extra_properties or {})
         if epoch is not None:
             props["cdc.last-epoch"] = str(epoch)
-        props = props or None
         snap_id = self._commit_snapshot(
             meta,
             version,
             untouched + new_files,
-            {"operation": "merge", "touched-buckets": len({b for b, _ in pairs}),
-             "rewritten-files": len(selected), "carried-files": len(untouched),
+            {"operation": "merge", "touched-buckets": len({b for b, _ in touched}),
+             "rewritten-files": len(cur_files) - len(untouched),
+             "carried-files": len(untouched),
+             "added-records": sum(f["record_count"] for f in new_files),
+             "added-files-size": sum(f["file_size_in_bytes"] for f in new_files),
+             "merge-ms": int((time.perf_counter() - t0) * 1000),
              **(extra_summary or {})},
-            properties_update=props,
+            properties_update=props or None,
         )
         return {"applied": True, "snapshot_id": snap_id}
 
@@ -837,22 +894,10 @@ class IceliteTable:
         target = next((s for s in meta["snapshots"] if s["snapshot_id"] == snapshot_id), None)
         if target is None:
             raise ValueError(f"snapshot {snapshot_id} not found (expired?)")
-        snap_id = meta["last_snapshot_id"] + 1
-        snap = {
-            "snapshot_id": snap_id,
-            "parent_id": meta["current_snapshot_id"],
-            "timestamp_ms": int(time.time() * 1000),
-            "schema_id": target["schema_id"],
-            "summary": {"operation": "rollback", "rollback-to": snapshot_id},
-            "files": list(target["files"]),
-        }
-        meta["snapshots"].append(snap)
-        meta["current_snapshot_id"] = snap_id
-        meta["last_snapshot_id"] = snap_id
         # reads resolve columns via the schema id carried by the snapshot
         meta["current_schema_id"] = target["schema_id"]
-        self._write_metadata(meta, expected_version=version)
-        return snap_id
+        return self._commit_snapshot(meta, version, list(target["files"]),
+                                     {"operation": "rollback", "rollback-to": snapshot_id})
 
     def expire_snapshots(self, keep_last: int = 2) -> int:
         """Drop old snapshots' metadata entries and garbage-collect data files

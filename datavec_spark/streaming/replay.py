@@ -5,12 +5,11 @@ Semantics (BASELINE.json north_star):
 - events are full-row images keyed on (repo, path) with a globally unique,
   strictly increasing `seq` (commit order);
 - per-key resolution is last-writer-wins by `seq` — DataVec's
-  ConvertToSequence(key) + Reducer(TakeLast) collapsed into a single
-  partial-aggregating `max_by(struct(payload), seq)` (no groupByKey, no
-  whole-group materialization — the map-side combine makes hot Zipf keys a
-  non-issue for the in-batch collapse, which is why no explicit salt is
-  needed there; see AggregatorImpls.java:41 `AggregableLast` for the
-  reference semantics);
+  ConvertToSequence(key) + Reducer(TakeLast) (AggregatorImpls.java:41
+  `AggregableLast`), resolved inside icelite's merge: the epoch's events
+  are shuffled by (bucket, slot) and one Arrow task per pair resolves
+  them together with that pair's stored file, with no in-batch collapse
+  before it;
 - deletes become tombstones (`_deleted = true`) carrying their seq so a
   re-delivered or late older event can never resurrect a deleted row;
 - merges are idempotent: a change applies only if `change.seq > stored.seq`
@@ -33,7 +32,6 @@ Semantics (BASELINE.json north_star):
 from __future__ import annotations
 
 import json
-import os
 import time
 
 from pyspark.sql import DataFrame, SparkSession
@@ -208,27 +206,28 @@ class CdcEngine:
     ) -> dict:
         """Apply one epoch of the change stream. Idempotent per epoch.
 
-        Serial-path shape (round-4 verdict item #1 — this is the per-trigger
-        driver cost a 10^10-event stream pays once per micro-batch, so it is
-        engineered down to TWO Spark jobs and ONE metadata load):
-          job 1  fused stats pass — per-(bucket, slot) lineage metrics for
-                 data events AND the (tiny, ~1%) schema-op set gathered via
-                 collect_list into a sentinel partition, in one aggregation;
-          job 2  the merge write itself (merge_cdc receives the touched
-                 (bucket, slot) set from job 1, so its own pruning job
-                 disappears).
+        Serial-path shape (this is the per-trigger driver cost a stream
+        pays once per micro-batch, so it is kept to TWO Spark queries and
+        ONE metadata load):
+          1. the fused stats pass — per-(bucket, slot) lineage metrics for
+             data events AND the (tiny, ~1%) schema-op set gathered via
+             collect_list into a sentinel partition, in one aggregation;
+          2. merge_cdc over the bound events themselves: they are shuffled
+             by (bucket, slot) and one Arrow task per pair resolves
+             last-writer-wins against that pair's stored file and writes
+             its replacement. The stored table is never shuffled.
         All table properties (epoch fence, schema fence, field map,
         watermark) come from one metadata read; it is re-read only if this
         batch actually applied schema ops (which commit new metadata).
 
-        batch_df is consumed twice (stats pass, merge write) and never
-        cached: caching would materialize every column — content included —
-        before the stats job, which otherwise reads only (seq, ts, op, keys)
-        thanks to parquet column pruning (round-6, 12M fixture at local[16]:
-        stats job 4.4 s -> 0.7 s). A stateless micro-batch re-derives
-        deterministically (the file source re-lists the same files, Kafka
-        re-fetches the same offsets); merge_cdc's pruning guard fails the
-        commit loudly if it does not.
+        batch_df is consumed twice (stats pass, merge) and never cached:
+        caching would materialize every column — content included — before
+        the stats pass, which otherwise reads only (seq, ts, op, keys)
+        thanks to parquet column pruning.
+
+        The merge snapshot's summary records the epoch's metrics: events-in
+        (arriving data events), late-dropped, stats-ms, and merge_cdc's own
+        added-records, added-files-size and merge-ms.
 
         Lineage accounts ARRIVING change events (pre-transform-chain): it is
         ingest/resume bookkeeping, not post-filter output accounting — and a
@@ -244,16 +243,6 @@ class CdcEngine:
         time of prior triggers), so this is the stream's watermark, with
         exact per-bucket drop accounting. Batch backfills keep
         drop_late=False: unbounded lateness tolerance."""
-        # SPARK_GRAFT_PHASE_TIMING=1: print per-phase wall times (stats job /
-        # schema ops / merge job / lineage) — the serial-path profiler
-        _timing = os.environ.get("SPARK_GRAFT_PHASE_TIMING") == "1"
-        _t0 = time.time()
-        _marks: list[tuple[str, float]] = []
-
-        def _mark(name: str):
-            if _timing:
-                _marks.append((name, time.time()))
-
         table = IceliteTable(self.table_location)
         meta0 = table.metadata()  # the ONE per-epoch metadata load
         props0 = meta0["properties"]
@@ -271,8 +260,8 @@ class CdcEngine:
         # the (bucket, slot) hash over the RAW event key fields (resolved
         # through the immutable field map) — the same bucket_slot_exprs the
         # table's writers apply to the bound/current-schema columns, so the
-        # stats pass below can run BEFORE binding/schema ops and its pairs
-        # double as merge_cdc's pruning set. (Key columns are strings per
+        # stats pass below can run BEFORE binding/schema ops and its lineage
+        # partitions are the merge's data buckets. (Key columns are strings per
         # the CDC contract; schema widens are numeric-only, renames don't
         # change values — a schema op in this very batch cannot change the
         # hash.) The bucket count comes from the STORED partition spec, not
@@ -301,6 +290,7 @@ class CdcEngine:
         else:
             late_expr = F.lit(0).cast("long")
         is_schema = F.col("op").isin(*SCHEMA_OPS)
+        t_stats = time.perf_counter()
         stats_rows = (
             batch_df.groupBy(
                 F.when(is_schema, F.lit(-1)).otherwise(bucket).alias("partition"),
@@ -318,7 +308,7 @@ class CdcEngine:
             )
             .collect()
         )
-        _mark("stats_job")
+        stats_ms = int((time.perf_counter() - t_stats) * 1000)
 
         # 2. schema-evolution ops: driver-serialized in seq order, fenced
         #    by cdc.schema-seq so retries are no-ops
@@ -348,20 +338,14 @@ class CdcEngine:
         # partition)); collapse the slot-grain stats rows per bucket
         by_bucket: dict[int, dict] = {}
         for r in slot_rows:
-            a = by_bucket.get(r["partition"])
-            if a is None:
-                by_bucket[r["partition"]] = {
-                    "partition": r["partition"],
-                    "event_count": r["event_count"], "min_seq": r["min_seq"],
-                    "max_seq": r["max_seq"], "late_count": r["late_count"] or 0,
-                    "_max_ts_us": r["_max_ts_us"],
-                }
-            else:
-                a["event_count"] += r["event_count"]
-                a["min_seq"] = min(a["min_seq"], r["min_seq"])
-                a["max_seq"] = max(a["max_seq"], r["max_seq"])
-                a["late_count"] += r["late_count"] or 0
-                a["_max_ts_us"] = max(a["_max_ts_us"], r["_max_ts_us"])
+            a = by_bucket.setdefault(r["partition"], {
+                "partition": r["partition"], "event_count": 0, "late_count": 0,
+                "min_seq": r["min_seq"], "max_seq": r["max_seq"], "_max_ts_us": r["_max_ts_us"]})
+            a["event_count"] += r["event_count"]
+            a["late_count"] += r["late_count"] or 0
+            a["min_seq"] = min(a["min_seq"], r["min_seq"])
+            a["max_seq"] = max(a["max_seq"], r["max_seq"])
+            a["_max_ts_us"] = max(a["_max_ts_us"], r["_max_ts_us"])
         lineage_rows = sorted(by_bucket.values(), key=lambda r: r["partition"])
         batch_max_us = max(r["_max_ts_us"] for r in lineage_rows)
         new_max_us = max(batch_max_us, int(prev_max_us)) if prev_max_us else batch_max_us
@@ -371,9 +355,7 @@ class CdcEngine:
         meta = table.metadata() if applied_schema else meta0
         by_id = {f["id"]: f for f in table._fields(meta)}
         cur_name = {orig: by_id[fid]["name"] for orig, fid in fmap.items()}
-        key_cols = table.key_cols(meta)
 
-        _mark("schema_ops")
         data = batch_df.where(~is_schema)
         dropping = drop_late and prev_max_us is not None
         if dropping:
@@ -386,54 +368,29 @@ class CdcEngine:
             # applied inside the merge-apply stage (SURVEY.md §0 graft)
             data = transform_chain(data)
 
-        payload = [
-            F.col(orig).cast(type_to_spark(by_id[fmap[orig]]["type"])).alias(cur_name[orig])
-            for orig in EVENT_FIELDS
-        ]
-        bound = data.select(*payload, F.col("seq"), F.col("op"), F.col("ts"))
-
-        # 4. in-batch LWW collapse: one winner per key by max seq.
-        #    groupBy().agg(max_by) does map-side partial aggregation —
-        #    hot (repo) keys collapse before the shuffle, so skew cannot
-        #    concentrate rows the way the reference's groupByKey did
-        #    (SparkTransformExecutor.java:231).
-        nonkey = [cur_name[o] for o in EVENT_FIELDS if cur_name[o] not in key_cols]
-        winners = (
-            bound.groupBy(*[F.col(k) for k in key_cols])
-            .agg(
-                F.max_by(F.struct(*[F.col(c) for c in nonkey], F.col("op")), F.col("seq")).alias("w"),
-                F.max("seq").alias("_seq"),
-            )
-            .select(*key_cols, "w.*", "_seq")
+        # 4. epoch-fenced merge (watermark advances with it) of the bound
+        #    events themselves; deletes become tombstones, not removals.
+        changes = data.select(
+            *[F.col(orig).cast(type_to_spark(by_id[fmap[orig]]["type"])).alias(cur_name[orig])
+              for orig in EVENT_FIELDS],
+            F.col("seq").alias("_seq"),
+            (F.col("op") == F.lit("delete")).alias("_deleted"),
+            F.lit("upsert").alias("_op"),
         )
-        changes = (
-            winners.withColumn("_deleted", F.col("op") == F.lit("delete"))
-            .withColumn("_op", F.lit("upsert"))
-            .drop("op")
-        )
-
-        # 5. epoch-fenced merge (watermark advances with it). The pruning
-        #    set is the (bucket, slot) pairs from the fused stats pass, so
-        #    merge_cdc runs no pruning job of its own. Under drop_late a
-        #    pair whose arriving events were ALL late has no surviving
-        #    changes — leave it out so the merge does not rewrite its file
-        #    for nothing.
-        pairs = [
-            (r["partition"], r["_slot"]) for r in slot_rows
-            if not dropping or r["event_count"] > (r["late_count"] or 0)
-        ]
-        if pairs:
+        events_in = sum(r["event_count"] for r in lineage_rows)
+        late = sum(r["late_count"] for r in lineage_rows)
+        if not dropping or events_in > late:
             result = table.merge_cdc(
                 spark,
                 changes,
                 seq_col="_seq",
                 op_col="_op",
                 epoch=epoch,
-                extra_summary={"epoch": epoch},
+                extra_summary={"epoch": epoch, "events-in": events_in,
+                               "late-dropped": late if dropping else 0,
+                               "stats-ms": stats_ms},
                 extra_properties={"cdc.max-ts-us": str(new_max_us)},
-                touched_bucket_slots=pairs,
             )
-            _mark("merge_job")
         else:
             # every arriving event was dropped as late: nothing to merge
             # or fence (idempotent on redelivery — the drop recomputes),
@@ -441,7 +398,7 @@ class CdcEngine:
             result = {"applied": False, "snapshot_id": None,
                       "reason": "all-late-dropped"}
 
-        # 6. lineage upsert — idempotent by (epoch, partition) key
+        # 5. lineage upsert — idempotent by (epoch, partition) key
         snap_id = result["snapshot_id"] if result["applied"] else (
             self.table().current_snapshot() or {}
         ).get("snapshot_id")
@@ -450,8 +407,8 @@ class CdcEngine:
             rows = [
                 {"epoch": epoch, "partition": r["partition"],
                  "event_count": r["event_count"], "min_seq": r["min_seq"],
-                 "max_seq": r["max_seq"], "late_count": r["late_count"] or 0,
-                 "dropped_late": (r["late_count"] or 0) if dropping else 0,
+                 "max_seq": r["max_seq"], "late_count": r["late_count"],
+                 "dropped_late": r["late_count"] if dropping else 0,
                  "snapshot_id": snap_id}
                 for r in lineage_rows
             ]
@@ -462,14 +419,6 @@ class CdcEngine:
                 summary={"epoch": epoch},
                 properties_update={"lineage.last-epoch": str(epoch)},
             )
-            _mark("lineage")
-        if _timing:
-            prev = _t0
-            parts = []
-            for name, t in _marks:
-                parts.append(f"{name}={t - prev:.3f}s")
-                prev = t
-            print(f"PHASE_TIMING epoch={epoch} " + " ".join(parts))
         return result
 
     # -- batch replay ------------------------------------------------------------

@@ -7,6 +7,7 @@ checkpoint resume.
 """
 
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -245,11 +246,11 @@ def test_streaming_schema_evolution_across_restart(spark, tmp_path, fixture):
 
 
 def test_fused_stats_bucket_hash_matches_merge_bucket_expr(spark, tmp_path, fixture):
-    """apply_batch's fused stats pass hashes RAW event key fields and hands
-    the resulting (bucket, slot) set to merge_cdc as the pruning set — that is only
-    sound if the hash is value- and type-identical to icelite._bucket_expr
-    over the bound (current-schema) columns. Pin the parity, including
-    after a key-column RENAME (values unchanged -> hash unchanged)."""
+    """apply_batch's fused stats pass hashes RAW event key fields into the
+    lineage partitions — they name data buckets only if the hash is value-
+    and type-identical to icelite._bucket_expr over the bound
+    (current-schema) columns. Pin the parity, including after a key-column
+    RENAME (values unchanged -> hash unchanged)."""
     import pandas as pd  # noqa: F401
 
     base, events, _state, _schema = fixture
@@ -343,9 +344,9 @@ def test_sub_splits_replay_matches_oracle_and_prunes_files(spark, tmp_path, fixt
     """End-to-end CDC replay on a sub_splits=4 table: (a) the final state
     still equals the LWW oracle (file-level COW changes WHICH files are
     rewritten, never the result), (b) the fused stats pass's raw-field slot
-    hash is value-identical to icelite._slot_expr over bound columns (the
-    parity that makes zero-extra-job file pruning sound), and (c) a
-    single-key delta epoch rewrites a strict subset of its bucket's files."""
+    hash is value-identical to icelite._slot_expr over bound columns, and
+    (c) a single-key delta epoch rewrites a strict subset of its bucket's
+    files."""
     base, events, state, schema = fixture
     eng = CdcEngine(str(tmp_path / "split_repos"), num_buckets=4, sub_splits=4)
     table = eng.bootstrap(spark, base_df(spark, base))
@@ -382,6 +383,77 @@ def test_sub_splits_replay_matches_oracle_and_prunes_files(spark, tmp_path, fixt
     assert len(files_before & files_after) >= len(files_before) - 1
     got = {(r["repo"], r["path"]): r for r in eng.read_current(spark).collect()}
     assert got[(delta["repo"], delta["path"])]["content"] == "new content after the replay"
+
+
+def test_epoch_metrics_in_merge_summary(spark, tmp_path):
+    """Each merge snapshot's summary carries its epoch's metrics, at no
+    extra job: rows and bytes written equal the new files' pyarrow footers
+    and sizes, events in and late drops equal the epoch's lineage rows.
+    Epoch 1 re-delivers 50 early events far beyond a 10 s SLA, so its
+    late-dropped is 50."""
+    import pyarrow.parquet as pq
+
+    base = generate_base_rows(150, n_repos=30, paths_per_repo=25)
+    events = generate_events(N_EVENTS, n_repos=30, paths_per_repo=25,
+                             delay_us=2_000_000, straggler_frac=0.0, dup_frac=0.0)
+    redelivered = [e for e in events[:60] if e["op"] in ("insert", "update", "delete")][:50]
+    state, schema = oracle_replay(base, events)
+    eng = CdcEngine(str(tmp_path / "repos"), num_buckets=4)
+    eng.bootstrap(spark, base_df(spark, base))
+    half = len(events) // 2
+    eng.apply_batch(spark, events_df(spark, events[:half]), epoch=0)
+    eng.apply_batch(spark, events_df(spark, events[half:] + redelivered), epoch=1,
+                    late_delay_seconds=10, drop_late=True)
+    assert_final_state(spark, eng, state, schema)
+
+    lin = eng.read_lineage(spark).groupBy("epoch").agg(
+        F.sum("event_count").alias("events"), F.sum("dropped_late").alias("dropped")).collect()
+    lin = {r["epoch"]: (r["events"], r["dropped"]) for r in lin}
+    t = eng.table()
+    snaps = t.snapshots()
+    merges = [(p, s) for p, s in zip(snaps, snaps[1:]) if s["summary"]["operation"] == "merge"]
+    assert [s["summary"]["epoch"] for _, s in merges] == [0, 1]
+    for parent, snap in merges:
+        summary = snap["summary"]
+        old = {f["path"] for f in parent["files"]}
+        new = [f for f in snap["files"] if f["path"] not in old]
+        paths = [os.path.join(t.location, f["path"]) for f in new]
+        assert summary["added-records"] == sum(pq.read_metadata(p).num_rows for p in paths) \
+            == sum(f["record_count"] for f in new) > 0
+        assert summary["added-files-size"] == sum(os.path.getsize(p) for p in paths) \
+            == sum(f["file_size_in_bytes"] for f in new)
+        assert (summary["events-in"], summary["late-dropped"]) == lin[summary["epoch"]]
+        assert summary["stats-ms"] >= 0 and summary["merge-ms"] > 0
+    assert merges[1][1]["summary"]["late-dropped"] == len(redelivered)
+
+
+def test_over_cap_merge_group_fails_loudly_and_commits_nothing(spark, tmp_path, fixture,
+                                                               monkeypatch):
+    """A merge group is held in memory whole, so the driver caps its bytes
+    from host memory and cores. Over the cap, the epoch fails with an error
+    naming the epoch, the (bucket, slot) pair, the bytes, the cap and the
+    sub_splits that would fit, commits nothing and leaves no files; at the
+    normal cap the same epoch then replays to the oracle state."""
+    from datavec_spark.sources import icelite
+
+    base, events, state, schema = fixture
+    eng = CdcEngine(str(tmp_path / "repos"), num_buckets=4)
+    eng.bootstrap(spark, base_df(spark, base))
+    before = eng.table().current_snapshot()["snapshot_id"]
+    data_dir = os.path.join(eng.table_location, "data")
+    written = set(os.listdir(data_dir))
+    monkeypatch.setattr(icelite, "_group_byte_cap", lambda: 1000)
+    with pytest.raises(Exception) as err:
+        eng.replay_batch(spark, events_df(spark, events))
+    assert re.search(r"merge_cdc epoch 0: \(bucket, slot\) \(\d, 0\) holds \d+ bytes, "
+                     r"over the per-group cap of 1000 bytes; "
+                     r"a table with sub_splits >= \d+ would fit", str(err.value))
+    assert eng.table().current_snapshot()["snapshot_id"] == before
+    assert eng.table().last_epoch() == -1
+    assert set(os.listdir(data_dir)) == written  # the failed merge's files are removed
+    monkeypatch.undo()
+    assert eng.replay_batch(spark, events_df(spark, events))["applied"]
+    assert_final_state(spark, eng, state, schema)
 
 
 def test_run_stream_rejects_stateful_dedup(spark, tmp_path):

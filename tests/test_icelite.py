@@ -5,7 +5,7 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from datavec_spark.sources.icelite import CommitConflict, IceliteTable
+from datavec_spark.sources.icelite import CommitConflict, IceliteTable, merge_group
 
 
 SCHEMA = T.StructType(
@@ -292,8 +292,7 @@ def test_sub_splits_file_level_merge_pruning(spark, tmp_path):
         .select(split._bucket_expr(split.metadata()).alias("b")).collect()[0]["b"]
     slot = spark.createDataFrame([("k7",)], "k string") \
         .select(split._slot_expr(split.metadata()).alias("s")).collect()[0]["s"]
-    res = split.merge_cdc(spark, change, epoch=0,
-                          touched_bucket_slots=[(bucket, slot)])
+    res = split.merge_cdc(spark, change, epoch=0)
     assert res["applied"]
     plain.merge_cdc(spark, change, epoch=0)
 
@@ -319,11 +318,12 @@ def test_sub_splits_file_level_merge_pruning(spark, tmp_path):
 
 @pytest.mark.parametrize("sub_splits", [1, 3])
 def test_sub_splits_self_derived_pruning_and_legacy_files(spark, tmp_path, sub_splits):
-    """Without caller-supplied pairs the merge derives (bucket, slot)
-    itself; slot-less manifest entries (written before every table carried
-    slots / by append_rows-style paths) cover their whole bucket and are
-    consumed whenever the bucket is touched — on an unsplit table
-    (sub_splits=1, slot 0 only) as on a split one."""
+    """The merge finds its own (bucket, slot) pairs: a one-key change
+    rewrites one file. A slot-less manifest entry (written before every
+    table carried slots) is slot 0 of an unsplit table and is consumed
+    like any other; on a split table the merge cannot hash its rows into
+    slots, so it refuses, naming the table and the file, until compact()
+    rewrites the table."""
     t = IceliteTable.create(str(tmp_path / "t2"), SCHEMA, key_cols=["k"], num_buckets=2,
                             sub_splits=sub_splits)
     t.overwrite(spark.createDataFrame([(f"k{i}", i, 0, False) for i in range(60)], SCHEMA))
@@ -337,52 +337,168 @@ def test_sub_splits_self_derived_pruning_and_legacy_files(spark, tmp_path, sub_s
     got = {r["k"]: r["v"] for r in t.read(spark).collect()}
     assert got["k3"] == 33 and len(got) == 60
 
-    # legacy (slot-less) entry: simulate by stripping the slot from one
-    # touched-bucket file's manifest entry, then merge a key in that bucket
+    # legacy (slot-less) entry: strip the slot from one file's manifest
+    # entry, then merge a key that file holds
     meta, version = t._load()
     cur = next(s for s in meta["snapshots"] if s["snapshot_id"] == meta["current_snapshot_id"])
-    victim = next(f for f in cur["files"])
-    victim_bucket = victim["bucket"]
+    victim = cur["files"][0]
     victim.pop("slot", None)
     t._write_metadata(meta, expected_version=version)
-    kmeta = t.metadata()
-    keys_in_bucket = [
-        r["k"] for r in t.read(spark)
-        .withColumn("_b", t._bucket_expr(kmeta)).where(F.col("_b") == victim_bucket)
-        .collect()
-    ]
-    ch = spark.createDataFrame([(keys_in_bucket[0], 999, 9, False, "upsert")], ch_schema)
+    key = spark.read.parquet(os.path.join(t.location, victim["path"])).first()["k"]
+    ch = spark.createDataFrame([(key, 999, 9, False, "upsert")], ch_schema)
+    if sub_splits > 1:
+        before = t.current_snapshot()["snapshot_id"]
+        with pytest.raises(ValueError) as err:
+            t.merge_cdc(spark, ch, epoch=1)
+        msg = str(err.value)
+        assert t.location in msg and victim["path"] in msg and "compact()" in msg
+        assert t.current_snapshot()["snapshot_id"] == before
+        t.compact(spark)
     t.merge_cdc(spark, ch, epoch=1)
     snap2 = t.current_snapshot()
-    # the slot-less file must have been consumed (bucket matched), along
-    # with the touched slot file if distinct
     assert victim["path"] not in {f["path"] for f in snap2["files"]}
+    assert all(f.get("slot") is not None for f in snap2["files"])
     got2 = {r["k"]: r["v"] for r in t.read(spark).collect()}
-    assert got2[keys_in_bucket[0]] == 999 and len(got2) == 60
+    assert got2[key] == 999 and len(got2) == 60
 
 
-def test_merge_cdc_pruning_guard_catches_stray_buckets(spark, tmp_path):
-    """A (bucket, slot) pruning set that does not cover every change
-    bucket must fail the commit loudly (silent duplicate key versions
-    otherwise), naming the epoch, the stray pairs and the snapshot."""
-    t = IceliteTable.create(str(tmp_path / "t"), SCHEMA, key_cols=["k"], num_buckets=8)
-    t.overwrite(spark.createDataFrame([(f"k{i}", 0, 0, False) for i in range(20)], SCHEMA))
+def test_merge_cdc_routes_every_row_to_its_bucket_slot(spark, tmp_path):
+    """The merge tasks' output is the touched set, so routing must be
+    exact: on a sub_splits=3 table every row of every new file hashes to
+    its manifest entry's (bucket, slot), and every key appears exactly
+    once across the snapshot — also when a key has several change rows."""
+    t = IceliteTable.create(str(tmp_path / "t"), SCHEMA, key_cols=["k"], num_buckets=4,
+                            sub_splits=3)
+    t.overwrite(spark.createDataFrame([(f"k{i}", 0, 0, False) for i in range(40)], SCHEMA))
+    old_paths = {f["path"] for f in t.current_snapshot()["files"]}
     changes = spark.createDataFrame(
-        [(f"k{i}", 1, 1, False) for i in range(20)], SCHEMA) \
+        [(f"k{i}", s, s, False) for i in range(0, 60, 3) for s in (1, 2)], SCHEMA) \
         .withColumn("_op", F.lit("upsert"))
-    # the full set works (an unsplit table has slot 0 only)
-    t.merge_cdc(spark, changes, epoch=0,
-                touched_bucket_slots=[(b, 0) for b in range(8)])
-    snap = t.current_snapshot()["snapshot_id"]
-    # a deliberately short set must raise, not silently commit
-    with pytest.raises(RuntimeError, match="outside the pruning set") as err:
-        t.merge_cdc(spark, changes.withColumn("_seq", F.lit(2).cast("long")),
-                    epoch=7, touched_bucket_slots=[(0, 0)])
-    stray = sorted({(r[0], 0) for r in changes.select(t._bucket_expr(t.metadata()))
-                    .distinct().collect()} - {(0, 0)})
-    msg = str(err.value)
-    assert "epoch 7" in msg and f"snapshot {snap}" in msg and str(stray) in msg
-    assert t.current_snapshot()["snapshot_id"] == snap
+    t.merge_cdc(spark, changes, epoch=0)
+    meta = t.metadata()
+    new = [f for f in t.current_snapshot()["files"] if f["path"] not in old_paths]
+    assert new
+    for f in new:
+        got = {tuple(r) for r in spark.read.parquet(os.path.join(t.location, f["path"]))
+               .select(t._bucket_expr(meta), t._slot_expr(meta)).distinct().collect()}
+        assert got == {(f["bucket"], f["slot"])}, f
+    rows = t.read(spark).collect()
+    keys = {f"k{i}" for i in range(40)} | {f"k{i}" for i in range(0, 60, 3)}
+    assert len(rows) == len({r["k"] for r in rows}) == len(keys)
+    assert {r["k"] for r in rows} == keys
+    assert {r["k"]: r["v"] for r in rows if r["v"]} == {f"k{i}": 2 for i in range(0, 60, 3)}
+
+
+def test_merge_group_kernel_is_retry_safe_and_resolves_lww(tmp_path):
+    """The merge kernel on plain pyarrow tables, no Spark. Run twice on the
+    same input (a retried task), it leaves one file and returns the same
+    entry. Per key the highest seq wins over changes plus the stored file,
+    the stored row wins a tie, a tombstone is kept and a winning delete
+    removes the row. Old-schema target files bind by field id."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    old = [{"id": 1, "name": "k", "type": "string"}, {"id": 2, "name": "val", "type": "int"},
+           {"id": 3, "name": "_seq", "type": "long"}, {"id": 4, "name": "_deleted", "type": "boolean"}]
+    cur = [{"id": 1, "name": "k", "type": "string"}, {"id": 2, "name": "v", "type": "long"},
+           {"id": 3, "name": "_seq", "type": "long"}, {"id": 4, "name": "_deleted", "type": "boolean"},
+           {"id": 5, "name": "extra", "type": "string"}]
+    target = os.path.join(str(tmp_path), "old.parquet")
+    pq.write_table(pa.table({
+        "k": ["tie", "multi", "tomb", "gone", "kept"],
+        "val": pa.array([1, 1, 1, 1, 1], pa.int32()),
+        "_seq": [5, 5, 5, 5, 5], "_deleted": [False] * 5}), target)
+    changes = pa.table({
+        "k": ["tie", "multi", "multi", "multi", "tomb", "gone", "new"],
+        "v": [2, 7, 9, 8, 3, 4, 6],
+        "_seq": [5, 7, 9, 8, 6, 6, 1],
+        "_deleted": [False, False, False, False, True, False, False],
+        "extra": ["x", None, "nine", None, None, None, "n"],
+        "_op": ["upsert", "upsert", "upsert", "upsert", "upsert", "delete", "upsert"]})
+    spec = {"location": str(tmp_path), "write_id": "w1", "epoch": 3, "cap": 1 << 30,
+            "sub_splits": 1, "keys": ["k"], "seq_col": "_seq", "op_col": "_op",
+            "fields": cur, "schema_id": 1, "schemas": {0: old, 1: cur},
+            "files": {(2, 0): [(target, 0)]}}
+    first = merge_group(changes, 2, 0, spec)
+    second = merge_group(changes, 2, 0, spec)
+    assert first == second
+    out_dir = os.path.join(str(tmp_path), os.path.dirname(first["path"]))
+    assert os.listdir(out_dir) == ["merge.parquet"]
+    assert (first["bucket"], first["slot"], first["schema_id"]) == (2, 0, 1)
+    path = os.path.join(str(tmp_path), first["path"])
+    assert first["file_size_in_bytes"] == os.path.getsize(path)
+    got = pq.read_table(path).to_pylist()
+    assert first["record_count"] == len(got) == 5
+    assert got == [  # key-sorted
+        {"k": "kept", "v": 1, "_seq": 5, "_deleted": False, "extra": None},
+        {"k": "multi", "v": 9, "_seq": 9, "_deleted": False, "extra": "nine"},
+        {"k": "new", "v": 6, "_seq": 1, "_deleted": False, "extra": "n"},
+        {"k": "tie", "v": 1, "_seq": 5, "_deleted": False, "extra": None},
+        {"k": "tomb", "v": 3, "_seq": 6, "_deleted": True, "extra": None},
+    ]
+    # a pair whose every row is deleted writes no file
+    gone = merge_group(changes.slice(5, 1), 3, 0, {**spec, "files": {}})
+    assert gone["path"] is None and gone["record_count"] == 0
+
+
+def test_merge_type_round_trip_through_arrow(spark, tmp_path):
+    """Every icelite primitive plus array<string> survives a merge whose
+    pyarrow task reads a Spark-written old-schema file (a renamed column,
+    an int widened to long, an added column) and writes its own file, a
+    second merge that reads that file back, and a Spark append into the
+    same schema: read() returns the expected rows."""
+    import datetime as dt
+
+    schema = T.StructType([
+        T.StructField("k", T.StringType()), T.StructField("flag", T.BooleanType()),
+        T.StructField("n", T.IntegerType()), T.StructField("big", T.LongType()),
+        T.StructField("f", T.FloatType()), T.StructField("d", T.DoubleType()),
+        T.StructField("name", T.StringType()), T.StructField("blob", T.BinaryType()),
+        T.StructField("at", T.TimestampType()), T.StructField("day", T.DateType()),
+        T.StructField("tags", T.ArrayType(T.StringType())),
+        T.StructField("_seq", T.LongType()), T.StructField("_deleted", T.BooleanType()),
+    ])
+    ts = dt.datetime(2021, 3, 4, 5, 6, 7, 123456)
+
+    def row(k, i, seq):
+        return (k, i % 2 == 0, i, 10**12 + i, i + 0.5, i / 4, f"name-{i}", bytes([i, 255]),
+                ts + dt.timedelta(days=i, microseconds=i), dt.date(2020, 1, 1) + dt.timedelta(days=i),
+                [f"t{i}", None, "é"], seq, False)
+
+    # one bucket: the first merge rewrites the table's only file
+    t = IceliteTable.create(str(tmp_path / "types"), schema, key_cols=["k"], num_buckets=1)
+    t.overwrite(spark.createDataFrame([row(f"k{i}", i, 0) for i in range(8)], schema))
+    t.rename_column("name", "title")
+    t.widen_column("n", "long")
+    t.add_column("note", "string")
+
+    def cur(r, note=None):
+        return r + (note,)
+
+    ch_schema = T.StructType(t.schema_struct().fields + [T.StructField("_op", T.StringType())])
+    t.merge_cdc(spark, spark.createDataFrame(
+        [cur(row("k1", 21, 5), "upd") + ("upsert",), cur(row("k9", 9, 5), "new") + ("upsert",),
+         cur(row("k2", 2, 5)) + ("delete",)], ch_schema), epoch=0)
+    t.merge_cdc(spark, spark.createDataFrame(
+        [cur(row("k3", 33, 6), "again") + ("upsert",)], ch_schema), epoch=1)
+
+    want = {f"k{i}": cur(row(f"k{i}", i, 0)) for i in (0, 4, 5, 6, 7)}
+    want.update({"k1": cur(row("k1", 21, 5), "upd"), "k9": cur(row("k9", 9, 5), "new"),
+                 "k3": cur(row("k3", 33, 6), "again")})
+
+    def check():
+        df = t.read(spark)
+        assert [(f.name, f.dataType) for f in df.schema.fields] == \
+            [(f.name, f.dataType) for f in t.schema_struct().fields]
+        assert dict(df.dtypes)["n"] == "bigint" and "title" in df.columns
+        got = {r["k"]: tuple(bytes(v) if isinstance(v, (bytes, bytearray)) else v for v in r)
+               for r in df.collect()}
+        assert got == want
+
+    check()  # every file of the current schema was written by pyarrow
+    t.append(spark.createDataFrame([cur(row("k10", 10, 7), "app")], t.schema_struct()))
+    want["k10"] = cur(row("k10", 10, 7), "app")
+    check()  # pyarrow and Spark files of one schema, read together
 
 
 def test_read_changes_cow_diff(spark, tmp_path):
