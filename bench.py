@@ -162,7 +162,7 @@ def run_cdc_replay(spark, fixture_dir: str, num_buckets: int = 64, epochs: int =
     """Batch-replay the event log in `epochs` epochs; returns wall + rate +
     an order-insensitive checksum of the final state (replay-equality
     evidence across parallelism levels). The replay includes the stats
-    pass, the per-(bucket, slot) LWW merge with tombstones, lineage
+    pass, the per-bucket LWW merge with tombstones, lineage
     accounting and epoch-fenced commits; the final-state read stays
     outside the clock."""
     from pyspark.sql import functions as F

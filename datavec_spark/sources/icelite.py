@@ -17,14 +17,15 @@ catalog could replace 1:1:
   casts old files on read, add fills nulls. Old data files remain valid
   (Iceberg: schema-id per data file + name mapping).
 - **Bucket-partitioned copy-on-write MERGE**: the table is hash-bucketed
-  on its key columns, each bucket split into `sub_splits` slot files; a
-  merge rewrites only the (bucket, slot) files containing changed keys and
+  on its key columns, and the bucket is the one unit of files, merges and
+  lineage; a merge rewrites only the buckets containing changed keys and
   carries every other data file forward untouched. The merge is one Spark
-  query: only the changes are shuffled, by (bucket, slot), and one Arrow
-  task per pair reads that pair's target file(s) with pyarrow, resolves
+  query: only the changes are shuffled, by bucket, and one Arrow task per
+  bucket reads that bucket's target file(s) with pyarrow, resolves
   last-writer-wins by seq and writes one key-sorted file, so the target is
   never shuffled (Iceberg COW with `bucket(N, key)` partitioning rewrites
-  the same files).
+  the same files). A table that needs smaller rewrite files uses more
+  buckets.
 - **Time travel**: `read(snapshot_id=...)` reads any retained snapshot.
 
 Semantics modeled on the Iceberg spec (public) and the needs in
@@ -36,6 +37,7 @@ supersedes with columnar snapshots.
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import shutil
@@ -121,33 +123,24 @@ def schema_to_struct(fields: list[dict]) -> T.StructType:
 # ---------------------------------------------------------------------------
 
 BUCKET_COL = "__bucket"
-SLOT_COL = "__slot"
 
 
-def bucket_slot_exprs(keys: list[F.Column], num_buckets: int,
-                      sub_splits: int) -> tuple[F.Column, F.Column]:
-    """(bucket, slot) of a row from its key column expressions — the one
-    place the hash formulas live. Writers (_bucket_expr/_slot_expr over the
-    bound columns) and the CDC stats pass (over raw event fields) must agree
+def bucket_expr(keys: list[F.Column], num_buckets: int) -> F.Column:
+    """Bucket of a row from its key column expressions — the one place the
+    hash formula lives. Writers (IceliteTable._bucket_expr over the bound
+    columns) and the CDC stats pass (over raw event fields) must agree
     value for value, because lineage partitions are data buckets.
 
-    The bucket is xxhash64 over ALL key columns (not a string-concatenated
-    key — the reference's string keys, MapToPairForReducerFunction.java:30-53,
-    are a collision + skew hazard this avoids); pmod keeps it non-negative.
-    The slot is a second hash, independent of the bucket hash (leading
-    literal salt), so slots subdivide each bucket's key population
-    uniformly. An unsplit table (sub_splits=1) has the single slot lit(0):
-    no second hash per row."""
+    xxhash64 over ALL key columns (not a string-concatenated key — the
+    reference's string keys, MapToPairForReducerFunction.java:30-53, are a
+    collision + skew hazard this avoids); pmod keeps it non-negative."""
     if not keys:
-        return F.lit(0), F.lit(0)
-    bucket = F.pmod(F.xxhash64(*keys), F.lit(num_buckets)).cast("int")
-    if sub_splits <= 1:
-        return bucket, F.lit(0)
-    return bucket, F.pmod(F.xxhash64(F.lit(1), *keys), F.lit(sub_splits)).cast("int")
+        return F.lit(0)
+    return F.pmod(F.xxhash64(*keys), F.lit(num_buckets)).cast("int")
 
 
-# one row per merged (bucket, slot) pair: its manifest entry and counts
-MERGE_ENTRY = pa.schema([("path", pa.string()), ("bucket", pa.int32()), ("slot", pa.int32()),
+# one row per merged bucket: its manifest entry and counts
+MERGE_ENTRY = pa.schema([("path", pa.string()), ("bucket", pa.int32()),
                          ("schema_id", pa.int32()), ("record_count", pa.int64()),
                          ("file_size_in_bytes", pa.int64())])
 
@@ -162,39 +155,40 @@ def _group_byte_cap() -> int:
     return ram // (8 * len(os.sched_getaffinity(0)))
 
 
-def merge_group(changes: pa.Table, bucket: int, slot: int, spec: dict) -> dict:
-    """Merge one (bucket, slot) pair of a copy-on-write table.
+def merge_group(changes: pa.Table, bucket: int, spec: dict) -> dict:
+    """Merge one bucket of a copy-on-write table.
 
-    `changes` holds the pair's change rows: the current schema's columns
-    plus spec's op column, any number of rows per key. The pair's target
-    files are read here with pyarrow and bound to the current schema by
-    field id, with the same rules as IceliteTable._read_entries (rename ->
-    alias, widen -> cast, add -> null). Per key the highest seq wins and
+    `changes` holds the bucket's change rows: the current schema's columns
+    plus spec's op column, any number of rows per key. The bucket's target
+    files (every file listed for it) are read here with pyarrow and bound
+    to the current schema by field id, with the same rules as
+    IceliteTable._read_entries (rename -> alias, widen -> cast, add ->
+    null). Per key the highest seq wins and
     the stored row wins a tie; a winning op == 'delete' removes the row,
     while a tombstone (`_deleted` true) is an ordinary row and is kept.
 
-    Writes one key-sorted file at a path fixed by (write id, bucket, slot)
+    Writes one key-sorted file at a path fixed by (write id, bucket)
     via a temp name and os.replace, so a retried task overwrites its own
     file, and returns its manifest entry with record_count and
     file_size_in_bytes (path None when no row survives). A group over
     spec["cap"] bytes raises MemoryError before anything is read.
 
     `spec` is the plan IceliteTable.merge_cdc builds: location, write_id,
-    epoch, cap, sub_splits, keys, seq_col, op_col, fields (current schema),
-    schema_id, schemas (id -> fields), files ((bucket, slot) -> [(path,
+    epoch, cap, num_buckets, keys, seq_col, op_col, fields (current
+    schema), schema_id, schemas (id -> fields), files (bucket -> [(path,
     schema id)])."""
     fields, seq, op = spec["fields"], spec["seq_col"], spec["op_col"]
-    targets = spec["files"].get((bucket, slot), [])
+    targets = spec["files"].get(bucket, [])
     held = changes.nbytes
     for p, _ in targets:
         md = pq.read_metadata(p)
         held += sum(md.row_group(i).total_byte_size for i in range(md.num_row_groups))
     if held > spec["cap"]:
-        need = -(-spec["sub_splits"] * held // spec["cap"])
+        need = -(-spec["num_buckets"] * held // spec["cap"])
         raise MemoryError(
-            f"merge_cdc epoch {spec['epoch']}: (bucket, slot) ({bucket}, {slot}) "
-            f"holds {held} bytes, over the per-group cap of {spec['cap']} bytes; "
-            f"a table with sub_splits >= {need} would fit")
+            f"merge_cdc epoch {spec['epoch']}: bucket {bucket} holds {held} bytes, "
+            f"over the per-group cap of {spec['cap']} bytes; "
+            f"a table with num_buckets >= {need} would fit")
     schema = pa.schema([(f["name"], type_to_arrow(f["type"])) for f in fields]
                        + [(op, pa.string()), ("__src", pa.int8())])
 
@@ -222,11 +216,11 @@ def merge_group(changes: pa.Table, bucket: int, slot: int, spec: dict) -> dict:
     out = won.filter(pc.invert(pc.fill_null(pc.equal(won[op], "delete"), False))) \
         .select([f["name"] for f in fields])
 
-    entry = {"path": None, "bucket": bucket, "slot": slot, "schema_id": spec["schema_id"],
+    entry = {"path": None, "bucket": bucket, "schema_id": spec["schema_id"],
              "record_count": out.num_rows, "file_size_in_bytes": 0}
     if out.num_rows:
         entry["path"] = os.path.join("data", spec["write_id"], f"{BUCKET_COL}={bucket}",
-                                     f"{SLOT_COL}={slot}", "merge.parquet")
+                                     "merge.parquet")
         path = os.path.join(spec["location"], entry["path"])
         os.makedirs(os.path.dirname(path), exist_ok=True)
         tmp = os.path.join(os.path.dirname(path), f".merge.{uuid.uuid4().hex}.tmp")
@@ -256,18 +250,14 @@ class IceliteTable:
         key_cols: list[str] | None = None,
         num_buckets: int = 16,
         properties: dict[str, str] | None = None,
-        sub_splits: int = 1,
     ) -> "IceliteTable":
-        """sub_splits > 1 splits every bucket's data into that many FILES,
-        by a second, independent hash of the key (deterministic slots). A
-        merge then rewrites only the slot files whose hash space the
-        changed keys actually occupy — copy-on-write amplification drops
-        from (bucket size) to (bucket size / sub_splits) per changed key.
-        At 100 TB, num_buckets fixes shuffle/task parallelism while
-        num_buckets x sub_splits fixes the rewrite unit and target file
-        size. Static by design — slot assignment must be
-        stable across batches or pruning would miss files (the same
-        reason bucket counts are fixed at creation)."""
+        """New empty table, hash-bucketed on `key_cols` into `num_buckets`.
+        The bucket is the rewrite unit: a merge rewrites the files of the
+        buckets its changed keys hash into, so copy-on-write amplification
+        per changed key is one bucket's size, and a table that needs
+        smaller rewrite files uses more buckets. Static by design: bucket
+        assignment must be stable across writes, or a merge would miss
+        the files that hold a key's older versions."""
         t = cls(location)
         os.makedirs(t._meta_dir, exist_ok=True)
         os.makedirs(t._data_dir, exist_ok=True)
@@ -282,8 +272,7 @@ class IceliteTable:
             "table_uuid": str(uuid.uuid4()),
             "current_schema_id": 0,
             "schemas": [{"schema_id": 0, "fields": fields}],
-            "partition_spec": {"key_field_ids": key_ids, "num_buckets": num_buckets,
-                               "sub_splits": int(sub_splits)},
+            "partition_spec": {"key_field_ids": key_ids, "num_buckets": num_buckets},
             "properties": dict(properties or {}),
             "current_snapshot_id": None,
             "snapshots": [],
@@ -379,23 +368,19 @@ class IceliteTable:
         """Current (or time-travel) snapshot as a DataFrame in the current
         schema. Old-schema files are projected by field id: renamed columns
         aliased, widened columns cast, added columns null-filled. With
-        `buckets`, only data files of those buckets are read."""
+        `buckets`, only data files of those buckets are read. Raises
+        ValueError on a snapshot id that is unknown (e.g. expired)."""
         meta = self.metadata()
         if snapshot_id is None:
-            snap = self.current_snapshot()
+            snap = self._current(meta)
         else:
-            snap = next(s for s in meta["snapshots"] if s["snapshot_id"] == snapshot_id)
-        cur_fields = self._fields(meta)
-        cur_struct = schema_to_struct(cur_fields)
-        if snap is None or not snap["files"]:
-            return spark.createDataFrame([], cur_struct)
-
-        files = snap["files"]
+            snap = next((s for s in meta["snapshots"] if s["snapshot_id"] == snapshot_id), None)
+            if snap is None:
+                raise ValueError(f"unknown snapshot_id {snapshot_id} (expired?)")
+        files = snap["files"] if snap else []
         if buckets is not None:
             bset = set(buckets)
             files = [f for f in files if f["bucket"] in bset]
-        if not files:
-            return spark.createDataFrame([], cur_struct)
         return self._read_entries(spark, meta, files)
 
     def read_changes(
@@ -546,54 +531,44 @@ class IceliteTable:
 
     # -- write ---------------------------------------------------------------
 
-    @staticmethod
-    def sub_splits(meta: dict) -> int:
-        # .get: metadata written before sub_splits existed means 1
-        return int(meta["partition_spec"].get("sub_splits", 1))
-
-    def _bucket_slot_exprs(self, meta: dict) -> tuple[F.Column, F.Column]:
-        return bucket_slot_exprs([F.col(k) for k in self.key_cols(meta)],
-                                 meta["partition_spec"]["num_buckets"],
-                                 self.sub_splits(meta))
-
     def _bucket_expr(self, meta: dict) -> F.Column:
-        return self._bucket_slot_exprs(meta)[0]
+        return bucket_expr([F.col(k) for k in self.key_cols(meta)],
+                           meta["partition_spec"]["num_buckets"])
 
-    def _slot_expr(self, meta: dict) -> F.Column:
-        """File slot WITHIN a bucket (see bucket_slot_exprs)."""
-        return self._bucket_slot_exprs(meta)[1]
-
-    def _write_data_files(self, df: DataFrame, meta: dict) -> list[dict]:
-        """Write df (current schema) as (bucket, slot)-partitioned parquet
-        (one hive dir per bucket, one sub-dir per slot); return manifest
-        entries. One Spark write job."""
+    @contextlib.contextmanager
+    def _staged(self):
+        """A fresh write id, naming the directory data/<write_id>/ that holds
+        one commit's new files. If the block raises (a failed write job, or
+        a commit that loses the version CAS) the directory is removed: no
+        snapshot lists its files, so expire_snapshots would never collect
+        them."""
         write_id = uuid.uuid4().hex
+        try:
+            yield write_id
+        except BaseException:
+            shutil.rmtree(os.path.join(self._data_dir, write_id), ignore_errors=True)
+            raise
+
+    def _write_data_files(self, df: DataFrame, meta: dict, write_id: str) -> list[dict]:
+        """Write df (current schema) as bucket-partitioned parquet under
+        data/<write_id>/ (one hive dir per bucket); return manifest
+        entries. One Spark write job."""
         out_dir = os.path.join(self._data_dir, write_id)
-        n = meta["partition_spec"]["num_buckets"]
-        s = self.sub_splits(meta)
-        bucket, slot = self._bucket_slot_exprs(meta)
-        staged = df.withColumn(BUCKET_COL, bucket).withColumn(SLOT_COL, slot)
+        staged = df.withColumn(BUCKET_COL, self._bucket_expr(meta))
         if self.key_cols(meta):
-            # co-locate each (bucket, slot) into one task → one file each.
-            # One int id, not two columns: at sub_splits=1 it equals the
-            # bucket, so an unsplit table hash-partitions exactly by bucket
-            staged = staged.repartition(n * s, F.col(BUCKET_COL) * s + F.col(SLOT_COL))
-        staged.write.partitionBy(BUCKET_COL, SLOT_COL).parquet(out_dir)
+            # co-locate each bucket into one task → one file each
+            staged = staged.repartition(meta["partition_spec"]["num_buckets"], BUCKET_COL)
+        staged.write.partitionBy(BUCKET_COL).parquet(out_dir)
         entries: list[dict] = []
-        for bucket_dir in sorted(os.listdir(out_dir)):
-            if not bucket_dir.startswith(f"{BUCKET_COL}="):
-                continue
+        for bucket_dir in sorted(d for d in os.listdir(out_dir) if d.startswith(f"{BUCKET_COL}=")):
             bpath = os.path.join(out_dir, bucket_dir)
-            for slot_dir in sorted(d for d in os.listdir(bpath) if d.startswith(f"{SLOT_COL}=")):
-                spath = os.path.join(bpath, slot_dir)
-                for fn in sorted(os.listdir(spath)):
-                    if fn.endswith(".parquet"):
-                        entries.append({
-                            "path": os.path.relpath(os.path.join(spath, fn), self.location),
-                            "bucket": int(bucket_dir.split("=", 1)[1]),
-                            "slot": int(slot_dir.split("=", 1)[1]),
-                            "schema_id": meta["current_schema_id"],
-                        })
+            for fn in sorted(os.listdir(bpath)):
+                if fn.endswith(".parquet"):
+                    entries.append({
+                        "path": os.path.relpath(os.path.join(bpath, fn), self.location),
+                        "bucket": int(bucket_dir.split("=", 1)[1]),
+                        "schema_id": meta["current_schema_id"],
+                    })
         return entries
 
     def _commit_snapshot(
@@ -628,13 +603,14 @@ class IceliteTable:
         properties_update: dict[str, str] | None = None,
     ) -> int:
         meta, version = self._load()
-        cur = self.current_snapshot()
-        new_files = self._write_data_files(self._conform(df, meta), meta)
-        files = (cur["files"] if cur else []) + new_files
-        return self._commit_snapshot(
-            meta, version, files, {"operation": "append", **(summary or {})},
-            properties_update=properties_update,
-        )
+        cur = self._current(meta)
+        with self._staged() as write_id:
+            new_files = self._write_data_files(self._conform(df, meta), meta, write_id)
+            files = (cur["files"] if cur else []) + new_files
+            return self._commit_snapshot(
+                meta, version, files, {"operation": "append", **(summary or {})},
+                properties_update=properties_update,
+            )
 
     def append_rows_local(
         self,
@@ -644,42 +620,48 @@ class IceliteTable:
     ) -> int:
         """Driver-side append of a tiny row set (e.g. per-epoch lineage,
         ≤num_buckets rows) via pyarrow — no Spark job, same atomic commit.
-        Only valid for unbucketed tables (num_buckets == 1)."""
+        Only valid for unbucketed tables (num_buckets == 1): every row is
+        written to bucket 0, the only bucket later merges read it from."""
         meta, version = self._load()
-        assert meta["partition_spec"]["num_buckets"] == 1, "local append needs num_buckets=1"
+        n = meta["partition_spec"]["num_buckets"]
+        if n != 1:
+            raise ValueError(
+                f"append_rows_local writes every row to bucket 0, so it needs an "
+                f"unbucketed table (num_buckets=1); icelite table {self.location} "
+                f"has num_buckets={n}")
         fields = self._fields(meta)
         arrays = [pa.array([r.get(f["name"]) for r in rows], type=type_to_arrow(f["type"]))
                   for f in fields]
         names = [f["name"] for f in fields]
-        rel_dir = os.path.join("data", uuid.uuid4().hex)
-        os.makedirs(os.path.join(self.location, rel_dir), exist_ok=True)
-        rel = os.path.join(rel_dir, f"{BUCKET_COL}=0", "local.parquet")
-        os.makedirs(os.path.dirname(os.path.join(self.location, rel)), exist_ok=True)
-        pq.write_table(pa.Table.from_arrays(arrays, names=names), os.path.join(self.location, rel))
-        entry = {"path": rel, "bucket": 0, "schema_id": meta["current_schema_id"]}
         cur = self._current(meta)
-        files = (cur["files"] if cur else []) + [entry]
-        return self._commit_snapshot(
-            meta, version, files, {"operation": "append", **(summary or {})},
-            properties_update=properties_update,
-        )
+        with self._staged() as write_id:
+            rel = os.path.join("data", write_id, f"{BUCKET_COL}=0", "local.parquet")
+            os.makedirs(os.path.dirname(os.path.join(self.location, rel)))
+            pq.write_table(pa.Table.from_arrays(arrays, names=names),
+                           os.path.join(self.location, rel))
+            entry = {"path": rel, "bucket": 0, "schema_id": meta["current_schema_id"]}
+            files = (cur["files"] if cur else []) + [entry]
+            return self._commit_snapshot(
+                meta, version, files, {"operation": "append", **(summary or {})},
+                properties_update=properties_update,
+            )
 
     def overwrite(self, df: DataFrame, summary: dict[str, Any] | None = None) -> int:
         meta, version = self._load()
-        new_files = self._write_data_files(self._conform(df, meta), meta)
-        return self._commit_snapshot(
-            meta, version, new_files, {"operation": "overwrite", **(summary or {})}
-        )
+        with self._staged() as write_id:
+            new_files = self._write_data_files(self._conform(df, meta), meta, write_id)
+            return self._commit_snapshot(
+                meta, version, new_files, {"operation": "overwrite", **(summary or {})}
+            )
 
-    def _conform(self, df: DataFrame, meta: dict) -> DataFrame:
-        cur = self._fields(meta)
-        cols = []
-        for f in cur:
-            if f["name"] in df.columns:
-                cols.append(F.col(f["name"]).cast(type_to_spark(f["type"])).alias(f["name"]))
-            else:
-                cols.append(F.lit(None).cast(type_to_spark(f["type"])).alias(f["name"]))
-        return df.select(*cols)
+    def _conform(self, df: DataFrame, meta: dict, extra: tuple[str, ...] = ()) -> DataFrame:
+        """df as full rows of the current schema: columns cast to their
+        types, absent ones (e.g. just-added columns) null; the `extra`
+        columns pass through after them."""
+        return df.select(
+            *[(F.col(f["name"]) if f["name"] in df.columns else F.lit(None))
+              .cast(type_to_spark(f["type"])).alias(f["name"]) for f in self._fields(meta)],
+            *extra)
 
     # -- CDC merge (epoch-fenced, bucket copy-on-write) -----------------------
 
@@ -699,13 +681,13 @@ class IceliteTable:
         """Apply change rows (payload in the current schema + seq_col, and
         op_col in {upsert, delete}; any number of rows per key) with
         last-writer-wins by seq_col against the stored `_seq`; the stored
-        row wins a tie. Copy-on-write at file granularity: only the
-        (bucket, slot) files holding changed keys are rewritten; every other
-        file carries forward untouched.
+        row wins a tie. Copy-on-write at bucket granularity: only the files
+        of buckets holding changed keys are rewritten; every other file
+        carries forward untouched.
 
-        One Spark query: only the changes are shuffled, by (bucket, slot),
-        into min(default parallelism, pairs) tasks; merge_group replaces
-        each pair's files with one. The tasks' output is the touched set.
+        One Spark query: only the changes are shuffled, by bucket, into
+        min(default parallelism, num_buckets) tasks; merge_group replaces
+        each bucket's files with one. The tasks' output is the touched set.
 
         Exactly-once: with `epoch`, the merge is fenced — if
         epoch <= properties['cdc.last-epoch'] the call is a no-op (the
@@ -720,75 +702,67 @@ class IceliteTable:
         if epoch is not None and epoch <= int(meta["properties"].get("cdc.last-epoch", "-1")):
             return {"applied": False, "snapshot_id": None, "reason": "epoch-fenced"}
         keys = self.key_cols(meta)
-        assert keys, "merge_cdc requires key columns"
+        if not keys:
+            raise ValueError(f"merge_cdc needs key columns; icelite table {self.location} has none")
         cur = self._current(meta)
         cur_files = cur["files"] if cur else []
         self._refuse_delta(cur_files)
-        n, splits = meta["partition_spec"]["num_buckets"], self.sub_splits(meta)
-        legacy = next((f for f in cur_files if f.get("slot") is None), None)
-        if legacy is not None and splits > 1:
-            raise ValueError(
-                f"icelite table {self.location} (sub_splits={splits}) holds slot-less "
-                f"file {legacy['path']}; merge_cdc cannot hash its rows into slots. "
-                f"compact() the table first")
-        # a slot-less file of an unsplit table is slot 0
-        by_pair: dict[tuple[int, int], list[tuple[str, int]]] = {}
+        n = meta["partition_spec"]["num_buckets"]
+        # a bucket's target is every file listed for it (an older release
+        # split buckets into several slot files)
+        by_bucket: dict[int, list[tuple[str, int]]] = {}
         for f in cur_files:
-            by_pair.setdefault((f["bucket"], f.get("slot") or 0), []).append(
+            by_bucket.setdefault(f["bucket"], []).append(
                 (os.path.join(self.location, f["path"]), f["schema_id"]))
-
-        fields = self._fields(meta)
-        write_id = uuid.uuid4().hex
         spec = {
-            "location": self.location, "write_id": write_id, "epoch": epoch,
-            "cap": _group_byte_cap(), "sub_splits": splits, "keys": keys,
-            "seq_col": seq_col, "op_col": op_col, "fields": fields,
-            "schema_id": meta["current_schema_id"],
+            "location": self.location, "epoch": epoch, "cap": _group_byte_cap(),
+            "num_buckets": n, "keys": keys, "seq_col": seq_col, "op_col": op_col,
+            "fields": self._fields(meta), "schema_id": meta["current_schema_id"],
             "schemas": {s["schema_id"]: s["fields"] for s in meta["schemas"]},
-            "files": by_pair,
+            "files": by_bucket,
         }
 
         def kernel(key, tbl):
-            entry = merge_group(tbl, key[0].as_py(), key[1].as_py(), spec)
+            entry = merge_group(tbl, key[0]["bucket"].as_py(), spec)
             return pa.Table.from_pylist([entry], schema=MERGE_ENTRY)
 
-        # changes are full-row images: current-schema columns absent from
-        # the change stream (e.g. just-added columns) are null on upsert
-        ch = changes.select(
-            *[(F.col(f["name"]) if f["name"] in changes.columns else F.lit(None))
-              .cast(type_to_spark(f["type"])).alias(f["name"]) for f in fields],
-            F.col(op_col))
-        bucket, slot = self._bucket_slot_exprs(meta)
-        k = max(1, min(spark.sparkContext.defaultParallelism, n * splits))
-        try:
-            out = (ch.withColumn(BUCKET_COL, bucket).withColumn(SLOT_COL, slot)
-                   .repartition(k, BUCKET_COL, SLOT_COL)
-                   .groupBy(BUCKET_COL, SLOT_COL)
+        # Tasks are placed by Spark's Murmur3 hash of the group key, and a
+        # struct hashes field by field, so struct(bucket, 0) is placed as
+        # the pair (bucket, 0): 16 buckets spread 3/4/4/5 over 4 tasks and
+        # 4 buckets 1/1/1/1, against 3/3/4/6 and 0/0/1/3 for the bare int
+        # bucket. The busiest task sets the merge's time.
+        group = F.struct(self._bucket_expr(meta).alias("bucket"), F.lit(0).alias("salt"))
+        k = max(1, min(spark.sparkContext.defaultParallelism, n))
+        with self._staged() as write_id:
+            spec["write_id"] = write_id
+            # changes are full-row images: current-schema columns absent
+            # from the change stream (e.g. just-added columns) are null
+            out = (self._conform(changes, meta, (op_col,))
+                   .withColumn(BUCKET_COL, group)
+                   .repartition(k, BUCKET_COL)
+                   .groupBy(BUCKET_COL)
                    .applyInArrow(kernel, from_arrow_schema(MERGE_ENTRY))
                    .collect())
-        except Exception:
-            shutil.rmtree(os.path.join(self._data_dir, write_id), ignore_errors=True)
-            raise
-        touched = {(r["bucket"], r["slot"]) for r in out}
-        new_files = [r.asDict() for r in sorted(out, key=lambda r: (r["bucket"], r["slot"]))
-                     if r["path"] is not None]
-        untouched = [f for f in cur_files if (f["bucket"], f.get("slot") or 0) not in touched]
-        props = dict(extra_properties or {})
-        if epoch is not None:
-            props["cdc.last-epoch"] = str(epoch)
-        snap_id = self._commit_snapshot(
-            meta,
-            version,
-            untouched + new_files,
-            {"operation": "merge", "touched-buckets": len({b for b, _ in touched}),
-             "rewritten-files": len(cur_files) - len(untouched),
-             "carried-files": len(untouched),
-             "added-records": sum(f["record_count"] for f in new_files),
-             "added-files-size": sum(f["file_size_in_bytes"] for f in new_files),
-             "merge-ms": int((time.perf_counter() - t0) * 1000),
-             **(extra_summary or {})},
-            properties_update=props or None,
-        )
+            touched = {r["bucket"] for r in out}
+            new_files = [r.asDict() for r in sorted(out, key=lambda r: r["bucket"])
+                         if r["path"] is not None]
+            untouched = [f for f in cur_files if f["bucket"] not in touched]
+            props = dict(extra_properties or {})
+            if epoch is not None:
+                props["cdc.last-epoch"] = str(epoch)
+            snap_id = self._commit_snapshot(
+                meta,
+                version,
+                untouched + new_files,
+                {"operation": "merge", "touched-buckets": len(touched),
+                 "rewritten-files": len(cur_files) - len(untouched),
+                 "carried-files": len(untouched),
+                 "added-records": sum(f["record_count"] for f in new_files),
+                 "added-files-size": sum(f["file_size_in_bytes"] for f in new_files),
+                 "merge-ms": int((time.perf_counter() - t0) * 1000),
+                 **(extra_summary or {})},
+                properties_update=props or None,
+            )
         return {"applied": True, "snapshot_id": snap_id}
 
     # -- schema evolution ------------------------------------------------------
@@ -870,18 +844,21 @@ class IceliteTable:
         stream can still deliver — i.e. below the watermark's seq frontier).
         The Iceberg analog is rewrite_data_files + a delete-cleanup pass.
         At 10^10 events this is the job that keeps merge target reads
-        proportional to live data rather than to delete history."""
+        proportional to live data rather than to delete history. Merges do
+        not need it first: a merge consumes every file of each bucket it
+        touches (several after appends, or from an older release that split
+        buckets into slot files) and writes one."""
         meta, version = self._load()
-        df = self.read(spark)
-        dropped_expr = None
+        cur = self._current(meta)
+        df = self._read_entries(spark, meta, cur["files"] if cur else [])
         if drop_tombstones_below_seq is not None and deleted_col in df.columns:
-            dropped_expr = F.col(deleted_col) & (F.col(seq_col) < drop_tombstones_below_seq)
-            df = df.where(~dropped_expr)
-        new_files = self._write_data_files(df, meta)
-        snap_id = self._commit_snapshot(
-            meta, version, new_files,
-            {"operation": "compact", "tombstone-horizon": drop_tombstones_below_seq},
-        )
+            df = df.where(~(F.col(deleted_col) & (F.col(seq_col) < drop_tombstones_below_seq)))
+        with self._staged() as write_id:
+            new_files = self._write_data_files(df, meta, write_id)
+            snap_id = self._commit_snapshot(
+                meta, version, new_files,
+                {"operation": "compact", "tombstone-horizon": drop_tombstones_below_seq},
+            )
         return {"snapshot_id": snap_id, "files": len(new_files)}
 
     def rollback_to(self, snapshot_id: int) -> int:
@@ -901,7 +878,10 @@ class IceliteTable:
 
     def expire_snapshots(self, keep_last: int = 2) -> int:
         """Drop old snapshots' metadata entries and garbage-collect data files
-        referenced only by them (Iceberg: expire_snapshots)."""
+        referenced only by them (Iceberg: expire_snapshots). keep_last must
+        be at least 1: the current snapshot is always kept."""
+        if keep_last < 1:
+            raise ValueError(f"expire_snapshots(keep_last={keep_last}): keep_last must be >= 1")
         meta, version = self._load()
         snaps = meta["snapshots"]
         if len(snaps) <= keep_last:

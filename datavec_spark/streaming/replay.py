@@ -7,8 +7,8 @@ Semantics (BASELINE.json north_star):
 - per-key resolution is last-writer-wins by `seq` — DataVec's
   ConvertToSequence(key) + Reducer(TakeLast) (AggregatorImpls.java:41
   `AggregableLast`), resolved inside icelite's merge: the epoch's events
-  are shuffled by (bucket, slot) and one Arrow task per pair resolves
-  them together with that pair's stored file, with no in-batch collapse
+  are shuffled by bucket and one Arrow task per bucket resolves them
+  together with that bucket's stored file, with no in-batch collapse
   before it;
 - deletes become tombstones (`_deleted = true`) carrying their seq so a
   re-delivered or late older event can never resurrect a deleted row;
@@ -24,7 +24,8 @@ Semantics (BASELINE.json north_star):
   `cdc.schema-seq`; event payload columns are bound to table columns by
   immutable field id (property `cdc.field-map`), so renames never detach
   the stream from its columns;
-- per-batch lineage rows (epoch, partition=bucket, event_count,
+- per-batch lineage rows (epoch, partition=bucket — the table's one
+  partition unit — event_count,
   min/max seq, late_count, snapshot_id) land in a lineage table,
   idempotently (re-running an epoch overwrites the same keys).
 """
@@ -38,7 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from datavec_spark.sources.icelite import IceliteTable, bucket_slot_exprs, type_to_spark
+from datavec_spark.sources.icelite import IceliteTable, bucket_expr, type_to_spark
 
 EVENT_SPARK_SCHEMA = T.StructType(
     [
@@ -120,15 +121,12 @@ def content_expr(repo: F.Column, path: F.Column, seq: F.Column) -> F.Column:
 
 class CdcEngine:
     def __init__(self, table_location: str, lineage_location: str | None = None,
-                 num_buckets: int = 16, sub_splits: int = 1):
+                 num_buckets: int = 16):
         self.table_location = table_location
         self.lineage_location = lineage_location or table_location.rstrip("/") + "_lineage"
+        # the merge's rewrite unit and its task count (capped by the
+        # default parallelism): smaller rewrite files need more buckets
         self.num_buckets = num_buckets
-        # files per bucket (icelite sub_splits): >1 turns bucket-COW into
-        # file-level COW — merges rewrite only the slot files changed keys
-        # hash into. num_buckets fixes task parallelism; num_buckets x
-        # sub_splits fixes the rewrite unit / target file size at scale.
-        self.sub_splits = sub_splits
 
     # -- bootstrap -------------------------------------------------------------
 
@@ -144,7 +142,6 @@ class CdcEngine:
             schema,
             key_cols=["repo", "path"],
             num_buckets=self.num_buckets,
-            sub_splits=self.sub_splits,
             properties={
                 "cdc.field-map": json.dumps({n: i + 1 for i, n in enumerate(EVENT_FIELDS)}),
                 "cdc.schema-seq": "-1",
@@ -209,12 +206,12 @@ class CdcEngine:
         Serial-path shape (this is the per-trigger driver cost a stream
         pays once per micro-batch, so it is kept to TWO Spark queries and
         ONE metadata load):
-          1. the fused stats pass — per-(bucket, slot) lineage metrics for
-             data events AND the (tiny, ~1%) schema-op set gathered via
+          1. the fused stats pass — per-bucket lineage metrics for data
+             events AND the (tiny, ~1%) schema-op set gathered via
              collect_list into a sentinel partition, in one aggregation;
           2. merge_cdc over the bound events themselves: they are shuffled
-             by (bucket, slot) and one Arrow task per pair resolves
-             last-writer-wins against that pair's stored file and writes
+             by bucket and one Arrow task per bucket resolves
+             last-writer-wins against that bucket's stored file and writes
              its replacement. The stored table is never shuffled.
         All table properties (epoch fence, schema fence, field map,
         watermark) come from one metadata read; it is re-read only if this
@@ -257,8 +254,8 @@ class CdcEngine:
                 return {"applied": False, "snapshot_id": None, "reason": "epoch-fenced"}
         fmap = json.loads(props0["cdc.field-map"])
         by_id0 = {f["id"]: f for f in table._fields(meta0)}
-        # the (bucket, slot) hash over the RAW event key fields (resolved
-        # through the immutable field map) — the same bucket_slot_exprs the
+        # the bucket hash over the RAW event key fields (resolved through
+        # the immutable field map) — the same bucket_expr the
         # table's writers apply to the bound/current-schema columns, so the
         # stats pass below can run BEFORE binding/schema ops and its lineage
         # partitions are the merge's data buckets. (Key columns are strings per
@@ -272,9 +269,7 @@ class CdcEngine:
             F.col(orig_by_id[i]).cast(type_to_spark(by_id0[i]["type"]))
             for i in meta0["partition_spec"]["key_field_ids"]
         ]
-        bucket, slot = bucket_slot_exprs(
-            key_hash_cols, meta0["partition_spec"]["num_buckets"],
-            IceliteTable.sub_splits(meta0))
+        bucket = bucket_expr(key_hash_cols, meta0["partition_spec"]["num_buckets"])
 
         # 1. FUSED stats job: late-event cut relative to the stream
         #    watermark carried in cdc.max-ts-us (max event time of all
@@ -286,16 +281,14 @@ class CdcEngine:
             late_cut = F.timestamp_micros(
                 F.lit(int(prev_max_us) - late_delay_seconds * 1_000_000)
             )
-            late_expr = F.sum((F.col("ts") < late_cut).cast("long"))
+            late_expr = F.count_if(F.col("ts") < late_cut)
         else:
             late_expr = F.lit(0).cast("long")
         is_schema = F.col("op").isin(*SCHEMA_OPS)
         t_stats = time.perf_counter()
         stats_rows = (
             batch_df.groupBy(
-                F.when(is_schema, F.lit(-1)).otherwise(bucket).alias("partition"),
-                slot.alias("_slot"),
-            )
+                F.when(is_schema, F.lit(-1)).otherwise(bucket).alias("partition"))
             .agg(
                 F.count(F.lit(1)).alias("event_count"),
                 F.min("seq").alias("min_seq"),
@@ -331,22 +324,10 @@ class CdcEngine:
             schema_fence = r["seq"]
             applied_schema = True
 
-        slot_rows = [r for r in stats_rows if r["partition"] >= 0]
-        if not slot_rows:  # empty trigger (no data events this epoch)
+        lineage_rows = sorted((r for r in stats_rows if r["partition"] >= 0),
+                              key=lambda r: r["partition"])
+        if not lineage_rows:  # empty trigger (no data events this epoch)
             return {"applied": False, "snapshot_id": None, "reason": "empty-batch"}
-        # lineage stays at BUCKET grain (its public key is (epoch,
-        # partition)); collapse the slot-grain stats rows per bucket
-        by_bucket: dict[int, dict] = {}
-        for r in slot_rows:
-            a = by_bucket.setdefault(r["partition"], {
-                "partition": r["partition"], "event_count": 0, "late_count": 0,
-                "min_seq": r["min_seq"], "max_seq": r["max_seq"], "_max_ts_us": r["_max_ts_us"]})
-            a["event_count"] += r["event_count"]
-            a["late_count"] += r["late_count"] or 0
-            a["min_seq"] = min(a["min_seq"], r["min_seq"])
-            a["max_seq"] = max(a["max_seq"], r["max_seq"])
-            a["_max_ts_us"] = max(a["_max_ts_us"], r["_max_ts_us"])
-        lineage_rows = sorted(by_bucket.values(), key=lambda r: r["partition"])
         batch_max_us = max(r["_max_ts_us"] for r in lineage_rows)
         new_max_us = max(batch_max_us, int(prev_max_us)) if prev_max_us else batch_max_us
 

@@ -87,10 +87,14 @@ def test_chunked_epochs_and_fence(spark, tmp_path, fixture):
     # retried epoch (foreachBatch redelivery) must be a no-op
     res = eng.apply_batch(spark, events_df(spark, events[3 * n // 5 : 4 * n // 5]), epoch=3)
     assert not res["applied"] and res["reason"] == "epoch-fenced"
-    # an unsplit table is sub_splits=1: every merged file sits in slot 0
+    # the bucket is the one file unit: each merge snapshot lists one file
+    # per bucket, under its `__bucket=B` directory, with no slot
     merges = [s for s in eng.table().snapshots() if s["summary"]["operation"] == "merge"]
     assert len(merges) == n_chunks
-    assert all(f["slot"] == 0 for s in merges for f in s["files"])
+    for s in merges:
+        assert sorted(f["bucket"] for f in s["files"]) == list(range(8))
+        assert all(f"__bucket={f['bucket']}" in f["path"].split(os.sep) and "slot" not in f
+                   for f in s["files"])
     assert_final_state(spark, eng, state, schema)
     # lineage: one row set per epoch, counts sum to total events applied
     lin = eng.lineage_table().read(spark)
@@ -340,27 +344,13 @@ def test_stateless_stream_drops_far_late_dups_into_lineage(spark, tmp_path):
     assert_final_state(spark, eng, state, schema)
 
 
-def test_sub_splits_replay_matches_oracle_and_prunes_files(spark, tmp_path, fixture):
-    """End-to-end CDC replay on a sub_splits=4 table: (a) the final state
-    still equals the LWW oracle (file-level COW changes WHICH files are
-    rewritten, never the result), (b) the fused stats pass's raw-field slot
-    hash is value-identical to icelite._slot_expr over bound columns, and
-    (c) a single-key delta epoch rewrites a strict subset of its bucket's
-    files."""
+def test_replay_on_16_buckets_matches_oracle_and_prunes_files(spark, tmp_path, fixture):
+    """End-to-end CDC replay on a 16-bucket table: (a) the final state
+    equals the LWW oracle after chunked epochs, and (b) a single-key delta
+    epoch rewrites one bucket's file and carries every other file."""
     base, events, state, schema = fixture
-    eng = CdcEngine(str(tmp_path / "split_repos"), num_buckets=4, sub_splits=4)
-    table = eng.bootstrap(spark, base_df(spark, base))
-    meta = table.metadata()
-
-    # (b) slot-hash parity, raw event fields vs bound columns
-    data = events_df(spark, events).where(F.col("op").isin("insert", "update", "delete"))
-    raw_slot = F.pmod(F.xxhash64(F.lit(1), F.col("repo").cast("string"),
-                                 F.col("path").cast("string")), F.lit(4)).cast("int")
-    raw = {(r[0], r[1]) for r in data.select(
-        F.pmod(F.xxhash64("repo", "path"), F.lit(4)).cast("int"), raw_slot).distinct().collect()}
-    bound = {(r[0], r[1]) for r in data.select(
-        table._bucket_expr(meta), table._slot_expr(meta)).distinct().collect()}
-    assert raw == bound
+    eng = CdcEngine(str(tmp_path / "repos16"), num_buckets=16)
+    eng.bootstrap(spark, base_df(spark, base))
 
     # (a) chunked replay -> oracle equality
     n = len(events)
@@ -368,7 +358,7 @@ def test_sub_splits_replay_matches_oracle_and_prunes_files(spark, tmp_path, fixt
         eng.apply_batch(spark, events_df(spark, events[c * n // 4:(c + 1) * n // 4]), epoch=c)
     assert_final_state(spark, eng, state, schema)
 
-    # (c) small-delta epoch: strict-subset rewrite, carried files identical
+    # (b) small-delta epoch: one file rewritten, every other one carried
     files_before = {f["path"] for f in eng.table().current_snapshot()["files"]}
     one = [e for e in events if e["op"] == "update"][0]
     delta = dict(one)
@@ -378,9 +368,8 @@ def test_sub_splits_replay_matches_oracle_and_prunes_files(spark, tmp_path, fixt
     snap = eng.table().current_snapshot()
     files_after = {f["path"] for f in snap["files"]}
     assert snap["summary"]["rewritten-files"] == 1
-    assert files_before - files_after == set() or len(files_before - files_after) == 1
-    # every file except (at most) the one touched slot file carried forward
-    assert len(files_before & files_after) >= len(files_before) - 1
+    assert len(files_before - files_after) == 1
+    assert len(files_before & files_after) == len(files_before) - 1 == 15
     got = {(r["repo"], r["path"]): r for r in eng.read_current(spark).collect()}
     assert got[(delta["repo"], delta["path"])]["content"] == "new content after the replay"
 
@@ -431,8 +420,8 @@ def test_over_cap_merge_group_fails_loudly_and_commits_nothing(spark, tmp_path, 
                                                                monkeypatch):
     """A merge group is held in memory whole, so the driver caps its bytes
     from host memory and cores. Over the cap, the epoch fails with an error
-    naming the epoch, the (bucket, slot) pair, the bytes, the cap and the
-    sub_splits that would fit, commits nothing and leaves no files; at the
+    naming the epoch, the bucket, the bytes, the cap and the num_buckets
+    that would fit, commits nothing and leaves no files; at the
     normal cap the same epoch then replays to the oracle state."""
     from datavec_spark.sources import icelite
 
@@ -445,9 +434,9 @@ def test_over_cap_merge_group_fails_loudly_and_commits_nothing(spark, tmp_path, 
     monkeypatch.setattr(icelite, "_group_byte_cap", lambda: 1000)
     with pytest.raises(Exception) as err:
         eng.replay_batch(spark, events_df(spark, events))
-    assert re.search(r"merge_cdc epoch 0: \(bucket, slot\) \(\d, 0\) holds \d+ bytes, "
+    assert re.search(r"merge_cdc epoch 0: bucket \d holds \d+ bytes, "
                      r"over the per-group cap of 1000 bytes; "
-                     r"a table with sub_splits >= \d+ would fit", str(err.value))
+                     r"a table with num_buckets >= \d+ would fit", str(err.value))
     assert eng.table().current_snapshot()["snapshot_id"] == before
     assert eng.table().last_epoch() == -1
     assert set(os.listdir(data_dir)) == written  # the failed merge's files are removed

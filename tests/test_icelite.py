@@ -1,3 +1,4 @@
+import hashlib
 import json
 import os
 
@@ -101,6 +102,63 @@ def test_expire_snapshots_gc(spark, tmp_path):
     assert t.read(spark).collect()[0]["v"] == 2
 
 
+def test_expire_snapshots_rejects_keep_last_below_one(spark, tmp_path):
+    """keep_last=0 used to keep every snapshot (snaps[-0:]) and still
+    commit a new metadata version; below 1 it raises and commits nothing."""
+    t = make(spark, tmp_path, [("a", 1, 0, False)])
+    version = t._version()
+    for bad in (0, -1):
+        with pytest.raises(ValueError, match="keep_last"):
+            t.expire_snapshots(keep_last=bad)
+    assert t._version() == version
+
+
+def test_read_unknown_snapshot_raises_value_error(spark, tmp_path):
+    """Time travel to an unknown (e.g. expired) snapshot id names the id,
+    like read_changes and rollback_to."""
+    t = make(spark, tmp_path, [("a", 1, 0, False)])
+    with pytest.raises(ValueError, match="unknown snapshot_id 999"):
+        t.read(spark, snapshot_id=999)
+
+
+def test_merge_cdc_without_key_columns_raises(spark, tmp_path):
+    """A keyless table cannot be merged; the check is a ValueError, so it
+    holds under python -O too."""
+    t = IceliteTable.create(str(tmp_path / "nokeys"), SCHEMA, num_buckets=1)
+    ch = spark.createDataFrame([("a", 1, 1, False)], SCHEMA).withColumn("_op", F.lit("upsert"))
+    with pytest.raises(ValueError, match="key columns"):
+        t.merge_cdc(spark, ch, epoch=0)
+    assert t.current_snapshot() is None
+
+
+def test_append_rows_local_rejects_bucketed_table(tmp_path):
+    """append_rows_local writes every row to bucket 0, which later merges
+    of a bucketed table would never read for most keys; it raises (also
+    under python -O) and writes and commits nothing."""
+    t = IceliteTable.create(str(tmp_path / "b4"), SCHEMA, key_cols=["k"], num_buckets=4)
+    with pytest.raises(ValueError, match="num_buckets=4"):
+        t.append_rows_local([{"k": "a", "v": 1, "_seq": 1, "_deleted": False}])
+    assert t.current_snapshot() is None
+    assert os.listdir(os.path.join(t.location, "data")) == []
+
+
+def test_lost_local_append_leaves_no_files(tmp_path):
+    """A local append that loses the version CAS removes the file it wrote
+    before re-raising CommitConflict."""
+    schema = T.StructType([T.StructField("i", T.IntegerType())])
+    t = IceliteTable.create(str(tmp_path / "lin"), schema, key_cols=[], num_buckets=1)
+    t.append_rows_local([{"i": 1}])
+    data_dir = os.path.join(t.location, "data")
+    written = set(os.listdir(data_dir))
+    stale = t._load()
+    t.append_rows_local([{"i": 2}])          # another writer commits first
+    written |= set(os.listdir(data_dir))
+    t._load = lambda: stale
+    with pytest.raises(CommitConflict):
+        t.append_rows_local([{"i": 3}])
+    assert set(os.listdir(data_dir)) == written
+
+
 def test_compact_drops_old_tombstones_and_coalesces(spark, tmp_path):
     t = make(spark, tmp_path, [("a", 1, 5, False), ("b", 2, 6, True), ("c", 3, 90, True)])
     t.append(spark.createDataFrame([("d", 4, 7, False)], SCHEMA))
@@ -180,7 +238,7 @@ def test_concurrent_merge_conflict_retry_exactly_once(spark, tmp_path):
     """Two writers race a merge: the loser's optimistic commit raises
     CommitConflict (stale version CAS); a plain retry through the public
     API then lands its epoch, and BOTH epochs' rows are present exactly
-    once — no lost update, no double-apply."""
+    once — no lost update, no double-apply. The loser leaves no files."""
     t = make(spark, tmp_path, [("a", 1, 0, False)])
     ch_schema = T.StructType(SCHEMA.fields + [T.StructField("_op", T.StringType())])
     ch1 = spark.createDataFrame([("x", 10, 5, False, "upsert")], ch_schema)
@@ -190,12 +248,17 @@ def test_concurrent_merge_conflict_retry_exactly_once(spark, tmp_path):
     stale = loser._load()                    # loser reads (meta, version) first
     orig_load = IceliteTable._load
     IceliteTable._load = lambda self: (stale[0], stale[1]) if self is loser else orig_load(self)
+    data_dir = os.path.join(t.location, "data")
     try:
         t.merge_cdc(spark, ch1, epoch=0)     # winner commits in between
+        written = set(os.listdir(data_dir))
         with pytest.raises(CommitConflict):
             loser.merge_cdc(spark, ch2, epoch=1)
     finally:
         IceliteTable._load = orig_load
+    # the loser wrote its merged file, lost the CAS and removed it: no
+    # snapshot lists it, so nothing else would ever collect it
+    assert set(os.listdir(data_dir)) == written
     # retry with a fresh read — the normal foreachBatch retry path
     res = loser.merge_cdc(spark, ch2, epoch=1)
     assert res["applied"]
@@ -268,107 +331,94 @@ def test_widen_partition_key_rejected(spark, tmp_path):
     assert dict(t.read(spark).dtypes)["v"] == "bigint"
 
 
-def test_sub_splits_file_level_merge_pruning(spark, tmp_path):
-    """sub_splits tables: a small delta rewrites a STRICT SUBSET of a
-    bucket's files (only the slot files its keys hash into) and carries
-    every other file forward byte-identically, with the final state equal
-    to an unsplit table's merge of the same delta (round-5 verdict #4)."""
+def test_one_key_merge_rewrites_one_bucket_file(spark, tmp_path):
+    """The bucket is the rewrite unit: on an 8-bucket table a one-key delta
+    rewrites the one file of the key's bucket, at a `__bucket=B` path, and
+    carries the other 7 forward byte-identically."""
     rows = [(f"k{i}", i, 0, False) for i in range(200)]
-    split = IceliteTable.create(str(tmp_path / "split"), SCHEMA,
-                                key_cols=["k"], num_buckets=2, sub_splits=4)
-    split.overwrite(spark.createDataFrame(rows, SCHEMA))
-    plain = IceliteTable.create(str(tmp_path / "plain"), SCHEMA,
-                                key_cols=["k"], num_buckets=2)
-    plain.overwrite(spark.createDataFrame(rows, SCHEMA))
+    t = IceliteTable.create(str(tmp_path / "t"), SCHEMA, key_cols=["k"], num_buckets=8)
+    t.overwrite(spark.createDataFrame(rows, SCHEMA))
 
-    files_before = {f["path"]: f for f in split.current_snapshot()["files"]}
-    assert len(files_before) == 8  # 2 buckets x 4 slots
-    assert all(f.get("slot") is not None for f in files_before.values())
+    def digest(rel):
+        with open(os.path.join(t.location, rel), "rb") as fh:
+            return hashlib.sha256(fh.read()).hexdigest()
 
-    # one-key delta -> exactly ONE (bucket, slot) pair is touched
+    files_before = {f["path"]: f for f in t.current_snapshot()["files"]}
+    assert sorted(f["bucket"] for f in files_before.values()) == list(range(8))
+    digests = {p: digest(p) for p in files_before}
+    bucket = spark.createDataFrame([("k7",)], "k string") \
+        .select(t._bucket_expr(t.metadata())).first()[0]
     ch_schema = "k string, v int, _seq long, _deleted boolean, _op string"
     change = spark.createDataFrame([("k7", 777, 5, False, "upsert")], ch_schema)
-    bucket = split.read(spark).sparkSession.createDataFrame([("k7",)], "k string") \
-        .select(split._bucket_expr(split.metadata()).alias("b")).collect()[0]["b"]
-    slot = spark.createDataFrame([("k7",)], "k string") \
-        .select(split._slot_expr(split.metadata()).alias("s")).collect()[0]["s"]
-    res = split.merge_cdc(spark, change, epoch=0)
-    assert res["applied"]
-    plain.merge_cdc(spark, change, epoch=0)
+    assert t.merge_cdc(spark, change, epoch=0)["applied"]
 
-    snap = split.current_snapshot()
+    snap = t.current_snapshot()
     files_after = {f["path"]: f for f in snap["files"]}
     carried = set(files_before) & set(files_after)
-    rewritten_old = set(files_before) - set(files_after)
-    # strict subset: exactly the one touched slot file was replaced;
-    # the bucket's other 3 slot files AND the other bucket carried forward
-    assert len(rewritten_old) == 1
-    assert len(carried) == 7
+    assert [files_before[p]["bucket"] for p in set(files_before) - carried] == [bucket]
+    assert len(carried) == 7 and all(digest(p) == digests[p] for p in carried)
     assert snap["summary"]["rewritten-files"] == 1
     assert snap["summary"]["carried-files"] == 7
-    old_entry = files_before[next(iter(rewritten_old))]
-    assert (old_entry["bucket"], old_entry["slot"]) == (bucket, slot)
-
-    # final state identical to the unsplit table's merge (values AND rows)
-    got = sorted(tuple(r) for r in split.read(spark).collect())
-    want = sorted(tuple(r) for r in plain.read(spark).collect())
-    assert got == want
-    assert ("k7", 777, 5, False) in got
+    new = [f for p, f in files_after.items() if p not in files_before]
+    assert [(f["bucket"], os.path.basename(os.path.dirname(f["path"]))) for f in new] \
+        == [(bucket, f"__bucket={bucket}")]
+    assert "slot" not in new[0]
+    got = sorted(tuple(r) for r in t.read(spark).collect())
+    assert got == sorted([r for r in rows if r[0] != "k7"] + [("k7", 777, 5, False)])
 
 
 @pytest.mark.parametrize("sub_splits", [1, 3])
 def test_sub_splits_self_derived_pruning_and_legacy_files(spark, tmp_path, sub_splits):
-    """The merge finds its own (bucket, slot) pairs: a one-key change
-    rewrites one file. A slot-less manifest entry (written before every
-    table carried slots) is slot 0 of an unsplit table and is consumed
-    like any other; on a split table the merge cannot hash its rows into
-    slots, so it refuses, naming the table and the file, until compact()
-    rewrites the table."""
-    t = IceliteTable.create(str(tmp_path / "t2"), SCHEMA, key_cols=["k"], num_buckets=2,
-                            sub_splits=sub_splits)
-    t.overwrite(spark.createDataFrame([(f"k{i}", i, 0, False) for i in range(60)], SCHEMA))
-    n_files = len(t.current_snapshot()["files"])
-    assert n_files == 2 * sub_splits
-    ch_schema = "k string, v int, _seq long, _deleted boolean, _op string"
-    t.merge_cdc(spark, spark.createDataFrame([("k3", 33, 4, False, "upsert")], ch_schema), epoch=0)
-    snap = t.current_snapshot()
-    assert snap["summary"]["rewritten-files"] == 1
-    assert snap["summary"]["carried-files"] == n_files - 1
-    got = {r["k"]: r["v"] for r in t.read(spark).collect()}
-    assert got["k3"] == 33 and len(got) == 60
-
-    # legacy (slot-less) entry: strip the slot from one file's manifest
-    # entry, then merge a key that file holds
+    """An older release split each bucket into `sub_splits` slot files:
+    several files of one bucket, each holding only that bucket's keys.
+    Forge that layout — three appends give each bucket three files, the
+    spec gains `sub_splits` and the entries a `slot`, one entry left
+    slot-less. With no compact(), a one-key merge finds its own bucket,
+    consumes every file of it and writes one, carries the other bucket's
+    files, and read_changes across it reports exactly that key."""
+    t = IceliteTable.create(str(tmp_path / "t2"), SCHEMA, key_cols=["k"], num_buckets=2)
+    for part in range(3):
+        t.append(spark.createDataFrame(
+            [(f"k{i}", i, 0, False) for i in range(part, 60, 3)], SCHEMA))
     meta, version = t._load()
-    cur = next(s for s in meta["snapshots"] if s["snapshot_id"] == meta["current_snapshot_id"])
-    victim = cur["files"][0]
-    victim.pop("slot", None)
+    meta["partition_spec"]["sub_splits"] = sub_splits
+    files = t._current(meta)["files"]
+    for i, f in enumerate(files):
+        f["slot"] = i % sub_splits
+    files[0].pop("slot")
     t._write_metadata(meta, expected_version=version)
-    key = spark.read.parquet(os.path.join(t.location, victim["path"])).first()["k"]
-    ch = spark.createDataFrame([(key, 999, 9, False, "upsert")], ch_schema)
-    if sub_splits > 1:
-        before = t.current_snapshot()["snapshot_id"]
-        with pytest.raises(ValueError) as err:
-            t.merge_cdc(spark, ch, epoch=1)
-        msg = str(err.value)
-        assert t.location in msg and victim["path"] in msg and "compact()" in msg
-        assert t.current_snapshot()["snapshot_id"] == before
-        t.compact(spark)
-    t.merge_cdc(spark, ch, epoch=1)
-    snap2 = t.current_snapshot()
-    assert victim["path"] not in {f["path"] for f in snap2["files"]}
-    assert all(f.get("slot") is not None for f in snap2["files"])
-    got2 = {r["k"]: r["v"] for r in t.read(spark).collect()}
-    assert got2[key] == 999 and len(got2) == 60
+    s0 = t.current_snapshot()["snapshot_id"]
+    by_bucket: dict[int, set] = {}
+    for f in files:
+        by_bucket.setdefault(f["bucket"], set()).add(f["path"])
+    assert sorted(by_bucket) == [0, 1] and all(len(p) == 3 for p in by_bucket.values())
+
+    # a key of the slot-less file, so that file's bucket is the touched one
+    key = spark.read.parquet(os.path.join(t.location, files[0]["path"])).first()["k"]
+    b = files[0]["bucket"]
+    ch_schema = "k string, v int, _seq long, _deleted boolean, _op string"
+    t.merge_cdc(spark, spark.createDataFrame([(key, 999, 9, False, "upsert")], ch_schema),
+                epoch=0)
+    snap = t.current_snapshot()
+    after = {f["path"]: f for f in snap["files"]}
+    assert by_bucket[b].isdisjoint(after)
+    assert by_bucket[1 - b] <= set(after)
+    assert [f["bucket"] for p, f in after.items() if p not in by_bucket[1 - b]] == [b]
+    assert (snap["summary"]["rewritten-files"], snap["summary"]["carried-files"]) == (3, 3)
+    got = {r["k"]: r["v"] for r in t.read(spark).collect()}
+    assert got[key] == 999 and len(got) == 60
+    assert {r["k"]: (r["_change_type"], r["v"])
+            for r in t.read_changes(spark, from_snapshot_id=s0).collect()} \
+        == {key: ("upsert", 999)}
 
 
-def test_merge_cdc_routes_every_row_to_its_bucket_slot(spark, tmp_path):
+def test_merge_cdc_routes_every_row_to_its_bucket(spark, tmp_path):
     """The merge tasks' output is the touched set, so routing must be
-    exact: on a sub_splits=3 table every row of every new file hashes to
-    its manifest entry's (bucket, slot), and every key appears exactly
-    once across the snapshot — also when a key has several change rows."""
-    t = IceliteTable.create(str(tmp_path / "t"), SCHEMA, key_cols=["k"], num_buckets=4,
-                            sub_splits=3)
+    exact: on a 12-bucket table every row of every new file hashes to its
+    manifest entry's bucket, each bucket has one file, and every key
+    appears exactly once across the snapshot — also when a key has several
+    change rows."""
+    t = IceliteTable.create(str(tmp_path / "t"), SCHEMA, key_cols=["k"], num_buckets=12)
     t.overwrite(spark.createDataFrame([(f"k{i}", 0, 0, False) for i in range(40)], SCHEMA))
     old_paths = {f["path"] for f in t.current_snapshot()["files"]}
     changes = spark.createDataFrame(
@@ -376,12 +426,14 @@ def test_merge_cdc_routes_every_row_to_its_bucket_slot(spark, tmp_path):
         .withColumn("_op", F.lit("upsert"))
     t.merge_cdc(spark, changes, epoch=0)
     meta = t.metadata()
-    new = [f for f in t.current_snapshot()["files"] if f["path"] not in old_paths]
+    files = t.current_snapshot()["files"]
+    assert len({f["bucket"] for f in files}) == len(files)
+    new = [f for f in files if f["path"] not in old_paths]
     assert new
     for f in new:
-        got = {tuple(r) for r in spark.read.parquet(os.path.join(t.location, f["path"]))
-               .select(t._bucket_expr(meta), t._slot_expr(meta)).distinct().collect()}
-        assert got == {(f["bucket"], f["slot"])}, f
+        got = {r[0] for r in spark.read.parquet(os.path.join(t.location, f["path"]))
+               .select(t._bucket_expr(meta)).distinct().collect()}
+        assert got == {f["bucket"]}, f
     rows = t.read(spark).collect()
     keys = {f"k{i}" for i in range(40)} | {f"k{i}" for i in range(0, 60, 3)}
     assert len(rows) == len({r["k"] for r in rows}) == len(keys)
@@ -416,15 +468,16 @@ def test_merge_group_kernel_is_retry_safe_and_resolves_lww(tmp_path):
         "extra": ["x", None, "nine", None, None, None, "n"],
         "_op": ["upsert", "upsert", "upsert", "upsert", "upsert", "delete", "upsert"]})
     spec = {"location": str(tmp_path), "write_id": "w1", "epoch": 3, "cap": 1 << 30,
-            "sub_splits": 1, "keys": ["k"], "seq_col": "_seq", "op_col": "_op",
+            "num_buckets": 4, "keys": ["k"], "seq_col": "_seq", "op_col": "_op",
             "fields": cur, "schema_id": 1, "schemas": {0: old, 1: cur},
-            "files": {(2, 0): [(target, 0)]}}
-    first = merge_group(changes, 2, 0, spec)
-    second = merge_group(changes, 2, 0, spec)
+            "files": {2: [(target, 0)]}}
+    first = merge_group(changes, 2, spec)
+    second = merge_group(changes, 2, spec)
     assert first == second
+    assert first["path"] == os.path.join("data", "w1", "__bucket=2", "merge.parquet")
     out_dir = os.path.join(str(tmp_path), os.path.dirname(first["path"]))
     assert os.listdir(out_dir) == ["merge.parquet"]
-    assert (first["bucket"], first["slot"], first["schema_id"]) == (2, 0, 1)
+    assert (first["bucket"], first["schema_id"]) == (2, 1) and "slot" not in first
     path = os.path.join(str(tmp_path), first["path"])
     assert first["file_size_in_bytes"] == os.path.getsize(path)
     got = pq.read_table(path).to_pylist()
@@ -436,8 +489,8 @@ def test_merge_group_kernel_is_retry_safe_and_resolves_lww(tmp_path):
         {"k": "tie", "v": 1, "_seq": 5, "_deleted": False, "extra": None},
         {"k": "tomb", "v": 3, "_seq": 6, "_deleted": True, "extra": None},
     ]
-    # a pair whose every row is deleted writes no file
-    gone = merge_group(changes.slice(5, 1), 3, 0, {**spec, "files": {}})
+    # a bucket whose every row is deleted writes no file
+    gone = merge_group(changes.slice(5, 1), 3, {**spec, "files": {}})
     assert gone["path"] is None and gone["record_count"] == 0
 
 
