@@ -1703,9 +1703,10 @@ def cdc_lineage_rows(spark, sf_dir):
     """Per-epoch lineage aggregates. The per-bucket `partition` split uses
     Spark-internal xxhash64 (not reproducible in DuckDB), so the oracle
     checks the epoch-level rollup: event count, seq range, late count, and
-    dropped_late — which the BATCH path must pin to 0 (replay_batch
-    tolerates unbounded lateness; only the stateless stream path drops —
-    the nonzero accounting is gated by cdc_stream_lineage_drops)."""
+    dropped_late — which the BATCH path must pin to 0 (apply_batch
+    without drop_late tolerates unbounded lateness; only the stateless
+    stream path drops — the nonzero accounting is gated by
+    cdc_stream_lineage_drops)."""
     eng = _cdc_replay_fixture(spark)
     lin = eng.lineage_table().read(spark)
     return (

@@ -267,34 +267,6 @@ def run_cdc_stream_replay(spark, fixture_dir: str, num_buckets: int = 64,
             "final_rows": agg["n"], "final_checksum": int(agg["chk"])}
 
 
-def run_lww_core(spark, fixture_dir: str) -> dict:
-    """The CPU core of the replay in isolation: scan → vectorized transform
-    expressions (content sha verification) → in-batch LWW collapse →
-    checksum aggregation. No snapshot IO, no stage barriers beyond the agg —
-    isolates how the compute scales with cores (the end-to-end number mixes
-    in fixed commit/IO latency that a real cluster spreads across nodes)."""
-    from pyspark.sql import functions as F
-
-    events = spark.read.parquet(os.path.join(fixture_dir, "events"))
-    n = events.count()
-    t0 = time.time()
-    data = events.where(F.col("op").isin("insert", "update", "delete"))
-    enriched = data.withColumn("content_sha", F.sha2(F.col("content"), 256))
-    winners = (
-        enriched.groupBy("repo", "path")
-        .agg(F.max_by(F.struct("commit", "lang", "content", "content_sha", "op"), F.col("seq")).alias("w"),
-             F.max("seq").alias("seq"))
-        .select("repo", "path", "w.*", "seq")
-    )
-    chk = winners.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.bit_xor(F.xxhash64("repo", "path", F.coalesce("content_sha", F.lit("")))).alias("chk"),
-    ).collect()[0]
-    wall = time.time() - t0
-    return {"events": n, "wall_sec": round(wall, 3),
-            "events_per_sec": round(n / wall, 1), "keys": chk["n"], "checksum": int(chk["chk"])}
-
-
 def _bw_worker(seconds: float) -> float:
     import numpy as np
 
@@ -390,10 +362,6 @@ def scaling_worker(cores: int, n_ev: int):
     # window is shorter, so cold IO is a larger fraction)
     run_cdc_replay(spark, fx, num_buckets=64, epochs=1)
     r = run_cdc_replay(spark, fx, num_buckets=64, epochs=1)
-    core = run_lww_core(spark, fx)
-    r["core_rate"] = core["events_per_sec"]
-    r["core_wall"] = core["wall_sec"]
-    r["core_checksum"] = core["checksum"]
     if os.environ.get("SPARK_GRAFT_SCALE_STREAMING", "1") == "1":
         # same events through the Structured Streaming path (multi-trigger,
         # checkpointed, lateness-fenced) — the north rule's replay
@@ -548,10 +516,6 @@ def run_scaling():
         best = min(trials[cores], key=lambda t: t["wall_sec"])
         best = dict(best)
         best["trial_walls"] = [t["wall_sec"] for t in trials[cores]]
-        bc = min(trials[cores], key=lambda t: t["core_wall"])
-        best["core_rate"] = bc["core_rate"]
-        best["core_wall"] = bc["core_wall"]
-        best["core_checksum"] = bc["core_checksum"]
         results[cores] = best
     lo, hi = levels[0], levels[1]
     factor = hi / lo
@@ -571,12 +535,6 @@ def run_scaling():
         "final_rows": results[hi]["final_rows"],
         f"trial_walls_local{lo}": results[lo].get("trial_walls"),
         f"trial_walls_local{hi}": results[hi].get("trial_walls"),
-        f"core_rate_local{lo}": results[lo].get("core_rate"),
-        f"core_rate_local{hi}": results[hi].get("core_rate"),
-        "core_scaling_efficiency": round(
-            (results[hi]["core_rate"] / results[lo]["core_rate"]) / factor, 3
-        ) if results[lo].get("core_rate") else None,
-        "core_checksum_equal": results[lo].get("core_checksum") == results[hi].get("core_checksum"),
         "host_mem_bandwidth": bw,
     }
     if all("stream_rate" in t for ts in trials.values() for t in ts):

@@ -5,10 +5,13 @@ Iceberg *semantics* the CDC engine needs, behind a small API a real Iceberg
 catalog could replace 1:1:
 
 - **Atomic commits / snapshot isolation**: every commit writes a new
-  immutable metadata JSON `metadata/v{N}.json` created with O_EXCL
-  (optimistic concurrency — a concurrent committer loses and retries) and
-  then atomically swings `metadata/version-hint.text` via os.replace.
-  Readers resolve the hint to one metadata file → a consistent snapshot.
+  immutable metadata JSON to a temp file and hard-links it to
+  `metadata/v{N}.json`; the link fails if the name exists (optimistic
+  concurrency — a concurrent committer loses and retries), so a version
+  file is complete or absent. It then swings `metadata/version-hint.text`
+  via os.replace. The hint is only a hint, as in Iceberg's Hadoop
+  catalog: readers advance past it while `v{N+1}.json` exists, then load
+  that one metadata file → a consistent snapshot.
 - **Snapshot summary properties + table properties**: carry the
   exactly-once epoch fence (`cdc.last-epoch`) so a retried foreachBatch
   epoch is a no-op (Iceberg: snapshot summary / table properties).
@@ -26,6 +29,12 @@ catalog could replace 1:1:
   never shuffled (Iceberg COW with `bucket(N, key)` partitioning rewrites
   the same files). A table that needs smaller rewrite files uses more
   buckets.
+- **One CDC row contract**: a merged table carries two fixed bookkeeping
+  columns, `_seq` (last-writer-wins order) and `_deleted` (tombstone). A
+  merge's change rows are full-row images in the current schema; a delete
+  is a tombstone row that keeps its seq, never a removal, so a late older
+  change cannot bring a deleted key back. Changelog reads and compaction
+  use the same two columns.
 - **Time travel**: `read(snapshot_id=...)` reads any retained snapshot.
 
 Semantics modeled on the Iceberg spec (public) and the needs in
@@ -48,68 +57,60 @@ from typing import Any
 
 import numpy as np
 import pyarrow as pa
-import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark import cloudpickle
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.pandas.types import from_arrow_schema
+from pyspark.sql.pandas.types import from_arrow_schema, from_arrow_type
 
 # merge_group runs in Python workers, which cannot import this package when
 # the driver put it on sys.path itself: ship this module's functions by value
 cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 # ---------------------------------------------------------------------------
-# type registry (icelite type string <-> Spark type)
+# type registry (icelite type string <-> Arrow type <-> Spark type)
 # ---------------------------------------------------------------------------
 
-_PRIMITIVES: dict[str, T.DataType] = {
-    "boolean": T.BooleanType(),
-    "int": T.IntegerType(),
-    "long": T.LongType(),
-    "float": T.FloatType(),
-    "double": T.DoubleType(),
-    "string": T.StringType(),
-    "binary": T.BinaryType(),
-    "timestamp": T.TimestampType(),
-    "date": T.DateType(),
+# the one type table: Spark types are derived from these Arrow types
+_ARROW_TYPES: dict[str, pa.DataType] = {
+    "boolean": pa.bool_(),
+    "int": pa.int32(),
+    "long": pa.int64(),
+    "float": pa.float32(),
+    "double": pa.float64(),
+    "string": pa.string(),
+    "binary": pa.binary(),
+    "timestamp": pa.timestamp("us", tz="UTC"),
+    "date": pa.date32(),
 }
 
 # legal widening promotions (Iceberg spec: int→long, float→double)
 _WIDEN_OK = {("int", "long"), ("float", "double"), ("int", "double")}
 
 
-def type_to_spark(s: str) -> T.DataType:
-    if s in _PRIMITIVES:
-        return _PRIMITIVES[s]
-    if s.startswith("array<") and s.endswith(">"):
-        return T.ArrayType(type_to_spark(s[6:-1]))
-    raise ValueError(f"unsupported icelite type: {s}")
-
-
-def spark_to_type(dt: T.DataType) -> str:
-    for name, t in _PRIMITIVES.items():
-        if dt == t:
-            return name
-    if isinstance(dt, T.ArrayType):
-        return f"array<{spark_to_type(dt.elementType)}>"
-    raise ValueError(f"unsupported spark type for icelite: {dt}")
-
-
 def type_to_arrow(s: str) -> pa.DataType:
     """Arrow type of an icelite type in the files pyarrow writes. Timestamps
     are UTC-adjusted microseconds, which Spark reads back as TimestampType,
     the same as its own INT96 files."""
-    prim = {"boolean": pa.bool_(), "int": pa.int32(), "long": pa.int64(),
-            "float": pa.float32(), "double": pa.float64(), "string": pa.string(),
-            "binary": pa.binary(), "timestamp": pa.timestamp("us", tz="UTC"),
-            "date": pa.date32()}
-    if s in prim:
-        return prim[s]
+    if s in _ARROW_TYPES:
+        return _ARROW_TYPES[s]
     if s.startswith("array<") and s.endswith(">"):
         return pa.list_(type_to_arrow(s[6:-1]))
     raise ValueError(f"unsupported icelite type: {s}")
+
+
+def type_to_spark(s: str) -> T.DataType:
+    return from_arrow_type(type_to_arrow(s))
+
+
+def spark_to_type(dt: T.DataType) -> str:
+    for name in _ARROW_TYPES:
+        if dt == type_to_spark(name):
+            return name
+    if isinstance(dt, T.ArrayType):
+        return f"array<{spark_to_type(dt.elementType)}>"
+    raise ValueError(f"unsupported spark type for icelite: {dt}")
 
 
 def schema_to_struct(fields: list[dict]) -> T.StructType:
@@ -158,26 +159,25 @@ def _group_byte_cap() -> int:
 def merge_group(changes: pa.Table, bucket: int, spec: dict) -> dict:
     """Merge one bucket of a copy-on-write table.
 
-    `changes` holds the bucket's change rows: the current schema's columns
-    plus spec's op column, any number of rows per key. The bucket's target
-    files (every file listed for it) are read here with pyarrow and bound
-    to the current schema by field id, with the same rules as
+    `changes` holds the bucket's change rows, full-row images in the
+    current schema, any number of rows per key. The bucket's target files
+    (every file listed for it) are read here with pyarrow and bound to the
+    current schema by field id, with the same rules as
     IceliteTable._read_entries (rename -> alias, widen -> cast, add ->
-    null). Per key the highest seq wins and
-    the stored row wins a tie; a winning op == 'delete' removes the row,
-    while a tombstone (`_deleted` true) is an ordinary row and is kept.
+    null). Per key the highest `_seq` wins and the stored row wins a tie. A
+    delete is a tombstone (`_deleted` true), an ordinary row that keeps its
+    seq, so an older change can never bring the key back.
 
     Writes one key-sorted file at a path fixed by (write id, bucket)
     via a temp name and os.replace, so a retried task overwrites its own
     file, and returns its manifest entry with record_count and
-    file_size_in_bytes (path None when no row survives). A group over
-    spec["cap"] bytes raises MemoryError before anything is read.
+    file_size_in_bytes. A group over spec["cap"] bytes raises MemoryError
+    before anything is read.
 
     `spec` is the plan IceliteTable.merge_cdc builds: location, write_id,
-    epoch, cap, num_buckets, keys, seq_col, op_col, fields (current
-    schema), schema_id, schemas (id -> fields), files (bucket -> [(path,
-    schema id)])."""
-    fields, seq, op = spec["fields"], spec["seq_col"], spec["op_col"]
+    epoch, cap, num_buckets, keys, fields (current schema), schema_id,
+    schemas (id -> fields), files (bucket -> [(path, schema id)])."""
+    fields = spec["fields"]
     targets = spec["files"].get(bucket, [])
     held = changes.nbytes
     for p, _ in targets:
@@ -190,16 +190,14 @@ def merge_group(changes: pa.Table, bucket: int, spec: dict) -> dict:
             f"over the per-group cap of {spec['cap']} bytes; "
             f"a table with num_buckets >= {need} would fit")
     schema = pa.schema([(f["name"], type_to_arrow(f["type"])) for f in fields]
-                       + [(op, pa.string()), ("__src", pa.int8())])
+                       + [("__src", pa.int8())])
 
     def bind(tbl: pa.Table, names: dict, src: int) -> pa.Table:
         # names: field id -> column name in tbl; src 1 marks stored rows
         n = tbl.num_rows
         cols = [pa.nulls(n, t) if f["id"] not in names else tbl.column(names[f["id"]]).cast(t)
                 for f, t in zip(fields, schema.types)]
-        ops = pa.nulls(n, pa.string()) if src else tbl.column(op).cast(pa.string())
-        return pa.Table.from_arrays(cols + [ops, pa.array(np.full(n, src, np.int8))],
-                                    schema=schema)
+        return pa.Table.from_arrays(cols + [pa.array(np.full(n, src, np.int8))], schema=schema)
 
     parts = [bind(changes, {f["id"]: f["name"] for f in fields}, 0)]
     for p, sid in targets:
@@ -209,25 +207,20 @@ def merge_group(changes: pa.Table, bucket: int, spec: dict) -> dict:
         parts.append(bind(tbl, names, 1))
     keys = spec["keys"]
     rows = pa.concat_tables(parts).sort_by(
-        [(k, "ascending") for k in keys] + [(seq, "descending"), ("__src", "descending")])
+        [(k, "ascending") for k in keys] + [("_seq", "descending"), ("__src", "descending")])
     rows = rows.append_column("__row", pa.array(np.arange(rows.num_rows)))
     first = rows.group_by(keys, use_threads=False).aggregate([("__row", "min")])["__row_min"]
-    won = rows.take(first.sort())
-    out = won.filter(pc.invert(pc.fill_null(pc.equal(won[op], "delete"), False))) \
-        .select([f["name"] for f in fields])
+    out = rows.take(first.sort()).select([f["name"] for f in fields])
 
-    entry = {"path": None, "bucket": bucket, "schema_id": spec["schema_id"],
-             "record_count": out.num_rows, "file_size_in_bytes": 0}
-    if out.num_rows:
-        entry["path"] = os.path.join("data", spec["write_id"], f"{BUCKET_COL}={bucket}",
-                                     "merge.parquet")
-        path = os.path.join(spec["location"], entry["path"])
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        tmp = os.path.join(os.path.dirname(path), f".merge.{uuid.uuid4().hex}.tmp")
-        pq.write_table(out, tmp)
-        os.replace(tmp, path)
-        entry["file_size_in_bytes"] = os.path.getsize(path)
-    return entry
+    # a group holds at least one change row, so at least one row wins
+    rel = os.path.join("data", spec["write_id"], f"{BUCKET_COL}={bucket}", "merge.parquet")
+    path = os.path.join(spec["location"], rel)
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    tmp = os.path.join(os.path.dirname(path), f".merge.{uuid.uuid4().hex}.tmp")
+    pq.write_table(out, tmp)
+    os.replace(tmp, path)
+    return {"path": rel, "bucket": bucket, "schema_id": spec["schema_id"],
+            "record_count": out.num_rows, "file_size_in_bytes": os.path.getsize(path)}
 
 
 class CommitConflict(Exception):
@@ -295,33 +288,46 @@ class IceliteTable:
     # -- metadata ------------------------------------------------------------
 
     def _version(self) -> int:
+        """Current metadata version. version-hint.text is a hint (Iceberg's
+        Hadoop catalog): the version advances past it while v{n+1}.json
+        exists, so a commit whose hint swing never happened is still read
+        and the next commit lands after it, and a hint swung backwards by
+        a slow writer is harmless."""
         with open(os.path.join(self._meta_dir, "version-hint.text")) as fh:
-            return int(fh.read().strip())
+            v = int(fh.read().strip())
+        while os.path.exists(os.path.join(self._meta_dir, f"v{v + 1}.json")):
+            v += 1
+        return v
 
     def metadata(self) -> dict:
         return self._load()[0]
 
     def _load(self) -> tuple[dict, int]:
-        """Atomically consistent (metadata, version) pair: read the version
-        hint ONCE and load exactly that v{N}.json. Commit sites must use
+        """Atomically consistent (metadata, version) pair: resolve the
+        version ONCE and load exactly that v{N}.json. Commit sites must use
         this (not separate metadata()/_version() calls) — a concurrent
         commit landing between the two reads would otherwise let a writer
         publish STALE metadata at the NEWER version, silently dropping the
-        other writer's snapshot past the O_EXCL same-version guard."""
+        other writer's snapshot past the same-version link guard."""
         v = self._version()
         with open(os.path.join(self._meta_dir, f"v{v}.json")) as fh:
             return json.load(fh), v
 
     def _write_metadata(self, meta: dict, expected_version: int) -> None:
         new_v = expected_version + 1
-        path = os.path.join(self._meta_dir, f"v{new_v}.json")
+        staged = os.path.join(self._meta_dir, f".v{new_v}.{uuid.uuid4().hex}.tmp")
         try:
-            # O_EXCL create = the optimistic-concurrency commit point
-            fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-        except FileExistsError as e:
-            raise CommitConflict(f"metadata v{new_v} already exists") from e
-        with os.fdopen(fd, "w") as fh:
-            json.dump(meta, fh)
+            with open(staged, "w") as fh:
+                json.dump(meta, fh)
+            try:
+                # the link is the optimistic-concurrency commit point: the
+                # complete file appears under its version name, or nothing does
+                os.link(staged, os.path.join(self._meta_dir, f"v{new_v}.json"))
+            except FileExistsError as e:
+                raise CommitConflict(f"metadata v{new_v} already exists") from e
+        finally:
+            with contextlib.suppress(FileNotFoundError):
+                os.remove(staged)
         tmp = os.path.join(self._meta_dir, f".hint.{uuid.uuid4().hex}")
         with open(tmp, "w") as fh:
             fh.write(str(new_v))
@@ -359,16 +365,10 @@ class IceliteTable:
 
     # -- read ----------------------------------------------------------------
 
-    def read(
-        self,
-        spark: SparkSession,
-        snapshot_id: int | None = None,
-        buckets: list[int] | None = None,
-    ) -> DataFrame:
+    def read(self, spark: SparkSession, snapshot_id: int | None = None) -> DataFrame:
         """Current (or time-travel) snapshot as a DataFrame in the current
         schema. Old-schema files are projected by field id: renamed columns
-        aliased, widened columns cast, added columns null-filled. With
-        `buckets`, only data files of those buckets are read. Raises
+        aliased, widened columns cast, added columns null-filled. Raises
         ValueError on a snapshot id that is unknown (e.g. expired)."""
         meta = self.metadata()
         if snapshot_id is None:
@@ -377,37 +377,34 @@ class IceliteTable:
             snap = next((s for s in meta["snapshots"] if s["snapshot_id"] == snapshot_id), None)
             if snap is None:
                 raise ValueError(f"unknown snapshot_id {snapshot_id} (expired?)")
-        files = snap["files"] if snap else []
-        if buckets is not None:
-            bset = set(buckets)
-            files = [f for f in files if f["bucket"] in bset]
-        return self._read_entries(spark, meta, files)
+        return self._read_entries(spark, meta, snap["files"] if snap else [])
 
     def read_changes(
         self,
         spark: SparkSession,
         from_snapshot_id: int | None = None,
         to_snapshot_id: int | None = None,
-        change_col: str = "_change_type",
-        deleted_col: str = "_deleted",
     ) -> DataFrame:
         """Incremental changelog — "what changed since snapshot X" — for
         downstream CDC consumers (the read-side half of an ingest engine:
         audit, cache invalidation, derived-table refresh). Emits UPSERT
         form: one row per key whose visible newest version differs between
-        the two snapshots, in the current schema plus `change_col` ∈
+        the two snapshots, in the current schema plus `_change_type` ∈
         {'upsert', 'delete'} — upserts carry the new image, deletes the
         last visible old image (Kafka-compacted-topic semantics; an
-        update is an upsert, not a delete+insert pair).
+        update is an upsert, not a delete+insert pair). A row is visible
+        unless its `_deleted` tombstone flag is true; a table without a
+        `_deleted` column has only visible rows.
 
         Scale path: a key's versions never leave its bucket, so the diff
         is pruned to CANDIDATE BUCKETS — buckets of manifest entries added
         or removed between the snapshots (merges rewrite only touched
-        files; rollback removes files). Both snapshot reads scan only those
-        buckets and the diff is ONE full-outer shuffle over them —
+        files; rollback removes files). Both sides read only those
+        buckets' entries and the diff is ONE full-outer shuffle over them —
         O(touched-bucket bytes), not O(table), per poll. Compaction
         rewrites are content-neutral: their buckets enter the candidate
-        set and diff to nothing.
+        set and diff to nothing. Metadata is loaded once, so both sides
+        are projected to the same schema.
 
         from_snapshot_id=None means "initial load": every visible row of
         the target snapshot as an upsert. Schema-only evolution commits no
@@ -426,38 +423,34 @@ class IceliteTable:
         keys = self.key_cols(meta)
         out_struct = T.StructType(
             schema_to_struct(self._fields(meta)).fields
-            + [T.StructField(change_col, T.StringType())]
+            + [T.StructField("_change_type", T.StringType())]
         )
 
-        def visible(df: DataFrame) -> DataFrame:
-            if deleted_col in cols:
-                return df.where(~F.coalesce(F.col(deleted_col), F.lit(False)))
+        def visible(files: list[dict]) -> DataFrame:
+            df = self._read_entries(spark, meta, files)
+            if "_deleted" in cols:
+                return df.where(~F.coalesce(F.col("_deleted"), F.lit(False)))
             return df
 
+        new_files = snaps[to_snapshot_id]["files"]
         if from_snapshot_id is None:
-            return visible(self.read(spark, snapshot_id=to_snapshot_id)) \
-                .withColumn(change_col, F.lit("upsert"))
+            return visible(new_files).withColumn("_change_type", F.lit("upsert"))
         if from_snapshot_id not in snaps:
             raise ValueError(f"unknown from_snapshot_id {from_snapshot_id} (expired?)")
         if from_snapshot_id == to_snapshot_id:
             return spark.createDataFrame([], out_struct)
 
         old_files = snaps[from_snapshot_id]["files"]
-        new_files = snaps[to_snapshot_id]["files"]
         old_paths = {f["path"] for f in old_files}
         new_paths = {f["path"] for f in new_files}
-        candidates = sorted(
-            {f["bucket"] for f in new_files if f["path"] not in old_paths}
-            | {f["bucket"] for f in old_files if f["path"] not in new_paths}
-        )
+        candidates = ({f["bucket"] for f in new_files if f["path"] not in old_paths}
+                      | {f["bucket"] for f in old_files if f["path"] not in new_paths})
         if not candidates:
             return spark.createDataFrame([], out_struct)
 
-        old_df = visible(self.read(spark, snapshot_id=from_snapshot_id,
-                                   buckets=candidates)) \
+        old_df = visible([f for f in old_files if f["bucket"] in candidates]) \
             .withColumn("_o_present", F.lit(True))
-        new_df = visible(self.read(spark, snapshot_id=to_snapshot_id,
-                                   buckets=candidates)) \
+        new_df = visible([f for f in new_files if f["bucket"] in candidates]) \
             .withColumn("_n_present", F.lit(True))
         non_keys = [c for c in cols if c not in keys]
         j = new_df.alias("n").join(old_df.alias("o"), on=keys, how="full_outer")
@@ -480,9 +473,9 @@ class IceliteTable:
             for c in non_keys
         ]
         return (
-            j.withColumn(change_col, ct)
-            .where(F.col(change_col).isNotNull())
-            .select(*keys, *img, change_col)
+            j.withColumn("_change_type", ct)
+            .where(F.col("_change_type").isNotNull())
+            .select(*keys, *img, "_change_type")
             .select(*[f.name for f in out_struct.fields])
         )
 
@@ -654,14 +647,12 @@ class IceliteTable:
                 meta, version, new_files, {"operation": "overwrite", **(summary or {})}
             )
 
-    def _conform(self, df: DataFrame, meta: dict, extra: tuple[str, ...] = ()) -> DataFrame:
+    def _conform(self, df: DataFrame, meta: dict) -> DataFrame:
         """df as full rows of the current schema: columns cast to their
-        types, absent ones (e.g. just-added columns) null; the `extra`
-        columns pass through after them."""
+        types, absent ones (e.g. just-added columns) null."""
         return df.select(
             *[(F.col(f["name"]) if f["name"] in df.columns else F.lit(None))
-              .cast(type_to_spark(f["type"])).alias(f["name"]) for f in self._fields(meta)],
-            *extra)
+              .cast(type_to_spark(f["type"])).alias(f["name"]) for f in self._fields(meta)])
 
     # -- CDC merge (epoch-fenced, bucket copy-on-write) -----------------------
 
@@ -672,16 +663,18 @@ class IceliteTable:
         self,
         spark: SparkSession,
         changes: DataFrame,
-        seq_col: str = "_seq",
-        op_col: str = "_op",
         epoch: int | None = None,
         extra_summary: dict[str, Any] | None = None,
         extra_properties: dict[str, str] | None = None,
     ) -> dict:
-        """Apply change rows (payload in the current schema + seq_col, and
-        op_col in {upsert, delete}; any number of rows per key) with
-        last-writer-wins by seq_col against the stored `_seq`; the stored
-        row wins a tie. Copy-on-write at bucket granularity: only the files
+        """Apply change rows with last-writer-wins by `_seq`; the stored row
+        wins a tie. Change rows are full-row images in the current schema,
+        any number per key; current-schema columns they lack (e.g.
+        just-added ones) are null. A delete is a tombstone row
+        (`_deleted` true) that keeps its seq; nothing is ever removed.
+        Raises ValueError, before any Spark job, when the table has no key
+        columns or no `_seq` column, or when a change column is not in the
+        current schema. Copy-on-write at bucket granularity: only the files
         of buckets holding changed keys are rewritten; every other file
         carries forward untouched.
 
@@ -704,6 +697,15 @@ class IceliteTable:
         keys = self.key_cols(meta)
         if not keys:
             raise ValueError(f"merge_cdc needs key columns; icelite table {self.location} has none")
+        fields = self._fields(meta)
+        names = [f["name"] for f in fields]
+        if "_seq" not in names:
+            raise ValueError(f"merge_cdc needs a _seq column; icelite table {self.location} "
+                             f"has none")
+        unknown = [c for c in changes.columns if c not in names]
+        if unknown:
+            raise ValueError(f"merge_cdc change columns {unknown} are not in the current "
+                             f"schema of icelite table {self.location}: {names}")
         cur = self._current(meta)
         cur_files = cur["files"] if cur else []
         self._refuse_delta(cur_files)
@@ -716,8 +718,8 @@ class IceliteTable:
                 (os.path.join(self.location, f["path"]), f["schema_id"]))
         spec = {
             "location": self.location, "epoch": epoch, "cap": _group_byte_cap(),
-            "num_buckets": n, "keys": keys, "seq_col": seq_col, "op_col": op_col,
-            "fields": self._fields(meta), "schema_id": meta["current_schema_id"],
+            "num_buckets": n, "keys": keys, "fields": fields,
+            "schema_id": meta["current_schema_id"],
             "schemas": {s["schema_id"]: s["fields"] for s in meta["schemas"]},
             "files": by_bucket,
         }
@@ -735,17 +737,14 @@ class IceliteTable:
         k = max(1, min(spark.sparkContext.defaultParallelism, n))
         with self._staged() as write_id:
             spec["write_id"] = write_id
-            # changes are full-row images: current-schema columns absent
-            # from the change stream (e.g. just-added columns) are null
-            out = (self._conform(changes, meta, (op_col,))
+            out = (self._conform(changes, meta)
                    .withColumn(BUCKET_COL, group)
                    .repartition(k, BUCKET_COL)
                    .groupBy(BUCKET_COL)
                    .applyInArrow(kernel, from_arrow_schema(MERGE_ENTRY))
                    .collect())
             touched = {r["bucket"] for r in out}
-            new_files = [r.asDict() for r in sorted(out, key=lambda r: r["bucket"])
-                         if r["path"] is not None]
+            new_files = [r.asDict() for r in sorted(out, key=lambda r: r["bucket"])]
             untouched = [f for f in cur_files if f["bucket"] not in touched]
             props = dict(extra_properties or {})
             if epoch is not None:
@@ -831,17 +830,12 @@ class IceliteTable:
 
     # -- maintenance -----------------------------------------------------------
 
-    def compact(
-        self,
-        spark: SparkSession,
-        drop_tombstones_below_seq: int | None = None,
-        deleted_col: str = "_deleted",
-        seq_col: str = "_seq",
-    ) -> dict:
+    def compact(self, spark: SparkSession, drop_tombstones_below_seq: int | None = None) -> dict:
         """Rewrite the table's current snapshot: coalesce each bucket's file
-        set to one file and physically drop tombstones whose seq is below
-        the given horizon (safe once the horizon is older than any event the
-        stream can still deliver — i.e. below the watermark's seq frontier).
+        set to one file and physically drop tombstones (`_deleted` rows)
+        whose `_seq` is below the given horizon (safe once the horizon is
+        older than any event the stream can still deliver — i.e. below the
+        watermark's seq frontier); a table without `_deleted` drops nothing.
         The Iceberg analog is rewrite_data_files + a delete-cleanup pass.
         At 10^10 events this is the job that keeps merge target reads
         proportional to live data rather than to delete history. Merges do
@@ -851,8 +845,8 @@ class IceliteTable:
         meta, version = self._load()
         cur = self._current(meta)
         df = self._read_entries(spark, meta, cur["files"] if cur else [])
-        if drop_tombstones_below_seq is not None and deleted_col in df.columns:
-            df = df.where(~(F.col(deleted_col) & (F.col(seq_col) < drop_tombstones_below_seq)))
+        if drop_tombstones_below_seq is not None and "_deleted" in df.columns:
+            df = df.where(~(F.col("_deleted") & (F.col("_seq") < drop_tombstones_below_seq)))
         with self._staged() as write_id:
             new_files = self._write_data_files(df, meta, write_id)
             snap_id = self._commit_snapshot(

@@ -10,8 +10,11 @@ Semantics (BASELINE.json north_star):
   are shuffled by bucket and one Arrow task per bucket resolves them
   together with that bucket's stored file, with no in-batch collapse
   before it;
-- deletes become tombstones (`_deleted = true`) carrying their seq so a
-  re-delivered or late older event can never resurrect a deleted row;
+- every data event becomes one change row for icelite's merge: a full-row
+  image in the current table schema whose `_seq` is the event's seq and
+  whose `_deleted` is true for a delete. Deletes are therefore tombstones
+  carrying their seq, never removals, so a re-delivered or late older
+  event can never resurrect a deleted row;
 - merges are idempotent: a change applies only if `change.seq > stored.seq`
   — duplicate deliveries (identical seq) and retried batches are no-ops;
 - exactly-once: foreachBatch epochs are fenced via the table property
@@ -120,10 +123,9 @@ def content_expr(repo: F.Column, path: F.Column, seq: F.Column) -> F.Column:
 
 
 class CdcEngine:
-    def __init__(self, table_location: str, lineage_location: str | None = None,
-                 num_buckets: int = 16):
+    def __init__(self, table_location: str, num_buckets: int = 16):
         self.table_location = table_location
-        self.lineage_location = lineage_location or table_location.rstrip("/") + "_lineage"
+        self.lineage_location = table_location.rstrip("/") + "_lineage"
         # the merge's rewrite unit and its task count (capped by the
         # default parallelism): smaller rewrite files need more buckets
         self.num_buckets = num_buckets
@@ -209,7 +211,9 @@ class CdcEngine:
           1. the fused stats pass — per-bucket lineage metrics for data
              events AND the (tiny, ~1%) schema-op set gathered via
              collect_list into a sentinel partition, in one aggregation;
-          2. merge_cdc over the bound events themselves: they are shuffled
+          2. merge_cdc over the bound events themselves, one full-row
+             image per event (payload columns under their current names,
+             `_seq` = seq, `_deleted` = op is delete): they are shuffled
              by bucket and one Arrow task per bucket resolves
              last-writer-wins against that bucket's stored file and writes
              its replacement. The stored table is never shuffled.
@@ -350,13 +354,12 @@ class CdcEngine:
             data = transform_chain(data)
 
         # 4. epoch-fenced merge (watermark advances with it) of the bound
-        #    events themselves; deletes become tombstones, not removals.
+        #    events themselves; deletes are tombstones, not removals.
         changes = data.select(
             *[F.col(orig).cast(type_to_spark(by_id[fmap[orig]]["type"])).alias(cur_name[orig])
               for orig in EVENT_FIELDS],
             F.col("seq").alias("_seq"),
             (F.col("op") == F.lit("delete")).alias("_deleted"),
-            F.lit("upsert").alias("_op"),
         )
         events_in = sum(r["event_count"] for r in lineage_rows)
         late = sum(r["late_count"] for r in lineage_rows)
@@ -364,8 +367,6 @@ class CdcEngine:
             result = table.merge_cdc(
                 spark,
                 changes,
-                seq_col="_seq",
-                op_col="_op",
                 epoch=epoch,
                 extra_summary={"epoch": epoch, "events-in": events_in,
                                "late-dropped": late if dropping else 0,
@@ -402,12 +403,6 @@ class CdcEngine:
             )
         return result
 
-    # -- batch replay ------------------------------------------------------------
-
-    def replay_batch(self, spark: SparkSession, events_df: DataFrame, epoch: int = 0) -> dict:
-        """Replay a bounded event log in one epoch (bulk backfill path)."""
-        return self.apply_batch(spark, events_df, epoch=epoch)
-
     # -- streaming replay ----------------------------------------------------------
 
     def run_stream(
@@ -433,10 +428,12 @@ class CdcEngine:
         delay to the source's out-of-order bound (tested: delay ≥ bound ⇒
         final state equals the oracle with zero drops). Re-deliveries need
         no dedup state: the merge is idempotent by `seq` (a change applies
-        only if change.seq > stored.seq), so a duplicate is a no-op. For
-        backfills that must tolerate unbounded lateness use replay_batch(),
-        which has no watermark. Exactly-once = checkpoint (epoch replay) +
-        cdc.last-epoch fence inside the commit.
+        only if change.seq > stored.seq), so a duplicate is a no-op, and a
+        delete is a tombstone that keeps its seq, so a late older event
+        cannot resurrect the key. For backfills that must tolerate
+        unbounded lateness call apply_batch() with its default
+        drop_late=False, which has no watermark. Exactly-once = checkpoint
+        (epoch replay) + cdc.last-epoch fence inside the commit.
         """
         # dedup only still exists for callers passing dedup=False; the
         # next benchmark change deletes the parameter
@@ -511,7 +508,6 @@ class CdcEngine:
         t = self.table()
         keys = t.key_cols()
         df = self.read_current(spark)
-        content_col = [c for c in df.columns if c not in keys][-1]  # 'content' by field id
         fmap = json.loads(t.properties()["cdc.field-map"])
         by_id = {f["id"]: f["name"] for f in t._fields(t.metadata())}
         content_name = by_id[fmap["content"]]

@@ -70,9 +70,33 @@ def test_batch_replay_matches_oracle(spark, tmp_path, fixture):
     base, events, state, schema = fixture
     eng = CdcEngine(str(tmp_path / "repos"), num_buckets=8)
     eng.bootstrap(spark, base_df(spark, base))
-    res = eng.replay_batch(spark, events_df(spark, events))
+    res = eng.apply_batch(spark, events_df(spark, events), epoch=0)
     assert res["applied"]
     assert_final_state(spark, eng, state, schema)
+
+
+def test_deleted_key_stays_deleted_after_late_older_event(spark, tmp_path):
+    """A delete event is merged as a tombstone carrying its seq: an update
+    with an older seq arriving in a later epoch loses to it."""
+    import datetime as dt
+
+    eng = CdcEngine(str(tmp_path / "repos"), num_buckets=4)
+    eng.bootstrap(spark, spark.createDataFrame(
+        [("r", "p", "c0", "py", "v0")],
+        "repo string, path string, commit string, lang string, content string"))
+    ts = dt.datetime(2024, 1, 1)
+
+    def event(seq, op, content):
+        return spark.createDataFrame(
+            [(seq, ts, op, "r", "p", f"c{seq}", "py", content, None)], EVENT_SPARK_SCHEMA)
+
+    eng.apply_batch(spark, event(8, "delete", None), epoch=0)
+    eng.apply_batch(spark, event(7, "update", "late"), epoch=1)
+    assert eng.table().last_epoch() == 1
+    rows = eng.table().read(spark).collect()
+    assert [(r["repo"], r["path"], r["_seq"], r["_deleted"]) for r in rows] \
+        == [("r", "p", 8, True)]
+    assert eng.read_current(spark).count() == 0
 
 
 def test_chunked_epochs_and_fence(spark, tmp_path, fixture):
@@ -197,7 +221,7 @@ def test_run_stream_df_rate_shaped_source(spark, tmp_path):
     )
     eng2 = CdcEngine(str(tmp_path / "repos_batch"), num_buckets=4)
     eng2.bootstrap(spark)
-    eng2.replay_batch(spark, batch_events)
+    eng2.apply_batch(spark, batch_events, epoch=0)
     want = {(r["repo"], r["path"], r["content_sha"])
             for r in eng2.final_state_hashes(spark).collect()}
     assert got == want
@@ -433,7 +457,7 @@ def test_over_cap_merge_group_fails_loudly_and_commits_nothing(spark, tmp_path, 
     written = set(os.listdir(data_dir))
     monkeypatch.setattr(icelite, "_group_byte_cap", lambda: 1000)
     with pytest.raises(Exception) as err:
-        eng.replay_batch(spark, events_df(spark, events))
+        eng.apply_batch(spark, events_df(spark, events), epoch=0)
     assert re.search(r"merge_cdc epoch 0: bucket \d holds \d+ bytes, "
                      r"over the per-group cap of 1000 bytes; "
                      r"a table with num_buckets >= \d+ would fit", str(err.value))
@@ -441,7 +465,7 @@ def test_over_cap_merge_group_fails_loudly_and_commits_nothing(spark, tmp_path, 
     assert eng.table().last_epoch() == -1
     assert set(os.listdir(data_dir)) == written  # the failed merge's files are removed
     monkeypatch.undo()
-    assert eng.replay_batch(spark, events_df(spark, events))["applied"]
+    assert eng.apply_batch(spark, events_df(spark, events), epoch=0)["applied"]
     assert_final_state(spark, eng, state, schema)
 
 

@@ -3,10 +3,16 @@ import json
 import os
 
 import pytest
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from datavec_spark.sources.icelite import CommitConflict, IceliteTable, merge_group
+from datavec_spark.sources import icelite
+from datavec_spark.sources.icelite import (
+    CommitConflict,
+    IceliteTable,
+    merge_group,
+    spark_to_type,
+    type_to_spark,
+)
 
 
 SCHEMA = T.StructType(
@@ -42,14 +48,13 @@ def test_append_and_time_travel(spark, tmp_path):
 
 def test_merge_lww_and_tombstones(spark, tmp_path):
     t = make(spark, tmp_path, [("a", 1, 5, False), ("b", 2, 5, False)])
-    ch_schema = T.StructType(SCHEMA.fields + [T.StructField("_op", T.StringType())])
     changes = spark.createDataFrame(
         [
-            ("a", 10, 9, False, "upsert"),   # newer seq → wins
-            ("b", 99, 3, False, "upsert"),   # older seq → loses
-            ("c", 7, 8, True, "upsert"),     # tombstone insert
+            ("a", 10, 9, False),   # newer seq → wins
+            ("b", 99, 3, False),   # older seq → loses
+            ("c", 7, 8, True),     # tombstone insert
         ],
-        ch_schema,
+        SCHEMA,
     )
     res = t.merge_cdc(spark, changes, epoch=0)
     assert res["applied"]
@@ -83,6 +88,57 @@ def test_illegal_widen_rejected(spark, tmp_path):
     t = make(spark, tmp_path, [])
     with pytest.raises(ValueError):
         t.widen_column("v", "string")
+
+
+def test_tombstone_outlives_older_upsert(spark, tmp_path):
+    """A delete is a tombstone that keeps its seq: an upsert with an older
+    seq in a later epoch loses to it, so the key stays deleted."""
+    t = make(spark, tmp_path, [("k", 1, 5, False)])
+    t.merge_cdc(spark, spark.createDataFrame([("k", 0, 8, True)], SCHEMA), epoch=0)
+    t.merge_cdc(spark, spark.createDataFrame([("k", 7, 7, False)], SCHEMA), epoch=1)
+    assert [tuple(r) for r in t.read(spark).collect()] == [("k", 0, 8, True)]
+    assert t.last_epoch() == 1
+
+
+def _no_job_raises(spark, t, changes, match):
+    # the check runs on the driver before any Spark job, and commits nothing
+    sc = spark.sparkContext
+    before = t._version()
+    sc.setJobGroup("merge-check", "merge_cdc validation")
+    try:
+        with pytest.raises(ValueError, match=match):
+            t.merge_cdc(spark, changes, epoch=0)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("merge-check") == []
+    assert t._version() == before and t.last_epoch() == -1
+
+
+def test_merge_cdc_rejects_table_without_seq(spark, tmp_path):
+    """Last-writer-wins needs the fixed `_seq` column."""
+    schema = T.StructType([f for f in SCHEMA.fields if f.name != "_seq"])
+    t = IceliteTable.create(str(tmp_path / "noseq"), schema, key_cols=["k"], num_buckets=2)
+    _no_job_raises(spark, t, spark.createDataFrame([("a", 1, False)], schema),
+                   "needs a _seq column")
+
+
+def test_merge_cdc_rejects_change_column_outside_schema(spark, tmp_path):
+    """A change column the current schema lacks (say, an op column sent by
+    an older caller) is refused, not silently dropped: dropping `_op` would
+    apply the caller's deletes as upserts."""
+    t = make(spark, tmp_path, [("a", 1, 5, False)])
+    ch = spark.createDataFrame([("a", 1, 9, False, "delete")],
+                               "k string, v int, _seq long, _deleted boolean, _op string")
+    _no_job_raises(spark, t, ch, r"change columns \['_op'\] are not in the current schema")
+    assert [tuple(r) for r in t.read(spark).collect()] == [("a", 1, 5, False)]
+
+
+@pytest.mark.parametrize("s", ["boolean", "int", "long", "float", "double", "string",
+                               "binary", "timestamp", "date", "array<string>", "array<long>"])
+def test_type_table_round_trip(s):
+    """Spark types come from the Arrow type table, and spark_to_type
+    inverts the same table."""
+    assert spark_to_type(type_to_spark(s)) == s
 
 
 def test_commit_conflict_detection(spark, tmp_path):
@@ -125,7 +181,7 @@ def test_merge_cdc_without_key_columns_raises(spark, tmp_path):
     """A keyless table cannot be merged; the check is a ValueError, so it
     holds under python -O too."""
     t = IceliteTable.create(str(tmp_path / "nokeys"), SCHEMA, num_buckets=1)
-    ch = spark.createDataFrame([("a", 1, 1, False)], SCHEMA).withColumn("_op", F.lit("upsert"))
+    ch = spark.createDataFrame([("a", 1, 1, False)], SCHEMA)
     with pytest.raises(ValueError, match="key columns"):
         t.merge_cdc(spark, ch, epoch=0)
     assert t.current_snapshot() is None
@@ -196,6 +252,46 @@ def test_load_returns_consistent_pair(spark, tmp_path):
     assert t._version() == v2 + 1
 
 
+def test_failed_metadata_write_leaves_no_version(tmp_path, monkeypatch):
+    """A commit that fails while writing its metadata JSON leaves no
+    v{N+1}.json and no temp file behind, so a retry commits v{N+1}."""
+    schema = T.StructType([T.StructField("i", T.IntegerType())])
+    t = IceliteTable.create(str(tmp_path / "lin"), schema, key_cols=[], num_buckets=1)
+    v = t._version()
+
+    def boom(*a, **k):
+        raise OSError("disk full")
+
+    monkeypatch.setattr(icelite.json, "dump", boom)
+    with pytest.raises(OSError, match="disk full"):
+        t.append_rows_local([{"i": 1}])
+    monkeypatch.undo()
+    meta_dir = os.path.join(t.location, "metadata")
+    assert not os.path.exists(os.path.join(meta_dir, f"v{v + 1}.json"))
+    assert sorted(os.listdir(meta_dir)) == sorted(
+        [f"v{i}.json" for i in range(1, v + 1)] + ["version-hint.text"])
+    t.append_rows_local([{"i": 2}])
+    assert t._version() == v + 1
+    assert len(t.current_snapshot()["files"]) == 1
+
+
+def test_version_hint_is_only_a_hint(spark, tmp_path):
+    """A complete v{N+1}.json whose hint swing never happened (the writer
+    died after the commit point) is the current version: read() sees its
+    snapshot and the next commit is v{N+2}."""
+    t = make(spark, tmp_path, [("a", 1, 0, False)])
+    v = t._version()
+    t.append(spark.createDataFrame([("b", 2, 1, False)], SCHEMA))
+    hint = os.path.join(t.location, "metadata", "version-hint.text")
+    with open(hint, "w") as fh:
+        fh.write(str(v))                     # the hint lags one commit
+    assert t._version() == v + 1
+    assert sorted(r["k"] for r in t.read(spark).collect()) == ["a", "b"]
+    t.append(spark.createDataFrame([("c", 3, 2, False)], SCHEMA))
+    assert os.path.exists(os.path.join(t.location, "metadata", f"v{v + 2}.json"))
+    assert sorted(r["k"] for r in t.read(spark).collect()) == ["a", "b", "c"]
+
+
 def test_rollback_to_snapshot(spark, tmp_path):
     t = make(spark, tmp_path, [("a", 1, 0, False)])
     s1 = t.current_snapshot()["snapshot_id"]
@@ -240,9 +336,8 @@ def test_concurrent_merge_conflict_retry_exactly_once(spark, tmp_path):
     API then lands its epoch, and BOTH epochs' rows are present exactly
     once — no lost update, no double-apply. The loser leaves no files."""
     t = make(spark, tmp_path, [("a", 1, 0, False)])
-    ch_schema = T.StructType(SCHEMA.fields + [T.StructField("_op", T.StringType())])
-    ch1 = spark.createDataFrame([("x", 10, 5, False, "upsert")], ch_schema)
-    ch2 = spark.createDataFrame([("y", 20, 6, False, "upsert")], ch_schema)
+    ch1 = spark.createDataFrame([("x", 10, 5, False)], SCHEMA)
+    ch2 = spark.createDataFrame([("y", 20, 6, False)], SCHEMA)
 
     loser = IceliteTable(t.location)
     stale = loser._load()                    # loser reads (meta, version) first
@@ -348,8 +443,7 @@ def test_one_key_merge_rewrites_one_bucket_file(spark, tmp_path):
     digests = {p: digest(p) for p in files_before}
     bucket = spark.createDataFrame([("k7",)], "k string") \
         .select(t._bucket_expr(t.metadata())).first()[0]
-    ch_schema = "k string, v int, _seq long, _deleted boolean, _op string"
-    change = spark.createDataFrame([("k7", 777, 5, False, "upsert")], ch_schema)
+    change = spark.createDataFrame([("k7", 777, 5, False)], SCHEMA)
     assert t.merge_cdc(spark, change, epoch=0)["applied"]
 
     snap = t.current_snapshot()
@@ -396,9 +490,7 @@ def test_sub_splits_self_derived_pruning_and_legacy_files(spark, tmp_path, sub_s
     # a key of the slot-less file, so that file's bucket is the touched one
     key = spark.read.parquet(os.path.join(t.location, files[0]["path"])).first()["k"]
     b = files[0]["bucket"]
-    ch_schema = "k string, v int, _seq long, _deleted boolean, _op string"
-    t.merge_cdc(spark, spark.createDataFrame([(key, 999, 9, False, "upsert")], ch_schema),
-                epoch=0)
+    t.merge_cdc(spark, spark.createDataFrame([(key, 999, 9, False)], SCHEMA), epoch=0)
     snap = t.current_snapshot()
     after = {f["path"]: f for f in snap["files"]}
     assert by_bucket[b].isdisjoint(after)
@@ -422,8 +514,7 @@ def test_merge_cdc_routes_every_row_to_its_bucket(spark, tmp_path):
     t.overwrite(spark.createDataFrame([(f"k{i}", 0, 0, False) for i in range(40)], SCHEMA))
     old_paths = {f["path"] for f in t.current_snapshot()["files"]}
     changes = spark.createDataFrame(
-        [(f"k{i}", s, s, False) for i in range(0, 60, 3) for s in (1, 2)], SCHEMA) \
-        .withColumn("_op", F.lit("upsert"))
+        [(f"k{i}", s, s, False) for i in range(0, 60, 3) for s in (1, 2)], SCHEMA)
     t.merge_cdc(spark, changes, epoch=0)
     meta = t.metadata()
     files = t.current_snapshot()["files"]
@@ -445,8 +536,8 @@ def test_merge_group_kernel_is_retry_safe_and_resolves_lww(tmp_path):
     """The merge kernel on plain pyarrow tables, no Spark. Run twice on the
     same input (a retried task), it leaves one file and returns the same
     entry. Per key the highest seq wins over changes plus the stored file,
-    the stored row wins a tie, a tombstone is kept and a winning delete
-    removes the row. Old-schema target files bind by field id."""
+    the stored row wins a tie and a tombstone is kept as an ordinary row.
+    Old-schema target files bind by field id."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -457,19 +548,17 @@ def test_merge_group_kernel_is_retry_safe_and_resolves_lww(tmp_path):
            {"id": 5, "name": "extra", "type": "string"}]
     target = os.path.join(str(tmp_path), "old.parquet")
     pq.write_table(pa.table({
-        "k": ["tie", "multi", "tomb", "gone", "kept"],
-        "val": pa.array([1, 1, 1, 1, 1], pa.int32()),
-        "_seq": [5, 5, 5, 5, 5], "_deleted": [False] * 5}), target)
+        "k": ["tie", "multi", "tomb", "kept"],
+        "val": pa.array([1, 1, 1, 1], pa.int32()),
+        "_seq": [5, 5, 5, 5], "_deleted": [False] * 4}), target)
     changes = pa.table({
-        "k": ["tie", "multi", "multi", "multi", "tomb", "gone", "new"],
-        "v": [2, 7, 9, 8, 3, 4, 6],
-        "_seq": [5, 7, 9, 8, 6, 6, 1],
-        "_deleted": [False, False, False, False, True, False, False],
-        "extra": ["x", None, "nine", None, None, None, "n"],
-        "_op": ["upsert", "upsert", "upsert", "upsert", "upsert", "delete", "upsert"]})
+        "k": ["tie", "multi", "multi", "multi", "tomb", "new"],
+        "v": [2, 7, 9, 8, 3, 6],
+        "_seq": [5, 7, 9, 8, 6, 1],
+        "_deleted": [False, False, False, False, True, False],
+        "extra": ["x", None, "nine", None, None, "n"]})
     spec = {"location": str(tmp_path), "write_id": "w1", "epoch": 3, "cap": 1 << 30,
-            "num_buckets": 4, "keys": ["k"], "seq_col": "_seq", "op_col": "_op",
-            "fields": cur, "schema_id": 1, "schemas": {0: old, 1: cur},
+            "num_buckets": 4, "keys": ["k"], "fields": cur, "schema_id": 1, "schemas": {0: old, 1: cur},
             "files": {2: [(target, 0)]}}
     first = merge_group(changes, 2, spec)
     second = merge_group(changes, 2, spec)
@@ -489,9 +578,6 @@ def test_merge_group_kernel_is_retry_safe_and_resolves_lww(tmp_path):
         {"k": "tie", "v": 1, "_seq": 5, "_deleted": False, "extra": None},
         {"k": "tomb", "v": 3, "_seq": 6, "_deleted": True, "extra": None},
     ]
-    # a bucket whose every row is deleted writes no file
-    gone = merge_group(changes.slice(5, 1), 3, {**spec, "files": {}})
-    assert gone["path"] is None and gone["record_count"] == 0
 
 
 def test_merge_type_round_trip_through_arrow(spark, tmp_path):
@@ -528,16 +614,16 @@ def test_merge_type_round_trip_through_arrow(spark, tmp_path):
     def cur(r, note=None):
         return r + (note,)
 
-    ch_schema = T.StructType(t.schema_struct().fields + [T.StructField("_op", T.StringType())])
+    tomb = row("k2", 2, 5)[:-1] + (True, None)
     t.merge_cdc(spark, spark.createDataFrame(
-        [cur(row("k1", 21, 5), "upd") + ("upsert",), cur(row("k9", 9, 5), "new") + ("upsert",),
-         cur(row("k2", 2, 5)) + ("delete",)], ch_schema), epoch=0)
+        [cur(row("k1", 21, 5), "upd"), cur(row("k9", 9, 5), "new"), tomb],
+        t.schema_struct()), epoch=0)
     t.merge_cdc(spark, spark.createDataFrame(
-        [cur(row("k3", 33, 6), "again") + ("upsert",)], ch_schema), epoch=1)
+        [cur(row("k3", 33, 6), "again")], t.schema_struct()), epoch=1)
 
     want = {f"k{i}": cur(row(f"k{i}", i, 0)) for i in (0, 4, 5, 6, 7)}
     want.update({"k1": cur(row("k1", 21, 5), "upd"), "k9": cur(row("k9", 9, 5), "new"),
-                 "k3": cur(row("k3", 33, 6), "again")})
+                 "k3": cur(row("k3", 33, 6), "again"), "k2": tomb})
 
     def check():
         df = t.read(spark)
@@ -567,13 +653,12 @@ def test_read_changes_cow_diff(spark, tmp_path):
             for r in t.read_changes(spark, from_snapshot_id=None).collect()}
     assert init == {"a": "upsert", "b": "upsert", "z": "upsert"}
 
-    ch_schema = T.StructType(SCHEMA.fields + [T.StructField("_op", T.StringType())])
     t.merge_cdc(spark, spark.createDataFrame(
-        [("a", 10, 9, False, "upsert"),      # update
-         ("b", 0, 8, False, "delete"),       # delete
-         ("c", 7, 8, False, "upsert"),       # insert
-         ("z", 9, 4, False, "upsert")],      # LWW loser → NOT a change
-        ch_schema), epoch=0)
+        [("a", 10, 9, False),      # update
+         ("b", 0, 8, True),        # delete: a tombstone
+         ("c", 7, 8, False),       # insert
+         ("z", 9, 4, False)],      # LWW loser → NOT a change
+        SCHEMA), epoch=0)
     s1 = t.current_snapshot()["snapshot_id"]
 
     got = {r["k"]: (r["_change_type"], r["v"])
@@ -587,6 +672,26 @@ def test_read_changes_cow_diff(spark, tmp_path):
         t.read_changes(spark, from_snapshot_id=10**9)
 
 
+def test_read_changes_loads_metadata_once(spark, tmp_path, monkeypatch):
+    """One read_changes poll loads metadata once, so both sides of its diff
+    are projected to the same schema."""
+    t = make(spark, tmp_path, [("a", 1, 5, False), ("b", 2, 5, False)])
+    s0 = t.current_snapshot()["snapshot_id"]
+    t.merge_cdc(spark, spark.createDataFrame([("a", 3, 9, False)], SCHEMA), epoch=0)
+    loads = []
+    real = IceliteTable._load
+
+    def counting(self):
+        loads.append(1)
+        return real(self)
+
+    monkeypatch.setattr(IceliteTable, "_load", counting)
+    changes = t.read_changes(spark, from_snapshot_id=s0)
+    assert len(loads) == 1
+    monkeypatch.undo()
+    assert [(r["k"], r["v"], r["_change_type"]) for r in changes.collect()] == [("a", 3, "upsert")]
+
+
 def test_read_changes_across_compaction_and_pruning(spark, tmp_path):
     """Changelog across merges + compaction: a compaction rewrite between
     the snapshots is content-neutral and contributes no change rows. Also
@@ -596,17 +701,14 @@ def test_read_changes_across_compaction_and_pruning(spark, tmp_path):
     t = make(spark, tmp_path, [("a", 1, 5, False), ("b", 2, 5, False),
                                ("q", 3, 5, False)])
     s0 = t.current_snapshot()["snapshot_id"]
-    ch_schema = T.StructType(SCHEMA.fields + [T.StructField("_op", T.StringType())])
     t.merge_cdc(spark, spark.createDataFrame(
-        [("a", 11, 9, False, "upsert"), ("n", 5, 9, False, "upsert")],
-        ch_schema), epoch=0)
+        [("a", 11, 9, False), ("n", 5, 9, False)], SCHEMA), epoch=0)
     pre = t.current_snapshot()["snapshot_id"]
     t.compact(spark)
     post = t.current_snapshot()["snapshot_id"]
     # compaction rewrote every file, yet the diff across it is empty
     assert t.read_changes(spark, from_snapshot_id=pre, to_snapshot_id=post).count() == 0
-    t.merge_cdc(spark, spark.createDataFrame(
-        [("b", 0, 10, False, "delete")], ch_schema), epoch=1)
+    t.merge_cdc(spark, spark.createDataFrame([("b", 0, 10, True)], SCHEMA), epoch=1)
     s2 = t.current_snapshot()["snapshot_id"]
 
     got = {r["k"]: (r["_change_type"], r["v"])
