@@ -1658,7 +1658,7 @@ def cdc_stream_final_state(spark, sf_dir):
         eng.bootstrap(spark, spark.read.parquet(os.path.join(fix, "base.parquet")))
         q = eng.run_stream(
             spark, os.path.join(fix, "events"), os.path.join(tmp, "ckpt"),
-            watermark_delay="1000 hours", max_files_per_trigger=1,
+            late_delay_seconds=3_600_000, max_files_per_trigger=1,
             available_now=True,
         )
         q.awaitTermination()
@@ -1744,7 +1744,7 @@ def cdc_stream_lineage_drops(spark, sf_dir):
         eng.bootstrap(spark, spark.read.parquet(os.path.join(fix, "base.parquet")))
         q = eng.run_stream(
             spark, os.path.join(fix, "events"), os.path.join(tmp, "ckpt"),
-            watermark_delay="600 seconds", max_files_per_trigger=1,
+            late_delay_seconds=600, max_files_per_trigger=1,
             available_now=True,
         )
         q.awaitTermination()

@@ -40,16 +40,6 @@ def get_spark(
         .config("spark.hadoop.mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
         .config("spark.hadoop.parquet.summary.metadata.level", "NONE")
     )
-    # JVM-launch-time knobs a cluster would pass via spark-submit: GC choice /
-    # flags for the driver JVM (local mode: the executor JVM too) and the
-    # shuffle/spill scratch dirs. Both must be set before the JVM exists, so
-    # they ride env vars rather than post-hoc conf.set.
-    java_opts = os.environ.get("SPARK_GRAFT_DRIVER_JAVA_OPTS")
-    if java_opts:
-        builder = builder.config("spark.driver.extraJavaOptions", java_opts)
-    local_dir = os.environ.get("SPARK_GRAFT_LOCAL_DIR")
-    if local_dir:
-        builder = builder.config("spark.local.dir", local_dir)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

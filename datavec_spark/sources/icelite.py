@@ -119,6 +119,13 @@ def schema_to_struct(fields: list[dict]) -> T.StructType:
     )
 
 
+def is_live() -> F.Column:
+    """The one visibility rule: a row is live unless its `_deleted`
+    tombstone flag is true; a null flag (e.g. a change row that left the
+    column out) is live."""
+    return ~F.coalesce(F.col("_deleted"), F.lit(False))
+
+
 # ---------------------------------------------------------------------------
 # table
 # ---------------------------------------------------------------------------
@@ -393,8 +400,8 @@ class IceliteTable:
         {'upsert', 'delete'} — upserts carry the new image, deletes the
         last visible old image (Kafka-compacted-topic semantics; an
         update is an upsert, not a delete+insert pair). A row is visible
-        unless its `_deleted` tombstone flag is true; a table without a
-        `_deleted` column has only visible rows.
+        when `is_live()`; a table without a `_deleted` column has only
+        visible rows.
 
         Scale path: a key's versions never leave its bucket, so the diff
         is pruned to CANDIDATE BUCKETS — buckets of manifest entries added
@@ -409,28 +416,30 @@ class IceliteTable:
         from_snapshot_id=None means "initial load": every visible row of
         the target snapshot as an upsert. Schema-only evolution commits no
         snapshot and therefore emits no change rows (a schema change is
-        not a row change). Raises ValueError on snapshot ids that are
-        unknown (e.g. expired)."""
+        not a row change). A table with no snapshot yet has an empty
+        changelog. Raises ValueError on snapshot ids that are unknown
+        (e.g. expired)."""
         from functools import reduce as _reduce
 
         meta = self.metadata()
         snaps = {s["snapshot_id"]: s for s in meta["snapshots"]}
-        if to_snapshot_id is None:
-            to_snapshot_id = meta["current_snapshot_id"]
-        if to_snapshot_id not in snaps:
-            raise ValueError(f"unknown to_snapshot_id {to_snapshot_id} (expired?)")
         cols = [f["name"] for f in self._fields(meta)]
         keys = self.key_cols(meta)
         out_struct = T.StructType(
             schema_to_struct(self._fields(meta)).fields
             + [T.StructField("_change_type", T.StringType())]
         )
+        if to_snapshot_id is None:
+            to_snapshot_id = meta["current_snapshot_id"]
+            if to_snapshot_id is None and from_snapshot_id is None:
+                # nothing committed yet
+                return spark.createDataFrame([], out_struct)
+        if to_snapshot_id not in snaps:
+            raise ValueError(f"unknown to_snapshot_id {to_snapshot_id} (expired?)")
 
         def visible(files: list[dict]) -> DataFrame:
             df = self._read_entries(spark, meta, files)
-            if "_deleted" in cols:
-                return df.where(~F.coalesce(F.col("_deleted"), F.lit(False)))
-            return df
+            return df.where(is_live()) if "_deleted" in cols else df
 
         new_files = snaps[to_snapshot_id]["files"]
         if from_snapshot_id is None:
@@ -832,10 +841,11 @@ class IceliteTable:
 
     def compact(self, spark: SparkSession, drop_tombstones_below_seq: int | None = None) -> dict:
         """Rewrite the table's current snapshot: coalesce each bucket's file
-        set to one file and physically drop tombstones (`_deleted` rows)
-        whose `_seq` is below the given horizon (safe once the horizon is
-        older than any event the stream can still deliver — i.e. below the
-        watermark's seq frontier); a table without `_deleted` drops nothing.
+        set to one file and physically drop tombstones (rows not
+        `is_live()`) whose `_seq` is below the given horizon (safe once
+        the horizon is older than any event the stream can still deliver —
+        i.e. below the watermark's seq frontier); a table without
+        `_deleted` drops nothing.
         The Iceberg analog is rewrite_data_files + a delete-cleanup pass.
         At 10^10 events this is the job that keeps merge target reads
         proportional to live data rather than to delete history. Merges do
@@ -846,7 +856,7 @@ class IceliteTable:
         cur = self._current(meta)
         df = self._read_entries(spark, meta, cur["files"] if cur else [])
         if drop_tombstones_below_seq is not None and "_deleted" in df.columns:
-            df = df.where(~(F.col("_deleted") & (F.col("_seq") < drop_tombstones_below_seq)))
+            df = df.where(is_live() | (F.col("_seq") >= drop_tombstones_below_seq))
         with self._staged() as write_id:
             new_files = self._write_data_files(df, meta, write_id)
             snap_id = self._commit_snapshot(

@@ -42,7 +42,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from datavec_spark.sources.icelite import IceliteTable, bucket_expr, type_to_spark
+from datavec_spark.sources.icelite import IceliteTable, bucket_expr, is_live, type_to_spark
 
 EVENT_SPARK_SCHEMA = T.StructType(
     [
@@ -83,35 +83,6 @@ LINEAGE_SCHEMA = T.StructType(
         T.StructField("snapshot_id", T.LongType()),
     ]
 )
-
-
-def _delay_to_seconds(delay: str) -> int:
-    """Parse a Spark interval string ('600 seconds', '500 milliseconds',
-    '1 week', '1 hour 30 minutes') into whole seconds (floor) — keeps the
-    apply-stage lateness SLA numerically aligned with the watermark delay
-    the stream declares. Accepts every unit Spark's watermark parser does,
-    including multi-unit forms; raises a descriptive ValueError otherwise
-    (r6 advice: the two-token-only parser crashed on previously-valid
-    Spark interval strings with KeyError/unpack errors)."""
-    mult = {"microsecond": 1e-6, "millisecond": 1e-3, "second": 1,
-            "minute": 60, "hour": 3600, "day": 86400, "week": 604800}
-    parts = delay.strip().split()
-    if not parts or len(parts) % 2 != 0:
-        raise ValueError(
-            f"unsupported interval {delay!r}: expected '<n> <unit>' pairs "
-            f"(units: {', '.join(sorted(mult))}, plural accepted)")
-    total = 0.0
-    for i in range(0, len(parts), 2):
-        n, unit = parts[i], parts[i + 1].rstrip("s").lower()
-        if unit not in mult:
-            raise ValueError(
-                f"unsupported interval unit {parts[i + 1]!r} in {delay!r} "
-                f"(units: {', '.join(sorted(mult))}, plural accepted)")
-        try:
-            total += float(n) * mult[unit]
-        except ValueError:
-            raise ValueError(f"bad interval quantity {n!r} in {delay!r}")
-    return int(total)
 
 
 def content_expr(repo: F.Column, path: F.Column, seq: F.Column) -> F.Column:
@@ -175,13 +146,11 @@ class CdcEngine:
     def read_current(self, spark: SparkSession) -> DataFrame:
         """User-facing view of the table: live rows, no bookkeeping columns."""
         t = self.table()
-        return t.read(spark).where(~F.col("_deleted")).drop("_seq", "_deleted")
+        return t.read(spark).where(is_live()).drop("_seq", "_deleted")
 
     def read_lineage(self, spark: SparkSession) -> DataFrame:
         lin = self.lineage_table()
         df = lin.read(spark)
-        if "_deleted" in df.columns:
-            df = df.where(~F.col("_deleted")).drop("_seq", "_deleted")
         # upgrade path (r6 advice #4): a lineage table created before a
         # LINEAGE_SCHEMA column existed (e.g. dropped_late) stores the old
         # schema; null-fill the missing columns so readers written against
@@ -410,7 +379,7 @@ class CdcEngine:
         spark: SparkSession,
         events_dir: str,
         checkpoint_dir: str,
-        watermark_delay: str = "120 minutes",
+        late_delay_seconds: int = 7200,
         max_files_per_trigger: int | None = None,
         available_now: bool = True,
         transform_chain=None,
@@ -421,7 +390,7 @@ class CdcEngine:
         The stream is stateless: no dedup stage, no state store. Each
         micro-batch goes to apply_batch(drop_late=True) in foreachBatch.
 
-        CONTRACT — `watermark_delay` is the stream's lateness SLA, and the
+        CONTRACT — `late_delay_seconds` is the stream's lateness SLA, and the
         `cdc.max-ts-us` fence is the watermark: an event older than (max
         event time of all prior epochs − delay) is DROPPED and counted per
         bucket in lineage's `dropped_late` (lineage_drop_totals). Size the
@@ -447,7 +416,7 @@ class CdcEngine:
             reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
         return self.run_stream_df(
             spark, reader.parquet(events_dir), checkpoint_dir,
-            watermark_delay=watermark_delay, available_now=available_now,
+            late_delay_seconds=late_delay_seconds, available_now=available_now,
             transform_chain=transform_chain,
         )
 
@@ -456,7 +425,7 @@ class CdcEngine:
         spark: SparkSession,
         events_stream: DataFrame,
         checkpoint_dir: str,
-        watermark_delay: str = "120 minutes",
+        late_delay_seconds: int = 7200,
         available_now: bool = True,
         transform_chain=None,
     ):
@@ -465,12 +434,11 @@ class CdcEngine:
         rate-source adapter, socket...) gets the same stateless,
         watermark-fenced, epoch-fenced merge pipeline (see run_stream). The
         file form (run_stream) is sugar over this."""
-        late_delay = _delay_to_seconds(watermark_delay)
 
         def process(df: DataFrame, batch_id: int):
             self.apply_batch(spark, df, epoch=batch_id,
                              transform_chain=transform_chain,
-                             late_delay_seconds=late_delay,
+                             late_delay_seconds=late_delay_seconds,
                              drop_late=True)
 
         writer = (

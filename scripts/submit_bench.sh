@@ -1,7 +1,8 @@
 #!/usr/bin/env bash
 # Run the benchmark via spark-submit --py-files (the cluster-shaped launch
 # path per BASELINE.json): package the engine as a zip, submit bench.py.
-# Usage: scripts/submit_bench.sh [--scaling] [extra spark-submit confs...]
+# Usage: scripts/submit_bench.sh [--scaling | --plans OUT_DIR [query ...]]
+# (the arguments go to bench.py, which refuses any others)
 set -euo pipefail
 cd "$(dirname "$0")/.."
 

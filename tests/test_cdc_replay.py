@@ -24,7 +24,6 @@ from datavec_spark.streaming.replay import (
     EVENT_SPARK_SCHEMA,
     LINEAGE_SCHEMA,
     CdcEngine,
-    _delay_to_seconds,
     content_expr,
 )
 
@@ -355,7 +354,7 @@ def test_stateless_stream_drops_far_late_dups_into_lineage(spark, tmp_path):
     eng = CdcEngine(str(tmp_path / "repos"), num_buckets=4)
     eng.bootstrap(spark, base_df(spark, base))
     q = eng.run_stream(spark, events_dir, str(tmp_path / "ckpt"),
-                       watermark_delay="10 seconds", max_files_per_trigger=1)
+                       late_delay_seconds=10, max_files_per_trigger=1)
     q.awaitTermination()
 
     drops = eng.lineage_drop_totals(spark)
@@ -478,20 +477,23 @@ def test_run_stream_rejects_stateful_dedup(spark, tmp_path):
                        dedup=True)
 
 
-def test_delay_to_seconds_interval_forms():
-    assert _delay_to_seconds("600 seconds") == 600
-    assert _delay_to_seconds("120 minutes") == 7200
-    assert _delay_to_seconds("2 hours") == 7200
-    assert _delay_to_seconds("1 day") == 86400
-    # previously-crashing Spark-valid forms (r6 advice #1)
-    assert _delay_to_seconds("500 milliseconds") == 0
-    assert _delay_to_seconds("1500 milliseconds") == 1
-    assert _delay_to_seconds("1 week") == 604800
-    assert _delay_to_seconds("1 hour 30 minutes") == 5400
-    with pytest.raises(ValueError, match="unsupported interval unit"):
-        _delay_to_seconds("3 fortnights")
-    with pytest.raises(ValueError, match="unsupported interval"):
-        _delay_to_seconds("90")
+def test_null_deleted_flag_is_live_in_current_view_and_changelog(spark, tmp_path):
+    """A merge_cdc caller whose change rows leave out `_deleted` stores a
+    null flag; every reader treats that row as live."""
+    eng = CdcEngine(str(tmp_path / "repos"), num_buckets=2)
+    eng.bootstrap(spark, spark.createDataFrame(
+        [("r", "p", "c0", "py", "v0")],
+        "repo string, path string, commit string, lang string, content string"))
+    t = eng.table()
+    s0 = t.current_snapshot()["snapshot_id"]
+    t.merge_cdc(spark, spark.createDataFrame(
+        [("r", "q", "c1", "py", "v1", 1)],
+        "repo string, path string, commit string, lang string, content string, _seq long"),
+        epoch=0)
+    assert [r["_deleted"] for r in t.read(spark).where("path = 'q'").collect()] == [None]
+    assert sorted(r["path"] for r in eng.read_current(spark).collect()) == ["p", "q"]
+    changes = t.read_changes(spark, from_snapshot_id=s0).collect()
+    assert [(r["path"], r["_change_type"]) for r in changes] == [("q", "upsert")]
 
 
 def test_read_lineage_null_fills_pre_upgrade_schema(spark, tmp_path):

@@ -230,6 +230,17 @@ def test_compact_drops_old_tombstones_and_coalesces(spark, tmp_path):
     assert t.read(spark, snapshot_id=prev).count() == 4
 
 
+def test_compact_keeps_null_flag_rows_below_horizon(spark, tmp_path):
+    """A null `_deleted` flag is live: compaction drops only true
+    tombstones below the horizon."""
+    t = IceliteTable.create(str(tmp_path / "t"), SCHEMA, key_cols=["k"], num_buckets=1)
+    t.overwrite(spark.createDataFrame(
+        [("live", 0, 1, None), ("tomb", 0, 2, True), ("ok", 0, 3, False)], SCHEMA))
+    t.compact(spark, drop_tombstones_below_seq=10)
+    rows = {r["k"]: (r["_seq"], r["_deleted"]) for r in t.read(spark).collect()}
+    assert rows == {"live": (1, None), "ok": (3, False)}
+
+
 def test_load_returns_consistent_pair(spark, tmp_path):
     """Regression for the round-1 commit race: metadata() and _version()
     read separately could pair STALE metadata with a NEWER version. _load()
@@ -670,6 +681,17 @@ def test_read_changes_cow_diff(spark, tmp_path):
     assert t.read_changes(spark, from_snapshot_id=s1, to_snapshot_id=s1).count() == 0
     with pytest.raises(ValueError, match="unknown"):
         t.read_changes(spark, from_snapshot_id=10**9)
+
+
+def test_read_changes_before_first_snapshot_is_empty(spark, tmp_path):
+    t = IceliteTable.create(str(tmp_path / "t"), SCHEMA, key_cols=["k"], num_buckets=2)
+    got = t.read_changes(spark)
+    assert got.count() == 0
+    assert got.columns == ["k", "v", "_seq", "_deleted", "_change_type"]
+    with pytest.raises(ValueError, match="unknown to_snapshot_id 12345"):
+        t.read_changes(spark, to_snapshot_id=12345)
+    with pytest.raises(ValueError, match="unknown"):
+        t.read_changes(spark, from_snapshot_id=12345)
 
 
 def test_read_changes_loads_metadata_once(spark, tmp_path, monkeypatch):
