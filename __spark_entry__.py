@@ -20,6 +20,7 @@ import tempfile
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from datavec_spark.cache import track as _cache_track
 from pyspark.sql import functions as F
@@ -30,10 +31,27 @@ TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
 
 
+# path -> (st_mtime_ns, st_size, schema) of the last read of that path
+_SCHEMAS: dict[str, tuple[int, int, StructType]] = {}
+
+
+def _read(spark: SparkSession, path: str) -> DataFrame:
+    """Parquet read that knows its schema: inferring it from the footers is
+    a Spark job, so it is done once per file version (path, mtime, size)
+    and later reads pass the cached StructType."""
+    st = os.stat(path)
+    hit = _SCHEMAS.get(path)
+    if hit is not None and hit[:2] == (st.st_mtime_ns, st.st_size):
+        return spark.read.schema(hit[2]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[path] = (st.st_mtime_ns, st.st_size, df.schema)
+    return df
+
+
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # timestamps must mean the same thing in Spark and the DuckDB oracle
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    return _read(spark, os.path.join(sf_dir, f"{name}.parquet"))
 
 
 # ---------------------------------------------------------------------------
@@ -833,7 +851,7 @@ def doc_fingerprint_groups(spark, sf_dir):
     from datavec_spark.functions.dedup import near_dup_fingerprint
 
     fix = _ensure_dup_fixture()
-    d = spark.read.parquet(os.path.join(fix, "docs.parquet"))
+    d = _read(spark, os.path.join(fix, "docs.parquet"))
     return near_dup_fingerprint(d).select(
         "n_docs", "keep_id",
         F.concat_ws(",", F.col("member_ids")).alias("members"),
@@ -902,7 +920,7 @@ def exact_dup_docs(spark, sf_dir):
     from datavec_spark.functions.dedup import exact_duplicates
 
     fix = _ensure_dup_fixture()
-    d = spark.read.parquet(os.path.join(fix, "docs.parquet"))
+    d = _read(spark, os.path.join(fix, "docs.parquet"))
     return exact_duplicates(d).select(
         "content_sha", "n_dups", "keep_id",
         F.concat_ws(",", F.col("member_ids")).alias("members"),
@@ -985,7 +1003,7 @@ def pii_scrub_docs(spark, sf_dir):
     from datavec_spark.functions.text import pii_scrub
 
     fix = _ensure_pii_fixture()
-    d = spark.read.parquet(os.path.join(fix, "docs.parquet"))
+    d = _read(spark, os.path.join(fix, "docs.parquet"))
     return pii_scrub(d).select("doc_id", "text")
 
 
@@ -1000,7 +1018,7 @@ def dedup_lines_docs(spark, sf_dir):
     from datavec_spark.functions.text import dedup_lines
 
     fix = _ensure_pii_fixture()
-    d = spark.read.parquet(os.path.join(fix, "docs.parquet"))
+    d = _read(spark, os.path.join(fix, "docs.parquet"))
     return dedup_lines(d).select("doc_id", "text")
 
 
@@ -1055,8 +1073,9 @@ def minhash_lsh_docs(spark, sf_dir):
 
     d = _t(spark, sf_dir, "documents")
     path = os.path.join(_LSH_SIG_DIR, "minhash")
-    minhash_signatures(d, k=5, num_hashes=32).write.mode("overwrite").parquet(path)
-    sig = spark.read.parquet(path)
+    sig = minhash_signatures(d, k=5, num_hashes=32)
+    sig.write.mode("overwrite").parquet(path)
+    sig = spark.read.schema(sig.schema).parquet(path)
     return lsh_pairs_from_minhash(sig, num_hashes=32, bands=8, threshold=0.5)
 
 
@@ -1069,8 +1088,9 @@ def simhash_docs(spark, sf_dir):
 
     d = _t(spark, sf_dir, "documents")
     path = os.path.join(_LSH_SIG_DIR, "simhash")
-    simhash(d).write.mode("overwrite").parquet(path)
-    sig = spark.read.parquet(path)
+    sig = simhash(d)
+    sig.write.mode("overwrite").parquet(path)
+    sig = spark.read.schema(sig.schema).parquet(path)
     return simhash_pairs_from_signatures(sig, max_hamming=3, bands=4)
 
 
@@ -1245,7 +1265,7 @@ def label_cosine_allpairs_fixture(spark, sf_dir):
     means are ~0.99, far from any 4th-decimal boundary."""
     fix = _ensure_ivf_fixture()
     e = (
-        spark.read.parquet(os.path.join(fix, "clustered.parquet"))
+        _read(spark, os.path.join(fix, "clustered.parquet"))
         .select((F.col("vec_id") / 100).cast("int").alias("label"), "embedding")
     )
     return _label_cosine_identity(e)
@@ -1335,7 +1355,7 @@ def ann_ivf_recall(spark, sf_dir):
     from datavec_spark.functions.similarity import IvfIndex, cosine_topk, train_ivf_centroids
 
     fix = _ensure_ivf_fixture()
-    e = spark.read.parquet(os.path.join(fix, "clustered.parquet"))
+    e = _read(spark, os.path.join(fix, "clustered.parquet"))
     cents = train_ivf_centroids(e, n_centroids=12, iters=3)
     queries = [
         [float(x) for x in r["embedding"]]
@@ -1602,7 +1622,7 @@ def _cdc_replay_fixture(spark):
     fix = _ensure_cdc_fixture()
     tmp = tempfile.mkdtemp(prefix="cdc_entry_")
     eng = CdcEngine(os.path.join(tmp, "repos"), num_buckets=8)
-    eng.bootstrap(spark, spark.read.parquet(os.path.join(fix, "base.parquet")))
+    eng.bootstrap(spark, _read(spark, os.path.join(fix, "base.parquet")))
     chunks = sorted(_glob.glob(os.path.join(fix, "events", "events-*.parquet")))
     for epoch, p in enumerate(chunks):
         eng.apply_batch(spark, spark.read.schema(EVENT_SPARK_SCHEMA).parquet(p), epoch=epoch)
@@ -1655,7 +1675,7 @@ def cdc_stream_final_state(spark, sf_dir):
         fix = _ensure_cdc_fixture()
         tmp = tempfile.mkdtemp(prefix="cdc_stream_entry_")
         eng = CdcEngine(os.path.join(tmp, "repos"), num_buckets=8)
-        eng.bootstrap(spark, spark.read.parquet(os.path.join(fix, "base.parquet")))
+        eng.bootstrap(spark, _read(spark, os.path.join(fix, "base.parquet")))
         q = eng.run_stream(
             spark, os.path.join(fix, "events"), os.path.join(tmp, "ckpt"),
             late_delay_seconds=3_600_000, max_files_per_trigger=1,
@@ -1741,7 +1761,7 @@ def cdc_stream_lineage_drops(spark, sf_dir):
         fix = _ensure_cdc_fixture()
         tmp = tempfile.mkdtemp(prefix="cdc_drops_entry_")
         eng = CdcEngine(os.path.join(tmp, "repos"), num_buckets=8)
-        eng.bootstrap(spark, spark.read.parquet(os.path.join(fix, "base.parquet")))
+        eng.bootstrap(spark, _read(spark, os.path.join(fix, "base.parquet")))
         q = eng.run_stream(
             spark, os.path.join(fix, "events"), os.path.join(tmp, "ckpt"),
             late_delay_seconds=600, max_files_per_trigger=1,

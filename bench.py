@@ -391,6 +391,63 @@ def run_default():
     spark.stop()
 
 
+def scaling_artifact(trials: dict[int, list[dict]], lo: int, hi: int) -> dict:
+    """The scaling artifact from every trial's SCALING_RESULT dict, per
+    level. `events` is the count the workers replayed (the fixture's
+    re-deliveries included), which every rate divides; trials that
+    replayed different counts are not comparable and raise RuntimeError."""
+    every = [t for ts in trials.values() for t in ts]
+    events = {t["events"] for t in every} | {t["stream"]["events"] for t in every}
+    if len(events) != 1:
+        raise RuntimeError(f"scaling trials replayed different event counts: {sorted(events)}")
+    (n_events,) = events
+    batch = {c: min(ts, key=lambda t: t["wall_sec"]) for c, ts in trials.items()}
+    stream = {c: min((t["stream"] for t in ts), key=lambda s: s["wall_sec"])
+              for c, ts in trials.items()}
+
+    def efficiency(best: dict) -> float:
+        return round((best[hi]["events_per_sec"] / best[lo]["events_per_sec"]) / (hi / lo), 3)
+
+    return {
+        "metric": f"CDC replay scaling local[{lo}] -> local[{hi}]",
+        "events": n_events,
+        "levels": [lo, hi],
+        "trials": len(trials[lo]),
+        f"rate_local{lo}": batch[lo]["events_per_sec"],
+        f"rate_local{hi}": batch[hi]["events_per_sec"],
+        f"wall_local{lo}": batch[lo]["wall_sec"],
+        f"wall_local{hi}": batch[hi]["wall_sec"],
+        "scaling_efficiency": efficiency(batch),
+        "final_rows_equal": batch[lo]["final_rows"] == batch[hi]["final_rows"],
+        "final_checksum_equal": batch[lo]["final_checksum"] == batch[hi]["final_checksum"],
+        "final_rows": batch[hi]["final_rows"],
+        f"trial_walls_local{lo}": [t["wall_sec"] for t in trials[lo]],
+        f"trial_walls_local{hi}": [t["wall_sec"] for t in trials[hi]],
+        "streaming": {
+            f"rate_local{lo}": stream[lo]["events_per_sec"],
+            f"rate_local{hi}": stream[hi]["events_per_sec"],
+            f"wall_local{lo}": stream[lo]["wall_sec"],
+            f"wall_local{hi}": stream[hi]["wall_sec"],
+            "scaling_efficiency": efficiency(stream),
+            "triggers": stream[hi]["triggers"],
+            "rows_dropped_late": stream[hi]["rows_dropped_late"],
+            # both are checked per trial inside the worker (RuntimeError on
+            # violation) and recorded here as computed comparisons
+            "dup_redelivery_budget": stream[hi]["dup_redelivery_budget"],
+            "drops_within_dup_budget": all(
+                t["stream"]["rows_dropped_late"] <= t["stream"]["dup_redelivery_budget"]
+                for t in every),
+            "stream_matches_batch_both_levels": all(
+                (t["stream"]["final_checksum"], t["stream"]["final_rows"])
+                == (t["final_checksum"], t["final_rows"]) for t in every),
+            "final_checksum_equal": stream[lo]["final_checksum"] == stream[hi]["final_checksum"],
+            "final_rows": stream[hi]["final_rows"],
+            f"trial_walls_local{lo}": [t["stream"]["wall_sec"] for t in trials[lo]],
+            f"trial_walls_local{hi}": [t["stream"]["wall_sec"] for t in trials[hi]],
+        },
+    }
+
+
 def run_scaling():
     """Same CDC replay at N and 4N cores; efficiency evidence for the north
     rule's two-cluster-size criterion."""
@@ -434,53 +491,8 @@ def run_scaling():
     for _ in range(SCALE_TRIALS):
         for cores in (lo, hi):
             trials[cores].append(one_trial(cores))
-    batch = {c: min(ts, key=lambda t: t["wall_sec"]) for c, ts in trials.items()}
-    stream = {c: min((t["stream"] for t in ts), key=lambda s: s["wall_sec"])
-              for c, ts in trials.items()}
-    every_stream = [t["stream"] for ts in trials.values() for t in ts]
-
-    def efficiency(best: dict) -> float:
-        return round((best[hi]["events_per_sec"] / best[lo]["events_per_sec"]) / (hi / lo), 3)
-
-    out = {
-        "metric": f"CDC replay scaling local[{lo}] -> local[{hi}]",
-        "events": SCALE_EVENTS,
-        "levels": [lo, hi],
-        "trials": SCALE_TRIALS,
-        f"rate_local{lo}": batch[lo]["events_per_sec"],
-        f"rate_local{hi}": batch[hi]["events_per_sec"],
-        f"wall_local{lo}": batch[lo]["wall_sec"],
-        f"wall_local{hi}": batch[hi]["wall_sec"],
-        "scaling_efficiency": efficiency(batch),
-        "final_rows_equal": batch[lo]["final_rows"] == batch[hi]["final_rows"],
-        "final_checksum_equal": batch[lo]["final_checksum"] == batch[hi]["final_checksum"],
-        "final_rows": batch[hi]["final_rows"],
-        f"trial_walls_local{lo}": [t["wall_sec"] for t in trials[lo]],
-        f"trial_walls_local{hi}": [t["wall_sec"] for t in trials[hi]],
-        "streaming": {
-            f"rate_local{lo}": stream[lo]["events_per_sec"],
-            f"rate_local{hi}": stream[hi]["events_per_sec"],
-            f"wall_local{lo}": stream[lo]["wall_sec"],
-            f"wall_local{hi}": stream[hi]["wall_sec"],
-            "scaling_efficiency": efficiency(stream),
-            "triggers": stream[hi]["triggers"],
-            "rows_dropped_late": stream[hi]["rows_dropped_late"],
-            # both are checked per trial inside the worker (RuntimeError on
-            # violation) and recorded here as computed comparisons
-            "dup_redelivery_budget": stream[hi]["dup_redelivery_budget"],
-            "drops_within_dup_budget": all(
-                s["rows_dropped_late"] <= s["dup_redelivery_budget"] for s in every_stream),
-            "stream_matches_batch_both_levels": all(
-                (t["stream"]["final_checksum"], t["stream"]["final_rows"])
-                == (t["final_checksum"], t["final_rows"])
-                for ts in trials.values() for t in ts),
-            "final_checksum_equal": stream[lo]["final_checksum"] == stream[hi]["final_checksum"],
-            "final_rows": stream[hi]["final_rows"],
-            f"trial_walls_local{lo}": [t["stream"]["wall_sec"] for t in trials[lo]],
-            f"trial_walls_local{hi}": [t["stream"]["wall_sec"] for t in trials[hi]],
-        },
-        "host": host_block(REPO, CPUS, heap_gb(), load0, ticks0),
-    }
+    out = scaling_artifact(trials, lo, hi)
+    out["host"] = host_block(REPO, CPUS, heap_gb(), load0, ticks0)
     print(json.dumps(out))
     os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
     with open(os.path.join(REPO, "BENCH", "scaling_latest.json"), "w") as fh:

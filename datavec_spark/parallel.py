@@ -29,7 +29,15 @@ def ensure_parallelism(df: DataFrame, *part_cols: str) -> DataFrame:
     deterministic hash of those columns (safe under task retry — guide
     §2.5: keyless round-robin repartition of nondeterministic input can
     duplicate/lose rows on fetch failure, SPARK-38388); without, plain
-    round-robin."""
+    round-robin.
+
+    Reading the planned partition count plans the query and generates
+    code for its scan: 26-100 ms per call (median about 40 ms) in warm
+    passes of ngram_jaccard_docs and minhash_lsh_docs at sf0.001 and
+    sf0.01 on a 4-core host, about 3% of either query's warm time. The
+    call stays because the repartition it adds is what spreads a
+    single-row-group input over the cores; without it those plans lose
+    an exchange and their heavy stage runs as one task."""
     sc = df.sparkSession.sparkContext
     target = sc.defaultParallelism
     try:

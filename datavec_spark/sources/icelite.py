@@ -503,7 +503,9 @@ class IceliteTable:
         """Read specific manifest entries projected to the current schema
         (empty entry list -> empty DataFrame). Files are grouped by the
         schema they were written with; each group is projected by field id
-        (rename aliased, widen cast, added null-filled), then unioned."""
+        (rename aliased, widen cast, added null-filled), then unioned.
+        Each group is read with the schema its files were written with, so
+        building the DataFrame runs no footer-inference job."""
         self._refuse_delta(files)
         cur_fields = self._fields(meta)
         if not files:
@@ -513,8 +515,9 @@ class IceliteTable:
             by_sid.setdefault(f["schema_id"], []).append(os.path.join(self.location, f["path"]))
         parts: list[DataFrame] = []
         for sid, paths in by_sid.items():
-            df = spark.read.parquet(*paths)
-            old_fields = {f["id"]: f for f in self._fields(meta, sid)}
+            written = self._fields(meta, sid)
+            df = spark.read.schema(schema_to_struct(written)).parquet(*paths)
+            old_fields = {f["id"]: f for f in written}
             cols = []
             for cf in cur_fields:
                 of = old_fields.get(cf["id"])

@@ -40,7 +40,7 @@ def norm_rows(cols, rows):
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
-    spark = get_spark("oracle-check", master="local[8]", shuffle_partitions=8)
+    spark = get_spark("oracle-check", shuffle_partitions=8)
     con = duckdb.connect()
     for t in entry_mod.TABLES:
         con.execute(
