@@ -19,16 +19,16 @@ catalog could replace 1:1:
   rename changes only the display name, widen (int→long, float→double)
   casts old files on read, add fills nulls. Old data files remain valid
   (Iceberg: schema-id per data file + name mapping).
-- **Bucket-partitioned copy-on-write MERGE**: the table is hash-bucketed
-  on its key columns, and the bucket is the one unit of files, merges and
-  lineage; a merge rewrites only the buckets containing changed keys and
-  carries every other data file forward untouched. The merge is one Spark
-  query: only the changes are shuffled, by bucket, and one Arrow task per
-  bucket reads that bucket's target file(s) with pyarrow, resolves
-  last-writer-wins by seq and writes one key-sorted file, so the target is
-  never shuffled (Iceberg COW with `bucket(N, key)` partitioning rewrites
-  the same files). A table that needs smaller rewrite files uses more
-  buckets.
+- **Bucket-partitioned copy-on-write MERGE**: every table is hash-bucketed
+  on its key columns (at least one), and the bucket is the one unit of
+  files, merges and lineage; a merge rewrites only the buckets containing
+  changed keys and carries every other data file forward untouched. The
+  merge is one Spark query: only the changes are shuffled, by bucket, and
+  one Arrow task per bucket reads that bucket's target file(s) with
+  pyarrow, resolves last-writer-wins by seq and writes one key-sorted
+  file, so the target is never shuffled (Iceberg COW with `bucket(N, key)`
+  partitioning rewrites the same files). A table that needs smaller
+  rewrite files uses more buckets.
 - **One CDC row contract**: a merged table carries two fixed bookkeeping
   columns, `_seq` (last-writer-wins order) and `_deleted` (tombstone). A
   merge's change rows are full-row images in the current schema; a delete
@@ -119,6 +119,18 @@ def schema_to_struct(fields: list[dict]) -> T.StructType:
     )
 
 
+def schema_to_arrow(fields: list[dict]) -> pa.Schema:
+    return pa.schema([(f["name"], type_to_arrow(f["type"])) for f in fields])
+
+
+def bind_names(fields: list[dict], written: list[dict]) -> list[str | None]:
+    """The one field-id binding rule: per current field, the name its id
+    was written under, or None if added since. Readers alias that name to
+    the current one (rename), cast it (widen) and fill None with nulls (add)."""
+    names = {f["id"]: f["name"] for f in written}
+    return [names.get(f["id"]) for f in fields]
+
+
 def is_live() -> F.Column:
     """The one visibility rule: a row is live unless its `_deleted`
     tombstone flag is true; a null flag (e.g. a change row that left the
@@ -141,9 +153,8 @@ def bucket_expr(keys: list[F.Column], num_buckets: int) -> F.Column:
 
     xxhash64 over ALL key columns (not a string-concatenated key — the
     reference's string keys, MapToPairForReducerFunction.java:30-53, are a
-    collision + skew hazard this avoids); pmod keeps it non-negative."""
-    if not keys:
-        return F.lit(0)
+    collision + skew hazard this avoids); pmod keeps it non-negative.
+    Every table has at least one key column."""
     return F.pmod(F.xxhash64(*keys), F.lit(num_buckets)).cast("int")
 
 
@@ -151,6 +162,29 @@ def bucket_expr(keys: list[F.Column], num_buckets: int) -> F.Column:
 MERGE_ENTRY = pa.schema([("path", pa.string()), ("bucket", pa.int32()),
                          ("schema_id", pa.int32()), ("record_count", pa.int64()),
                          ("file_size_in_bytes", pa.int64())])
+
+
+def data_file_entry(location: str, rel: str, bucket: int, schema_id: int) -> dict:
+    """The manifest entry of every data file, whoever wrote it, with
+    Iceberg's data_file counts read from its footer and the file system."""
+    path = os.path.join(location, rel)
+    return {"path": rel, "bucket": bucket, "schema_id": schema_id,
+            "record_count": pq.read_metadata(path).num_rows,
+            "file_size_in_bytes": os.path.getsize(path)}
+
+
+def write_bucket_file(rows: pa.Table, location: str, write_id: str, bucket: int,
+                      schema_id: int, name: str) -> dict:
+    """Write rows to data/<write_id>/__bucket=<bucket>/<name> via a temp
+    name and os.replace, so a retried task overwrites its own file; return
+    its manifest entry."""
+    rel = os.path.join("data", write_id, f"{BUCKET_COL}={bucket}", name)
+    path = os.path.join(location, rel)
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    tmp = os.path.join(os.path.dirname(path), f".{name}.{uuid.uuid4().hex}.tmp")
+    pq.write_table(rows, tmp)
+    os.replace(tmp, path)
+    return data_file_entry(location, rel, bucket, schema_id)
 
 
 def _group_byte_cap() -> int:
@@ -169,17 +203,14 @@ def merge_group(changes: pa.Table, bucket: int, spec: dict) -> dict:
     `changes` holds the bucket's change rows, full-row images in the
     current schema, any number of rows per key. The bucket's target files
     (every file listed for it) are read here with pyarrow and bound to the
-    current schema by field id, with the same rules as
-    IceliteTable._read_entries (rename -> alias, widen -> cast, add ->
-    null). Per key the highest `_seq` wins and the stored row wins a tie. A
-    delete is a tombstone (`_deleted` true), an ordinary row that keeps its
-    seq, so an older change can never bring the key back.
+    current schema by field id with bind_names. Per key the highest `_seq`
+    wins and the stored row wins a tie. A delete is a tombstone (`_deleted`
+    true), an ordinary row that keeps its seq, so an older change can never
+    bring the key back.
 
-    Writes one key-sorted file at a path fixed by (write id, bucket)
-    via a temp name and os.replace, so a retried task overwrites its own
-    file, and returns its manifest entry with record_count and
-    file_size_in_bytes. A group over spec["cap"] bytes raises MemoryError
-    before anything is read.
+    Writes one key-sorted file with write_bucket_file, at a path fixed by
+    (write id, bucket), and returns its manifest entry. A group over
+    spec["cap"] bytes raises MemoryError before anything is read.
 
     `spec` is the plan IceliteTable.merge_cdc builds: location, write_id,
     epoch, cap, num_buckets, keys, fields (current schema), schema_id,
@@ -196,21 +227,20 @@ def merge_group(changes: pa.Table, bucket: int, spec: dict) -> dict:
             f"merge_cdc epoch {spec['epoch']}: bucket {bucket} holds {held} bytes, "
             f"over the per-group cap of {spec['cap']} bytes; "
             f"a table with num_buckets >= {need} would fit")
-    schema = pa.schema([(f["name"], type_to_arrow(f["type"])) for f in fields]
-                       + [("__src", pa.int8())])
+    schema = schema_to_arrow(fields).append(pa.field("__src", pa.int8()))
 
-    def bind(tbl: pa.Table, names: dict, src: int) -> pa.Table:
-        # names: field id -> column name in tbl; src 1 marks stored rows
+    def bind(tbl: pa.Table, names: list[str | None], src: int) -> pa.Table:
+        # names from bind_names; src 1 marks stored rows
         n = tbl.num_rows
-        cols = [pa.nulls(n, t) if f["id"] not in names else tbl.column(names[f["id"]]).cast(t)
-                for f, t in zip(fields, schema.types)]
+        cols = [pa.nulls(n, t) if name is None else tbl.column(name).cast(t)
+                for name, t in zip(names, schema.types)]
         return pa.Table.from_arrays(cols + [pa.array(np.full(n, src, np.int8))], schema=schema)
 
-    parts = [bind(changes, {f["id"]: f["name"] for f in fields}, 0)]
+    parts = [bind(changes, [f["name"] for f in fields], 0)]
     for p, sid in targets:
-        names = {f["id"]: f["name"] for f in spec["schemas"][sid]}
+        names = bind_names(fields, spec["schemas"][sid])
         with pq.ParquetFile(p, coerce_int96_timestamp_unit="us") as pf:
-            tbl = pf.read(columns=[names[f["id"]] for f in fields if f["id"] in names])
+            tbl = pf.read(columns=[name for name in names if name is not None])
         parts.append(bind(tbl, names, 1))
     keys = spec["keys"]
     rows = pa.concat_tables(parts).sort_by(
@@ -218,16 +248,9 @@ def merge_group(changes: pa.Table, bucket: int, spec: dict) -> dict:
     rows = rows.append_column("__row", pa.array(np.arange(rows.num_rows)))
     first = rows.group_by(keys, use_threads=False).aggregate([("__row", "min")])["__row_min"]
     out = rows.take(first.sort()).select([f["name"] for f in fields])
-
     # a group holds at least one change row, so at least one row wins
-    rel = os.path.join("data", spec["write_id"], f"{BUCKET_COL}={bucket}", "merge.parquet")
-    path = os.path.join(spec["location"], rel)
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    tmp = os.path.join(os.path.dirname(path), f".merge.{uuid.uuid4().hex}.tmp")
-    pq.write_table(out, tmp)
-    os.replace(tmp, path)
-    return {"path": rel, "bucket": bucket, "schema_id": spec["schema_id"],
-            "record_count": out.num_rows, "file_size_in_bytes": os.path.getsize(path)}
+    return write_bucket_file(out, spec["location"], spec["write_id"], bucket,
+                             spec["schema_id"], "merge.parquet")
 
 
 class CommitConflict(Exception):
@@ -247,17 +270,23 @@ class IceliteTable:
         cls,
         location: str,
         schema: T.StructType,
-        key_cols: list[str] | None = None,
+        key_cols: list[str],
         num_buckets: int = 16,
         properties: dict[str, str] | None = None,
     ) -> "IceliteTable":
         """New empty table, hash-bucketed on `key_cols` into `num_buckets`.
+        Every table is keyed: `key_cols` must name at least one schema
+        column, or ValueError is raised before anything is written.
         The bucket is the rewrite unit: a merge rewrites the files of the
         buckets its changed keys hash into, so copy-on-write amplification
         per changed key is one bucket's size, and a table that needs
         smaller rewrite files uses more buckets. Static by design: bucket
         assignment must be stable across writes, or a merge would miss
         the files that hold a key's older versions."""
+        names = schema.fieldNames()
+        if not key_cols or not set(key_cols) <= set(names):
+            raise ValueError(f"icelite table {location} needs at least one key column "
+                             f"from its schema {names}; got key_cols={key_cols!r}")
         t = cls(location)
         os.makedirs(t._meta_dir, exist_ok=True)
         os.makedirs(t._data_dir, exist_ok=True)
@@ -265,8 +294,7 @@ class IceliteTable:
             {"id": i + 1, "name": f.name, "type": spark_to_type(f.dataType), "nullable": f.nullable}
             for i, f in enumerate(schema.fields)
         ]
-        key_cols = key_cols or []
-        key_ids = [fields[[f["name"] for f in fields].index(c)]["id"] for c in key_cols]
+        key_ids = [names.index(c) + 1 for c in key_cols]
         meta = {
             "format_version": 1,
             "table_uuid": str(uuid.uuid4()),
@@ -341,10 +369,7 @@ class IceliteTable:
         os.replace(tmp, os.path.join(self._meta_dir, "version-hint.text"))
 
     def schema_struct(self, schema_id: int | None = None) -> T.StructType:
-        meta = self.metadata()
-        sid = meta["current_schema_id"] if schema_id is None else schema_id
-        fields = next(s["fields"] for s in meta["schemas"] if s["schema_id"] == sid)
-        return schema_to_struct(fields)
+        return schema_to_struct(self._fields(self.metadata(), schema_id))
 
     def properties(self) -> dict[str, str]:
         return self.metadata()["properties"]
@@ -505,7 +530,8 @@ class IceliteTable:
         schema they were written with; each group is projected by field id
         (rename aliased, widen cast, added null-filled), then unioned.
         Each group is read with the schema its files were written with, so
-        building the DataFrame runs no footer-inference job."""
+        building the DataFrame runs no footer-inference job, and a column
+        is cast only when its type differs."""
         self._refuse_delta(files)
         cur_fields = self._fields(meta)
         if not files:
@@ -516,19 +542,14 @@ class IceliteTable:
         parts: list[DataFrame] = []
         for sid, paths in by_sid.items():
             written = self._fields(meta, sid)
-            df = spark.read.schema(schema_to_struct(written)).parquet(*paths)
-            old_fields = {f["id"]: f for f in written}
-            cols = []
-            for cf in cur_fields:
-                of = old_fields.get(cf["id"])
-                if of is None:  # column added after these files were written
-                    cols.append(F.lit(None).cast(type_to_spark(cf["type"])).alias(cf["name"]))
-                else:
-                    c = F.col(of["name"])
-                    if of["type"] != cf["type"]:
-                        c = c.cast(type_to_spark(cf["type"]))
-                    cols.append(c.alias(cf["name"]))
-            parts.append(df.select(*cols))
+            struct, cols = schema_to_struct(written), []
+            for cf, name in zip(cur_fields, bind_names(cur_fields, written)):
+                t = type_to_spark(cf["type"])
+                c = F.lit(None).cast(t) if name is None else F.col(name)
+                if name is not None and struct[name].dataType != t:
+                    c = c.cast(t)
+                cols.append(c.alias(cf["name"]))
+            parts.append(spark.read.schema(struct).parquet(*paths).select(*cols))
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)
@@ -555,26 +576,18 @@ class IceliteTable:
             raise
 
     def _write_data_files(self, df: DataFrame, meta: dict, write_id: str) -> list[dict]:
-        """Write df (current schema) as bucket-partitioned parquet under
-        data/<write_id>/ (one hive dir per bucket); return manifest
-        entries. One Spark write job."""
+        """Write df, conformed to the current schema, with Spark's writer
+        (one job) as one file per bucket under data/<write_id>/__bucket=<b>/;
+        return their manifest entries. Bulk writes stay on Spark's writer: a
+        pyarrow write in Arrow tasks would add Python-worker start to them."""
         out_dir = os.path.join(self._data_dir, write_id)
-        staged = df.withColumn(BUCKET_COL, self._bucket_expr(meta))
-        if self.key_cols(meta):
-            # co-locate each bucket into one task → one file each
-            staged = staged.repartition(meta["partition_spec"]["num_buckets"], BUCKET_COL)
-        staged.write.partitionBy(BUCKET_COL).parquet(out_dir)
-        entries: list[dict] = []
-        for bucket_dir in sorted(d for d in os.listdir(out_dir) if d.startswith(f"{BUCKET_COL}=")):
-            bpath = os.path.join(out_dir, bucket_dir)
-            for fn in sorted(os.listdir(bpath)):
-                if fn.endswith(".parquet"):
-                    entries.append({
-                        "path": os.path.relpath(os.path.join(bpath, fn), self.location),
-                        "bucket": int(bucket_dir.split("=", 1)[1]),
-                        "schema_id": meta["current_schema_id"],
-                    })
-        return entries
+        (self._conform(df, meta).withColumn(BUCKET_COL, self._bucket_expr(meta))
+         .repartition(meta["partition_spec"]["num_buckets"], BUCKET_COL)
+         .write.partitionBy(BUCKET_COL).parquet(out_dir))
+        return [data_file_entry(self.location, os.path.join("data", write_id, d, fn),
+                                int(d.split("=", 1)[1]), meta["current_schema_id"])
+                for d in sorted(os.listdir(out_dir)) if d.startswith(f"{BUCKET_COL}=")
+                for fn in sorted(os.listdir(os.path.join(out_dir, d))) if fn.endswith(".parquet")]
 
     def _commit_snapshot(
         self,
@@ -601,21 +614,28 @@ class IceliteTable:
         self._write_metadata(meta, expected_version=version)
         return snap_id
 
+    def _commit_files(self, operation: str, write, summary: dict[str, Any] | None = None,
+                      properties_update: dict[str, str] | None = None) -> int:
+        """The commit of append, append_rows_local, overwrite and compact: one
+        load, then `write(meta, current files, write_id)` stages the new files
+        and returns the snapshot's file list, which is committed."""
+        meta, version = self._load()
+        cur = self._current(meta)
+        with self._staged() as write_id:
+            files = write(meta, cur["files"] if cur else [], write_id)
+            return self._commit_snapshot(meta, version, files,
+                                         {"operation": operation, **(summary or {})},
+                                         properties_update)
+
     def append(
         self,
         df: DataFrame,
         summary: dict[str, Any] | None = None,
         properties_update: dict[str, str] | None = None,
     ) -> int:
-        meta, version = self._load()
-        cur = self._current(meta)
-        with self._staged() as write_id:
-            new_files = self._write_data_files(self._conform(df, meta), meta, write_id)
-            files = (cur["files"] if cur else []) + new_files
-            return self._commit_snapshot(
-                meta, version, files, {"operation": "append", **(summary or {})},
-                properties_update=properties_update,
-            )
+        return self._commit_files(
+            "append", lambda meta, cur, wid: cur + self._write_data_files(df, meta, wid),
+            summary, properties_update)
 
     def append_rows_local(
         self,
@@ -627,37 +647,22 @@ class IceliteTable:
         ≤num_buckets rows) via pyarrow — no Spark job, same atomic commit.
         Only valid for unbucketed tables (num_buckets == 1): every row is
         written to bucket 0, the only bucket later merges read it from."""
-        meta, version = self._load()
-        n = meta["partition_spec"]["num_buckets"]
-        if n != 1:
-            raise ValueError(
-                f"append_rows_local writes every row to bucket 0, so it needs an "
-                f"unbucketed table (num_buckets=1); icelite table {self.location} "
-                f"has num_buckets={n}")
-        fields = self._fields(meta)
-        arrays = [pa.array([r.get(f["name"]) for r in rows], type=type_to_arrow(f["type"]))
-                  for f in fields]
-        names = [f["name"] for f in fields]
-        cur = self._current(meta)
-        with self._staged() as write_id:
-            rel = os.path.join("data", write_id, f"{BUCKET_COL}=0", "local.parquet")
-            os.makedirs(os.path.dirname(os.path.join(self.location, rel)))
-            pq.write_table(pa.Table.from_arrays(arrays, names=names),
-                           os.path.join(self.location, rel))
-            entry = {"path": rel, "bucket": 0, "schema_id": meta["current_schema_id"]}
-            files = (cur["files"] if cur else []) + [entry]
-            return self._commit_snapshot(
-                meta, version, files, {"operation": "append", **(summary or {})},
-                properties_update=properties_update,
-            )
+        def write(meta, cur, write_id):
+            n = meta["partition_spec"]["num_buckets"]
+            if n != 1:
+                raise ValueError(
+                    f"append_rows_local writes every row to bucket 0, so it needs an "
+                    f"unbucketed table (num_buckets=1); icelite table {self.location} "
+                    f"has num_buckets={n}")
+            tbl = pa.Table.from_pylist(rows, schema=schema_to_arrow(self._fields(meta)))
+            return cur + [write_bucket_file(tbl, self.location, write_id, 0,
+                                            meta["current_schema_id"], "local.parquet")]
+
+        return self._commit_files("append", write, summary, properties_update)
 
     def overwrite(self, df: DataFrame, summary: dict[str, Any] | None = None) -> int:
-        meta, version = self._load()
-        with self._staged() as write_id:
-            new_files = self._write_data_files(self._conform(df, meta), meta, write_id)
-            return self._commit_snapshot(
-                meta, version, new_files, {"operation": "overwrite", **(summary or {})}
-            )
+        return self._commit_files(
+            "overwrite", lambda meta, _, wid: self._write_data_files(df, meta, wid), summary)
 
     def _conform(self, df: DataFrame, meta: dict) -> DataFrame:
         """df as full rows of the current schema: columns cast to their
@@ -684,11 +689,10 @@ class IceliteTable:
         any number per key; current-schema columns they lack (e.g.
         just-added ones) are null. A delete is a tombstone row
         (`_deleted` true) that keeps its seq; nothing is ever removed.
-        Raises ValueError, before any Spark job, when the table has no key
-        columns or no `_seq` column, or when a change column is not in the
-        current schema. Copy-on-write at bucket granularity: only the files
-        of buckets holding changed keys are rewritten; every other file
-        carries forward untouched.
+        Raises ValueError, before any Spark job, when the table has no `_seq`
+        column or a change column is not in the current schema. Copy-on-write
+        at bucket granularity: only the files of buckets holding changed keys
+        are rewritten; every other file carries forward untouched.
 
         One Spark query: only the changes are shuffled, by bucket, into
         min(default parallelism, num_buckets) tasks; merge_group replaces
@@ -707,8 +711,6 @@ class IceliteTable:
         if epoch is not None and epoch <= int(meta["properties"].get("cdc.last-epoch", "-1")):
             return {"applied": False, "snapshot_id": None, "reason": "epoch-fenced"}
         keys = self.key_cols(meta)
-        if not keys:
-            raise ValueError(f"merge_cdc needs key columns; icelite table {self.location} has none")
         fields = self._fields(meta)
         names = [f["name"] for f in fields]
         if "_seq" not in names:
@@ -842,7 +844,7 @@ class IceliteTable:
 
     # -- maintenance -----------------------------------------------------------
 
-    def compact(self, spark: SparkSession, drop_tombstones_below_seq: int | None = None) -> dict:
+    def compact(self, spark: SparkSession, drop_tombstones_below_seq: int | None = None) -> int:
         """Rewrite the table's current snapshot: coalesce each bucket's file
         set to one file and physically drop tombstones (rows not
         `is_live()`) whose `_seq` is below the given horizon (safe once
@@ -855,18 +857,14 @@ class IceliteTable:
         not need it first: a merge consumes every file of each bucket it
         touches (several after appends, or from an older release that split
         buckets into slot files) and writes one."""
-        meta, version = self._load()
-        cur = self._current(meta)
-        df = self._read_entries(spark, meta, cur["files"] if cur else [])
-        if drop_tombstones_below_seq is not None and "_deleted" in df.columns:
-            df = df.where(is_live() | (F.col("_seq") >= drop_tombstones_below_seq))
-        with self._staged() as write_id:
-            new_files = self._write_data_files(df, meta, write_id)
-            snap_id = self._commit_snapshot(
-                meta, version, new_files,
-                {"operation": "compact", "tombstone-horizon": drop_tombstones_below_seq},
-            )
-        return {"snapshot_id": snap_id, "files": len(new_files)}
+        def write(meta, cur, write_id):
+            df = self._read_entries(spark, meta, cur)
+            if drop_tombstones_below_seq is not None and "_deleted" in df.columns:
+                df = df.where(is_live() | (F.col("_seq") >= drop_tombstones_below_seq))
+            return self._write_data_files(df, meta, write_id)
+
+        return self._commit_files("compact", write,
+                                  {"tombstone-horizon": drop_tombstones_below_seq})
 
     def rollback_to(self, snapshot_id: int) -> int:
         """Make a retained older snapshot current again (Iceberg:

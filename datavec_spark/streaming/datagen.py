@@ -254,30 +254,6 @@ def write_event_chunks(events: list[dict], out_dir: str, n_chunks: int) -> list[
     return paths
 
 
-def generate_fixture(
-    out_dir: str,
-    n_events: int = 5000,
-    n_repos: int = 50,
-    paths_per_repo: int = 40,
-    n_base_keys: int = 300,
-    n_chunks: int = 8,
-    seed: int = 42,
-    with_schema_events: bool = True,
-):
-    """Full fixture: base rows + emission-ordered event chunks on disk.
-    Returns (base_rows, events_in_emission_order, chunk_paths)."""
-    base = generate_base_rows(n_base_keys, n_repos, paths_per_repo, seed)
-    events = generate_events(
-        n_events,
-        n_repos=n_repos,
-        paths_per_repo=paths_per_repo,
-        seed=seed,
-        with_schema_events=with_schema_events,
-    )
-    chunks = write_event_chunks(events, os.path.join(out_dir, "events"), n_chunks)
-    return base, events, chunks
-
-
 # ---------------------------------------------------------------------------
 # distributed (Spark-side) event generation for bench scale
 # ---------------------------------------------------------------------------

@@ -3,7 +3,12 @@
 import pytest
 from pyspark.sql import functions as F
 
-from datavec_spark.functions.analysis import analyze, analyze_quality, most_frequent
+from datavec_spark.functions.analysis import (
+    analyze,
+    analyze_quality,
+    most_frequent,
+    sample_invalid,
+)
 from datavec_spark.functions.dedup import (
     dedup_exact,
     embedding_near_dup_pairs,
@@ -43,6 +48,19 @@ def test_analyze_quality(spark):
     assert q["columns"]["name"]["missing"] == 1
     assert q["columns"]["name"]["empty"] == 1
     assert q["columns"]["age"]["invalid"] == 1     # -1
+
+
+def test_sample_invalid_returns_out_of_range_and_null_values(spark):
+    """sample_invalid returns the values outside the column's min/max
+    restrictions and its nulls, nothing valid, and at most n of them."""
+    schema = EngineSchema.builder().add_integer("age", min_value=0, max_value=120).build()
+    df = spark.createDataFrame(
+        [(v,) for v in (0, 5, 120, -1, 121, None, 64, -40, None, 500)], schema.to_struct())
+    bad = [-1, 121, None, -40, None, 500]
+    got = sample_invalid(df, schema, "age")
+    assert sorted(got, key=repr) == sorted(bad, key=repr)
+    few = sample_invalid(df, schema, "age", n=2)
+    assert len(few) == 2 and all(v in bad for v in few)
 
 
 def test_text_features(spark):

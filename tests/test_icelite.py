@@ -1,6 +1,7 @@
 import hashlib
 import json
 import os
+import re
 
 import pytest
 from pyspark.sql import types as T
@@ -177,14 +178,47 @@ def test_read_unknown_snapshot_raises_value_error(spark, tmp_path):
         t.read(spark, snapshot_id=999)
 
 
-def test_merge_cdc_without_key_columns_raises(spark, tmp_path):
-    """A keyless table cannot be merged; the check is a ValueError, so it
-    holds under python -O too."""
-    t = IceliteTable.create(str(tmp_path / "nokeys"), SCHEMA, num_buckets=1)
-    ch = spark.createDataFrame([("a", 1, 1, False)], SCHEMA)
-    with pytest.raises(ValueError, match="key columns"):
-        t.merge_cdc(spark, ch, epoch=0)
-    assert t.current_snapshot() is None
+@pytest.mark.parametrize("keys", [[], ["nope"]], ids=["empty", "unknown"])
+def test_create_refuses_a_table_without_keys(tmp_path, keys):
+    """Every table is keyed: create refuses an empty key list, or a key
+    that is not a schema column, with a ValueError naming the table (so it
+    holds under python -O too), and writes nothing."""
+    loc = str(tmp_path / "nokeys")
+    with pytest.raises(ValueError, match=re.escape(f"icelite table {loc} needs at least one key")):
+        IceliteTable.create(loc, SCHEMA, key_cols=keys, num_buckets=1)
+    assert not os.path.exists(loc)
+
+
+@pytest.mark.parametrize("op", ["overwrite", "append", "compact", "merge_cdc",
+                                "append_rows_local"])
+def test_every_write_path_records_entry_counts(spark, tmp_path, op):
+    """Whichever path wrote a data file, its manifest entry carries
+    Iceberg's record_count and file_size_in_bytes: the footer's row count
+    and the file's size on disk. The counts add up to the rows read."""
+    import pyarrow.parquet as pq
+
+    t = IceliteTable.create(str(tmp_path / "t"), SCHEMA, key_cols=["k"],
+                            num_buckets=1 if op == "append_rows_local" else 4)
+    t.overwrite(spark.createDataFrame(
+        [(f"k{i}", i, 1, False) for i in range(20)] + [("dead", 0, 1, True)], SCHEMA))
+    if op == "append":
+        t.append(spark.createDataFrame([("x", 1, 2, False), ("y", 2, 2, False)], SCHEMA))
+    elif op == "compact":
+        t.append(spark.createDataFrame([("x", 1, 2, False)], SCHEMA))
+        t.compact(spark, drop_tombstones_below_seq=5)
+    elif op == "merge_cdc":
+        t.merge_cdc(spark, spark.createDataFrame(
+            [("k3", 9, 5, False), ("k4", 0, 5, True), ("new", 7, 5, False)], SCHEMA), epoch=0)
+    elif op == "append_rows_local":
+        t.append_rows_local([{"k": "z", "v": 3, "_seq": 2, "_deleted": False}])
+    snap = t.current_snapshot()
+    assert snap["summary"]["operation"] == {"merge_cdc": "merge",
+                                            "append_rows_local": "append"}.get(op, op)
+    for f in snap["files"]:
+        path = os.path.join(t.location, f["path"])
+        assert f["record_count"] == pq.read_metadata(path).num_rows, f
+        assert f["file_size_in_bytes"] == os.path.getsize(path), f
+    assert sum(f["record_count"] for f in snap["files"]) == t.read(spark).count()
 
 
 def test_append_rows_local_rejects_bucketed_table(tmp_path):
@@ -202,7 +236,7 @@ def test_lost_local_append_leaves_no_files(tmp_path):
     """A local append that loses the version CAS removes the file it wrote
     before re-raising CommitConflict."""
     schema = T.StructType([T.StructField("i", T.IntegerType())])
-    t = IceliteTable.create(str(tmp_path / "lin"), schema, key_cols=[], num_buckets=1)
+    t = IceliteTable.create(str(tmp_path / "lin"), schema, key_cols=["i"], num_buckets=1)
     t.append_rows_local([{"i": 1}])
     data_dir = os.path.join(t.location, "data")
     written = set(os.listdir(data_dir))
@@ -267,7 +301,7 @@ def test_failed_metadata_write_leaves_no_version(tmp_path, monkeypatch):
     """A commit that fails while writing its metadata JSON leaves no
     v{N+1}.json and no temp file behind, so a retry commits v{N+1}."""
     schema = T.StructType([T.StructField("i", T.IntegerType())])
-    t = IceliteTable.create(str(tmp_path / "lin"), schema, key_cols=[], num_buckets=1)
+    t = IceliteTable.create(str(tmp_path / "lin"), schema, key_cols=["i"], num_buckets=1)
     v = t._version()
 
     def boom(*a, **k):
@@ -385,7 +419,7 @@ def test_concurrent_appends_threaded_retry(tmp_path):
     loc = str(tmp_path / "lineage")
     schema = T.StructType([T.StructField("writer", T.StringType()),
                            T.StructField("i", T.IntegerType())])
-    IceliteTable.create(loc, schema, key_cols=[], num_buckets=1)
+    IceliteTable.create(loc, schema, key_cols=["writer", "i"], num_buckets=1)
     barrier = threading.Barrier(2)
     errors = []
 

@@ -56,13 +56,15 @@ def main():
             df = fn(spark, sf_dir)
             spark_cols = df.columns
             spark_rows = [tuple(r) for r in df.collect()]
-            # free correctness-required persists (LSH signatures, cumsum
-            # partitions) so 70+ gates don't accumulate cached blocks
-            release_tracked()
         except Exception as e:
             failures.append(name)
             print(f"FAIL {name}: spark error {type(e).__name__}: {str(e)[:300]}")
             continue
+        finally:
+            # free correctness-required persists (LSH signatures, cumsum
+            # partitions), also a failed gate's, so 70+ gates don't
+            # accumulate cached blocks
+            release_tracked()
         if name not in oracles:
             print(f"ok   {name}: rows-only ({len(spark_rows)} rows)")
             continue
