@@ -171,9 +171,9 @@ def run_cdc_replay(spark, fixture_dir: str) -> dict:
     """Batch-replay the event log as one epoch into a 64-bucket table;
     returns wall + rate + an order-insensitive checksum of the final state
     (replay-equality evidence across parallelism levels). The replay
-    includes the stats pass, the per-bucket LWW merge with tombstones,
-    lineage accounting and the epoch-fenced commit; the final-state read
-    stays outside the clock."""
+    includes the per-bucket LWW merge with tombstones (whose tasks also
+    count the lineage), the schema ops, the lineage append and the
+    epoch-fenced commit; the final-state read stays outside the clock."""
     from pyspark.sql import functions as F
 
     from datavec_spark.streaming.replay import CdcEngine

@@ -57,6 +57,7 @@ from typing import Any
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark import cloudpickle
 from pyspark.sql import DataFrame, SparkSession
@@ -147,9 +148,8 @@ BUCKET_COL = "__bucket"
 
 def bucket_expr(keys: list[F.Column], num_buckets: int) -> F.Column:
     """Bucket of a row from its key column expressions — the one place the
-    hash formula lives. Writers (IceliteTable._bucket_expr over the bound
-    columns) and the CDC stats pass (over raw event fields) must agree
-    value for value, because lineage partitions are data buckets.
+    hash formula lives (IceliteTable._bucket_expr applies it to the bound
+    key columns for every writer and merge).
 
     xxhash64 over ALL key columns (not a string-concatenated key — the
     reference's string keys, MapToPairForReducerFunction.java:30-53, are a
@@ -158,10 +158,19 @@ def bucket_expr(keys: list[F.Column], num_buckets: int) -> F.Column:
     return F.pmod(F.xxhash64(*keys), F.lit(num_buckets)).cast("int")
 
 
-# one row per merged bucket: its manifest entry and counts
+# a change row's optional event time in microseconds: merge_cdc tallies and
+# drops late rows by it, and never stores it
+EVENT_US = "_event_us"
+
+# one row per merged bucket: its manifest entry (the first five fields; path
+# null when the bucket wrote no file) and the tallies of its change rows
+ENTRY_FIELDS = ["path", "bucket", "schema_id", "record_count", "file_size_in_bytes"]
 MERGE_ENTRY = pa.schema([("path", pa.string()), ("bucket", pa.int32()),
                          ("schema_id", pa.int32()), ("record_count", pa.int64()),
-                         ("file_size_in_bytes", pa.int64())])
+                         ("file_size_in_bytes", pa.int64())]
+                        + [(n, pa.int64()) for n in (
+                            "changes", "min_seq", "max_seq", "null_keys", "null_seq",
+                            "late", "max_event_us", "winners", "tombstones")])
 
 
 def data_file_entry(location: str, rel: str, bucket: int, schema_id: int) -> dict:
@@ -209,13 +218,38 @@ def merge_group(changes: pa.Table, bucket: int, spec: dict) -> dict:
     bring the key back.
 
     Writes one key-sorted file with write_bucket_file, at a path fixed by
-    (write id, bucket), and returns its manifest entry. A group over
-    spec["cap"] bytes raises MemoryError before anything is read.
+    (write id, bucket), and returns its manifest entry with the group's
+    tallies: `changes` (change rows in), their `min_seq` and `max_seq`,
+    `null_keys` and `null_seq` (rows with a null key column, a null
+    `_seq`), `winners` (change rows that won their key) and `tombstones`
+    (winners that are tombstones). With an EVENT_US column, `max_event_us`
+    is the rows' newest event time and `late` counts the rows older than
+    spec["late_cut_us"]; with spec["drop_late"] they are dropped before the
+    merge, and a group left with no change row writes nothing (path None).
+    A group over spec["cap"] bytes raises MemoryError before any target
+    file is read.
 
     `spec` is the plan IceliteTable.merge_cdc builds: location, write_id,
     epoch, cap, num_buckets, keys, fields (current schema), schema_id,
-    schemas (id -> fields), files (bucket -> [(path, schema id)])."""
-    fields = spec["fields"]
+    schemas (id -> fields), files (bucket -> [(path, schema id)]),
+    late_cut_us and drop_late."""
+    fields, keys = spec["fields"], spec["keys"]
+    seq = pc.min_max(changes.column("_seq")).as_py()
+    tally = {"changes": changes.num_rows, "min_seq": seq["min"], "max_seq": seq["max"],
+             "null_keys": changes.num_rows - changes.select(keys).drop_null().num_rows,
+             "null_seq": changes.column("_seq").null_count,
+             "late": 0, "max_event_us": None, "winners": 0, "tombstones": 0}
+    if EVENT_US in changes.column_names:
+        ts = changes.column(EVENT_US)
+        tally["max_event_us"] = pc.max(ts).as_py()
+        if spec.get("late_cut_us") is not None:
+            late = pc.fill_null(pc.less(ts, spec["late_cut_us"]), False)
+            tally["late"] = pc.sum(late).as_py() or 0
+            if spec.get("drop_late"):
+                changes = changes.filter(pc.invert(late))
+    if changes.num_rows == 0:
+        return {"path": None, "bucket": bucket, "schema_id": spec["schema_id"],
+                "record_count": 0, "file_size_in_bytes": 0, **tally}
     targets = spec["files"].get(bucket, [])
     held = changes.nbytes
     for p, _ in targets:
@@ -242,15 +276,20 @@ def merge_group(changes: pa.Table, bucket: int, spec: dict) -> dict:
         with pq.ParquetFile(p, coerce_int96_timestamp_unit="us") as pf:
             tbl = pf.read(columns=[name for name in names if name is not None])
         parts.append(bind(tbl, names, 1))
-    keys = spec["keys"]
     rows = pa.concat_tables(parts).sort_by(
         [(k, "ascending") for k in keys] + [("_seq", "descending"), ("__src", "descending")])
     rows = rows.append_column("__row", pa.array(np.arange(rows.num_rows)))
     first = rows.group_by(keys, use_threads=False).aggregate([("__row", "min")])["__row_min"]
-    out = rows.take(first.sort()).select([f["name"] for f in fields])
+    out = rows.take(first.sort())
+    won = pc.equal(out.column("__src"), 0)
+    tally["winners"] = pc.sum(won).as_py() or 0
+    if "_deleted" in out.column_names:
+        tomb = pc.and_(won, pc.fill_null(out.column("_deleted"), False))
+        tally["tombstones"] = pc.sum(tomb).as_py() or 0
     # a group holds at least one change row, so at least one row wins
-    return write_bucket_file(out, spec["location"], spec["write_id"], bucket,
-                             spec["schema_id"], "merge.parquet")
+    return {**write_bucket_file(out.select([f["name"] for f in fields]), spec["location"],
+                                spec["write_id"], bucket, spec["schema_id"], "merge.parquet"),
+            **tally}
 
 
 class CommitConflict(Exception):
@@ -664,12 +703,14 @@ class IceliteTable:
         return self._commit_files(
             "overwrite", lambda meta, _, wid: self._write_data_files(df, meta, wid), summary)
 
-    def _conform(self, df: DataFrame, meta: dict) -> DataFrame:
+    def _conform(self, df: DataFrame, meta: dict, keep: tuple[str, ...] = ()) -> DataFrame:
         """df as full rows of the current schema: columns cast to their
-        types, absent ones (e.g. just-added columns) null."""
+        types, absent ones (e.g. just-added columns) null; the `keep`
+        columns follow as they are."""
         return df.select(
             *[(F.col(f["name"]) if f["name"] in df.columns else F.lit(None))
-              .cast(type_to_spark(f["type"])).alias(f["name"]) for f in self._fields(meta)])
+              .cast(type_to_spark(f["type"])).alias(f["name"]) for f in self._fields(meta)],
+            *keep)
 
     # -- CDC merge (epoch-fenced, bucket copy-on-write) -----------------------
 
@@ -681,8 +722,9 @@ class IceliteTable:
         spark: SparkSession,
         changes: DataFrame,
         epoch: int | None = None,
-        extra_summary: dict[str, Any] | None = None,
-        extra_properties: dict[str, str] | None = None,
+        late_cut_us: int | None = None,
+        drop_late: bool = False,
+        before_commit=None,
     ) -> dict:
         """Apply change rows with last-writer-wins by `_seq`; the stored row
         wins a tie. Change rows are full-row images in the current schema,
@@ -690,21 +732,39 @@ class IceliteTable:
         just-added ones) are null. A delete is a tombstone row
         (`_deleted` true) that keeps its seq; nothing is ever removed.
         Raises ValueError, before any Spark job, when the table has no `_seq`
-        column or a change column is not in the current schema. Copy-on-write
-        at bucket granularity: only the files of buckets holding changed keys
-        are rewritten; every other file carries forward untouched.
+        column or a change column is neither in the current schema nor
+        EVENT_US. Copy-on-write at bucket granularity: only the files of
+        buckets holding changed keys are rewritten; every other file carries
+        forward untouched.
 
         One Spark query: only the changes are shuffled, by bucket, into
         min(default parallelism, num_buckets) tasks; merge_group replaces
-        each bucket's files with one. The tasks' output is the touched set.
+        each bucket's files with one and returns the bucket's tallies with
+        its manifest entry. The tasks' output is the touched set.
+
+        Change rows may carry EVENT_US, their event time in microseconds,
+        which is tallied and never stored: rows older than `late_cut_us`
+        are counted late per bucket, and dropped when `drop_late` is set.
+        The cut travels in the tasks' plan, not the query's, so the query
+        compiles to the same code whatever the cut.
+
+        Before the commit, the tallies decide it. A change row with a null
+        key column or a null `_seq` raises ValueError naming the epoch and
+        both counts. Then `before_commit(buckets)`, if given, sees one
+        tally dict per bucket and returns the commit's extra
+        {"summary": ..., "properties": ...}, or None to commit nothing. A
+        refusal, a None or a raise removes the files the tasks wrote.
 
         Exactly-once: with `epoch`, the merge is fenced — if
         epoch <= properties['cdc.last-epoch'] the call is a no-op (the
         retried foreachBatch case), and the property advances atomically
         with the snapshot commit. The snapshot summary records the rows and
-        bytes written (`added-records`, `added-files-size`) and `merge-ms`.
+        bytes written (`added-records`, `added-files-size`), the change rows
+        that won their key (`winners`), the tombstones among them
+        (`tombstones`) and `merge-ms`.
 
-        Returns {"applied": bool, "snapshot_id": int|None}.
+        Returns {"applied": bool, "snapshot_id": int|None, "buckets": the
+        tallies} ("buckets" is absent when the epoch fence made it a no-op).
         """
         t0 = time.perf_counter()
         meta, version = self._load()
@@ -716,7 +776,7 @@ class IceliteTable:
         if "_seq" not in names:
             raise ValueError(f"merge_cdc needs a _seq column; icelite table {self.location} "
                              f"has none")
-        unknown = [c for c in changes.columns if c not in names]
+        unknown = [c for c in changes.columns if c not in names and c != EVENT_US]
         if unknown:
             raise ValueError(f"merge_cdc change columns {unknown} are not in the current "
                              f"schema of icelite table {self.location}: {names}")
@@ -735,7 +795,7 @@ class IceliteTable:
             "num_buckets": n, "keys": keys, "fields": fields,
             "schema_id": meta["current_schema_id"],
             "schemas": {s["schema_id"]: s["fields"] for s in meta["schemas"]},
-            "files": by_bucket,
+            "files": by_bucket, "late_cut_us": late_cut_us, "drop_late": drop_late,
         }
 
         def kernel(key, tbl):
@@ -751,16 +811,29 @@ class IceliteTable:
         k = max(1, min(spark.sparkContext.defaultParallelism, n))
         with self._staged() as write_id:
             spec["write_id"] = write_id
-            out = (self._conform(changes, meta)
+            out = (self._conform(changes, meta, (EVENT_US,) if EVENT_US in changes.columns else ())
                    .withColumn(BUCKET_COL, group)
                    .repartition(k, BUCKET_COL)
                    .groupBy(BUCKET_COL)
                    .applyInArrow(kernel, from_arrow_schema(MERGE_ENTRY))
                    .collect())
-            touched = {r["bucket"] for r in out}
-            new_files = [r.asDict() for r in sorted(out, key=lambda r: r["bucket"])]
+            buckets = [r.asDict() for r in sorted(out, key=lambda r: r["bucket"])]
+            null_keys = sum(b["null_keys"] for b in buckets)
+            null_seq = sum(b["null_seq"] for b in buckets)
+            if null_keys or null_seq:
+                raise ValueError(
+                    f"merge_cdc epoch {epoch}: {null_keys} change rows have a null key "
+                    f"column {keys} and {null_seq} a null _seq; icelite table "
+                    f"{self.location} committed nothing")
+            extra = before_commit(buckets) if before_commit else {}
+            if extra is None:
+                shutil.rmtree(os.path.join(self._data_dir, write_id), ignore_errors=True)
+                return {"applied": False, "snapshot_id": None, "reason": "declined",
+                        "buckets": buckets}
+            new_files = [{f: b[f] for f in ENTRY_FIELDS} for b in buckets if b["path"] is not None]
+            touched = {f["bucket"] for f in new_files}
             untouched = [f for f in cur_files if f["bucket"] not in touched]
-            props = dict(extra_properties or {})
+            props = dict(extra.get("properties") or {})
             if epoch is not None:
                 props["cdc.last-epoch"] = str(epoch)
             snap_id = self._commit_snapshot(
@@ -772,11 +845,13 @@ class IceliteTable:
                  "carried-files": len(untouched),
                  "added-records": sum(f["record_count"] for f in new_files),
                  "added-files-size": sum(f["file_size_in_bytes"] for f in new_files),
+                 "winners": sum(b["winners"] for b in buckets),
+                 "tombstones": sum(b["tombstones"] for b in buckets),
                  "merge-ms": int((time.perf_counter() - t0) * 1000),
-                 **(extra_summary or {})},
+                 **(extra.get("summary") or {})},
                 properties_update=props or None,
             )
-        return {"applied": True, "snapshot_id": snap_id}
+        return {"applied": True, "snapshot_id": snap_id, "buckets": buckets}
 
     # -- schema evolution ------------------------------------------------------
 
@@ -883,8 +958,11 @@ class IceliteTable:
 
     def expire_snapshots(self, keep_last: int = 2) -> int:
         """Drop old snapshots' metadata entries and garbage-collect data files
-        referenced only by them (Iceberg: expire_snapshots). keep_last must
-        be at least 1: the current snapshot is always kept."""
+        referenced only by them (Iceberg: expire_snapshots), with the
+        `.<name>.crc` checksum Spark's writer puts beside each file. A
+        write-id directory none of whose files is still listed goes whole,
+        Spark's `_SUCCESS` markers included. keep_last must be at least 1:
+        the current snapshot is always kept."""
         if keep_last < 1:
             raise ValueError(f"expire_snapshots(keep_last={keep_last}): keep_last must be >= 1")
         meta, version = self._load()
@@ -895,15 +973,16 @@ class IceliteTable:
         live = {f["path"] for s in keep for f in s["files"]}
         dead = {f["path"] for s in snaps[:-keep_last] for f in s["files"]} - live
         for rel in dead:
-            p = os.path.join(self.location, rel)
-            if os.path.exists(p):
-                os.remove(p)
-            d = os.path.dirname(p)
-            # prune empty bucket dirs best-effort
-            try:
-                os.removedirs(d)
-            except OSError:
-                pass
+            d, name = os.path.split(os.path.join(self.location, rel))
+            for p in (os.path.join(d, name), os.path.join(d, f".{name}.crc")):
+                with contextlib.suppress(FileNotFoundError):
+                    os.remove(p)
+            with contextlib.suppress(OSError):
+                os.rmdir(d)  # the bucket directory, once empty
+        # paths are data/<write_id>/...
+        for write_id in {rel.split(os.sep)[1] for rel in dead} - {
+                rel.split(os.sep)[1] for rel in live}:
+            shutil.rmtree(os.path.join(self._data_dir, write_id), ignore_errors=True)
         meta["snapshots"] = keep
         self._write_metadata(meta, expected_version=version)
         return len(dead)

@@ -23,26 +23,25 @@ Semantics (BASELINE.json north_star):
   (max event time of prior epochs): events older than it minus the delay
   are dropped and counted per bucket in lineage;
 - schema-evolution events (add/rename/widen) are applied serially on the
-  driver in `seq` order before the batch's data merge, fenced by
+  driver in `seq` order before the batch's data merge commits, fenced by
   `cdc.schema-seq`; event payload columns are bound to table columns by
   immutable field id (property `cdc.field-map`), so renames never detach
   the stream from its columns;
 - per-batch lineage rows (epoch, partition=bucket — the table's one
-  partition unit — event_count,
-  min/max seq, late_count, snapshot_id) land in a lineage table,
+  partition unit — event_count, min/max seq, late_count, snapshot_id),
+  counted by the merge's own tasks, land in a lineage table,
   idempotently (re-running an epoch overwrites the same keys).
 """
 
 from __future__ import annotations
 
 import json
-import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from datavec_spark.sources.icelite import IceliteTable, bucket_expr, is_live, type_to_spark
+from datavec_spark.sources.icelite import EVENT_US, IceliteTable, is_live, type_to_spark
 
 EVENT_SPARK_SCHEMA = T.StructType(
     [
@@ -83,6 +82,15 @@ LINEAGE_SCHEMA = T.StructType(
         T.StructField("snapshot_id", T.LongType()),
     ]
 )
+
+
+class _SchemaOpsPending(Exception):
+    """Raised before a merge commits when its batch holds schema ops above
+    the `cdc.schema-seq` fence: the merge's files are discarded."""
+
+    def __init__(self, fence: int, has_data: bool):
+        super().__init__(f"schema ops above cdc.schema-seq {fence}")
+        self.fence, self.has_data = fence, has_data
 
 
 def content_expr(repo: F.Column, path: F.Column, seq: F.Column) -> F.Column:
@@ -175,193 +183,147 @@ class CdcEngine:
         """Apply one epoch of the change stream. Idempotent per epoch.
 
         Serial-path shape (this is the per-trigger driver cost a stream
-        pays once per micro-batch, so it is kept to TWO Spark queries and
-        ONE metadata load):
-          1. the fused stats pass — per-bucket lineage metrics for data
-             events AND the (tiny, ~1%) schema-op set gathered via
-             collect_list into a sentinel partition, in one aggregation;
-          2. merge_cdc over the bound events themselves, one full-row
-             image per event (payload columns under their current names,
-             `_seq` = seq, `_deleted` = op is delete): they are shuffled
-             by bucket and one Arrow task per bucket resolves
-             last-writer-wins against that bucket's stored file and writes
-             its replacement. The stored table is never shuffled.
-        All table properties (epoch fence, schema fence, field map,
-        watermark) come from one metadata read; it is re-read only if this
-        batch actually applied schema ops (which commit new metadata).
+        pays once per micro-batch): ONE Spark query for an epoch without
+        schema ops, 2 jobs under AQE. Every data event is bound to the
+        current table columns by field id — a full-row image (payload
+        columns under their current names, `_seq` = seq, `_deleted` = op
+        is delete) plus its event time in micros (icelite.EVENT_US) — and
+        handed to merge_cdc: the events are shuffled by bucket, and one
+        Arrow task per bucket resolves last-writer-wins against that
+        bucket's stored file, writes its replacement and returns the
+        bucket's tallies (event count, min/max seq, late count, newest
+        event time). The same query observes the newest schema-op seq. The
+        tallies decide, before the commit, the watermark `cdc.max-ts-us`,
+        the epoch's summary and lineage rows, and whether to commit at all.
+        The late cut is a Python int in the tasks' plan, so the query's
+        generated code is the same every epoch.
 
-        batch_df is consumed twice (stats pass, merge) and never cached:
-        caching would materialize every column — content included — before
-        the stats pass, which otherwise reads only (seq, ts, op, keys)
-        thanks to parquet column pruning.
+        Schema ops (~1% of events) never enter the merge. If the batch
+        holds one above the `cdc.schema-seq` fence, the merge's files are
+        discarded uncommitted; the ops are collected (one small query) and
+        applied on the driver in seq order, each fenced by
+        `cdc.schema-seq`; and the same merge runs again with the new
+        binding.
+
+        batch_df is consumed once per merge (twice more on the schema-op
+        path) and never cached: caching would materialize every column
+        before the merge, which reads each once.
 
         The merge snapshot's summary records the epoch's metrics: events-in
-        (arriving data events), late-dropped, stats-ms, and merge_cdc's own
+        (data events that reached the merge), late-dropped, the late cut
+        it used (late-cut-us), and merge_cdc's own winners, tombstones,
         added-records, added-files-size and merge-ms.
 
-        Lineage accounts ARRIVING change events (pre-transform-chain): it is
-        ingest/resume bookkeeping, not post-filter output accounting — and a
-        transform chain must never rewrite key columns (it would re-bucket
-        rows out from under the merge), which keeps the fused pre-binding
-        bucket hash exact.
+        Lineage counts the events that reach the merge: the transform
+        chain runs first, so events it filters out are not counted. Its
+        partitions are the merge's buckets by construction. A transform
+        chain must never rewrite key columns.
 
         drop_late=True enforces the lateness SLA in the apply stage itself:
         events older than (max event time of all prior epochs −
-        late_delay_seconds) are dropped before the merge, counted per
+        late_delay_seconds) are dropped by the merge tasks, counted per
         bucket, and recorded in lineage's `dropped_late` column. The fence
         `cdc.max-ts-us` advances like Spark's global watermark (max event
         time of prior triggers), so this is the stream's watermark, with
-        exact per-bucket drop accounting. Batch backfills keep
-        drop_late=False: unbounded lateness tolerance."""
+        exact per-bucket drop accounting. An epoch whose every event is
+        late commits nothing and advances no fence, but its drops still
+        land in lineage. Batch backfills keep drop_late=False: unbounded
+        lateness tolerance (late events are still counted)."""
         table = IceliteTable(self.table_location)
-        meta0 = table.metadata()  # the ONE per-epoch metadata load
-        props0 = meta0["properties"]
+        meta = table.metadata()  # the ONE per-epoch metadata load
+        props = meta["properties"]
         # fast path: a fenced epoch (foreachBatch redelivery after restart)
         # has fully committed — skip all computation, not just the commit.
         # If the crash hit between the merge commit and the lineage write,
-        # lineage lags the fence: fall through so it gets recomputed (the
-        # merge itself stays a no-op via its own fence).
-        if epoch is not None and epoch <= int(props0.get("cdc.last-epoch", "-1")):
-            lin_epoch = int(self.lineage_table().properties().get("lineage.last-epoch", "-1"))
-            if lin_epoch >= epoch:
-                return {"applied": False, "snapshot_id": None, "reason": "epoch-fenced"}
-        fmap = json.loads(props0["cdc.field-map"])
-        by_id0 = {f["id"]: f for f in table._fields(meta0)}
-        # the bucket hash over the RAW event key fields (resolved through
-        # the immutable field map) — the same bucket_expr the
-        # table's writers apply to the bound/current-schema columns, so the
-        # stats pass below can run BEFORE binding/schema ops and its lineage
-        # partitions are the merge's data buckets. (Key columns are strings per
-        # the CDC contract; schema widens are numeric-only, renames don't
-        # change values — a schema op in this very batch cannot change the
-        # hash.) The bucket count comes from the STORED partition spec, not
-        # the engine-constructor default — a reload with a different
-        # num_buckets must not mislabel lineage partitions vs data buckets.
-        orig_by_id = {fid: orig for orig, fid in fmap.items()}
-        key_hash_cols = [
-            F.col(orig_by_id[i]).cast(type_to_spark(by_id0[i]["type"]))
-            for i in meta0["partition_spec"]["key_field_ids"]
-        ]
-        bucket = bucket_expr(key_hash_cols, meta0["partition_spec"]["num_buckets"])
-
-        # 1. FUSED stats job: late-event cut relative to the stream
-        #    watermark carried in cdc.max-ts-us (max event time of all
-        #    prior batches, advanced atomically with each merge commit)
-        #    minus the allowed delay — an event is late relative to
-        #    stream progress *before* its batch, the watermark semantics.
-        prev_max_us = props0.get("cdc.max-ts-us")
-        if prev_max_us is not None:
-            late_cut = F.timestamp_micros(
-                F.lit(int(prev_max_us) - late_delay_seconds * 1_000_000)
-            )
-            late_expr = F.count_if(F.col("ts") < late_cut)
-        else:
-            late_expr = F.lit(0).cast("long")
+        # lineage lags the fence: fall through, so the merge runs again to
+        # recount the epoch and commits nothing.
+        lin = IceliteTable(self.lineage_location)
+        fenced = epoch is not None and epoch <= int(props.get("cdc.last-epoch", "-1"))
+        if fenced and int(lin.properties().get("lineage.last-epoch", "-1")) >= epoch:
+            return {"applied": False, "snapshot_id": None, "reason": "epoch-fenced"}
+        fmap = json.loads(props["cdc.field-map"])
+        # the late cut relative to the stream watermark carried in
+        # cdc.max-ts-us (max event time of all prior batches, advanced
+        # atomically with each merge commit) minus the allowed delay — an
+        # event is late relative to stream progress *before* its batch
+        prev_max_us = props.get("cdc.max-ts-us")
+        late_cut_us = None if prev_max_us is None else (
+            int(prev_max_us) - late_delay_seconds * 1_000_000)
+        # a fenced epoch is recounted with the cut its committed merge used,
+        # not one from the watermark that merge advanced
+        committed = next((s for s in meta["snapshots"] if s["summary"].get("epoch") == epoch),
+                         None) if fenced else None
+        if committed is not None:
+            late_cut_us = committed["summary"].get("late-cut-us", late_cut_us)
+        dropping = drop_late and late_cut_us is not None
         is_schema = F.col("op").isin(*SCHEMA_OPS)
-        t_stats = time.perf_counter()
-        stats_rows = (
-            batch_df.groupBy(
-                F.when(is_schema, F.lit(-1)).otherwise(bucket).alias("partition"))
-            .agg(
-                F.count(F.lit(1)).alias("event_count"),
-                F.min("seq").alias("min_seq"),
-                F.max("seq").alias("max_seq"),
-                late_expr.alias("late_count"),
-                F.max(F.unix_micros(F.col("ts").cast("timestamp"))).alias("_max_ts_us"),
-                F.collect_list(
-                    F.when(is_schema, F.struct("seq", "op", "schema_change"))
-                ).alias("_schema_ops"),
+
+        def merge(meta: dict) -> dict:
+            by_id = {f["id"]: f for f in table._fields(meta)}
+            schema_fence = int(meta["properties"].get("cdc.schema-seq", "-1"))
+            ops = Observation()
+            data = batch_df.observe(
+                ops, F.max(F.when(is_schema, F.col("seq"))).alias("seq")).where(~is_schema)
+            if transform_chain is not None:
+                # DataVec TransformProcess parity: vectorized transform chain
+                # applied inside the merge-apply stage (SURVEY.md §0 graft)
+                data = transform_chain(data)
+            # deletes are tombstones, not removals
+            changes = data.select(
+                *[F.col(orig).cast(type_to_spark(by_id[fmap[orig]]["type"]))
+                  .alias(by_id[fmap[orig]]["name"]) for orig in EVENT_FIELDS],
+                F.col("seq").alias("_seq"),
+                (F.col("op") == F.lit("delete")).alias("_deleted"),
+                F.unix_micros(F.col("ts").cast("timestamp")).alias(EVENT_US),
             )
-            .collect()
-        )
-        stats_ms = int((time.perf_counter() - t_stats) * 1000)
 
-        # 2. schema-evolution ops: driver-serialized in seq order, fenced
-        #    by cdc.schema-seq so retries are no-ops
-        schema_ops = [
-            op for r in stats_rows if r["partition"] == -1 for op in r["_schema_ops"]
-        ]
-        schema_fence = int(props0.get("cdc.schema-seq", "-1"))
-        applied_schema = False
-        for r in sorted(schema_ops, key=lambda r: r["seq"]):
-            if r["seq"] <= schema_fence:
-                continue
-            sc = r["schema_change"]
-            fence = {"cdc.schema-seq": str(r["seq"])}
-            if r["op"] == "add_column":
-                table.add_column(sc["col_name"], sc["new_type"], properties_update=fence)
-            elif r["op"] == "rename_column":
-                table.rename_column(sc["col_name"], sc["new_name"], properties_update=fence)
-            else:
-                table.widen_column(sc["col_name"], sc["new_type"], properties_update=fence)
-            schema_fence = r["seq"]
-            applied_schema = True
+            def before_commit(buckets: list[dict]) -> dict | None:
+                newest_op = ops.get["seq"]
+                if newest_op is not None and newest_op > schema_fence:
+                    raise _SchemaOpsPending(schema_fence, bool(buckets))
+                events_in = sum(b["changes"] for b in buckets)
+                late = sum(b["late"] for b in buckets)
+                if fenced or not events_in or (dropping and events_in == late):
+                    # nothing to merge or fence (idempotent on redelivery:
+                    # the drop recomputes), but drops still land in lineage
+                    return None
+                maxes = [b["max_event_us"] for b in buckets if b["max_event_us"] is not None]
+                if prev_max_us is not None:
+                    maxes.append(int(prev_max_us))
+                return {"summary": {"epoch": epoch, "events-in": events_in,
+                                    "late-dropped": late if dropping else 0,
+                                    "late-cut-us": late_cut_us},
+                        "properties": {"cdc.max-ts-us": str(max(maxes))} if maxes else {}}
 
-        lineage_rows = sorted((r for r in stats_rows if r["partition"] >= 0),
-                              key=lambda r: r["partition"])
-        if not lineage_rows:  # empty trigger (no data events this epoch)
+            return table.merge_cdc(spark, changes, epoch=None if fenced else epoch,
+                                   late_cut_us=late_cut_us, drop_late=dropping,
+                                   before_commit=before_commit)
+
+        try:
+            result = merge(meta)
+        except _SchemaOpsPending as pending:
+            self._apply_schema_ops(table, batch_df.where(is_schema), pending.fence)
+            result = merge(table.metadata()) if pending.has_data else {"buckets": []}
+        if "buckets" not in result:  # merge_cdc's own fence: a racing writer applied it
+            return result
+        buckets = result["buckets"]
+        if not buckets:  # empty trigger (no data events this epoch)
             return {"applied": False, "snapshot_id": None, "reason": "empty-batch"}
-        batch_max_us = max(r["_max_ts_us"] for r in lineage_rows)
-        new_max_us = max(batch_max_us, int(prev_max_us)) if prev_max_us else batch_max_us
-
-        # 3. bind event payload columns to current table columns by field
-        #    id (re-read metadata only if a schema op just committed)
-        meta = table.metadata() if applied_schema else meta0
-        by_id = {f["id"]: f for f in table._fields(meta)}
-        cur_name = {orig: by_id[fid]["name"] for orig, fid in fmap.items()}
-
-        data = batch_df.where(~is_schema)
-        dropping = drop_late and prev_max_us is not None
-        if dropping:
-            # the watermark: enforce the lateness SLA here (late rows were
-            # already counted per bucket by the fused stats pass —
-            # late_count IS the dropped count)
-            data = data.where(F.col("ts") >= late_cut)
-        if transform_chain is not None:
-            # DataVec TransformProcess parity: vectorized transform chain
-            # applied inside the merge-apply stage (SURVEY.md §0 graft)
-            data = transform_chain(data)
-
-        # 4. epoch-fenced merge (watermark advances with it) of the bound
-        #    events themselves; deletes are tombstones, not removals.
-        changes = data.select(
-            *[F.col(orig).cast(type_to_spark(by_id[fmap[orig]]["type"])).alias(cur_name[orig])
-              for orig in EVENT_FIELDS],
-            F.col("seq").alias("_seq"),
-            (F.col("op") == F.lit("delete")).alias("_deleted"),
-        )
-        events_in = sum(r["event_count"] for r in lineage_rows)
-        late = sum(r["late_count"] for r in lineage_rows)
-        if not dropping or events_in > late:
-            result = table.merge_cdc(
-                spark,
-                changes,
-                epoch=epoch,
-                extra_summary={"epoch": epoch, "events-in": events_in,
-                               "late-dropped": late if dropping else 0,
-                               "stats-ms": stats_ms},
-                extra_properties={"cdc.max-ts-us": str(new_max_us)},
-            )
-        else:
-            # every arriving event was dropped as late: nothing to merge
-            # or fence (idempotent on redelivery — the drop recomputes),
-            # but the drops still land in lineage below
+        if not result["applied"]:
             result = {"applied": False, "snapshot_id": None,
-                      "reason": "all-late-dropped"}
+                      "reason": "epoch-fenced" if fenced else "all-late-dropped"}
 
-        # 5. lineage upsert — idempotent by (epoch, partition) key
+        # lineage upsert — idempotent by (epoch, partition) key
         snap_id = result["snapshot_id"] if result["applied"] else (
-            self.table().current_snapshot() or {}
-        ).get("snapshot_id")
-        lin = IceliteTable(self.lineage_location)  # defer metadata read
-        if lineage_rows and int(lin.properties().get("lineage.last-epoch", "-1")) < epoch:
+            committed or IceliteTable._current(meta) or {}).get("snapshot_id")
+        if int(lin.properties().get("lineage.last-epoch", "-1")) < epoch:
             rows = [
-                {"epoch": epoch, "partition": r["partition"],
-                 "event_count": r["event_count"], "min_seq": r["min_seq"],
-                 "max_seq": r["max_seq"], "late_count": r["late_count"],
-                 "dropped_late": r["late_count"] if dropping else 0,
+                {"epoch": epoch, "partition": b["bucket"],
+                 "event_count": b["changes"], "min_seq": b["min_seq"],
+                 "max_seq": b["max_seq"], "late_count": b["late"],
+                 "dropped_late": b["late"] if dropping else 0,
                  "snapshot_id": snap_id}
-                for r in lineage_rows
+                for b in buckets
             ]
             # ≤num_buckets rows: driver-side pyarrow append — saves a full
             # Spark job + commit per epoch (the lineage is tiny by design)
@@ -371,6 +333,24 @@ class CdcEngine:
                 properties_update={"lineage.last-epoch": str(epoch)},
             )
         return result
+
+    @staticmethod
+    def _apply_schema_ops(table: IceliteTable, ops_df: DataFrame, fence: int) -> None:
+        """Schema-evolution ops above the fence, driver-serialized in seq
+        order, each committed with its seq as the new `cdc.schema-seq`
+        fence so a retry skips it."""
+        ops = ops_df.where(F.col("seq") > fence).select("seq", "op", "schema_change").collect()
+        for r in sorted(ops, key=lambda r: r["seq"]):
+            sc = r["schema_change"]
+            fence_update = {"cdc.schema-seq": str(r["seq"])}
+            if r["op"] == "add_column":
+                table.add_column(sc["col_name"], sc["new_type"], properties_update=fence_update)
+            elif r["op"] == "rename_column":
+                table.rename_column(sc["col_name"], sc["new_name"],
+                                    properties_update=fence_update)
+            else:
+                table.widen_column(sc["col_name"], sc["new_type"],
+                                   properties_update=fence_update)
 
     # -- streaming replay ----------------------------------------------------------
 

@@ -12,6 +12,7 @@ import re
 import pytest
 from pyspark.sql import functions as F
 
+from datavec_spark.sources.icelite import IceliteTable
 from datavec_spark.streaming.datagen import (
     EVENT_SCHEMA,
     generate_base_rows,
@@ -65,13 +66,58 @@ def assert_final_state(spark, engine, state, schema):
     assert got_schema == want
 
 
+def jobs_in_group(spark, group, step):
+    """(step's result, number of Spark jobs it started), counted by job
+    group; the listener bus is drained first so no job is missed."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = step()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def compiles(spark) -> int:
+    """Janino compiles so far in this JVM, from Spark's CodegenMetrics."""
+    cg = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return cg.METRIC_COMPILATION_TIME().getCount()
+
+
+def data_events(events):
+    return [e for e in events if e["op"] in ("insert", "update", "delete")]
+
+
+def listed_and_stored(table):
+    """(parquet files listed by any snapshot, parquet files under data/,
+    write-id directories listed by any snapshot, those under data/)."""
+    listed = {f["path"] for s in table.snapshots() for f in s["files"]}
+    data_dir = os.path.join(table.location, "data")
+    stored = {os.path.relpath(os.path.join(d, f), table.location)
+              for d, _, fs in os.walk(data_dir) for f in fs if f.endswith(".parquet")}
+    return (listed, stored, {p.split(os.sep)[1] for p in listed}, set(os.listdir(data_dir)))
+
+
 def test_batch_replay_matches_oracle(spark, tmp_path, fixture):
+    """The whole log as one epoch, schema ops included: the epoch discards
+    its first merge's files, applies the ops and merges again. The state
+    equals the oracle, one merge snapshot is committed, and data/ holds no
+    file or write-id directory that no snapshot lists, also after a retry
+    of the committed epoch."""
     base, events, state, schema = fixture
+    assert len(data_events(events)) < len(events)
     eng = CdcEngine(str(tmp_path / "repos"), num_buckets=8)
     eng.bootstrap(spark, base_df(spark, base))
     res = eng.apply_batch(spark, events_df(spark, events), epoch=0)
     assert res["applied"]
     assert_final_state(spark, eng, state, schema)
+    t = eng.table()
+    assert [s["summary"]["operation"] for s in t.snapshots()] == ["overwrite", "merge"]
+    listed, stored, listed_ids, stored_ids = listed_and_stored(t)
+    assert stored == listed and stored_ids == listed_ids
+    assert not eng.apply_batch(spark, events_df(spark, events), epoch=0)["applied"]
+    assert listed_and_stored(eng.table())[1] == stored
 
 
 def test_deleted_key_stays_deleted_after_late_older_event(spark, tmp_path):
@@ -272,32 +318,112 @@ def test_streaming_schema_evolution_across_restart(spark, tmp_path, fixture):
     assert_final_state(spark, eng, state, schema)
 
 
-def test_fused_stats_bucket_hash_matches_merge_bucket_expr(spark, tmp_path, fixture):
-    """apply_batch's fused stats pass hashes RAW event key fields into the
-    lineage partitions — they name data buckets only if the hash is value-
-    and type-identical to icelite._bucket_expr over the bound
-    (current-schema) columns. Pin the parity, including after a key-column
-    RENAME (values unchanged -> hash unchanged)."""
-    import pandas as pd  # noqa: F401
-
+def test_data_only_epoch_runs_one_query(spark, tmp_path, fixture):
+    """A data-only epoch runs one Spark query, the merge: two jobs under
+    AQE (its shuffle map stage and its result). Lineage, the late count and
+    the schema-op check ride on it."""
     base, events, _state, _schema = fixture
-    eng = CdcEngine(str(tmp_path / "parity"), num_buckets=16)
-    table = eng.bootstrap(spark, base_df(spark, base))
-    meta = table.metadata()
-    ev = events_df(spark, events)
-    data = ev.where(F.col("op").isin("insert", "update", "delete"))
-    raw_hash = F.pmod(F.xxhash64(F.col("repo").cast("string"),
-                                 F.col("path").cast("string")), F.lit(16)).cast("int")
-    raw_buckets = {r[0] for r in data.select(raw_hash).distinct().collect()}
-    bound = data.select(F.col("repo"), F.col("path"))
-    merge_buckets = {r[0] for r in bound.select(table._bucket_expr(meta)).distinct().collect()}
-    assert raw_buckets == merge_buckets
-    # rename a key column: current-schema name changes, values don't
-    table.rename_column("repo", "repository")
-    meta2 = table.metadata()
-    bound2 = data.select(F.col("repo").alias("repository"), F.col("path"))
-    merge_buckets2 = {r[0] for r in bound2.select(table._bucket_expr(meta2)).distinct().collect()}
-    assert raw_buckets == merge_buckets2
+    data = data_events(events)
+    eng = CdcEngine(str(tmp_path / "repos"), num_buckets=8)
+    eng.bootstrap(spark, base_df(spark, base))
+    half = len(data) // 2
+    eng.apply_batch(spark, events_df(spark, data[:half]), epoch=0)
+    batch = events_df(spark, data[half:])
+    res, jobs = jobs_in_group(spark, "data-only-epoch",
+                              lambda: eng.apply_batch(spark, batch, epoch=1, drop_late=True))
+    assert res["applied"]
+    assert jobs == 2
+    lin = eng.read_lineage(spark).where("epoch = 1").agg(F.sum("event_count")).collect()[0][0]
+    assert lin == len(data) - half
+
+
+def test_epochs_that_advance_the_watermark_compile_nothing(spark, tmp_path, fixture):
+    """The late cut travels in the merge tasks' plan, not in the query: two
+    epochs that each advance cdc.max-ts-us compile the same code, so the
+    second compiles no class."""
+    base, events, _state, _schema = fixture
+    data = data_events(events)
+    eng = CdcEngine(str(tmp_path / "repos"), num_buckets=8)
+    eng.bootstrap(spark, base_df(spark, base))
+    thirds = [data[i * len(data) // 3:(i + 1) * len(data) // 3] for i in range(3)]
+    marks, counts = [], []
+    for epoch, chunk in enumerate(thirds):
+        batch = events_df(spark, chunk)
+        c0 = compiles(spark)
+        eng.apply_batch(spark, batch, epoch=epoch, late_delay_seconds=3600, drop_late=True)
+        counts.append(compiles(spark) - c0)
+        marks.append(int(eng.table().properties()["cdc.max-ts-us"]))
+    assert marks[0] < marks[1] < marks[2]
+    assert counts[2] == 0, counts
+
+
+@pytest.mark.parametrize("null_col", ["path", "seq"])
+def test_null_key_or_seq_is_refused_before_commit(spark, tmp_path, null_col):
+    """A data event with a null key column or a null seq cannot be merged:
+    the merge tasks count both, and apply_batch raises before the commit,
+    naming the epoch and both counts. Nothing is committed, no lineage is
+    written and no staged file is left."""
+    import datetime as dt
+
+    eng = CdcEngine(str(tmp_path / "repos"), num_buckets=4)
+    eng.bootstrap(spark, spark.createDataFrame(
+        [("r", "p", "c0", "py", "v0")],
+        "repo string, path string, commit string, lang string, content string"))
+    before = eng.table().current_snapshot()["snapshot_id"]
+    data_dir = os.path.join(eng.table_location, "data")
+    written = set(os.listdir(data_dir))
+    ts = dt.datetime(2024, 1, 1)
+    bad = {"path": (3, ts, "update", "r", None, "c3", "py", "v3", None),
+           "seq": (None, ts, "update", "r", "q", "c3", "py", "v3", None)}[null_col]
+    batch = spark.createDataFrame(
+        [(1, ts, "insert", "r", "a", "c1", "py", "v1", None),
+         (2, ts, "update", "r", "p", "c2", "py", "v2", None), bad], EVENT_SPARK_SCHEMA)
+    counts = {"path": (1, 0), "seq": (0, 1)}[null_col]
+    with pytest.raises(ValueError, match=re.escape(
+            f"merge_cdc epoch 7: {counts[0]} change rows have a null key column "
+            f"['repo', 'path'] and {counts[1]} a null _seq")):
+        eng.apply_batch(spark, batch, epoch=7)
+    assert eng.table().current_snapshot()["snapshot_id"] == before
+    assert eng.table().last_epoch() == -1
+    assert eng.lineage_table().current_snapshot() is None
+    assert set(os.listdir(data_dir)) == written
+
+
+def test_merge_summary_counts_winners_and_tombstones(spark, tmp_path):
+    """The merge snapshot's `winners` (change rows that won their key) and
+    `tombstones` (winning deletes) equal a DuckDB recount over the parent
+    and merged snapshots' files: a key's row in the merged snapshot is a
+    winner when the parent has no row with its seq."""
+    import datetime as dt
+
+    import duckdb
+
+    eng = CdcEngine(str(tmp_path / "repos"), num_buckets=4)
+    eng.bootstrap(spark, spark.createDataFrame(
+        [("r", f"p{i}", "c0", "py", "v0") for i in range(6)],
+        "repo string, path string, commit string, lang string, content string"))
+    ts = dt.datetime(2024, 1, 1)
+    rows = [(1, "update", "p0"), (2, "update", "p0"),   # two changes, one winner
+            (3, "delete", "p1"),                         # winning tombstone
+            (4, "insert", "n0"), (5, "delete", "n1"),    # new key, new tombstone
+            (0, "update", "p2")]                         # loses the tie to the stored row
+    eng.apply_batch(spark, spark.createDataFrame(
+        [(s, ts, op, "r", p, f"c{s}", "py", None if op == "delete" else f"v{s}", None)
+         for s, op, p in rows], EVENT_SPARK_SCHEMA), epoch=0)
+    t = eng.table()
+    parent, merged = t.snapshots()[-2:]
+
+    def files(snap):
+        return "[" + ", ".join(f"'{os.path.join(t.location, f['path'])}'"
+                               for f in snap["files"]) + "]"
+
+    won = duckdb.sql(
+        f"SELECT count(*), count(*) FILTER (WHERE n._deleted) "
+        f"FROM read_parquet({files(merged)}) n "
+        f"WHERE NOT EXISTS (SELECT 1 FROM read_parquet({files(parent)}) o "
+        f"WHERE o.repo = n.repo AND o.path = n.path AND o._seq = n._seq)").fetchone()
+    summary = merged["summary"]
+    assert (summary["winners"], summary["tombstones"]) == won == (4, 2)
 
 
 def test_stateless_stream_exactly_once_with_resume(spark, tmp_path, fixture):
@@ -435,8 +561,53 @@ def test_epoch_metrics_in_merge_summary(spark, tmp_path):
         assert summary["added-files-size"] == sum(os.path.getsize(p) for p in paths) \
             == sum(f["file_size_in_bytes"] for f in new)
         assert (summary["events-in"], summary["late-dropped"]) == lin[summary["epoch"]]
-        assert summary["stats-ms"] >= 0 and summary["merge-ms"] > 0
+        assert summary["merge-ms"] > 0 and "stats-ms" not in summary
     assert merges[1][1]["summary"]["late-dropped"] == len(redelivered)
+
+
+def test_crash_before_lineage_append_is_recounted_on_replay(spark, tmp_path, monkeypatch):
+    """A crash after an epoch's merge commit and before its lineage append
+    leaves lineage behind the epoch fence. The replayed epoch runs the
+    merge again, with the late cut the committed merge used, commits
+    nothing, leaves no file of its own, and writes the lineage rows of a
+    run that did not crash, 50 late drops included."""
+    base = generate_base_rows(150, n_repos=30, paths_per_repo=25)
+    events = generate_events(N_EVENTS, n_repos=30, paths_per_repo=25,
+                             delay_us=2_000_000, straggler_frac=0.0, dup_frac=0.0)
+    redelivered = [e for e in events[:60] if e["op"] in ("insert", "update", "delete")][:50]
+    half = len(events) // 2
+
+    def crash(*args, **kwargs):
+        raise RuntimeError("crash before the lineage append")
+
+    def run(name: str, crashing: bool) -> list:
+        eng = CdcEngine(str(tmp_path / name), num_buckets=4)
+        eng.bootstrap(spark, base_df(spark, base))
+        eng.apply_batch(spark, events_df(spark, events[:half]), epoch=0)
+        batch = events_df(spark, events[half:] + redelivered)
+
+        def epoch1():
+            return eng.apply_batch(spark, batch, epoch=1, late_delay_seconds=10, drop_late=True)
+
+        if crashing:
+            with monkeypatch.context() as m:
+                m.setattr(IceliteTable, "append_rows_local", crash)
+                with pytest.raises(RuntimeError, match="crash"):
+                    epoch1()
+            assert eng.table().last_epoch() == 1
+            n_snaps = len(eng.table().snapshots())
+            res = epoch1()
+            assert (res["applied"], res["reason"]) == (False, "epoch-fenced")
+            assert len(eng.table().snapshots()) == n_snaps
+            listed, stored, listed_ids, stored_ids = listed_and_stored(eng.table())
+            assert stored == listed and stored_ids == listed_ids
+        else:
+            assert epoch1()["applied"]
+        return sorted(tuple(r) for r in eng.read_lineage(spark).collect())
+
+    clean = run("clean", False)
+    assert run("crashed", True) == clean
+    assert sum(r[LINEAGE_SCHEMA.fieldNames().index("dropped_late")] for r in clean) == 50
 
 
 def test_over_cap_merge_group_fails_loudly_and_commits_nothing(spark, tmp_path, fixture,

@@ -151,12 +151,25 @@ def test_commit_conflict_detection(spark, tmp_path):
 
 
 def test_expire_snapshots_gc(spark, tmp_path):
+    """Expiry removes each dead Spark-written file with its `.crc`
+    checksum sibling, and a write-id directory that no retained snapshot
+    lists goes whole: data/ then holds only the retained snapshot's files
+    (and their own checksums and write markers)."""
     t = make(spark, tmp_path, [("a", 1, 0, False)])
     for i in range(3):
         t.overwrite(spark.createDataFrame([("a", i, i + 1, False)], SCHEMA))
     removed = t.expire_snapshots(keep_last=1)
     assert removed > 0
     assert t.read(spark).collect()[0]["v"] == 2
+    live = {f["path"] for f in t.current_snapshot()["files"]}
+    data_dir = os.path.join(t.location, "data")
+    assert set(os.listdir(data_dir)) == {p.split(os.sep)[1] for p in live}
+    stored = {os.path.relpath(os.path.join(d, f), t.location)
+              for d, _, fs in os.walk(data_dir) for f in fs}
+    assert {p for p in stored if p.endswith(".parquet") and "/." not in p} == live
+    crcs = {p for p in stored if p.endswith(".parquet.crc")}
+    assert crcs and all(os.path.join(os.path.dirname(c), os.path.basename(c)[1:-4]) in live
+                        for c in crcs)
 
 
 def test_expire_snapshots_rejects_keep_last_below_one(spark, tmp_path):

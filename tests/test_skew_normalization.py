@@ -48,14 +48,18 @@ def test_zeromean_and_minmax(spark):
 
 def test_streaming_transform_chain_in_apply_stage(spark, tmp_path):
     """North-star graft: DataVec-style transform chain (vectorized, zero
-    per-row Python) applied inside the CDC merge-apply stage."""
+    per-row Python) applied inside the CDC merge-apply stage. The chain
+    runs before the merge, so lineage counts the events that reach it: a
+    `filter` op's dropped events are not in lineage's event counts."""
     from datavec_spark.operators.transforms import TransformProcess
     from datavec_spark.streaming.datagen import generate_base_rows, generate_events, events_to_table
     from datavec_spark.streaming.replay import EVENT_SPARK_SCHEMA, CdcEngine
 
     base = generate_base_rows(50, 10, 10)
     events = generate_events(300, n_repos=10, paths_per_repo=10, with_schema_events=False)
-    tp = TransformProcess().add("change_case", column="lang", mode="upper")
+    tp = (TransformProcess()
+          .add("filter", condition={"op": "==", "column": "lang", "value": "txt"})
+          .add("change_case", column="lang", mode="upper"))
     eng = CdcEngine(str(tmp_path / "repos"), num_buckets=4)
     eng.bootstrap(spark, spark.createDataFrame(
         [(r["repo"], r["path"], r["commit"], r["lang"].upper(), r["content"]) for r in base],
@@ -67,3 +71,9 @@ def test_streaming_transform_chain_in_apply_stage(spark, tmp_path):
                     transform_chain=tp)
     langs = {r["lang"] for r in eng.read_current(spark).select("lang").distinct().collect()}
     assert langs and all(v == v.upper() for v in langs)
+    kept = [e for e in events if e["lang"] != "txt"]
+    assert len(kept) < len(events)
+    lin = eng.read_lineage(spark).agg(F.sum("event_count"), F.min("min_seq"),
+                                      F.max("max_seq")).collect()[0]
+    assert tuple(lin) == (len(kept), min(e["seq"] for e in kept), max(e["seq"] for e in kept))
+    assert eng.table().current_snapshot()["summary"]["events-in"] == len(kept)
