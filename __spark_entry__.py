@@ -1728,7 +1728,7 @@ def cdc_lineage_rows(spark, sf_dir):
     stream path drops — the nonzero accounting is gated by
     cdc_stream_lineage_drops)."""
     eng = _cdc_replay_fixture(spark)
-    lin = eng.lineage_table().read(spark)
+    lin = eng.read_lineage(spark)
     return (
         lin.groupBy("epoch")
         .agg(
@@ -1769,7 +1769,7 @@ def cdc_stream_lineage_drops(spark, sf_dir):
         )
         q.awaitTermination()
         _CDC_DROPS_ENGINE = eng
-    lin = _CDC_DROPS_ENGINE.lineage_table().read(spark)
+    lin = _CDC_DROPS_ENGINE.read_lineage(spark)
     return (
         lin.groupBy("epoch")
         .agg(

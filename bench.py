@@ -172,8 +172,8 @@ def run_cdc_replay(spark, fixture_dir: str) -> dict:
     returns wall + rate + an order-insensitive checksum of the final state
     (replay-equality evidence across parallelism levels). The replay
     includes the per-bucket LWW merge with tombstones (whose tasks also
-    count the lineage), the schema ops, the lineage append and the
-    epoch-fenced commit; the final-state read stays outside the clock."""
+    count the lineage), the schema ops and the epoch-fenced commit that
+    carries the lineage; the final-state read stays outside the clock."""
     from pyspark.sql import functions as F
 
     from datavec_spark.streaming.replay import CdcEngine

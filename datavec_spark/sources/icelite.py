@@ -170,7 +170,10 @@ MERGE_ENTRY = pa.schema([("path", pa.string()), ("bucket", pa.int32()),
                          ("file_size_in_bytes", pa.int64())]
                         + [(n, pa.int64()) for n in (
                             "changes", "min_seq", "max_seq", "null_keys", "null_seq",
-                            "late", "max_event_us", "winners", "tombstones")])
+                            "late", "dropped", "max_event_us", "winners", "tombstones")])
+# the per-bucket tallies a merge snapshot's summary records, one list each
+# under "bucket-tallies"
+TALLY_COLS = ("bucket", "changes", "min_seq", "max_seq", "late", "dropped")
 
 
 def data_file_entry(location: str, rel: str, bucket: int, schema_id: int) -> dict:
@@ -213,9 +216,13 @@ def merge_group(changes: pa.Table, bucket: int, spec: dict) -> dict:
     current schema, any number of rows per key. The bucket's target files
     (every file listed for it) are read here with pyarrow and bound to the
     current schema by field id with bind_names. Per key the highest `_seq`
-    wins and the stored row wins a tie. A delete is a tombstone (`_deleted`
-    true), an ordinary row that keeps its seq, so an older change can never
-    bring the key back.
+    wins and the stored row wins a tie. Among change rows with an equal
+    `_seq` a tombstone wins, then the row that sorts first by every other
+    column ascending, so any order of the same rows writes the same file;
+    list columns are left out of that order (pyarrow cannot sort by them),
+    so rows differing only there still tie by arrival. A delete is a
+    tombstone (`_deleted` true), an ordinary row that keeps its seq, so an
+    older change can never bring the key back.
 
     Writes one key-sorted file with write_bucket_file, at a path fixed by
     (write id, bucket), and returns its manifest entry with the group's
@@ -225,7 +232,8 @@ def merge_group(changes: pa.Table, bucket: int, spec: dict) -> dict:
     (winners that are tombstones). With an EVENT_US column, `max_event_us`
     is the rows' newest event time and `late` counts the rows older than
     spec["late_cut_us"]; with spec["drop_late"] they are dropped before the
-    merge, and a group left with no change row writes nothing (path None).
+    merge and counted in `dropped`, and a group left with no change row
+    writes nothing (path None).
     A group over spec["cap"] bytes raises MemoryError before any target
     file is read.
 
@@ -238,7 +246,7 @@ def merge_group(changes: pa.Table, bucket: int, spec: dict) -> dict:
     tally = {"changes": changes.num_rows, "min_seq": seq["min"], "max_seq": seq["max"],
              "null_keys": changes.num_rows - changes.select(keys).drop_null().num_rows,
              "null_seq": changes.column("_seq").null_count,
-             "late": 0, "max_event_us": None, "winners": 0, "tombstones": 0}
+             "late": 0, "dropped": 0, "max_event_us": None, "winners": 0, "tombstones": 0}
     if EVENT_US in changes.column_names:
         ts = changes.column(EVENT_US)
         tally["max_event_us"] = pc.max(ts).as_py()
@@ -247,6 +255,7 @@ def merge_group(changes: pa.Table, bucket: int, spec: dict) -> dict:
             tally["late"] = pc.sum(late).as_py() or 0
             if spec.get("drop_late"):
                 changes = changes.filter(pc.invert(late))
+                tally["dropped"] = tally["late"]
     if changes.num_rows == 0:
         return {"path": None, "bucket": bucket, "schema_id": spec["schema_id"],
                 "record_count": 0, "file_size_in_bytes": 0, **tally}
@@ -276,8 +285,15 @@ def merge_group(changes: pa.Table, bucket: int, spec: dict) -> dict:
         with pq.ParquetFile(p, coerce_int96_timestamp_unit="us") as pf:
             tbl = pf.read(columns=[name for name in names if name is not None])
         parts.append(bind(tbl, names, 1))
-    rows = pa.concat_tables(parts).sort_by(
-        [(k, "ascending") for k in keys] + [("_seq", "descending"), ("__src", "descending")])
+    # a total order, so any arrival order of the changes writes the same
+    # bytes: per key the highest seq, then the stored row, then a tombstone,
+    # then the smallest image by every other column
+    order = [(k, "ascending") for k in keys] + [("_seq", "descending"), ("__src", "descending")]
+    if "_deleted" in schema.names:
+        order.append(("_deleted", "descending"))
+    order += [(f.name, "ascending") for f in schema
+              if f.name not in (*keys, "_seq", "_deleted", "__src") and not pa.types.is_list(f.type)]
+    rows = pa.concat_tables(parts).sort_by(order)
     rows = rows.append_column("__row", pa.array(np.arange(rows.num_rows)))
     first = rows.group_by(keys, use_threads=False).aggregate([("__row", "min")])["__row_min"]
     out = rows.take(first.sort())
@@ -603,15 +619,18 @@ class IceliteTable:
     @contextlib.contextmanager
     def _staged(self):
         """A fresh write id, naming the directory data/<write_id>/ that holds
-        one commit's new files. If the block raises (a failed write job, or
-        a commit that loses the version CAS) the directory is removed: no
-        snapshot lists its files, so expire_snapshots would never collect
-        them."""
+        one commit's new files. If the block raises before its commit point
+        (a failed write job, or a commit that loses the version CAS) the
+        directory is removed: no snapshot lists its files, so
+        expire_snapshots would never collect them. A raise after the
+        metadata link (the hint swing) keeps them: the commit lists them."""
         write_id = uuid.uuid4().hex
         try:
             yield write_id
         except BaseException:
-            shutil.rmtree(os.path.join(self._data_dir, write_id), ignore_errors=True)
+            if not any(f["path"].split(os.sep)[1] == write_id
+                       for s in self.snapshots() for f in s["files"]):
+                shutil.rmtree(os.path.join(self._data_dir, write_id), ignore_errors=True)
             raise
 
     def _write_data_files(self, df: DataFrame, meta: dict, write_id: str) -> list[dict]:
@@ -645,12 +664,11 @@ class IceliteTable:
             "summary": summary,
             "files": files,
         }
-        meta["snapshots"].append(snap)
-        meta["current_snapshot_id"] = snap_id
-        meta["last_snapshot_id"] = snap_id
-        if properties_update:
-            meta["properties"].update(properties_update)
-        self._write_metadata(meta, expected_version=version)
+        # a new dict: the loaded one stays what the commit was based on
+        self._write_metadata({**meta, "snapshots": [*meta["snapshots"], snap],
+                              "current_snapshot_id": snap_id, "last_snapshot_id": snap_id,
+                              "properties": {**meta["properties"], **(properties_update or {})}},
+                             expected_version=version)
         return snap_id
 
     def _commit_files(self, operation: str, write, summary: dict[str, Any] | None = None,
@@ -761,7 +779,10 @@ class IceliteTable:
         with the snapshot commit. The snapshot summary records the rows and
         bytes written (`added-records`, `added-files-size`), the change rows
         that won their key (`winners`), the tombstones among them
-        (`tombstones`) and `merge-ms`.
+        (`tombstones`), `merge-ms`, and `bucket-tallies`: the buckets'
+        tallies as one list per TALLY_COLS field. A merge whose every change
+        was dropped late writes no file and commits the parent's file list
+        with its tallies.
 
         Returns {"applied": bool, "snapshot_id": int|None, "buckets": the
         tallies} ("buckets" is absent when the epoch fence made it a no-op).
@@ -848,6 +869,7 @@ class IceliteTable:
                  "winners": sum(b["winners"] for b in buckets),
                  "tombstones": sum(b["tombstones"] for b in buckets),
                  "merge-ms": int((time.perf_counter() - t0) * 1000),
+                 "bucket-tallies": {c: [b[c] for b in buckets] for c in TALLY_COLS},
                  **(extra.get("summary") or {})},
                 properties_update=props or None,
             )

@@ -28,9 +28,11 @@ Semantics (BASELINE.json north_star):
   immutable field id (property `cdc.field-map`), so renames never detach
   the stream from its columns;
 - per-batch lineage rows (epoch, partition=bucket — the table's one
-  partition unit — event_count, min/max seq, late_count, snapshot_id),
-  counted by the merge's own tasks, land in a lineage table,
-  idempotently (re-running an epoch overwrites the same keys).
+  partition unit — event_count, min/max seq, late_count, dropped_late,
+  snapshot_id) are counted by the merge's own tasks and ride in the merge
+  snapshot that commits the epoch, so one metadata commit carries data,
+  fences and lineage. Lineage is a view over those snapshots and has
+  their retention.
 """
 
 from __future__ import annotations
@@ -41,7 +43,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from datavec_spark.sources.icelite import EVENT_US, IceliteTable, is_live, type_to_spark
+from datavec_spark.sources.icelite import EVENT_US, TALLY_COLS, IceliteTable, is_live, type_to_spark
 
 EVENT_SPARK_SCHEMA = T.StructType(
     [
@@ -104,7 +106,6 @@ def content_expr(repo: F.Column, path: F.Column, seq: F.Column) -> F.Column:
 class CdcEngine:
     def __init__(self, table_location: str, num_buckets: int = 16):
         self.table_location = table_location
-        self.lineage_location = table_location.rstrip("/") + "_lineage"
         # the merge's rewrite unit and its task count (capped by the
         # default parallelism): smaller rewrite files need more buckets
         self.num_buckets = num_buckets
@@ -112,8 +113,9 @@ class CdcEngine:
     # -- bootstrap -------------------------------------------------------------
 
     def bootstrap(self, spark: SparkSession, base_df: DataFrame | None = None) -> IceliteTable:
-        """Create the target + lineage tables; load the initial snapshot
-        (seq=0 rows). base_df has the input_hint shape."""
+        """Create the target table and load its initial snapshot (seq=0
+        rows); base_df has the input_hint shape. Lineage needs no table of
+        its own: it rides in the merge snapshots."""
         schema = T.StructType(
             [T.StructField(n, T.StringType()) for n in EVENT_FIELDS]
             + [T.StructField("_seq", T.LongType()), T.StructField("_deleted", T.BooleanType())]
@@ -129,13 +131,6 @@ class CdcEngine:
                 "cdc.last-epoch": "-1",
             },
         )
-        IceliteTable.create(
-            self.lineage_location,
-            LINEAGE_SCHEMA,
-            key_cols=["epoch", "partition"],
-            num_buckets=1,
-            properties={"lineage.last-epoch": "-1"},
-        )
         if base_df is not None:
             table.overwrite(
                 base_df.withColumn("_seq", F.lit(0).cast("long")).withColumn("_deleted", F.lit(False)),
@@ -147,7 +142,10 @@ class CdcEngine:
         return IceliteTable.load(self.table_location)
 
     def lineage_table(self) -> IceliteTable:
-        return IceliteTable.load(self.lineage_location)
+        """The table whose snapshots carry the lineage: the data table.
+        Kept for the benchmark's commit_times, which reads epochs from it;
+        read_lineage is the way to read lineage."""
+        return self.table()
 
     # -- reads -----------------------------------------------------------------
 
@@ -156,18 +154,20 @@ class CdcEngine:
         t = self.table()
         return t.read(spark).where(is_live()).drop("_seq", "_deleted")
 
+    def _lineage_rows(self) -> list[dict]:
+        """LINEAGE_SCHEMA rows, one per (epoch, bucket), from the bucket
+        tallies of every retained snapshot that committed an epoch."""
+        names = LINEAGE_SCHEMA.fieldNames()
+        return [dict(zip(names, (s["summary"]["epoch"], *row, s["snapshot_id"])))
+                for s in IceliteTable(self.table_location).snapshots()
+                if s["summary"].get("epoch") is not None
+                for row in zip(*(s["summary"]["bucket-tallies"][c] for c in TALLY_COLS))]
+
     def read_lineage(self, spark: SparkSession) -> DataFrame:
-        lin = self.lineage_table()
-        df = lin.read(spark)
-        # upgrade path (r6 advice #4): a lineage table created before a
-        # LINEAGE_SCHEMA column existed (e.g. dropped_late) stores the old
-        # schema; null-fill the missing columns so readers written against
-        # the current schema keep resolving (matches the field-id
-        # projection contract data tables already have)
-        for f in LINEAGE_SCHEMA.fields:
-            if f.name not in df.columns:
-                df = df.withColumn(f.name, F.lit(None).cast(f.dataType))
-        return df
+        """Per-(epoch, bucket) lineage, built on the driver from the merge
+        snapshots. It has the snapshots' retention: expire_snapshots drops
+        the lineage of the epochs it expires."""
+        return spark.createDataFrame(self._lineage_rows(), LINEAGE_SCHEMA)
 
     # -- the apply stage (shared by batch replay and foreachBatch) --------------
 
@@ -180,23 +180,28 @@ class CdcEngine:
         transform_chain=None,
         drop_late: bool = False,
     ) -> dict:
-        """Apply one epoch of the change stream. Idempotent per epoch.
+        """Apply one epoch of the change stream. Idempotent per epoch: an
+        epoch at or below the `cdc.last-epoch` fence (a foreachBatch
+        redelivery after restart) has fully committed and returns at once,
+        with no Spark job.
 
         Serial-path shape (this is the per-trigger driver cost a stream
         pays once per micro-batch): ONE Spark query for an epoch without
-        schema ops, 2 jobs under AQE. Every data event is bound to the
-        current table columns by field id — a full-row image (payload
-        columns under their current names, `_seq` = seq, `_deleted` = op
-        is delete) plus its event time in micros (icelite.EVENT_US) — and
-        handed to merge_cdc: the events are shuffled by bucket, and one
-        Arrow task per bucket resolves last-writer-wins against that
-        bucket's stored file, writes its replacement and returns the
-        bucket's tallies (event count, min/max seq, late count, newest
-        event time). The same query observes the newest schema-op seq. The
-        tallies decide, before the commit, the watermark `cdc.max-ts-us`,
-        the epoch's summary and lineage rows, and whether to commit at all.
-        The late cut is a Python int in the tasks' plan, so the query's
-        generated code is the same every epoch.
+        schema ops, 2 jobs under AQE, and ONE metadata commit. Every data
+        event is bound to the current table columns by field id — a
+        full-row image (payload columns under their current names, `_seq` =
+        seq, `_deleted` = op is delete) plus its event time in micros
+        (icelite.EVENT_US) — and handed to merge_cdc: the events are
+        shuffled by bucket, and one Arrow task per bucket resolves
+        last-writer-wins against that bucket's stored file, writes its
+        replacement and returns the bucket's tallies (event count, min/max
+        seq, late count, newest event time). The same query observes the
+        newest schema-op seq. The tallies decide, before the commit, the
+        watermark `cdc.max-ts-us`, the epoch's summary and whether to
+        commit at all; the merge snapshot records them per bucket, and they
+        are the epoch's lineage (read_lineage). The late cut is a Python int
+        in the tasks' plan, so the query's generated code is the same every
+        epoch.
 
         Schema ops (~1% of events) never enter the merge. If the batch
         holds one above the `cdc.schema-seq` fence, the merge's files are
@@ -212,7 +217,7 @@ class CdcEngine:
         The merge snapshot's summary records the epoch's metrics: events-in
         (data events that reached the merge), late-dropped, the late cut
         it used (late-cut-us), and merge_cdc's own winners, tombstones,
-        added-records, added-files-size and merge-ms.
+        added-records, added-files-size, merge-ms and bucket-tallies.
 
         Lineage counts the events that reach the merge: the transform
         chain runs first, so events it filters out are not counted. Its
@@ -226,20 +231,14 @@ class CdcEngine:
         `cdc.max-ts-us` advances like Spark's global watermark (max event
         time of prior triggers), so this is the stream's watermark, with
         exact per-bucket drop accounting. An epoch whose every event is
-        late commits nothing and advances no fence, but its drops still
-        land in lineage. Batch backfills keep drop_late=False: unbounded
-        lateness tolerance (late events are still counted)."""
+        late commits a snapshot with its parent's file list, which records
+        its drops and advances `cdc.last-epoch`; an epoch with no data
+        event commits nothing. Batch backfills keep drop_late=False:
+        unbounded lateness tolerance (late events are still counted)."""
         table = IceliteTable(self.table_location)
         meta = table.metadata()  # the ONE per-epoch metadata load
         props = meta["properties"]
-        # fast path: a fenced epoch (foreachBatch redelivery after restart)
-        # has fully committed — skip all computation, not just the commit.
-        # If the crash hit between the merge commit and the lineage write,
-        # lineage lags the fence: fall through, so the merge runs again to
-        # recount the epoch and commits nothing.
-        lin = IceliteTable(self.lineage_location)
-        fenced = epoch is not None and epoch <= int(props.get("cdc.last-epoch", "-1"))
-        if fenced and int(lin.properties().get("lineage.last-epoch", "-1")) >= epoch:
+        if epoch is not None and epoch <= int(props.get("cdc.last-epoch", "-1")):
             return {"applied": False, "snapshot_id": None, "reason": "epoch-fenced"}
         fmap = json.loads(props["cdc.field-map"])
         # the late cut relative to the stream watermark carried in
@@ -249,13 +248,6 @@ class CdcEngine:
         prev_max_us = props.get("cdc.max-ts-us")
         late_cut_us = None if prev_max_us is None else (
             int(prev_max_us) - late_delay_seconds * 1_000_000)
-        # a fenced epoch is recounted with the cut its committed merge used,
-        # not one from the watermark that merge advanced
-        committed = next((s for s in meta["snapshots"] if s["summary"].get("epoch") == epoch),
-                         None) if fenced else None
-        if committed is not None:
-            late_cut_us = committed["summary"].get("late-cut-us", late_cut_us)
-        dropping = drop_late and late_cut_us is not None
         is_schema = F.col("op").isin(*SCHEMA_OPS)
 
         def merge(meta: dict) -> dict:
@@ -281,57 +273,27 @@ class CdcEngine:
                 newest_op = ops.get["seq"]
                 if newest_op is not None and newest_op > schema_fence:
                     raise _SchemaOpsPending(schema_fence, bool(buckets))
-                events_in = sum(b["changes"] for b in buckets)
-                late = sum(b["late"] for b in buckets)
-                if fenced or not events_in or (dropping and events_in == late):
-                    # nothing to merge or fence (idempotent on redelivery:
-                    # the drop recomputes), but drops still land in lineage
+                if not buckets:  # no data event: nothing to merge or fence
                     return None
                 maxes = [b["max_event_us"] for b in buckets if b["max_event_us"] is not None]
                 if prev_max_us is not None:
                     maxes.append(int(prev_max_us))
-                return {"summary": {"epoch": epoch, "events-in": events_in,
-                                    "late-dropped": late if dropping else 0,
+                return {"summary": {"epoch": epoch,
+                                    "events-in": sum(b["changes"] for b in buckets),
+                                    "late-dropped": sum(b["dropped"] for b in buckets),
                                     "late-cut-us": late_cut_us},
                         "properties": {"cdc.max-ts-us": str(max(maxes))} if maxes else {}}
 
-            return table.merge_cdc(spark, changes, epoch=None if fenced else epoch,
-                                   late_cut_us=late_cut_us, drop_late=dropping,
-                                   before_commit=before_commit)
+            return table.merge_cdc(spark, changes, epoch=epoch, late_cut_us=late_cut_us,
+                                   drop_late=drop_late, before_commit=before_commit)
 
         try:
             result = merge(meta)
         except _SchemaOpsPending as pending:
             self._apply_schema_ops(table, batch_df.where(is_schema), pending.fence)
             result = merge(table.metadata()) if pending.has_data else {"buckets": []}
-        if "buckets" not in result:  # merge_cdc's own fence: a racing writer applied it
-            return result
-        buckets = result["buckets"]
-        if not buckets:  # empty trigger (no data events this epoch)
+        if result.get("buckets") == []:  # empty trigger (no data events this epoch)
             return {"applied": False, "snapshot_id": None, "reason": "empty-batch"}
-        if not result["applied"]:
-            result = {"applied": False, "snapshot_id": None,
-                      "reason": "epoch-fenced" if fenced else "all-late-dropped"}
-
-        # lineage upsert — idempotent by (epoch, partition) key
-        snap_id = result["snapshot_id"] if result["applied"] else (
-            committed or IceliteTable._current(meta) or {}).get("snapshot_id")
-        if int(lin.properties().get("lineage.last-epoch", "-1")) < epoch:
-            rows = [
-                {"epoch": epoch, "partition": b["bucket"],
-                 "event_count": b["changes"], "min_seq": b["min_seq"],
-                 "max_seq": b["max_seq"], "late_count": b["late"],
-                 "dropped_late": b["late"] if dropping else 0,
-                 "snapshot_id": snap_id}
-                for b in buckets
-            ]
-            # ≤num_buckets rows: driver-side pyarrow append — saves a full
-            # Spark job + commit per epoch (the lineage is tiny by design)
-            lin.append_rows_local(
-                rows,
-                summary={"epoch": epoch},
-                properties_update={"lineage.last-epoch": str(epoch)},
-            )
         return result
 
     @staticmethod
@@ -431,22 +393,13 @@ class CdcEngine:
 
     def lineage_drop_totals(self, spark: SparkSession) -> dict:
         """Drop accounting for the stream's lateness SLA, which the apply
-        stage enforces: totals over the lineage table's exact per-(epoch,
-        bucket) columns. Durable — survives restarts with the table."""
-        row = (
-            self.read_lineage(spark)
-            .agg(
-                F.sum("dropped_late").alias("dropped"),
-                F.sum("late_count").alias("late"),
-                F.sum("event_count").alias("events"),
-            )
-            .collect()[0]
-        )
-        return {
-            "rows_dropped_late": int(row["dropped"] or 0),
-            "rows_late": int(row["late"] or 0),
-            "rows_arrived": int(row["events"] or 0),
-        }
+        stage enforces: totals over lineage's exact per-(epoch, bucket)
+        columns, summed on the driver with no Spark job. Durable — survives
+        restarts with the table, for the snapshots it retains."""
+        rows = self._lineage_rows()
+        return {"rows_dropped_late": sum(r["dropped_late"] for r in rows),
+                "rows_late": sum(r["late_count"] for r in rows),
+                "rows_arrived": sum(r["event_count"] for r in rows)}
 
     # -- verification ----------------------------------------------------------------
 

@@ -23,7 +23,6 @@ from datavec_spark.streaming.datagen import (
 from datavec_spark.streaming.oracle import replay as oracle_replay, expected_key_hashes
 from datavec_spark.streaming.replay import (
     EVENT_SPARK_SCHEMA,
-    LINEAGE_SCHEMA,
     CdcEngine,
     content_expr,
 )
@@ -166,7 +165,7 @@ def test_chunked_epochs_and_fence(spark, tmp_path, fixture):
                    for f in s["files"])
     assert_final_state(spark, eng, state, schema)
     # lineage: one row set per epoch, counts sum to total events applied
-    lin = eng.lineage_table().read(spark)
+    lin = eng.read_lineage(spark)
     per_epoch = {r["epoch"]: r["total"] for r in
                  lin.groupBy("epoch").agg(F.sum("event_count").alias("total")).collect()}
     assert set(per_epoch) == set(range(n_chunks))
@@ -195,7 +194,7 @@ def test_streaming_replay_with_resume(spark, tmp_path, fixture):
     q3 = eng.run_stream(spark, events_dir, ckpt)
     q3.awaitTermination()
     assert_final_state(spark, eng, state, schema)
-    lin = eng.lineage_table().read(spark)
+    lin = eng.read_lineage(spark)
     assert lin.count() > 0
 
 
@@ -321,18 +320,28 @@ def test_streaming_schema_evolution_across_restart(spark, tmp_path, fixture):
 def test_data_only_epoch_runs_one_query(spark, tmp_path, fixture):
     """A data-only epoch runs one Spark query, the merge: two jobs under
     AQE (its shuffle map stage and its result). Lineage, the late count and
-    the schema-op check ride on it."""
+    the schema-op check ride on it, and its one metadata commit carries
+    them: the epoch adds exactly one `v{N}.json`, and bootstrap creates no
+    second table."""
     base, events, _state, _schema = fixture
     data = data_events(events)
     eng = CdcEngine(str(tmp_path / "repos"), num_buckets=8)
     eng.bootstrap(spark, base_df(spark, base))
+    assert os.listdir(tmp_path) == ["repos"]
+    meta_dir = os.path.join(eng.table_location, "metadata")
+
+    def versions():
+        return {f for f in os.listdir(meta_dir) if re.fullmatch(r"v\d+\.json", f)}
+
     half = len(data) // 2
     eng.apply_batch(spark, events_df(spark, data[:half]), epoch=0)
     batch = events_df(spark, data[half:])
+    before = versions()
     res, jobs = jobs_in_group(spark, "data-only-epoch",
                               lambda: eng.apply_batch(spark, batch, epoch=1, drop_late=True))
     assert res["applied"]
     assert jobs == 2
+    assert len(versions() - before) == 1 and before < versions()
     lin = eng.read_lineage(spark).where("epoch = 1").agg(F.sum("event_count")).collect()[0][0]
     assert lin == len(data) - half
 
@@ -385,7 +394,7 @@ def test_null_key_or_seq_is_refused_before_commit(spark, tmp_path, null_col):
         eng.apply_batch(spark, batch, epoch=7)
     assert eng.table().current_snapshot()["snapshot_id"] == before
     assert eng.table().last_epoch() == -1
-    assert eng.lineage_table().current_snapshot() is None
+    assert eng.read_lineage(spark).count() == 0
     assert set(os.listdir(data_dir)) == written
 
 
@@ -565,49 +574,130 @@ def test_epoch_metrics_in_merge_summary(spark, tmp_path):
     assert merges[1][1]["summary"]["late-dropped"] == len(redelivered)
 
 
-def test_crash_before_lineage_append_is_recounted_on_replay(spark, tmp_path, monkeypatch):
-    """A crash after an epoch's merge commit and before its lineage append
-    leaves lineage behind the epoch fence. The replayed epoch runs the
-    merge again, with the late cut the committed merge used, commits
-    nothing, leaves no file of its own, and writes the lineage rows of a
-    run that did not crash, 50 late drops included."""
+def _crash_in_before_commit(m):
+    merge = IceliteTable.merge_cdc
+
+    def faulty(self, *args, before_commit, **kwargs):
+        def crash(buckets):
+            before_commit(buckets)
+            raise RuntimeError("crash after the merge query")
+        return merge(self, *args, before_commit=crash, **kwargs)
+
+    m.setattr(IceliteTable, "merge_cdc", faulty)
+
+
+def _crash_at(m, name, hits):
+    real = getattr(os, name)
+
+    def crash(src, dst, *args, **kwargs):
+        if hits(str(dst)):
+            raise RuntimeError(f"crash at os.{name}({dst})")
+        return real(src, dst, *args, **kwargs)
+
+    m.setattr(os, name, crash)
+
+
+# the three points of an epoch's one commit: the commit decision, the
+# metadata link (after the data files are written) and the hint swing
+# (after the link). Merge tasks write their files in Python workers, which
+# the driver's patches do not reach.
+CRASH_POINTS = {
+    "before_commit": _crash_in_before_commit,
+    "metadata_link": lambda m: _crash_at(m, "link", lambda dst: dst.endswith(".json")),
+    "hint_replace": lambda m: _crash_at(m, "replace", lambda dst: dst.endswith("version-hint.text")),
+}
+
+
+@pytest.mark.parametrize("point", sorted(CRASH_POINTS))
+def test_crash_matrix_resumes_to_one_commit(spark, tmp_path, fixture, monkeypatch, point):
+    """An epoch crashed at any point of its one commit resumes to the
+    oracle state, with exactly one lineage row per (epoch, bucket) that
+    received events, all from the snapshot that committed the epoch, and
+    data/ holds no file that no snapshot lists. A crash before the link
+    leaves nothing, so the resumed epoch merges; a crash after it leaves
+    the epoch committed, so the resumed epoch is fenced."""
+    base, events, _state, _schema = fixture
+    data = data_events(events)
+    state, schema = oracle_replay(base, data)
+    chunks = [data[:len(data) // 2], data[len(data) // 2:]]
+    eng = CdcEngine(str(tmp_path / "repos"), num_buckets=4)
+    eng.bootstrap(spark, base_df(spark, base))
+    eng.apply_batch(spark, events_df(spark, chunks[0]), epoch=0)
+    batch = events_df(spark, chunks[1])
+    with monkeypatch.context() as m:
+        CRASH_POINTS[point](m)
+        with pytest.raises(RuntimeError, match="crash"):
+            eng.apply_batch(spark, batch, epoch=1)
+    res = eng.apply_batch(spark, batch, epoch=1)
+    assert res["applied"] == (point != "hint_replace")
+    assert_final_state(spark, eng, state, schema)
+    t = eng.table()
+    commits = {s["summary"]["epoch"]: s["snapshot_id"] for s in t.snapshots()
+               if s["summary"].get("epoch") is not None}
+    assert sorted(commits) == [0, 1]
+    rows = eng.read_lineage(spark).collect()
+    assert len({(r["epoch"], r["partition"]) for r in rows}) == len(rows)
+    assert all(r["event_count"] > 0 and r["snapshot_id"] == commits[r["epoch"]] for r in rows)
+    assert {e: sum(r["event_count"] for r in rows if r["epoch"] == e) for e in (0, 1)} \
+        == {e: len(c) for e, c in enumerate(chunks)}
+    listed, stored, listed_ids, stored_ids = listed_and_stored(t)
+    assert stored == listed and stored_ids == listed_ids
+
+
+def test_all_late_epoch_commits_its_drops_and_fences_its_redelivery(spark, tmp_path):
+    """An epoch whose every event is far late commits one snapshot with its
+    parent's file list. It records the drops in lineage and advances
+    cdc.last-epoch, so its redelivery is fenced and starts no Spark job.
+    lineage_drop_totals sums lineage on the driver, with no Spark job."""
     base = generate_base_rows(150, n_repos=30, paths_per_repo=25)
     events = generate_events(N_EVENTS, n_repos=30, paths_per_repo=25,
                              delay_us=2_000_000, straggler_frac=0.0, dup_frac=0.0)
-    redelivered = [e for e in events[:60] if e["op"] in ("insert", "update", "delete")][:50]
-    half = len(events) // 2
+    data = data_events(events)
+    eng = CdcEngine(str(tmp_path / "repos"), num_buckets=4)
+    eng.bootstrap(spark, base_df(spark, base))
+    eng.apply_batch(spark, events_df(spark, data), epoch=0)
+    parent = eng.table().current_snapshot()
+    # the first 50 events again, ~2 min older than the watermark: all late
+    batch = events_df(spark, data[:50])
 
-    def crash(*args, **kwargs):
-        raise RuntimeError("crash before the lineage append")
+    def epoch1():
+        return eng.apply_batch(spark, batch, epoch=1, late_delay_seconds=10, drop_late=True)
 
-    def run(name: str, crashing: bool) -> list:
-        eng = CdcEngine(str(tmp_path / name), num_buckets=4)
-        eng.bootstrap(spark, base_df(spark, base))
-        eng.apply_batch(spark, events_df(spark, events[:half]), epoch=0)
-        batch = events_df(spark, events[half:] + redelivered)
+    res = epoch1()
+    t = eng.table()
+    snap = t.current_snapshot()
+    assert res["applied"] and res["snapshot_id"] == snap["snapshot_id"] == parent["snapshot_id"] + 1
+    assert snap["files"] == parent["files"]
+    assert t.last_epoch() == 1
+    assert (snap["summary"]["events-in"], snap["summary"]["late-dropped"]) == (50, 50)
+    lin = eng.read_lineage(spark).where("epoch = 1").collect()
+    assert sum(r["dropped_late"] for r in lin) == 50
+    assert {r["snapshot_id"] for r in lin} == {snap["snapshot_id"]}
+    totals, jobs = jobs_in_group(spark, "drop-totals", lambda: eng.lineage_drop_totals(spark))
+    assert (totals["rows_dropped_late"], jobs) == (50, 0)
+    res, jobs = jobs_in_group(spark, "all-late-redelivery", epoch1)
+    assert (res["applied"], res["reason"], jobs) == (False, "epoch-fenced", 0)
+    assert len(eng.table().snapshots()) == len(t.snapshots())
 
-        def epoch1():
-            return eng.apply_batch(spark, batch, epoch=1, late_delay_seconds=10, drop_late=True)
 
-        if crashing:
-            with monkeypatch.context() as m:
-                m.setattr(IceliteTable, "append_rows_local", crash)
-                with pytest.raises(RuntimeError, match="crash"):
-                    epoch1()
-            assert eng.table().last_epoch() == 1
-            n_snaps = len(eng.table().snapshots())
-            res = epoch1()
-            assert (res["applied"], res["reason"]) == (False, "epoch-fenced")
-            assert len(eng.table().snapshots()) == n_snaps
-            listed, stored, listed_ids, stored_ids = listed_and_stored(eng.table())
-            assert stored == listed and stored_ids == listed_ids
-        else:
-            assert epoch1()["applied"]
-        return sorted(tuple(r) for r in eng.read_lineage(spark).collect())
+def test_lineage_has_the_snapshots_retention(spark, tmp_path, fixture):
+    """Lineage rides in the merge snapshots, so it is retained with them:
+    after expire_snapshots(keep_last=k), read_lineage returns exactly the
+    epochs of the k retained snapshots."""
+    _base, events, _state, _schema = fixture
+    data = data_events(events)
+    eng = CdcEngine(str(tmp_path / "repos"), num_buckets=2)
+    eng.bootstrap(spark)
+    for e in range(4):
+        eng.apply_batch(spark, events_df(spark, data[e * len(data) // 4:(e + 1) * len(data) // 4]),
+                        epoch=e)
 
-    clean = run("clean", False)
-    assert run("crashed", True) == clean
-    assert sum(r[LINEAGE_SCHEMA.fieldNames().index("dropped_late")] for r in clean) == 50
+    def epochs():
+        return sorted({r["epoch"] for r in eng.read_lineage(spark).collect()})
+
+    assert epochs() == [0, 1, 2, 3]
+    eng.table().expire_snapshots(keep_last=2)
+    assert epochs() == [2, 3]
 
 
 def test_over_cap_merge_group_fails_loudly_and_commits_nothing(spark, tmp_path, fixture,
@@ -665,31 +755,3 @@ def test_null_deleted_flag_is_live_in_current_view_and_changelog(spark, tmp_path
     assert sorted(r["path"] for r in eng.read_current(spark).collect()) == ["p", "q"]
     changes = t.read_changes(spark, from_snapshot_id=s0).collect()
     assert [(r["path"], r["_change_type"]) for r in changes] == [("q", "upsert")]
-
-
-def test_read_lineage_null_fills_pre_upgrade_schema(spark, tmp_path):
-    """A lineage table written before LINEAGE_SCHEMA gained dropped_late
-    must stay readable: missing columns come back null-filled and the drop
-    totals resolve (r6 advice #4)."""
-    from pyspark.sql import types as T
-
-    from datavec_spark.sources.icelite import IceliteTable
-
-    old_fields = [f for f in LINEAGE_SCHEMA.fields if f.name != "dropped_late"]
-    lin = IceliteTable.create(
-        str(tmp_path / "repos_lineage"), T.StructType(old_fields),
-        key_cols=["epoch", "partition"], num_buckets=1,
-        properties={"lineage.last-epoch": "-1"},
-    )
-    lin.append_rows_local(
-        [{"epoch": 0, "partition": 3, "event_count": 10, "min_seq": 1,
-          "max_seq": 10, "late_count": 2, "snapshot_id": 1}],
-        properties_update={"lineage.last-epoch": "0"},
-    )
-    eng = CdcEngine(str(tmp_path / "repos"))
-    df = eng.read_lineage(spark)
-    assert "dropped_late" in df.columns
-    row = df.collect()[0]
-    assert row["event_count"] == 10 and row["dropped_late"] is None
-    totals = eng.lineage_drop_totals(spark)
-    assert totals == {"rows_dropped_late": 0, "rows_late": 2, "rows_arrived": 10}

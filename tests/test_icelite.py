@@ -638,6 +638,39 @@ def test_merge_group_kernel_is_retry_safe_and_resolves_lww(tmp_path):
     ]
 
 
+def test_merge_group_breaks_equal_seq_ties_by_content(tmp_path):
+    """Change rows with an equal key and `_seq` are ordered by content, not
+    by arrival: a tombstone wins an equal-seq live image, and of two live
+    images the one that sorts first by its other columns wins (the list
+    column is left out of that order). Every permutation of the change rows
+    writes a file with the same sha256."""
+    import itertools
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    fields = [{"id": 1, "name": "k", "type": "string"}, {"id": 2, "name": "v", "type": "string"},
+              {"id": 3, "name": "tags", "type": "array<string>"},
+              {"id": 4, "name": "_seq", "type": "long"}, {"id": 5, "name": "_deleted", "type": "boolean"}]
+    rows = [("a", "y", ["p"], 5, False), ("a", "x", ["q"], 5, False),
+            ("b", "live", [], 3, False), ("b", None, None, 3, True),
+            ("c", "only", None, 1, False)]
+    spec = {"location": str(tmp_path), "write_id": "w", "epoch": 0, "cap": 1 << 30,
+            "num_buckets": 1, "keys": ["k"], "fields": fields, "schema_id": 0,
+            "schemas": {0: fields}, "files": {}}
+    shas = set()
+    for perm in itertools.permutations(rows):
+        changes = pa.Table.from_pylist([dict(zip([f["name"] for f in fields], r)) for r in perm],
+                                       schema=icelite.schema_to_arrow(fields))
+        entry = merge_group(changes, 0, spec)
+        with open(os.path.join(str(tmp_path), entry["path"]), "rb") as fh:
+            shas.add(hashlib.sha256(fh.read()).hexdigest())
+    assert len(shas) == 1
+    got = pq.read_table(os.path.join(str(tmp_path), entry["path"])).to_pylist()
+    assert [(r["k"], r["v"], r["_deleted"]) for r in got] == [
+        ("a", "x", False), ("b", None, True), ("c", "only", False)]
+
+
 def test_merge_type_round_trip_through_arrow(spark, tmp_path):
     """Every icelite primitive plus array<string> survives a merge whose
     pyarrow task reads a Spark-written old-schema file (a renamed column,
