@@ -15,8 +15,10 @@ engines.
 from __future__ import annotations
 
 import os
+import shutil
 import sys
 import tempfile
+import uuid
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -863,6 +865,35 @@ def doc_fingerprint_groups(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
+def _cached_fixture(target: str, build: Callable[[str], None]) -> str:
+    """A fixture directory built once per host and shared by every process
+    that reads it (pytest, check_oracle, the driver): `build(dir)` writes
+    the files into a process-unique directory beside `target`, which gets
+    a `_COMPLETE` marker and is renamed into place whole, so no process
+    ever reads a file another is writing. A directory without the marker
+    (half-built by an older run) is removed first; when another process
+    renames its identical build into place first, this one's is dropped."""
+    marker = os.path.join(target, "_COMPLETE")
+    if os.path.exists(marker):
+        return target
+    tmp = f"{target}.tmp-{os.getpid()}-{uuid.uuid4().hex}"
+    os.makedirs(tmp)
+    try:
+        build(tmp)
+        with open(os.path.join(tmp, "_COMPLETE"), "w") as fh:
+            fh.write("ok")
+        if os.path.isdir(target) and not os.path.exists(marker):
+            shutil.rmtree(target, ignore_errors=True)
+        try:
+            os.rename(tmp, target)
+        except OSError:
+            if not os.path.exists(marker):  # not lost to an identical build
+                raise
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+    return target
+
+
 _DUP_FIXTURE_DIR = os.path.join(tempfile.gettempdir(), "datavec_dup_fixture_v1")
 
 
@@ -874,16 +905,15 @@ def _ensure_dup_fixture() -> str:
     exact-duplicate groups of size 2/3/4, case/punctuation/whitespace
     variant families that only collide after fingerprint normalization
     (lowercase, strip punctuation, collapse whitespace), and unique
-    filler. Written once, atomically renamed into place (same pattern as
-    _ensure_pii_fixture). Reference test shape: the dup-bearing inline
-    fixtures of TestTransforms.java."""
+    filler. Built once by _cached_fixture. Reference test shape: the
+    dup-bearing inline fixtures of TestTransforms.java."""
+    return _cached_fixture(_DUP_FIXTURE_DIR, _build_dup_fixture)
+
+
+def _build_dup_fixture(out: str) -> None:
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    marker = os.path.join(_DUP_FIXTURE_DIR, "_COMPLETE")
-    if os.path.exists(marker):
-        return _DUP_FIXTURE_DIR
-    os.makedirs(_DUP_FIXTURE_DIR, exist_ok=True)
     texts = []
     # exact-duplicate groups: group g appears g+2 times (sizes 2, 3, 4)
     for g in range(3):
@@ -903,13 +933,7 @@ def _ensure_dup_fixture() -> str:
         "doc_id": pa.array(list(range(len(texts))), type=pa.int64()),
         "text": pa.array(texts, type=pa.string()),
     })
-    target = os.path.join(_DUP_FIXTURE_DIR, "docs.parquet")
-    tmp_name = f"{target}.tmp-{os.getpid()}"
-    pq.write_table(tbl, tmp_name)
-    os.rename(tmp_name, target)
-    with open(marker, "w") as fh:
-        fh.write("ok")
-    return _DUP_FIXTURE_DIR
+    pq.write_table(tbl, os.path.join(out, "docs.parquet"))
 
 
 def exact_dup_docs(spark, sf_dir):
@@ -947,14 +971,14 @@ def _ensure_pii_fixture() -> str:
     interior lines mix unique content with emails and IPv4s — including
     multiple PII per line, PII of both kinds on one line, and an
     ip-lookalike with a 4-digit octet that must NOT be scrubbed
-    (word-boundary check). Written once, atomically renamed into place."""
+    (word-boundary check). Built once by _cached_fixture."""
+    return _cached_fixture(_PII_FIXTURE_DIR, _build_pii_fixture)
+
+
+def _build_pii_fixture(out: str) -> None:
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    marker = os.path.join(_PII_FIXTURE_DIR, "_COMPLETE")
-    if os.path.exists(marker):
-        return _PII_FIXTURE_DIR
-    os.makedirs(_PII_FIXTURE_DIR, exist_ok=True)
     headers = ["=== corpus mirror: snapshot build ===",
                "NOTICE: crawled content, dedup before training"]
     footers = ["subscribe to our newsletter for updates",
@@ -983,13 +1007,7 @@ def _ensure_pii_fixture() -> str:
         "doc_id": pa.array([d for d, _ in docs], type=pa.int64()),
         "text": pa.array([t for _, t in docs], type=pa.string()),
     })
-    target = os.path.join(_PII_FIXTURE_DIR, "docs.parquet")
-    tmp_name = f"{target}.tmp-{os.getpid()}"
-    pq.write_table(tbl, tmp_name)
-    os.rename(tmp_name, target)  # atomic, replaces an identical loser
-    with open(marker, "w") as fh:
-        fh.write("ok")
-    return _PII_FIXTURE_DIR
+    pq.write_table(tbl, os.path.join(out, "docs.parquet"))
 
 
 def pii_scrub_docs(spark, sf_dir):
@@ -1308,20 +1326,16 @@ def _ensure_ivf_fixture() -> str:
     so the IVF index, the brute-force oracle, and any rerun see the exact
     same vectors. (The sf embeddings table is near-uniform, so partial-probe
     recall there is data-dependent; a clustered corpus is the shape IVF is
-    FOR, and makes the ≥0.9 recall contract deterministic.)"""
+    FOR, and makes the ≥0.9 recall contract deterministic.) Built once by
+    _cached_fixture."""
+    return _cached_fixture(_IVF_FIXTURE_DIR, _build_ivf_fixture)
+
+
+def _build_ivf_fixture(out: str) -> None:
     import numpy as np
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    marker = os.path.join(_IVF_FIXTURE_DIR, "_COMPLETE")
-    if os.path.exists(marker):
-        return _IVF_FIXTURE_DIR
-    os.makedirs(_IVF_FIXTURE_DIR, exist_ok=True)
-    # Concurrent writers (pytest + check_oracle + driver) are possible:
-    # build under a process-unique name and os.rename() into place — atomic
-    # on one filesystem — so no reader ever sees a half-written parquet
-    # (round-4 advice item #5). The loser's rename is skipped; contents are
-    # deterministic so either writer's file is identical anyway.
     rng = np.random.RandomState(4242)
     n_clusters, per_cluster, dim = 12, 100, 16
     centers = rng.randn(n_clusters, dim) * 25.0
@@ -1333,13 +1347,7 @@ def _ensure_ivf_fixture() -> str:
         "embedding": pa.array([list(map(float, v)) for v in vecs],
                               type=pa.list_(pa.float32())),
     })
-    target = os.path.join(_IVF_FIXTURE_DIR, "clustered.parquet")
-    tmp_name = f"{target}.tmp-{os.getpid()}"
-    pq.write_table(tbl, tmp_name)
-    os.rename(tmp_name, target)  # atomic, replaces an identical loser
-    with open(marker, "w") as fh:
-        fh.write("ok")
-    return _IVF_FIXTURE_DIR
+    pq.write_table(tbl, os.path.join(out, "clustered.parquet"))
 
 
 def ann_ivf_recall(spark, sf_dir):
@@ -1574,29 +1582,25 @@ _CDC_FINAL_STATE_SQL = f"""
 
 def _ensure_cdc_fixture() -> str:
     """Deterministic CDC fixture (seeded datagen, pure pyarrow — no Spark):
-    base.parquet + events/events-0000{0..3}.parquet. Idempotent."""
+    base.parquet + events/events-0000{0..3}.parquet. Built once by
+    _cached_fixture."""
+    return _cached_fixture(_CDC_FIXTURE_DIR, _build_cdc_fixture)
+
+
+def _build_cdc_fixture(out: str) -> None:
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    marker = os.path.join(_CDC_FIXTURE_DIR, "_COMPLETE")
-    if os.path.exists(marker):
-        return _CDC_FIXTURE_DIR
     from datavec_spark.streaming.datagen import (
         generate_base_rows, generate_events, write_event_chunks,
     )
 
-    os.makedirs(_CDC_FIXTURE_DIR, exist_ok=True)
     base = generate_base_rows(150, n_repos=30, paths_per_repo=25)
     cols = ["repo", "path", "commit", "lang", "content"]
-    pq.write_table(
-        pa.table({c: [r[c] for r in base] for c in cols}),
-        os.path.join(_CDC_FIXTURE_DIR, "base.parquet"),
-    )
+    pq.write_table(pa.table({c: [r[c] for r in base] for c in cols}),
+                   os.path.join(out, "base.parquet"))
     events = generate_events(2000, n_repos=30, paths_per_repo=25)
-    write_event_chunks(events, os.path.join(_CDC_FIXTURE_DIR, "events"), n_chunks=4)
-    with open(marker, "w") as fh:
-        fh.write("ok")
-    return _CDC_FIXTURE_DIR
+    write_event_chunks(events, os.path.join(out, "events"), n_chunks=4)
 
 
 _CDC_ENGINE = None  # per-process replay cache (see _cdc_replay_fixture)

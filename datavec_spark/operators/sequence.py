@@ -15,7 +15,7 @@ length, tumbling/sliding time windows, reduce-by-window.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from datavec_spark.cache import track
@@ -137,46 +137,21 @@ def _sorted_rank(df, column, out="rank", ascending=True):
     return df.withColumn(out, F.row_number().over(Window.orderBy(order)) - 1)
 
 
-def rank_scalable(df: DataFrame, column: str, out: str = "rank", ascending: bool = True) -> DataFrame:
-    """Global 0-based rank without a single-partition window: sort-partition
-    ranks + per-partition offsets (the zipWithIndex pattern,
+def _running_total(df: DataFrame, order: Column, weight: Column, out: str) -> DataFrame:
+    """Global running sum of `weight` in `order` order, INCLUSIVE of the
+    current row, without a single-partition window: range-partition + sort
+    within partitions, per-partition totals (a tiny driver collect, one row
+    per partition) become literal offsets, and the global sum is the local
+    window sum plus its partition's offset (the zipWithIndex pattern,
     SparkTransformExecutor.java:292-311, restated on DataFrames)."""
-    order = F.col(column).asc() if ascending else F.col(column).desc()
     parted = df.repartitionByRange(df.sparkSession.sparkContext.defaultParallelism, order) \
                .sortWithinPartitions(order)
-    pid = F.spark_partition_id()
     # persist is REQUIRED for correctness, not just cost: repartitionByRange
     # samples its range boundaries per job, so without materialization the
     # offsets job and the output job can land rows in different partitions
     # (observed: nondeterministic global ranks on 5k rows)
-    with_pid = track(parted.withColumn("_pid", pid).persist())
-    counts = with_pid.groupBy("_pid").count().orderBy("_pid").collect()
-    offsets = {}
-    acc = 0
-    for r in counts:
-        offsets[r["_pid"]] = acc
-        acc += r["count"]
-    omap = F.create_map(*[F.lit(x) for kv in offsets.items() for x in kv])
-    local_rn = F.row_number().over(Window.partitionBy("_pid").orderBy(order)) - 1
-    return with_pid.withColumn(out, local_rn + F.element_at(omap, F.col("_pid"))).drop("_pid")
-
-
-def cumsum_scalable(df: DataFrame, order_col: str, weight_col: str,
-                    out: str = "cumsum") -> DataFrame:
-    """Global running sum of `weight_col` in `order_col` order WITHOUT a
-    single-partition window: range-partition + sort within partitions,
-    per-partition totals (tiny driver collect, one row per partition) become
-    broadcast offsets, global cumsum = local window cumsum + offset — the
-    same two-phase shape as rank_scalable. INCLUSIVE of the current row."""
-    order = F.col(order_col).asc()
-    parted = df.repartitionByRange(df.sparkSession.sparkContext.defaultParallelism, order) \
-               .sortWithinPartitions(order)
-    # persist before the two dependent jobs: repartitionByRange samples its
-    # range boundaries PER JOB, so an unmaterialized plan can partition the
-    # offsets job and the output job differently (same defect class as
-    # rank_scalable — see its comment)
     with_pid = track(parted.withColumn("_pid", F.spark_partition_id()).persist())
-    totals = with_pid.groupBy("_pid").agg(F.sum(weight_col).alias("t")) \
+    totals = with_pid.groupBy("_pid").agg(F.sum(weight).alias("t")) \
                      .orderBy("_pid").collect()
     offsets = {}
     acc = 0
@@ -186,8 +161,22 @@ def cumsum_scalable(df: DataFrame, order_col: str, weight_col: str,
     omap = F.create_map(*[F.lit(x) for kv in offsets.items() for x in kv])
     w = Window.partitionBy("_pid").orderBy(order) \
               .rowsBetween(Window.unboundedPreceding, 0)
-    local = F.sum(weight_col).over(w)
+    local = F.sum(weight).over(w)
     return with_pid.withColumn(out, local + F.element_at(omap, F.col("_pid"))).drop("_pid")
+
+
+def rank_scalable(df: DataFrame, column: str, out: str = "rank", ascending: bool = True) -> DataFrame:
+    """Global 0-based rank without a single-partition window: the running
+    count of rows in `column` order, minus 1."""
+    order = F.col(column).asc() if ascending else F.col(column).desc()
+    return _running_total(df, order, F.lit(1), out).withColumn(out, F.col(out) - 1)
+
+
+def cumsum_scalable(df: DataFrame, order_col: str, weight_col: str,
+                    out: str = "cumsum") -> DataFrame:
+    """Global running sum of `weight_col` in `order_col` order, INCLUSIVE
+    of the current row, by the same two phases as rank_scalable."""
+    return _running_total(df, F.col(order_col).asc(), F.col(weight_col), out)
 
 
 def pack_sequences(df: DataFrame, order_col: str, weight_col: str,

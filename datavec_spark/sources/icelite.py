@@ -35,7 +35,10 @@ catalog could replace 1:1:
   is a tombstone row that keeps its seq, never a removal, so a late older
   change cannot bring a deleted key back. Changelog reads and compaction
   use the same two columns.
-- **Time travel**: `read(snapshot_id=...)` reads any retained snapshot.
+- **Time travel and retention**: `read(snapshot_id=...)` reads any of the
+  last HISTORY snapshots, which every commit keeps with as many `v{N}.json`
+  files, removing the data files only older snapshots listed (Iceberg:
+  `history.expire.*`, `write.metadata.previous-versions-max`).
 
 Semantics modeled on the Iceberg spec (public) and the needs in
 SURVEY.md §7; the DataVec reference's closest analog is the sorted/indexed
@@ -144,6 +147,9 @@ def is_live() -> F.Column:
 # ---------------------------------------------------------------------------
 
 BUCKET_COL = "__bucket"
+
+# snapshots every commit keeps, its own included, and metadata versions kept
+HISTORY = 32
 
 
 def bucket_expr(keys: list[F.Column], num_buckets: int) -> F.Column:
@@ -422,6 +428,10 @@ class IceliteTable:
         with open(tmp, "w") as fh:
             fh.write(str(new_v))
         os.replace(tmp, os.path.join(self._meta_dir, "version-hint.text"))
+        # nothing reads an old version: _version() walks forward from the
+        # hint and _load reads the current one
+        with contextlib.suppress(OSError):
+            os.remove(os.path.join(self._meta_dir, f"v{new_v - HISTORY}.json"))
 
     def schema_struct(self, schema_id: int | None = None) -> T.StructType:
         return schema_to_struct(self._fields(self.metadata(), schema_id))
@@ -456,7 +466,8 @@ class IceliteTable:
         """Current (or time-travel) snapshot as a DataFrame in the current
         schema. Old-schema files are projected by field id: renamed columns
         aliased, widened columns cast, added columns null-filled. Raises
-        ValueError on a snapshot id that is unknown (e.g. expired)."""
+        ValueError on a snapshot id that is unknown (e.g. past the HISTORY
+        window)."""
         meta = self.metadata()
         if snapshot_id is None:
             snap = self._current(meta)
@@ -498,7 +509,7 @@ class IceliteTable:
         snapshot and therefore emits no change rows (a schema change is
         not a row change). A table with no snapshot yet has an empty
         changelog. Raises ValueError on snapshot ids that are unknown
-        (e.g. expired)."""
+        (e.g. past the HISTORY window)."""
         from functools import reduce as _reduce
 
         meta = self.metadata()
@@ -621,9 +632,9 @@ class IceliteTable:
         """A fresh write id, naming the directory data/<write_id>/ that holds
         one commit's new files. If the block raises before its commit point
         (a failed write job, or a commit that loses the version CAS) the
-        directory is removed: no snapshot lists its files, so
-        expire_snapshots would never collect them. A raise after the
-        metadata link (the hint swing) keeps them: the commit lists them."""
+        directory is removed: no snapshot lists its files, so no commit's
+        retention would ever collect them. A raise after the metadata link
+        (the hint swing) keeps them: the commit lists them."""
         write_id = uuid.uuid4().hex
         try:
             yield write_id
@@ -664,11 +675,29 @@ class IceliteTable:
             "summary": summary,
             "files": files,
         }
+        snaps = [*meta["snapshots"], snap]
+        kept, dropped = snaps[-HISTORY:], snaps[:-HISTORY]
         # a new dict: the loaded one stays what the commit was based on
-        self._write_metadata({**meta, "snapshots": [*meta["snapshots"], snap],
+        self._write_metadata({**meta, "snapshots": kept,
                               "current_snapshot_id": snap_id, "last_snapshot_id": snap_id,
                               "properties": {**meta["properties"], **(properties_update or {})}},
                              expected_version=version)
+        # files only dropped snapshots list go with Spark's `.<name>.crc`, and
+        # a write-id directory with no listed file goes whole (`_SUCCESS`
+        # too); the commit has happened, so a failed removal is ignored
+        live = {f["path"] for s in kept for f in s["files"]}
+        dead = {f["path"] for s in dropped for f in s["files"]} - live
+        for rel in dead:
+            d, name = os.path.split(os.path.join(self.location, rel))
+            for p in (os.path.join(d, name), os.path.join(d, f".{name}.crc")):
+                with contextlib.suppress(OSError):
+                    os.remove(p)
+            with contextlib.suppress(OSError):
+                os.rmdir(d)  # the bucket directory, once empty
+        # paths are data/<write_id>/...
+        for write_id in {rel.split(os.sep)[1] for rel in dead} - {
+                rel.split(os.sep)[1] for rel in live}:
+            shutil.rmtree(os.path.join(self._data_dir, write_id), ignore_errors=True)
         return snap_id
 
     def _commit_files(self, operation: str, write, summary: dict[str, Any] | None = None,
@@ -857,6 +886,11 @@ class IceliteTable:
             props = dict(extra.get("properties") or {})
             if epoch is not None:
                 props["cdc.last-epoch"] = str(epoch)
+            # all-time totals, advanced from the metadata the commit's CAS is
+            # based on, so a lost race neither drops nor doubles an increment
+            for prop, c in (("cdc.rows-arrived", "changes"), ("cdc.rows-late", "late"),
+                            ("cdc.rows-dropped-late", "dropped")):
+                props[prop] = str(int(meta["properties"].get(prop, "0")) + sum(b[c] for b in buckets))
             snap_id = self._commit_snapshot(
                 meta,
                 version,
@@ -871,7 +905,7 @@ class IceliteTable:
                  "merge-ms": int((time.perf_counter() - t0) * 1000),
                  "bucket-tallies": {c: [b[c] for b in buckets] for c in TALLY_COLS},
                  **(extra.get("summary") or {})},
-                properties_update=props or None,
+                properties_update=props,
             )
         return {"applied": True, "snapshot_id": snap_id, "buckets": buckets}
 
@@ -920,14 +954,9 @@ class IceliteTable:
             if not hit:
                 raise ValueError(f"no such column: {name}")
             if hit[0]["id"] in meta["partition_spec"]["key_field_ids"]:
-                # ENFORCED, not just documented (round-5 advice): bucket
-                # assignment hashes key values with their CURRENT types, and
-                # xxhash64(int) != xxhash64(long) for the same value — a
-                # widened key would silently re-bucket rows away from the
-                # stale files that still hold their old versions (duplicate
-                # keys, no error). Renames are safe (values unchanged);
-                # widening a key requires a full table rewrite, which this
-                # format does not implement.
+                # buckets hash key values with their current types, and
+                # xxhash64(int) != xxhash64(long): a widened key would leave
+                # its older versions in stale buckets (a rename is safe)
                 raise ValueError(
                     f"cannot widen partition-key column {name!r}: the bucket "
                     "hash is type-sensitive and existing files would keep "
@@ -967,8 +996,9 @@ class IceliteTable:
         """Make a retained older snapshot current again (Iceberg:
         rollback_to_snapshot). Implemented as a NEW snapshot commit whose
         file list and schema are the target's — history is preserved, time
-        travel still reaches the rolled-back-over snapshots, and a
-        concurrent commit conflicts normally via the version CAS."""
+        travel still reaches the rolled-back-over snapshots while they are
+        among the last HISTORY, and a concurrent commit conflicts normally
+        via the version CAS."""
         meta, version = self._load()
         target = next((s for s in meta["snapshots"] if s["snapshot_id"] == snapshot_id), None)
         if target is None:
@@ -977,37 +1007,6 @@ class IceliteTable:
         meta["current_schema_id"] = target["schema_id"]
         return self._commit_snapshot(meta, version, list(target["files"]),
                                      {"operation": "rollback", "rollback-to": snapshot_id})
-
-    def expire_snapshots(self, keep_last: int = 2) -> int:
-        """Drop old snapshots' metadata entries and garbage-collect data files
-        referenced only by them (Iceberg: expire_snapshots), with the
-        `.<name>.crc` checksum Spark's writer puts beside each file. A
-        write-id directory none of whose files is still listed goes whole,
-        Spark's `_SUCCESS` markers included. keep_last must be at least 1:
-        the current snapshot is always kept."""
-        if keep_last < 1:
-            raise ValueError(f"expire_snapshots(keep_last={keep_last}): keep_last must be >= 1")
-        meta, version = self._load()
-        snaps = meta["snapshots"]
-        if len(snaps) <= keep_last:
-            return 0
-        keep = snaps[-keep_last:]
-        live = {f["path"] for s in keep for f in s["files"]}
-        dead = {f["path"] for s in snaps[:-keep_last] for f in s["files"]} - live
-        for rel in dead:
-            d, name = os.path.split(os.path.join(self.location, rel))
-            for p in (os.path.join(d, name), os.path.join(d, f".{name}.crc")):
-                with contextlib.suppress(FileNotFoundError):
-                    os.remove(p)
-            with contextlib.suppress(OSError):
-                os.rmdir(d)  # the bucket directory, once empty
-        # paths are data/<write_id>/...
-        for write_id in {rel.split(os.sep)[1] for rel in dead} - {
-                rel.split(os.sep)[1] for rel in live}:
-            shutil.rmtree(os.path.join(self._data_dir, write_id), ignore_errors=True)
-        meta["snapshots"] = keep
-        self._write_metadata(meta, expected_version=version)
-        return len(dead)
 
     def drop(self) -> None:
         shutil.rmtree(self.location, ignore_errors=True)

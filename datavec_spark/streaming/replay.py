@@ -32,7 +32,8 @@ Semantics (BASELINE.json north_star):
   snapshot_id) are counted by the merge's own tasks and ride in the merge
   snapshot that commits the epoch, so one metadata commit carries data,
   fences and lineage. Lineage is a view over those snapshots and has
-  their retention.
+  their retention (icelite.HISTORY); the late-drop totals are running
+  table properties the same commit advances, so they cover all time.
 """
 
 from __future__ import annotations
@@ -154,20 +155,18 @@ class CdcEngine:
         t = self.table()
         return t.read(spark).where(is_live()).drop("_seq", "_deleted")
 
-    def _lineage_rows(self) -> list[dict]:
-        """LINEAGE_SCHEMA rows, one per (epoch, bucket), from the bucket
-        tallies of every retained snapshot that committed an epoch."""
-        names = LINEAGE_SCHEMA.fieldNames()
-        return [dict(zip(names, (s["summary"]["epoch"], *row, s["snapshot_id"])))
-                for s in IceliteTable(self.table_location).snapshots()
-                if s["summary"].get("epoch") is not None
-                for row in zip(*(s["summary"]["bucket-tallies"][c] for c in TALLY_COLS))]
-
     def read_lineage(self, spark: SparkSession) -> DataFrame:
-        """Per-(epoch, bucket) lineage, built on the driver from the merge
-        snapshots. It has the snapshots' retention: expire_snapshots drops
-        the lineage of the epochs it expires."""
-        return spark.createDataFrame(self._lineage_rows(), LINEAGE_SCHEMA)
+        """Per-(epoch, bucket) lineage, built on the driver from the bucket
+        tallies of every retained snapshot that committed an epoch: the
+        last icelite.HISTORY snapshots' epochs (lineage_drop_totals is
+        all-time)."""
+        names = LINEAGE_SCHEMA.fieldNames()
+        return spark.createDataFrame(
+            [dict(zip(names, (s["summary"]["epoch"], *row, s["snapshot_id"])))
+             for s in IceliteTable(self.table_location).snapshots()
+             if s["summary"].get("epoch") is not None
+             for row in zip(*(s["summary"]["bucket-tallies"][c] for c in TALLY_COLS))],
+            LINEAGE_SCHEMA)
 
     # -- the apply stage (shared by batch replay and foreachBatch) --------------
 
@@ -393,23 +392,24 @@ class CdcEngine:
 
     def lineage_drop_totals(self, spark: SparkSession) -> dict:
         """Drop accounting for the stream's lateness SLA, which the apply
-        stage enforces: totals over lineage's exact per-(epoch, bucket)
-        columns, summed on the driver with no Spark job. Durable — survives
-        restarts with the table, for the snapshots it retains."""
-        rows = self._lineage_rows()
-        return {"rows_dropped_late": sum(r["dropped_late"] for r in rows),
-                "rows_late": sum(r["late_count"] for r in rows),
-                "rows_arrived": sum(r["event_count"] for r in rows)}
+        stage enforces: the all-time running totals every merge commit
+        advances in the table's properties, read with no Spark job. A table
+        written before the totals existed reads 0 for them."""
+        props = IceliteTable(self.table_location).properties()
+        return {name: int(props.get(prop, "0")) for name, prop in (
+            ("rows_dropped_late", "cdc.rows-dropped-late"), ("rows_late", "cdc.rows-late"),
+            ("rows_arrived", "cdc.rows-arrived"))}
 
     # -- verification ----------------------------------------------------------------
 
     def final_state_hashes(self, spark: SparkSession) -> DataFrame:
         """(key cols..., sha256(content)) of the live table — the replay-
-        equality invariant. All JVM-side; safe at any scale."""
-        t = self.table()
-        keys = t.key_cols()
-        df = self.read_current(spark)
-        fmap = json.loads(t.properties()["cdc.field-map"])
-        by_id = {f["id"]: f["name"] for f in t._fields(t.metadata())}
-        content_name = by_id[fmap["content"]]
-        return df.select(*keys, F.sha2(F.col(content_name), 256).alias("content_sha"))
+        equality invariant. All JVM-side; safe at any scale. One metadata
+        load pairs the field map with the files it reads."""
+        t = IceliteTable(self.table_location)
+        meta = t.metadata()
+        snap = t._current(meta)
+        df = t._read_entries(spark, meta, snap["files"] if snap else []).where(is_live())
+        fmap = json.loads(meta["properties"]["cdc.field-map"])
+        content_name = {f["id"]: f["name"] for f in t._fields(meta)}[fmap["content"]]
+        return df.select(*t.key_cols(meta), F.sha2(F.col(content_name), 256).alias("content_sha"))

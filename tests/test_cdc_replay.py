@@ -648,7 +648,7 @@ def test_all_late_epoch_commits_its_drops_and_fences_its_redelivery(spark, tmp_p
     """An epoch whose every event is far late commits one snapshot with its
     parent's file list. It records the drops in lineage and advances
     cdc.last-epoch, so its redelivery is fenced and starts no Spark job.
-    lineage_drop_totals sums lineage on the driver, with no Spark job."""
+    lineage_drop_totals reads the table's running totals, with no Spark job."""
     base = generate_base_rows(150, n_repos=30, paths_per_repo=25)
     events = generate_events(N_EVENTS, n_repos=30, paths_per_repo=25,
                              delay_us=2_000_000, straggler_frac=0.0, dup_frac=0.0)
@@ -680,10 +680,14 @@ def test_all_late_epoch_commits_its_drops_and_fences_its_redelivery(spark, tmp_p
     assert len(eng.table().snapshots()) == len(t.snapshots())
 
 
-def test_lineage_has_the_snapshots_retention(spark, tmp_path, fixture):
+def test_lineage_has_the_snapshots_retention(spark, tmp_path, fixture, monkeypatch):
     """Lineage rides in the merge snapshots, so it is retained with them:
-    after expire_snapshots(keep_last=k), read_lineage returns exactly the
-    epochs of the k retained snapshots."""
+    with a HISTORY of 2, after 4 epochs read_lineage returns exactly the
+    epochs of the 2 retained snapshots, while the drop totals, running
+    table properties, still count every epoch's events."""
+    from datavec_spark.sources import icelite
+
+    monkeypatch.setattr(icelite, "HISTORY", 2)
     _base, events, _state, _schema = fixture
     data = data_events(events)
     eng = CdcEngine(str(tmp_path / "repos"), num_buckets=2)
@@ -691,13 +695,102 @@ def test_lineage_has_the_snapshots_retention(spark, tmp_path, fixture):
     for e in range(4):
         eng.apply_batch(spark, events_df(spark, data[e * len(data) // 4:(e + 1) * len(data) // 4]),
                         epoch=e)
+    assert sorted({r["epoch"] for r in eng.read_lineage(spark).collect()}) == [2, 3]
+    assert eng.lineage_drop_totals(spark)["rows_arrived"] == len(data)
 
-    def epochs():
-        return sorted({r["epoch"] for r in eng.read_lineage(spark).collect()})
 
-    assert epochs() == [0, 1, 2, 3]
-    eng.table().expire_snapshots(keep_last=2)
-    assert epochs() == [2, 3]
+def test_history_window_keeps_lineage_and_all_time_drop_totals(spark, tmp_path, monkeypatch):
+    """12 stream epochs (drop_late=True) with a HISTORY of 4, three of them
+    re-delivering early events far beyond a 10 s SLA: 4 snapshots remain,
+    read_lineage returns their epochs, lineage_drop_totals equals the sums
+    of all 12 epochs' tallies and starts no Spark job, data/ holds no file
+    that no snapshot lists, and the state still equals the oracle."""
+    from datavec_spark.sources import icelite
+
+    monkeypatch.setattr(icelite, "HISTORY", 4)
+    base = generate_base_rows(150, n_repos=30, paths_per_repo=25)
+    data = data_events(generate_events(N_EVENTS, n_repos=30, paths_per_repo=25,
+                                       delay_us=2_000_000, straggler_frac=0.0, dup_frac=0.0))
+    state, schema = oracle_replay(base, data)
+    late = {4: data[:20], 7: data[20:50], 10: data[50:60]}
+    eng = CdcEngine(str(tmp_path / "repos"), num_buckets=4)
+    eng.bootstrap(spark, base_df(spark, base))
+    sums = {"rows_arrived": 0, "rows_late": 0, "rows_dropped_late": 0}
+    for e in range(12):
+        chunk = data[e * len(data) // 12:(e + 1) * len(data) // 12] + late.get(e, [])
+        res = eng.apply_batch(spark, events_df(spark, chunk), epoch=e,
+                              late_delay_seconds=10, drop_late=True)
+        for name, col in (("rows_arrived", "changes"), ("rows_late", "late"),
+                          ("rows_dropped_late", "dropped")):
+            sums[name] += sum(b[col] for b in res["buckets"])
+    assert sums == {"rows_arrived": len(data) + 60, "rows_late": 60, "rows_dropped_late": 60}
+    t = eng.table()
+    assert [s["summary"]["epoch"] for s in t.snapshots()] == [8, 9, 10, 11]
+    assert sorted({r["epoch"] for r in eng.read_lineage(spark).collect()}) == [8, 9, 10, 11]
+    totals, jobs = jobs_in_group(spark, "window-totals", lambda: eng.lineage_drop_totals(spark))
+    assert (totals, jobs) == (sums, 0)
+    listed, stored, listed_ids, stored_ids = listed_and_stored(t)
+    assert stored == listed and stored_ids == listed_ids
+    assert len(os.listdir(os.path.join(t.location, "metadata"))) <= 4 + 1
+    assert_final_state(spark, eng, state, schema)
+
+
+def test_crash_after_a_schema_op_commit_applies_each_op_once(spark, tmp_path, fixture,
+                                                             monkeypatch):
+    """The whole log as one epoch, crashed right after its first schema-op
+    commit, then resumed: the resumed epoch applies only the ops above the
+    cdc.schema-seq fence, so each op is applied once, the state and schema
+    equal the oracle, and the epoch has exactly one merge snapshot."""
+    from datavec_spark.streaming.replay import SCHEMA_OPS
+
+    base, events, state, schema = fixture
+    ops = sorted({e["seq"] for e in events if e["op"] in SCHEMA_OPS})
+    assert len(ops) >= 2
+    eng = CdcEngine(str(tmp_path / "repos"), num_buckets=4)
+    eng.bootstrap(spark, base_df(spark, base))
+    batch = events_df(spark, events)
+    evolve = IceliteTable._evolve
+
+    def crash(self, *args, **kwargs):
+        evolve(self, *args, **kwargs)
+        raise RuntimeError("crash after a schema-op commit")
+
+    with monkeypatch.context() as m:
+        m.setattr(IceliteTable, "_evolve", crash)
+        with pytest.raises(RuntimeError, match="crash"):
+            eng.apply_batch(spark, batch, epoch=0)
+    t = eng.table()
+    assert (len(t.metadata()["schemas"]), t.properties()["cdc.schema-seq"]) == (2, str(ops[0]))
+    assert eng.apply_batch(spark, batch, epoch=0)["applied"]
+    assert_final_state(spark, eng, state, schema)
+    t = eng.table()
+    assert (len(t.metadata()["schemas"]), t.properties()["cdc.schema-seq"]) \
+        == (1 + len(ops), str(ops[-1]))
+    assert [(s["summary"]["operation"], s["summary"].get("epoch")) for s in t.snapshots()] \
+        == [("overwrite", None), ("merge", 0)]
+    listed, stored, listed_ids, stored_ids = listed_and_stored(t)
+    assert stored == listed and stored_ids == listed_ids
+
+
+def test_final_state_hashes_loads_metadata_once(spark, tmp_path, fixture, monkeypatch):
+    """final_state_hashes pairs the field map with the files it reads from
+    one metadata load, so a schema commit landing mid-call cannot mix two
+    versions."""
+    base, _events, _state, _schema = fixture
+    eng = CdcEngine(str(tmp_path / "repos"), num_buckets=2)
+    eng.bootstrap(spark, base_df(spark, base))
+    loads = []
+    real = IceliteTable._load
+
+    def counting(self):
+        loads.append(1)
+        return real(self)
+
+    monkeypatch.setattr(IceliteTable, "_load", counting)
+    hashes = eng.final_state_hashes(spark)
+    assert len(loads) == 1
+    monkeypatch.undo()
+    assert hashes.count() == len(base)
 
 
 def test_over_cap_merge_group_fails_loudly_and_commits_nothing(spark, tmp_path, fixture,

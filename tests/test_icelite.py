@@ -150,18 +150,23 @@ def test_commit_conflict_detection(spark, tmp_path):
         t._write_metadata(meta, expected_version=version)
 
 
-def test_expire_snapshots_gc(spark, tmp_path):
-    """Expiry removes each dead Spark-written file with its `.crc`
-    checksum sibling, and a write-id directory that no retained snapshot
-    lists goes whole: data/ then holds only the retained snapshot's files
-    (and their own checksums and write markers)."""
+def test_expire_snapshots_gc(spark, tmp_path, monkeypatch):
+    """A snapshot that leaves the HISTORY window expires with the commit
+    that drops it: each of its Spark-written files goes with its `.crc`
+    checksum sibling, a write-id directory that no retained snapshot lists
+    goes whole, and so does the version file HISTORY commits back. data/
+    then holds only the retained snapshots' files (and their own checksums
+    and write markers)."""
+    monkeypatch.setattr(icelite, "HISTORY", 2)
     t = make(spark, tmp_path, [("a", 1, 0, False)])
     for i in range(3):
         t.overwrite(spark.createDataFrame([("a", i, i + 1, False)], SCHEMA))
-    removed = t.expire_snapshots(keep_last=1)
-    assert removed > 0
+    assert [s["summary"]["operation"] for s in t.snapshots()] == ["overwrite", "overwrite"]
     assert t.read(spark).collect()[0]["v"] == 2
-    live = {f["path"] for f in t.current_snapshot()["files"]}
+    v = t._version()
+    assert sorted(os.listdir(os.path.join(t.location, "metadata"))) == sorted(
+        [f"v{v - 1}.json", f"v{v}.json", "version-hint.text"])
+    live = {f["path"] for s in t.snapshots() for f in s["files"]}
     data_dir = os.path.join(t.location, "data")
     assert set(os.listdir(data_dir)) == {p.split(os.sep)[1] for p in live}
     stored = {os.path.relpath(os.path.join(d, f), t.location)
@@ -172,15 +177,51 @@ def test_expire_snapshots_gc(spark, tmp_path):
                         for c in crcs)
 
 
-def test_expire_snapshots_rejects_keep_last_below_one(spark, tmp_path):
-    """keep_last=0 used to keep every snapshot (snaps[-0:]) and still
-    commit a new metadata version; below 1 it raises and commits nothing."""
-    t = make(spark, tmp_path, [("a", 1, 0, False)])
-    version = t._version()
-    for bad in (0, -1):
-        with pytest.raises(ValueError, match="keep_last"):
-            t.expire_snapshots(keep_last=bad)
-    assert t._version() == version
+def test_history_window_bounds_metadata_and_data(tmp_path):
+    """1000 merge-shaped commits on a 2-bucket table, each replacing both
+    bucket files (write_bucket_file + _commit_snapshot), Spark-free: the
+    metadata directory holds at most HISTORY versions plus the hint, the
+    current v{N}.json keeps the size it had at commit HISTORY + 1, and
+    data/ holds exactly the files the retained snapshots list. Only the
+    numbers in it widen (snapshot ids 2..33 against 969..1000, and seqs):
+    raw, the file grows ~2%; with every number counted as one character it
+    is within 1%."""
+    import uuid
+
+    import pyarrow as pa
+
+    t = IceliteTable.create(str(tmp_path / "w"), SCHEMA, key_cols=["k"], num_buckets=2)
+    meta_dir, data_dir = (os.path.join(t.location, d) for d in ("metadata", "data"))
+    rows = pa.table({"k": ["a"], "v": pa.array([1], pa.int32()), "_seq": [1], "_deleted": [False]})
+
+    def current_size():
+        with open(os.path.join(meta_dir, f"v{t._version()}.json")) as fh:
+            text = fh.read()
+        return len(text), len(re.sub(r"\d+", "0", text))
+
+    for i in range(1, 1001):
+        meta, version = t._load()
+        wid = uuid.uuid4().hex
+        files = [icelite.write_bucket_file(rows, t.location, wid, b, 0, "merge.parquet")
+                 for b in range(2)]
+        tallies = {"bucket": [0, 1], "changes": [1, 1], "min_seq": [i, i], "max_seq": [i, i],
+                   "late": [0, 0], "dropped": [0, 0]}
+        t._commit_snapshot(meta, version, files, {
+            "operation": "merge", "epoch": i, "rewritten-files": 2, "carried-files": 0,
+            "added-records": 2, "added-files-size": sum(f["file_size_in_bytes"] for f in files),
+            "bucket-tallies": {c: tallies[c] for c in icelite.TALLY_COLS}})
+        if i == icelite.HISTORY + 1:
+            first = current_size()
+    names = os.listdir(meta_dir)
+    assert len(names) <= icelite.HISTORY + 1 and "version-hint.text" in names
+    last = current_size()
+    assert last[0] <= 1.05 * first[0] and abs(last[1] - first[1]) <= 0.01 * first[1], (first, last)
+    assert len(t.snapshots()) == icelite.HISTORY
+    listed = {f["path"] for s in t.snapshots() for f in s["files"]}
+    stored = {os.path.relpath(os.path.join(d, f), t.location)
+              for d, _, fs in os.walk(data_dir) for f in fs}
+    assert stored == listed
+    assert set(os.listdir(data_dir)) == {p.split(os.sep)[1] for p in listed}
 
 
 def test_read_unknown_snapshot_raises_value_error(spark, tmp_path):
